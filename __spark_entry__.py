@@ -31,812 +31,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's correctness harness checks the FIRST 50 entries of queries()
-# each round; this explicit window rotates driver evidence across rounds
-# (r1: scalars+llm, r2: sorts/setops/joins/windows/aggregates, r3:
-# scans/filters/streaming/udf/incremental/pipeline, r4: stale-red re-checks
-# + TPC-H q2..q22 + graph/analytics/llm-text — see CORRECTNESS_r0{1..4}.json;
-# r4 came back 50/50 green, so round 5 carries no re-checks).
+# each round; this explicit window rotates driver evidence across rounds.
+# Earlier rounds' windows live in git history and CORRECTNESS_r*.json;
 # tests/test_entry_contract.py pins the active window so an accidental edit
 # can't silently shift it.
-R4_WINDOW = [
-    # stale-red re-checks: r1 events.ts loader ERRs, fixed in r2 (7)
-    "fn_string",
-    "fn_date",
-    "fn_map",
-    "fn_json",
-    "fn_datetime_tz",
-    "fn_variant",
-    "llm_emb_normalize",
-    # stale-red re-checks: ran as no-oracle, oracles added r2/r3 (5)
-    "agg_approx_count_distinct",
-    "agg_approx_percentile",
-    "llm_dedup_clusters",
-    "llm_corpus_pipeline",
-    "mm_binaryfile_scan",
-    # only SURVEY §2 row never driver-windowed (1)
-    "llm_lang_partition",
-    # never-checked: TPC-H q2..q22 (21)
-    "tpch_q2",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "tpch_q10",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    # never-checked: graph + analytics (4)
-    "graph_pagerank",
-    "agg_funnel",
-    "agg_retention_cohort",
-    "agg_heavy_hitters",
-    # never-checked: r3 honesty/recall + new ops (5)
-    "llm_dedup_minhash_recall",
-    "llm_sim_ann_ivf_recall",
-    "llm_dedup_substring",
-    "ml_churn_label",
-    "win_cumulative_distinct",
-    # never-checked: llm text/training-data ops (7)
-    "llm_decontaminate",
-    "llm_token_count",
-    "llm_fingerprint",
-    "llm_pii_scrub",
-    "llm_bm25_search",
-    "llm_doc_chunking",
-    "llm_unigram_logprob",
-]
-
-# Round-5 window (HISTORICAL — drove CORRECTNESS_r05, 50/50 green; kept
-# for the evidence-ledger tests): the first 50
-# oracle-checkable entries of the round-4 R5_PLANNED rotation list.
-# CORRECTNESS_r04 came back 50/50 green so there are no red re-checks;
-# the only two R5_PLANNED entries skipped here are the rows-only
-# agg_sketch_rollup (sketch state is engine-specific; its oracle-checked
-# quantile twin agg_quantile_sketch_rollup IS in this window) and
-# llm_sim_mmr_rerank (sequential greedy selection, pytest-checked vs a
-# NumPy reference) — both get rows-only driver slots in R6_PLANNED below.
-R5_WINDOW = [
-    "agg_string_concat_group",
-    "agg_multi_distinct",
-    "agg_quantile_sketch_rollup",
-    "agg_higher_moments",
-    "agg_conditional",
-    "agg_path_transitions",
-    "agg_time_to_convert",
-    "win_gaps_islands",
-    "win_pct_of_total",
-    "win_interval_coalesce",
-    "dq_checks",
-    "dq_key_skew_report",
-    "er_blocking_match",
-    "join_salted_skew",
-    "join_bloom_pruned",
-    "join_range_bucketed",
-    "join_null_skew_rewrite",
-    "sink_bucketed_colocated_join",
-    "sink_overwrite_partition",
-    "sink_merge_upsert",
-    "llm_seq_packing_greedy",
-    "sample_group_fixed",
-    "sample_stratified",
-    # added in round 4 (never driver-checked yet):
-    "inc_dedup_ingest",
-    "llm_dedup_embedding",
-    "llm_dedup_paragraph",
-    "llm_quality_c4",
-    "llm_sim_ann_pq_recall",
-    "dim_scd2_lookup",
-    "agg_unpivot",
-    "ts_gapfill_locf",
-    "llm_dedup_keeplist",
-    "llm_bigram_logprob",
-    "llm_sim_ann_ivfpq_recall",
-    "ts_ewma",
-    "dq_profile",
-    "sink_zorder_layout",
-    "agg_aqp_estimate",
-    "graph_triangle_count",
-    "win_running_median",
-    "inc_scd2_apply",
-    "agg_market_basket",
-    "agg_gini",
-    "win_ohlc",
-    "win_pareto_abc",
-    "dq_snapshot_diff",
-    "llm_dedup_minhash_precision",
-    "stream_ohlc",
-    "sample_weighted",
-    "win_anomaly_mad",
-]
-
-# Round-6 window (HISTORICAL — drove CORRECTNESS_r06, 50/50 green; kept
-# for the evidence-ledger tests): every registered
-# query with no driver record after R5 executed — 14 r3/r4-era
-# oracle-checkable queries, the 31 added during round 5 (each oracle-checked
-# locally on introduction AND re-checked in the round-close full sweep at
-# sf0.01; the 20 later ones also pass a fresh-process non-UTC-session-TZ
-# driver simulation), plus 4 rows-only ops that get (weaker) rows-only
-# driver records so even they have driver evidence: agg_sketch_rollup
-# (engine-specific sketch state; quantile twin oracle-checked in R5),
-# llm_sim_mmr_rerank (sequential greedy rerank, pytest-checked vs NumPy),
-# and llm_sim_ann_pq / llm_sim_ann_ivfpq (approximate by construction;
-# their `_recall` honesty twins are oracle-checked in the R5 window above).
-# New queries must be appended to the next planned window (R8_PLANNED
-# as of round 7) — tests/test_entry_contract.py recomputes coverage from
-# the committed CORRECTNESS files and fails if any registered query is
-# left without a driver-evidence plan.
-R6_WINDOW = [
-    "join_asof_nearest",
-    "agg_trend_corr",
-    "llm_curriculum_order",
-    "inc_late_dim_resolve",
-    "ts_gapfill_interpolate",
-    "agg_cohort_ltv",
-    "win_zscore_rolling",
-    "scan_rowgroup_stats",
-    "llm_corpus_stats",
-    "agg_autocorr_lag1",
-    "llm_ngram_novelty",
-    "win_rank_change",
-    "agg_new_vs_returning",
-    "agg_interevent_gaps",
-    # added in round 5 (never driver-checked yet):
-    "llm_dedup_embedding_recall",
-    "llm_sim_range_search",
-    "llm_dedup_crossset",
-    "agg_dau_wau_stickiness",
-    "dq_benford",
-    "llm_vocab_growth",
-    "agg_activity_heatmap",
-    "mm_byte_framing",
-    "agg_rfm_segmentation",
-    "agg_bitmap_rollup",
-    "agg_forecast_snaive",
-    "agg_entropy_mix",
-    "win_rolling_corr7",
-    "dq_cross_table_rule",
-    "llm_bpe_merge_candidates",
-    "llm_perplexity_bucket",
-    "stream_topk_per_window",
-    "agg_bitmap_distinct",
-    "win_cusum_changepoint",
-    "ts_seasonal_index_dow",
-    "dq_outlier_iqr",
-    "join_interval_overlap",
-    "llm_dedup_containment",
-    "llm_span_corruption",
-    "llm_readability",
-    "graph_connected_components",
-    "graph_degree_histogram",
-    "graph_jaccard_neighbors",
-    "agg_ab_test",
-    "agg_survival_km",
-    "agg_attribution_last_touch",
-    "win_drawdown",
-    # rows-only driver slots (no oracle by design; see note above):
-    "agg_sketch_rollup",
-    "llm_sim_mmr_rerank",
-    "llm_sim_ann_pq",
-    "llm_sim_ann_ivfpq",
-]
-
-# Round-7 ACTIVE window (VERDICT r6 "Next round" item 1): the 50 queries
-# that accumulated in the R7 overflow plan across rounds 5-6 — the r5
-# analytics/time-series/data-quality tail plus all 10 round-6 operators.
-# Every entry is oracle-checked (no rows-only slots this round: the three
-# honesty twins llm_dedup_simhash_recall / ml_kmeans_quality /
-# llm_retrieval_ndcg are themselves oracle-backed). Each was verified
-# locally at sf0.01 on introduction AND in the round-6 close full sweep.
-# After this window executes, only R8_PLANNED (2 queries + round-7
-# additions) remains without driver evidence.
-R7_WINDOW = [
-    "ts_holt_linear",
-    "agg_welch_ttest",
-    "agg_theil_sen",
-    "dq_freshness",
-    "agg_funnel_timebound",
-    "agg_wow_growth",
-    "agg_path_trigrams",
-    "agg_chisq_independence",
-    "agg_mann_whitney",
-    "dq_volume_anomaly",
-    "er_golden_record",
-    "llm_ttr_hapax",
-    "llm_zipf_slope",
-    "llm_length_histogram",
-    "llm_emb_quantize_int8",
-    "llm_dedup_threshold_sweep",
-    "graph_bfs_distance",
-    "inc_partition_rebuild",
-    "agg_ks_test",
-    "agg_bootstrap_ci",
-    "stream_anomaly_zscore",
-    "llm_mixture_epochs",
-    "ts_stl_decompose",
-    "agg_decay_score",
-    "udf_arrow_map",
-    "pipeline_dag_run",
-    "llm_hard_negatives",
-    "ml_target_encoding",
-    "ml_feature_scale",
-    "dq_schema_contract",
-    "agg_trimmed_mean",
-    "graph_assortativity",
-    "dq_psi_drift",
-    "ts_acf",
-    "llm_packing_efficiency",
-    "inc_snapshot_expire",
-    "join_asof_tolerance",
-    "llm_charset_report",
-    "llm_quality_composite",
-    "ts_holt_winters",
-    # added in round 6 (oracle-checked locally on introduction):
-    "ts_forecast_backtest",
-    "ts_holt_damped",
-    "llm_ngram_kneser_ney",
-    "llm_tokenizer_fertility",
-    "graph_clustering_local",
-    "llm_sft_pairs",
-    "llm_vocab_coverage",
-    "llm_dedup_simhash_recall",
-    "ml_kmeans_quality",
-    "llm_retrieval_ndcg",
-]
-
-# Round-8 queued queries (HISTORICAL name kept for the ledger tests):
-# the 25 queries that accumulated across rounds 6-7 with no driver
-# evidence yet; they form the first half of the ACTIVE R8_WINDOW below.
-R8_PLANNED = [
-    "ts_rolling_slope",
-    "graph_label_propagation",
-    # added in round 7 (oracle-checked locally on introduction):
-    "agg_hhi_concentration",
-    "ts_cross_correlation",
-    "agg_cms_heavy_hitters",
-    "llm_cross_entropy_heldout",
-    "llm_bigram_pmi_top20",
-    "llm_dup_cluster_histogram",
-    "llm_emb_dim_stats",
-    "dq_duplicate_key_report",
-    "ml_gradient_step_linear",
-    "graph_kcore",
-    "ml_auc_roc",
-    "ml_calibration_bins",
-    "ml_confusion_metrics",
-    "llm_ngram_coverage_curve",
-    "agg_session_stats",
-    "llm_emb_gram_matrix",
-    "llm_lang_id_confusion",
-    "llm_sft_lint",
-    "stream_content_dedup",
-    "agg_ship_latency",
-    "ts_sma_crossover",
-    "agg_partial_final",
-    "dim_calendar_build",
-]
-
-# Round-8 ACTIVE window (VERDICT r7 "Next round" item 1): the 25 queued
-# R8_PLANNED queries above + the 25 oldest-evidence re-checks — every
-# core SURVEY §2 ID whose latest driver record dates to r1 (13 ops,
-# including the rows-only-by-design llm_dedup_minhash so no core ID's
-# evidence stays older than r2) and the 12 r2-era core joins.  After this
-# window executes, every pre-r8 registered query has driver evidence no
-# older than r2 and the never-checked backlog is exactly R9_PLANNED.
-R8_RECHECKS = [
-    # r1-era core §2 IDs (latest driver record 2026-08-13, code touched
-    # for 5+ rounds since):
-    "fn_regexp",
-    "fn_math",
-    "fn_array",
-    "fn_explode",
-    "fn_hash",
-    "fn_conditional",
-    "llm_dedup_exact",
-    "llm_dedup_minhash",  # rows-only by design (engine-specific seeds)
-    "llm_sim_cosine_topk",
-    "llm_sim_centroid",
-    "llm_text_stats",
-    "llm_text_tfidf",  # re-check required: byte-gated dfreq this round
-    "llm_multimodal_join",
-    # r2-era core joins:
-    "join_inner_equi",
-    "join_multiway",
-    "join_semi",
-    "join_anti",
-    "join_broadcast",
-    "join_cross",
-    "join_theta_range",
-    "join_asof",
-    "join_self_agg",
-    "join_left",
-    "join_right",
-    "join_full",
-]
-
-R8_WINDOW = R8_PLANNED + R8_RECHECKS
-
-# Round-9 overflow plan: R8_WINDOW is full (50 slots), so queries added
-# during round 8 queue here under the same contract (oracle-checked
-# locally on introduction; tests/test_entry_contract.py counts R9 toward
-# the every-query-has-a-driver-evidence-plan invariant).
-R9_PLANNED = [
-    # added in round 8 (oracle-checked locally on introduction):
-    "llm_bpe_train",
-    "llm_bpe_encode",
-    "mm_shard_manifest",
-    "llm_split_leakage",
-    "llm_dsir_weights",
-    "pipeline_dag_resume",
-    "llm_emb_pca",
-    "llm_emb_pca_variance",
-    "llm_dsir_resample",
-    "stream_checkpoint_resume",
-    "inc_subject_erasure",
-    "llm_dedup_softweight",
-    "pipeline_run_report",
-    "agg_sketch_overlap",
-]
-
-# Round-9 ACTIVE window (VERDICT r8 "Next round" item 1, staged at r8
-# close): R9_PLANNED (the 14 round-8 additions above — after this window
-# executes the never-checked backlog is 0) + the oldest-evidence
-# re-checks: the 27 r1-era extended-inventory stragglers and the 9
-# oldest r2-era core aggs = exactly 50.  CORRECTNESS_r08 landed 50/50
-# green (49 hash + the rows-only-by-design llm_dedup_minhash), so there
-# are no red re-checks.  After this window executes, no registered
-# query's evidence is older than r2.
-R9_RECHECKS = [
-    # r1-era extended-inventory stragglers (latest driver record r1):
-    "fn_array_setops",
-    "fn_bitwise",
-    "fn_encode",
-    "fn_format",
-    "fn_interval_arith",
-    "fn_struct_nested",
-    "fn_surrogate_key",
-    "fn_trig",
-    "fn_url",
-    "fn_xml",
-    "llm_dedup_editdist",
-    "llm_dedup_embcos",
-    "llm_dedup_ngram_jaccard",
-    "llm_dedup_simhash",  # rows-only by design; `_recall` twin oracled
-    "llm_dedup_url",
-    "llm_lang_id",
-    "llm_quality_score",
-    "llm_sim_ann_ivf",  # rows-only by design; `_recall` twin oracled
-    "llm_sim_ann_lsh",
-    "llm_sim_ann_multiprobe",
-    "llm_sim_ann_recall",
-    "llm_sim_knn_classify",
-    "ml_kmeans_tiers",  # rows-only by design; ml_kmeans_quality oracled
-    "ml_kmeanspp_tiers",  # rows-only by design; quality twin oracled
-    "ml_linear_scoring",
-    "mm_binary_features",
-    "mm_frame_sample",
-    # oldest r2-era core aggs:
-    "agg_collect",
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_first_last",
-    "agg_group_basic",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_histogram",
-    "agg_mode_per_group",
-]
-
-R9_WINDOW = R9_PLANNED + R9_RECHECKS
-
-# Round-10 overflow plan: queries added during round 9 queue here under
-# the same contract (oracle-checked locally on introduction;
-# tests/test_entry_contract.py counts R10 toward the
-# every-query-has-a-driver-evidence-plan invariant).
-R10_PLANNED: list[str] = [
-    # added in round 9 (oracle-checked locally on introduction):
-    "llm_index_build_pipeline",  # rows-only by design (iterative k-means)
-    "llm_index_build_pipeline_recall",
-    "llm_bpe_train_batched",
-    "llm_rare_token_docs",
-    "inc_subject_export",
-    "mm_modality_balance",
-    "stream_progress_report",
-]
-
-# Round-10 ACTIVE window (VERDICT r9 items 1 + 4): the staged rotation —
-# R10_PLANNED (7) + the 26 remaining r2-era queries + r3-era re-checks —
-# REVISED to lead with `llm_emb_pca`, the ledger's only red driver record
-# (CORRECTNESS_r09 err: its former `pc` array column broke the driver's
-# pandas canonicalization; the op now emits scalar pc_0..pc_7 and the
-# driver-shape gate in tools/plan_audit pins the discipline repo-wide).
-# The 50-slot arithmetic is kept by taking only the first 15 (of 17
-# staged) r3-era re-checks alphabetically — `llm_seq_packing` and
-# `pipeline_sink_jdbc` bump to the r11 tail.  After this window executes,
-# no registered query's evidence is older than r3 except that staged
-# tail, and the ledger holds zero red records.
-R10_RECHECKS = [
-    # THE red re-check (r9 driver err; rows-only by design — LAPACK
-    # floats — with the oracled llm_emb_pca_variance twin driver-green):
-    "llm_emb_pca",
-    # bridge-change re-check (VERDICT r9 item 3): fn_string's oracle now
-    # spells DuckDB reverse codepoint-true (the grapheme-vs-codepoint
-    # divergence found by the repo's own fuzz), so its r4 record predates
-    # the oracle text — re-verify under the driver:
-    "fn_string",
-    # all 26 remaining r2-era queries:
-    "agg_percentile",
-    "agg_pivot",
-    "agg_rollup",
-    "agg_stats",
-    "agg_time_rollup_multi",
-    "join_exists_correlated",
-    "limit_n",
-    "limit_offset_page",
-    "set_except",
-    "set_except_all",
-    "set_intersect",
-    "set_intersect_all",
-    "set_union_all",
-    "set_union_distinct",
-    "sort_multikey",
-    "topk_global",
-    "win_first_last_value",
-    "win_lag_lead",
-    "win_moving_avg",
-    "win_ntile",
-    "win_pattern_adjacent",
-    "win_percent_rank_cume",
-    "win_rank_dense",
-    "win_row_number",
-    "win_running_sum",
-    "win_topk_per_group",
-    # first 15 (alphabetically) of the 50 r3-era queries
-    # (llm_seq_packing and pipeline_sink_jdbc bumped to the r11 tail):
-    "dedup_by_key_latest",
-    "dedup_distinct",
-    "dim_scd2_build",
-    "filter_between_dates",
-    "filter_like_regex",
-    "filter_null_handling",
-    "filter_null_safe_eq",
-    "filter_pred",
-    "inc_backfill_window",
-    "inc_batch_watermark",
-    "inc_cdc_apply",
-    "inc_state_merge_stats",
-    "join_dpp_partition_pruned",
-    "llm_data_mixture",
-    "llm_quality_gopher",
-]
-
-R10_WINDOW = R10_PLANNED + R10_RECHECKS
-
-# Round-11 overflow plan: queries added during round 10 queue here under
-# the same contract (oracle-checked locally on introduction;
-# tests/test_entry_contract.py counts R11 toward the
-# every-query-has-a-driver-evidence-plan invariant).  The staged r11
-# rotation: R11_PLANNED + `llm_seq_packing` and `pipeline_sink_jdbc`
-# (bumped from the staged r10 list, see above) + the remaining 33 r3-era
-# queries, topped up with the oldest r4-era re-checks to 50.
-R11_PLANNED: list[str] = [
-    # added in round 10 (oracle-checked locally on introduction):
-    "llm_index_build_pipeline_ivfpq",  # rows-only by design (iterative quantizers)
-    "llm_index_build_pipeline_ivfpq_recall",
-    "llm_emb_matryoshka_recall",
-    "llm_index_incremental_add",  # rows-only by design (frozen k-means); recall twin oracled
-    "llm_index_incremental_add_recall",
-    "llm_index_build_pipeline_ivf",  # rows-only by design (iterative k-means)
-    "llm_index_build_pipeline_ivf_recall",
-]
-
-# Round-11 ACTIVE window (VERDICT r10 item 1): R11_PLANNED (the 7 round-10
-# index ops above — after this window executes the never-checked backlog
-# is again zero) + the staged re-checks: `llm_seq_packing` and
-# `pipeline_sink_jdbc` (bumped from the r10 window, see above), the 33
-# remaining r3-era queries, and the first 8 r4-era queries alphabetically
-# = exactly 50.  After this window executes, no registered query's
-# evidence is older than r4.
-R11_RECHECKS = [
-    # the two re-checks bumped from the staged r10 list:
-    "llm_seq_packing",
-    "pipeline_sink_jdbc",
-    # all 33 remaining r3-era queries (latest driver record r3):
-    "pipeline_spec_run",
-    "pipeline_spec_stream",
-    "project_alias_cast",
-    "project_case_when",
-    "project_compute",
-    "sample_fraction",
-    "scan_csv_badrecords",
-    "scan_csv_roundtrip",
-    "scan_jdbc",
-    "scan_json_roundtrip",
-    "scan_orc_roundtrip",
-    "scan_parquet",
-    "scan_parquet_schema_evolution",
-    "scan_projected",
-    "scan_text_roundtrip",
-    "sink_compact_small_files",
-    "sink_parquet_partitioned",
-    "sink_sorted_layout",
-    "stream_dedup",
-    "stream_foreachbatch_upsert",
-    "stream_late_data",
-    "stream_session_window",
-    "stream_sliding_agg",
-    "stream_stateful_custom",
-    "stream_static_join",
-    "stream_stream_join",
-    "stream_tumbling_agg",
-    "udaf_pandas_grouped_agg",
-    "udf_pandas_scalar",
-    "udf_python_scalar",
-    "udtf_grouped_map",
-    "udtf_python",
-    "win_sessionize",
-    # first 8 (alphabetically) of the 49 r4-era queries:
-    "agg_approx_count_distinct",
-    "agg_approx_percentile",
-    "agg_funnel",
-    "agg_heavy_hitters",
-    "agg_retention_cohort",
-    "fn_date",
-    "fn_datetime_tz",
-    "fn_json",
-]
-
-R11_WINDOW = R11_PLANNED + R11_RECHECKS
-
-# Round-12 overflow plan: queries added during round 11 queue here under
-# the same contract (oracle-checked locally on introduction;
-# tests/test_entry_contract.py counts R12 toward the
-# every-query-has-a-driver-evidence-plan invariant).
-# Staged r12 rotation (computed from the ledger at r11 close): after the
-# R11 window executes, the oldest evidence is the 41 remaining r4-era
-# queries (fn_map fn_variant graph_pagerank llm_bm25_search ... the 21
-# TPC-H rows ... win_cumulative_distinct) — so R12_WINDOW = R12_PLANNED
-# (5) + those 41 + the first 4 r5-era queries alphabetically
-# (agg_aqp_estimate agg_conditional agg_gini agg_higher_moments) = 50.
-# After IT executes, no registered query's evidence is older than r5.
-R12_PLANNED: list[str] = [
-    # added in round 11 (oracle-checked locally on introduction):
-    "stream_restart_backlog_drain",
-    "llm_index_tombstone_probe",  # rows-only by design (k-means cells); recall twin oracled
-    "llm_index_tombstone_probe_recall",
-    "llm_index_compact_cells",  # rows-only by design (k-means cells); recall twin oracled
-    "llm_index_compact_cells_recall",
-]
-
-# Round-12 ACTIVE window (executing the staged plan above): R12_PLANNED
-# (the 5 never-checked round-11 ops) + all 41 remaining r4-era queries +
-# the first 4 r5-era queries alphabetically = 50.  Verified against the
-# recomputed CORRECTNESS_r01–r11 ledger (evidence-age distribution
-# r4×41, r5×50, r6×50, r7×50, r8×50, r9×49, r10×50, r11×50).  After this
-# window executes, no registered query's evidence is older than r5.
-R12_RECHECKS = [
-    # all 41 remaining r4-era queries (latest driver record r4):
-    "fn_map",
-    "fn_variant",
-    "graph_pagerank",
-    "llm_bm25_search",
-    "llm_corpus_pipeline",
-    "llm_decontaminate",
-    "llm_dedup_clusters",
-    "llm_dedup_minhash_recall",
-    "llm_dedup_substring",
-    "llm_doc_chunking",
-    "llm_emb_normalize",
-    "llm_fingerprint",
-    "llm_lang_partition",
-    "llm_pii_scrub",
-    "llm_sim_ann_ivf_recall",
-    "llm_token_count",
-    "llm_unigram_logprob",
-    "ml_churn_label",
-    "mm_binaryfile_scan",
-    "tpch_q10",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "win_cumulative_distinct",
-    # first 4 (alphabetically) of the 50 r5-era queries:
-    "agg_aqp_estimate",
-    "agg_conditional",
-    "agg_gini",
-    "agg_higher_moments",
-]
-
-R12_WINDOW = R12_PLANNED + R12_RECHECKS
-
-# Round-13 overflow plan: queries added during round 12 queue here under
-# the same contract (oracle-checked locally on introduction;
-# tests/test_entry_contract.py counts R13 toward the
-# every-query-has-a-driver-evidence-plan invariant).
-# Staged r13 rotation (computed from the ledger at r12 close): after the
-# R12 window executes, the oldest evidence is the 46 remaining r5-era
-# queries (agg_market_basket ... alphabetical) — so R13_WINDOW =
-# R13_PLANNED + those 46, topped up with the oldest r6-era queries
-# alphabetically to 50.  After IT executes, no registered query's
-# evidence is older than r6.
-R13_PLANNED: list[str] = [
-    # added in round 12 (oracle-checked locally on introduction):
-    "llm_semdedup",
-    "llm_semdedup_recall",
-    "llm_sim_ann_filtered",  # rows-only by design (k-means cells); recall twin oracled
-    "llm_sim_ann_filtered_recall",
-    "llm_index_cell_rebalance",  # rows-only by design (k-means cells); recall twin oracled
-    "llm_index_cell_rebalance_recall",
-    "llm_semdedup_sweep",
-]
-
-# Round-13 ACTIVE window.  The r12-staged comment above said "the 46
-# remaining r5-era queries, topped up with r6-era" — but 7 + 46 = 53
-# overflows the 50-slot window, so (per VERDICT r12 item 1) the window
-# takes R13_PLANNED + the FIRST 43 r5-era queries alphabetically; the
-# last 3 (win_pareto_abc, win_pct_of_total, win_running_median) stay the
-# oldest evidence and lead the R14 re-check block.  Verified against the
-# recomputed CORRECTNESS_r01–r12 ledger (evidence-age distribution
-# r5×46, r6×50, r7×50, r8×50, r9×49, r10×50, r11×50, r12×50; 7
-# never-checked = exactly R13_PLANNED).  After this window executes, the
-# oldest registered evidence is those 3 r5-era rows.
-R13_RECHECKS = [
-    # first 43 (alphabetically) of the 46 r5-era queries:
-    "agg_market_basket",
-    "agg_multi_distinct",
-    "agg_path_transitions",
-    "agg_quantile_sketch_rollup",
-    "agg_string_concat_group",
-    "agg_time_to_convert",
-    "agg_unpivot",
-    "dim_scd2_lookup",
-    "dq_checks",
-    "dq_key_skew_report",
-    "dq_profile",
-    "dq_snapshot_diff",
-    "er_blocking_match",
-    "graph_triangle_count",
-    "inc_dedup_ingest",
-    "inc_scd2_apply",
-    "join_bloom_pruned",
-    "join_null_skew_rewrite",
-    "join_range_bucketed",
-    "join_salted_skew",
-    "llm_bigram_logprob",
-    "llm_dedup_embedding",
-    "llm_dedup_keeplist",
-    "llm_dedup_minhash_precision",
-    "llm_dedup_paragraph",
-    "llm_quality_c4",
-    "llm_seq_packing_greedy",
-    "llm_sim_ann_ivfpq_recall",
-    "llm_sim_ann_pq_recall",
-    "sample_group_fixed",
-    "sample_stratified",
-    "sample_weighted",
-    "sink_bucketed_colocated_join",
-    "sink_merge_upsert",
-    "sink_overwrite_partition",
-    "sink_zorder_layout",
-    "stream_ohlc",
-    "ts_ewma",
-    "ts_gapfill_locf",
-    "win_anomaly_mad",
-    "win_gaps_islands",
-    "win_interval_coalesce",
-    "win_ohlc",
-]
-
-R13_WINDOW = R13_PLANNED + R13_RECHECKS
-
-# Round-14 overflow plan: queries added during round 13 queue here under
-# the same contract (oracle-checked locally on introduction;
-# tests/test_entry_contract.py counts R14 toward the
-# every-query-has-a-driver-evidence-plan invariant).
-# Staged r14 rotation (computed from the ledger at r13 close): after the
-# R13 window executes, the oldest evidence is the 3 remaining r5-era
-# queries (win_pareto_abc, win_pct_of_total, win_running_median) — so
-# R14_WINDOW = R14_PLANNED + those 3 + the oldest r6-era queries
-# alphabetically, topped up to exactly 50.
-R14_PLANNED: list[str] = [
-    # added in round 13 (oracle-checked locally on introduction):
-    "llm_semdedup_bands",
-    "llm_semdedup_bands_recall",
-    "llm_corpus_prune_pipeline",
-    "llm_corpus_prune_pipeline_audit",
-    "llm_index_retrain",  # rows-only by design (k-means cells); recall twin oracled
-    "llm_index_retrain_recall",
-    "llm_sim_ann_nprobe_sweep",  # rows-only by design (k-means cells); recall twin oracled
-    "llm_sim_ann_nprobe_sweep_recall",
-    "llm_quality_select_capped",
-    "llm_semdedup_prototypes",
-    "llm_corpus_prune_d4",
-]
-
-# Round-14 ACTIVE window (executing VERDICT r13 item 1).  Composition
-# recomputed from the CORRECTNESS_r01–r13 ledger this round: 11
-# never-checked round-13 additions (R14_PLANNED) + the 3 pinned r5-era
-# leftovers FIRST in the re-check block (the entry pin at
-# tests/test_entry_contract.py demanded they lead R14) + the first 36
-# r6-era queries alphabetically = exactly 50.  Evidence-age distribution
-# at r13 close: r5×3, r6×50, r7×50, r8×50, r9×49, r10×50, r11×50,
-# r12×50, r13×50; never-checked = exactly R14_PLANNED.  After this
-# window executes, the oldest registered evidence is the remaining 14
-# r6-era queries (llm_sim_mmr_rerank .. win_zscore_rolling), which lead
-# the R15 re-check block.
-R14_RECHECKS: list[str] = [
-    # the 3 r5-era leftovers (pinned to lead this block):
-    "win_pareto_abc",
-    "win_pct_of_total",
-    "win_running_median",
-    # first 36 (alphabetically) of the 50 r6-era queries:
-    "agg_ab_test",
-    "agg_activity_heatmap",
-    "agg_attribution_last_touch",
-    "agg_autocorr_lag1",
-    "agg_bitmap_distinct",
-    "agg_bitmap_rollup",
-    "agg_cohort_ltv",
-    "agg_dau_wau_stickiness",
-    "agg_entropy_mix",
-    "agg_forecast_snaive",
-    "agg_interevent_gaps",
-    "agg_new_vs_returning",
-    "agg_rfm_segmentation",
-    "agg_sketch_rollup",
-    "agg_survival_km",
-    "agg_trend_corr",
-    "dq_benford",
-    "dq_cross_table_rule",
-    "dq_outlier_iqr",
-    "graph_connected_components",
-    "graph_degree_histogram",
-    "graph_jaccard_neighbors",
-    "inc_late_dim_resolve",
-    "join_asof_nearest",
-    "join_interval_overlap",
-    "llm_bpe_merge_candidates",
-    "llm_corpus_stats",
-    "llm_curriculum_order",
-    "llm_dedup_containment",
-    "llm_dedup_crossset",
-    "llm_dedup_embedding_recall",
-    "llm_ngram_novelty",
-    "llm_perplexity_bucket",
-    "llm_readability",
-    "llm_sim_ann_ivfpq",
-    "llm_sim_ann_pq",
-]
-
-R14_WINDOW = R14_PLANNED + R14_RECHECKS
 
 # Round-15 overflow plan: queries added during round 14 queue here under
 # the same contract (oracle-checked locally on introduction;

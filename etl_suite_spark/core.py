@@ -189,3 +189,25 @@ def materialize_once(spark, df, token: str, partition_col: str | None = None,
         except OSError:  # concurrent builder won the rename; use theirs
             shutil.rmtree(tmp, ignore_errors=True)
     return spark.read.parquet(final)
+
+
+def materialize_parts_once(spark, token: str, parts, build):
+    """Build-or-reuse of a multi-part :func:`materialize_once` artifact
+    (a persisted index: assignment + centroids, codes + codebooks, ...).
+
+    ``parts`` is the ordered ``(suffix, partition_col, n_partitions)`` of
+    each part, stored under ``token + suffix``; ``build`` is a zero-argument
+    callable returning one DataFrame per part, in the same order. It runs
+    only when some part is missing, and the existence check happens before
+    it is called — index training runs eagerly (checkpointed Lloyd
+    iterations), so constructing the build plan at all is the expensive
+    step. Parts are written in ``parts`` order; returns the read-back
+    frames as a tuple."""
+    if all(mat_exists(token + suffix) for suffix, _, _ in parts):
+        return tuple(
+            spark.read.parquet(mat_path(token + suffix)) for suffix, _, _ in parts
+        )
+    return tuple(
+        materialize_once(spark, df, token + suffix, partition_col=col, n_partitions=n)
+        for df, (suffix, col, n) in zip(build(), parts, strict=True)
+    )

@@ -739,11 +739,20 @@ def _observed_sum(obs, labels: DataFrame, timeout_sec: float = 10.0):
     time this is called, so on a healthy runtime the metric arrives in
     milliseconds; if it hasn't within ``timeout_sec``, fall back to a
     separate one-row aggregate job over the checkpointed labels — the
-    exact pre-r14 probe, same value by construction."""
+    exact pre-r14 probe, same value by construction. A ``get`` that
+    RAISES takes the same fallback: the exception is caught inside the
+    probe thread, so it never escapes as an unhandled-thread traceback."""
     import threading
 
     out: dict = {}
-    t = threading.Thread(target=lambda: out.update(obs.get), daemon=True)
+
+    def probe():
+        try:
+            out.update(obs.get)
+        except Exception:  # fall through to the aggregate fallback below
+            pass
+
+    t = threading.Thread(target=probe, daemon=True)
     t.start()
     t.join(timeout_sec)
     if "s" in out:

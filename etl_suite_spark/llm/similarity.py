@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..core import SUBJECT_RESIDUE, d2d
+from ..core import SUBJECT_RESIDUE, d2d, materialize_once, materialize_parts_once
 from ..io import load_table
 from ..registry import query
 
@@ -401,40 +401,43 @@ def llm_sim_ann_ivf_recall(spark, sf_dir):
     )
 
 
-# Shared IVF-Flat coarse-quantizer hyperparams — named so DERIVED index
-# tokens (the rebalance artifact) track them instead of hardcoding
-# (code-review r12: a changed default must rebuild dependents too).
+# Shared IVF-Flat coarse-quantizer hyperparams — named so every index
+# token (the derived rebalance/retrain artifacts too) tracks them
+# instead of hardcoding (code-review r12: a changed default must rebuild
+# dependents too).
 _IVF_K = 8
 _IVF_ITERS = 3
+_IVF_TAG = f"k{_IVF_K}i{_IVF_ITERS}"
+# Persisted layout of every IVF-Flat index (materialize_parts_once parts):
+# the (vec_id, cell) assignment co-located on vec_id, and the k centroids.
+_IVF_PARTS = ((":cells", "vec_id", 8), (":centroids", None, 1))
 
 
-def _ivf_index(spark, sf_dir, k=_IVF_K, iters=_IVF_ITERS):
+def _train_ivf(spark, corpus):
+    """Train the IVF-Flat coarse quantizer over ``corpus`` (vec_id,
+    embedding): _IVF_K cells, _IVF_ITERS Lloyd iterations, pp init.
+    Returns (cells, centroids) — cells is (vec_id, cell), centroids is
+    (cluster, centroid). The one trainer behind every IVF index."""
+    from .clustering import kmeans_fit
+
+    assigned, centroids = kmeans_fit(
+        spark, corpus, k=_IVF_K, iters=_IVF_ITERS, init="pp"
+    )
+    return assigned.select("vec_id", F.col("cluster").alias("cell")), centroids
+
+
+def _ivf_index(spark, sf_dir):
     """(assignment, centroids) of the IVF-Flat coarse quantizer,
     PERSISTED once per corpus — same write-once serving-layout rationale
     (and eager-training caveat) as :func:`_pq_index`. ``assignment`` is
     (vec_id, cell)."""
-    from ..core import mat_exists, mat_path, materialize_once
-    from .clustering import kmeans_fit
-
-    tok = f"v1:ivf_index:{sf_dir}:k{k}i{iters}"
-    if not (mat_exists(tok + ":cells") and mat_exists(tok + ":centroids")):
-        e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        # train the coarse quantizer: 8 cells, 3 Lloyd iterations, pp init
-        assigned, centroids = kmeans_fit(spark, e, k=k, iters=iters, init="pp")
-        assigned = materialize_once(
-            spark,
-            assigned.select("vec_id", F.col("cluster").alias("cell")),
-            tok + ":cells",
-            partition_col="vec_id",
-            n_partitions=8,
-        )
-        centroids = materialize_once(
-            spark, centroids, tok + ":centroids", n_partitions=1
-        )
-        return assigned, centroids
-    return (
-        spark.read.parquet(mat_path(tok + ":cells")),
-        spark.read.parquet(mat_path(tok + ":centroids")),
+    return materialize_parts_once(
+        spark,
+        f"v1:ivf_index:{sf_dir}:{_IVF_TAG}",
+        _IVF_PARTS,
+        lambda: _train_ivf(
+            spark, load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        ),
     )
 
 
@@ -776,35 +779,60 @@ def llm_sim_ann_recall(spark, sf_dir):
     )
 
 
-def _pq_normalize(spark, sf_dir):
-    """(e, en): raw embeddings with norms, and the L2-normalized corpus
-    MATERIALIZED once (localCheckpoint). Without the barrier,
-    CollapseProject inlines the nsq column — itself a 64-term aggregate —
-    into the normalize lambda, so nsq is recomputed PER ELEMENT of every
-    `unit` use (64×64 interpreted ops + an array allocation each;
-    higher-order functions don't codegen). Measured: that single inlining
-    was ~80% of the PQ operator's runtime (6.3 s of 7.9 s at sf0.1). The
-    repartition matters independently: the fixture is one parquet file →
-    1-2 scan partitions, and the checkpoint would FREEZE that width for
-    every downstream stage (measured at 10× fixture scale: the whole
-    index build ran on 2 of 32 cores). At 100 TB you'd persist the
-    normalized corpus once anyway — it's the PQ encode input."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
-    en = (
-        e.select(
-            "vec_id",
-            "embedding",
-            "nsq",
-            F.expr(
-                "transform(embedding, x -> CAST(CAST(x AS DOUBLE) / sqrt(nsq) AS FLOAT))"
-            ).alias("unit"),
-        )
+# Shared hyperparams of every persisted PQ / IVF-PQ index: _PQ_M
+# subspaces of _PQ_SUBDIM dims, _PQ_KSUB centroids per subspace codebook
+# (each index's cache token carries all three via _PQ_TAG).
+_PQ_M = 8
+_PQ_KSUB = 16
+_PQ_SUBDIM = 8
+_PQ_TAG = f"m{_PQ_M}k{_PQ_KSUB}d{_PQ_SUBDIM}"
+# Persisted layouts (materialize_parts_once parts): flat PQ is codebooks +
+# vec_id-co-located codes; IVF-PQ is the code table PARTITIONED ON CELL ID
+# (a probe's cell equi-join starts co-located), codebooks, coarse centroids.
+_PQ_PARTS = ((":cent", None, 1), (":codes", "vec_id", 8))
+_IVFPQ_PARTS = ((":coded", "cell", 8), (":cent", None, 1), (":coarse", None, 1))
+
+_UNIT_EXPR = "transform(embedding, x -> CAST(CAST(x AS DOUBLE) / sqrt(nsq) AS FLOAT))"
+
+
+def _unit_corpus(spark, vecs):
+    """The L2-normalized corpus ``en`` (vec_id, embedding, nsq, unit) of a
+    (vec_id, embedding) frame, MATERIALIZED once (localCheckpoint) — the
+    input every PQ/IVF-PQ build trains and encodes on. Without the
+    barrier, CollapseProject inlines the nsq column — itself a 64-term
+    aggregate — into the normalize lambda, so nsq is recomputed PER
+    ELEMENT of every `unit` use (64×64 interpreted ops + an array
+    allocation each; higher-order functions don't codegen). Measured:
+    that single inlining was ~80% of the PQ operator's runtime (6.3 s of
+    7.9 s at sf0.1). The repartition matters independently: the fixture
+    is one parquet file → 1-2 scan partitions, and the checkpoint would
+    FREEZE that width for every downstream stage (measured at 10× fixture
+    scale: the whole index build ran on 2 of 32 cores). At 100 TB you'd
+    persist the normalized corpus once anyway — it's the PQ encode
+    input."""
+    return (
+        vecs.withColumn("nsq", dot("embedding", "embedding"))
+        .select("vec_id", "embedding", "nsq", F.expr(_UNIT_EXPR).alias("unit"))
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .localCheckpoint(eager=True)
     )
-    return e, en
+
+
+def _pq_normalize(spark, sf_dir):
+    """:func:`_unit_corpus` of the raw embeddings table."""
+    return _unit_corpus(
+        spark, load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
+
+
+def _seed_ids(en):
+    """The _PQ_KSUB smallest vec_ids of ``en`` — explicit codebook seeds
+    for a corpus whose low ids may be missing (see :func:`_pq_train_encode`;
+    a _PQ_KSUB-row TakeOrdered, so the driver read is bounded)."""
+    return [
+        int(r["vec_id"])
+        for r in en.select("vec_id").orderBy("vec_id").limit(_PQ_KSUB).collect()
+    ]
 
 
 def _subvectors(vec_df, vec_col, m, subdim):
@@ -950,13 +978,10 @@ def _adc_table(qdf, cent, key_cols, vec_col, m=8, ksub=16, subdim=8):
     )
 
 
-_UNIT_EXPR = "transform(embedding, x -> CAST(CAST(x AS DOUBLE) / sqrt(nsq) AS FLOAT))"
-
-
 def _raw_queries(e):
     """The 10-query probe set derived from the RAW corpus: normalization
     runs on just these rows (the q_unit transform is identical to
-    _pq_normalize's, so ADC tables built from it match the index)."""
+    _unit_corpus's, so ADC tables built from it match the index)."""
     return e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -965,7 +990,7 @@ def _raw_queries(e):
     )
 
 
-def _pq_index(spark, sf_dir, m=8, ksub=16, subdim=8):
+def _pq_index(spark, sf_dir):
     """(cent, codes) of the flat-PQ index, PERSISTED once per corpus (the
     materialize_once write-once pattern): an ANN index is a serving
     LAYOUT — production builds it once and probes it many times, so the
@@ -974,33 +999,28 @@ def _pq_index(spark, sf_dir, m=8, ksub=16, subdim=8):
     constructing the training plan because Lloyd's iterations execute
     eagerly (checkpointed loop state). Determinism makes the cache sound:
     fixed init + fixed seeds ⇒ the rebuilt index is byte-identical."""
-    from ..core import mat_exists, mat_path, materialize_once
-
-    tok = f"v1:pq_index:{sf_dir}:m{m}k{ksub}d{subdim}"
-    if not (mat_exists(tok + ":cent") and mat_exists(tok + ":codes")):
-        _, en = _pq_normalize(spark, sf_dir)
-        cent, codes = _pq_train_encode(en, m=m, ksub=ksub, subdim=subdim)
-        cent = materialize_once(spark, cent, tok + ":cent", n_partitions=1)
-        codes = materialize_once(
-            spark, codes, tok + ":codes", partition_col="vec_id", n_partitions=8
-        )
-        return cent, codes
-    return (
-        spark.read.parquet(mat_path(tok + ":cent")),
-        spark.read.parquet(mat_path(tok + ":codes")),
+    return materialize_parts_once(
+        spark,
+        f"v1:pq_index:{sf_dir}:{_PQ_TAG}",
+        _PQ_PARTS,
+        lambda: _pq_train_encode(
+            _pq_normalize(spark, sf_dir), m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM
+        ),
     )
 
 
-def _pq_parts(spark, sf_dir, m=8, ksub=16, subdim=8):
+def _pq_parts(spark, sf_dir):
     """Shared flat-PQ machinery: cached index + per-query ADC tables.
     Returns (e, codes, q, qtab); see :func:`llm_sim_ann_pq` for the full
     design rationale."""
-    cent, codes = _pq_index(spark, sf_dir, m=m, ksub=ksub, subdim=subdim)
+    cent, codes = _pq_index(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     ).withColumn("nsq", dot("embedding", "embedding"))
     q = _raw_queries(e)
-    qtab = _adc_table(q, cent, ["query_id"], "q_unit", m=m, ksub=ksub, subdim=subdim)
+    qtab = _adc_table(
+        q, cent, ["query_id"], "q_unit", m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM
+    )
     return e, codes, q, qtab
 
 
@@ -1112,15 +1132,15 @@ def llm_sim_ann_pq(spark, sf_dir):
     and pay only ADC probe + re-rank — measured at sf0.1: 3.17 s
     (retrain-per-call) → 0.87-1.03 s warm, cold build 10.2 s visible in
     pass 1 and in the scale smoke."""
-    m, ksub, pool = 8, 16, 32
-    e, codes, q, qtab = _pq_parts(spark, sf_dir, m=m, ksub=ksub)
+    pool = 32
+    e, codes, q, qtab = _pq_parts(spark, sf_dir)
 
     # ADC scoring: broadcast the 10 query tables; per (vector, query) cost
     # is m map lookups — aggregate over the code array, all inside codegen
     adc = codes.crossJoin(F.broadcast(qtab)).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        _adc_expr(m, ksub).alias("approx_dsq"),
+        _adc_expr(_PQ_M, _PQ_KSUB).alias("approx_dsq"),
     ).filter(F.col("neighbor_id") != F.col("query_id"))
     wc = Window.partitionBy("query_id").orderBy(
         F.col("approx_dsq").asc(), F.col("neighbor_id").asc()
@@ -1129,27 +1149,19 @@ def llm_sim_ann_pq(spark, sf_dir):
     return _rerank_top3(cand, e, q)
 
 
-def _ivfpq_build(spark, en, tok, m=8, ksub=16, subdim=8, seed_ids=None):
+def _ivfpq_build(spark, en, seed_ids=None):
     """Train the IVF-PQ index over ``en`` (vec_id + `unit` normalized
-    vectors) and persist (coded, cent, coarse) under ``tok`` — the
-    SHARED build body of :func:`_ivfpq_index` (raw corpus, default
-    low-id codebook seeding) and :func:`_ivfpq_dedup_index`
-    (representatives, explicit seeds) so a quantizer change cannot
-    silently diverge between the raw and dedup families (code-review
-    r10 finding #3). Coarse quantizer: 8 cells, 3 Lloyd iterations, pp
-    init; PQ trains and encodes each vector's RESIDUAL from its cell
-    centroid; ``coded`` is written PARTITIONED ON CELL ID so a probe's
-    cell equi-join starts co-located with the storage layout."""
-    from ..core import materialize_once
-    from .clustering import kmeans_fit
-
-    assigned, coarse = kmeans_fit(
-        spark, en.select("vec_id", F.col("unit").alias("embedding")),
-        k=8, iters=3, init="pp",
+    vectors) and return its (coded, cent, coarse) frames — the SHARED
+    build body of :func:`_ivfpq_index` (raw corpus, default low-id
+    codebook seeding) and :func:`_ivfpq_dedup_index` (representatives,
+    explicit seeds) so a quantizer change cannot silently diverge
+    between the raw and dedup families (code-review r10 finding #3).
+    Coarse quantizer: :func:`_train_ivf` over the unit vectors; PQ
+    trains and encodes each vector's RESIDUAL from its cell centroid."""
+    assigned, coarse = _train_ivf(
+        spark, en.select("vec_id", F.col("unit").alias("embedding"))
     )
-    cells = en.join(
-        assigned.select("vec_id", F.col("cluster").alias("cell")), "vec_id"
-    ).join(
+    cells = en.join(assigned, "vec_id").join(
         F.broadcast(coarse.select(F.col("cluster").alias("cell"), "centroid")),
         "cell",
     )
@@ -1162,16 +1174,10 @@ def _ivfpq_build(spark, en, tok, m=8, ksub=16, subdim=8, seed_ids=None):
         ).alias("runit"),
     ).localCheckpoint(eager=True)  # reused by 3 assign passes + encode
     cent, codes = _pq_train_encode(
-        resid, m=m, ksub=ksub, subdim=subdim, vec_col="runit",
+        resid, m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM, vec_col="runit",
         seed_ids=seed_ids,
     )
-    coded = codes.join(resid.select("vec_id", "cell"), "vec_id")
-    coded = materialize_once(
-        spark, coded, tok + ":coded", partition_col="cell", n_partitions=8
-    )
-    cent = materialize_once(spark, cent, tok + ":cent", n_partitions=1)
-    coarse = materialize_once(spark, coarse, tok + ":coarse", n_partitions=1)
-    return coded, cent, coarse
+    return codes.join(resid.select("vec_id", "cell"), "vec_id"), cent, coarse
 
 
 def _ivfpq_probe(coded, cent, coarse, rerank_e, q,
@@ -1222,19 +1228,17 @@ def _ivfpq_probe(coded, cent, coarse, rerank_e, q,
     return _rerank_top3(cand, rerank_e, q)
 
 
-def _ivfpq_index(spark, sf_dir, m=8, ksub=16, subdim=8):
+def _ivfpq_index(spark, sf_dir):
     """(coded, cent, coarse) of the IVF-PQ index, PERSISTED once per
     corpus (same rationale as :func:`_pq_index`; the cache check runs
     before plan construction because both quantizers train eagerly).
     Build body shared with the dedup variant via :func:`_ivfpq_build`."""
-    from ..core import mat_exists, mat_path
-
-    tok = f"v1:ivfpq_index:{sf_dir}:m{m}k{ksub}d{subdim}"
-    names = (":coded", ":cent", ":coarse")
-    if not all(mat_exists(tok + n) for n in names):
-        _, en = _pq_normalize(spark, sf_dir)
-        return _ivfpq_build(spark, en, tok, m=m, ksub=ksub, subdim=subdim)
-    return tuple(spark.read.parquet(mat_path(tok + n)) for n in names)
+    return materialize_parts_once(
+        spark,
+        f"v1:ivfpq_index:{sf_dir}:{_PQ_TAG}",
+        _IVFPQ_PARTS,
+        lambda: _ivfpq_build(spark, _pq_normalize(spark, sf_dir)),
+    )
 
 
 @query("llm_sim_ann_ivfpq")  # rows-only: both quantizers train iteratively
@@ -1272,13 +1276,14 @@ def llm_sim_ann_ivfpq(spark, sf_dir):
     map-only on the pruned partitions. The index is built once per
     corpus and cached (measured at sf0.1: 6.19 s retrain-per-call →
     0.83-0.86 s warm probe; cold build 7.2 s in pass 1 / scale smoke)."""
-    m, ksub, subdim = 8, 16, 8
-    coded, cent, coarse = _ivfpq_index(spark, sf_dir, m=m, ksub=ksub, subdim=subdim)
+    coded, cent, coarse = _ivfpq_index(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     ).withColumn("nsq", dot("embedding", "embedding"))
     q = _raw_queries(e)
-    return _ivfpq_probe(coded, cent, coarse, e, q, m=m, ksub=ksub, subdim=subdim)
+    return _ivfpq_probe(
+        coded, cent, coarse, e, q, m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM
+    )
 
 
 def _exact_top3(e, q):
@@ -2300,8 +2305,6 @@ def _dedup_reps_materialized(spark, sf_dir):
     ground truth each scan it (code-review r9 finding #3: three
     corpus-wide shuffles per recall run at the 3 M-vector tier).
     Partitioned on vec_id so downstream joins start co-located."""
-    from ..core import materialize_once
-
     return materialize_once(
         spark,
         _dedup_reps(spark, sf_dir),
@@ -2311,7 +2314,7 @@ def _dedup_reps_materialized(spark, sf_dir):
     )
 
 
-def _pq_dedup_index(spark, sf_dir, m=8, ksub=16, subdim=8):
+def _pq_dedup_index(spark, sf_dir):
     """(cent, codes) of the flat-PQ index built over the DEDUPED corpus,
     persisted once per corpus (same write-once serving-layout rationale
     as :func:`_pq_index`, distinct cache token). The k-means init seeds
@@ -2319,35 +2322,15 @@ def _pq_dedup_index(spark, sf_dir, m=8, ksub=16, subdim=8):
     the raw-path `vec_id < ksub` filter would silently under-seed when
     the corpus's low ids are near-duplicates of each other (code-review
     r9 finding #1)."""
-    from ..core import mat_exists, mat_path, materialize_once
 
-    tok = f"v2:pq_dedup_index:{sf_dir}:m{m}k{ksub}d{subdim}"
-    if not (mat_exists(tok + ":cent") and mat_exists(tok + ":codes")):
-        reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-            "nsq", dot("embedding", "embedding")
+    def build():
+        en = _unit_corpus(spark, _dedup_reps_materialized(spark, sf_dir))
+        return _pq_train_encode(
+            en, m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM, seed_ids=_seed_ids(en)
         )
-        en = (
-            reps.select(
-                "vec_id", "embedding", "nsq", F.expr(_UNIT_EXPR).alias("unit")
-            )
-            .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-            .localCheckpoint(eager=True)  # same inlining barrier as _pq_normalize
-        )
-        seed_ids = [
-            int(r["vec_id"])
-            for r in en.select("vec_id").orderBy("vec_id").limit(ksub).collect()
-        ]  # ksub-row TakeOrdered — bounded driver read
-        cent, codes = _pq_train_encode(
-            en, m=m, ksub=ksub, subdim=subdim, seed_ids=seed_ids
-        )
-        cent = materialize_once(spark, cent, tok + ":cent", n_partitions=1)
-        codes = materialize_once(
-            spark, codes, tok + ":codes", partition_col="vec_id", n_partitions=8
-        )
-        return cent, codes
-    return (
-        spark.read.parquet(mat_path(tok + ":cent")),
-        spark.read.parquet(mat_path(tok + ":codes")),
+
+    return materialize_parts_once(
+        spark, f"v2:pq_dedup_index:{sf_dir}:{_PQ_TAG}", _PQ_PARTS, build
     )
 
 
@@ -2377,8 +2360,8 @@ def llm_index_build_pipeline(spark, sf_dir):
     proportional to duplicate mass: at a 1.11x-dup corpus the pipeline
     is only ~1.1x on build and parity on probe (addendum 44) — a corpus
     known near-duplicate-free can keep the raw build."""
-    m, ksub, pool = 8, 16, 32
-    cent, codes = _pq_dedup_index(spark, sf_dir, m=m, ksub=ksub)
+    pool = 32
+    cent, codes = _pq_dedup_index(spark, sf_dir)
     reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
         "nsq", dot("embedding", "embedding")
     )
@@ -2387,11 +2370,11 @@ def llm_index_build_pipeline(spark, sf_dir):
         .select("vec_id", "embedding")
         .withColumn("nsq", dot("embedding", "embedding"))
     )
-    qtab = _adc_table(q, cent, ["query_id"], "q_unit", m=m, ksub=ksub)
+    qtab = _adc_table(q, cent, ["query_id"], "q_unit", m=_PQ_M, ksub=_PQ_KSUB)
     adc = codes.crossJoin(F.broadcast(qtab)).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        _adc_expr(m, ksub).alias("approx_dsq"),
+        _adc_expr(_PQ_M, _PQ_KSUB).alias("approx_dsq"),
     ).filter(F.col("neighbor_id") != F.col("query_id"))
     wc = Window.partitionBy("query_id").orderBy(
         F.col("approx_dsq").asc(), F.col("neighbor_id").asc()
@@ -2459,7 +2442,7 @@ def llm_index_build_pipeline_recall(spark, sf_dir):
     return _recall_metric(ann, reps, q, 0.4, "recall_ge_40")
 
 
-def _ivfpq_dedup_index(spark, sf_dir, m=8, ksub=16, subdim=8):
+def _ivfpq_dedup_index(spark, sf_dir):
     """(coded, cent, coarse) of the IVF-PQ index built over the DEDUPED
     corpus — the cell-routed extension of :func:`_pq_dedup_index`
     (VERDICT r9 item 5: addendum 30 showed IVF-PQ was the only expensive
@@ -2472,29 +2455,14 @@ def _ivfpq_dedup_index(spark, sf_dir, m=8, ksub=16, subdim=8):
     REPRESENTATIVE ids (the `vec_id < ksub` default would under-seed
     when low ids dedup away — the same code-review r9 finding #1 that
     bit the flat dedup path)."""
-    from ..core import mat_exists, mat_path
 
-    tok = f"v1:ivfpq_dedup_index:{sf_dir}:m{m}k{ksub}d{subdim}"
-    names = (":coded", ":cent", ":coarse")
-    if not all(mat_exists(tok + n) for n in names):
-        reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-            "nsq", dot("embedding", "embedding")
-        )
-        en = (
-            reps.select(
-                "vec_id", "embedding", "nsq", F.expr(_UNIT_EXPR).alias("unit")
-            )
-            .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-            .localCheckpoint(eager=True)  # same inlining barrier as _pq_normalize
-        )
-        seed_ids = [
-            int(r["vec_id"])
-            for r in en.select("vec_id").orderBy("vec_id").limit(ksub).collect()
-        ]  # ksub-row TakeOrdered — bounded driver read
-        return _ivfpq_build(
-            spark, en, tok, m=m, ksub=ksub, subdim=subdim, seed_ids=seed_ids
-        )
-    return tuple(spark.read.parquet(mat_path(tok + n)) for n in names)
+    def build():
+        en = _unit_corpus(spark, _dedup_reps_materialized(spark, sf_dir))
+        return _ivfpq_build(spark, en, seed_ids=_seed_ids(en))
+
+    return materialize_parts_once(
+        spark, f"v1:ivfpq_dedup_index:{sf_dir}:{_PQ_TAG}", _IVFPQ_PARTS, build
+    )
 
 
 @query("llm_index_build_pipeline_ivfpq")  # rows-only: both quantizers iterate
@@ -2522,10 +2490,7 @@ def llm_index_build_pipeline_ivfpq(spark, sf_dir):
     removes roughly cancel, vs 38x/23x at the 1500x dup-heavy tier. A
     corpus KNOWN near-duplicate-free can keep the raw build; at unknown
     dup mass the stage is ~free insurance."""
-    m, ksub, subdim = 8, 16, 8
-    coded, cent, coarse = _ivfpq_dedup_index(
-        spark, sf_dir, m=m, ksub=ksub, subdim=subdim
-    )
+    coded, cent, coarse = _ivfpq_dedup_index(spark, sf_dir)
     reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
         "nsq", dot("embedding", "embedding")
     )
@@ -2534,7 +2499,9 @@ def llm_index_build_pipeline_ivfpq(spark, sf_dir):
         .select("vec_id", "embedding")
         .withColumn("nsq", dot("embedding", "embedding"))
     )
-    return _ivfpq_probe(coded, cent, coarse, reps, q, m=m, ksub=ksub, subdim=subdim)
+    return _ivfpq_probe(
+        coded, cent, coarse, reps, q, m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM
+    )
 
 
 @query(
@@ -2790,11 +2757,16 @@ def llm_emb_matryoshka_recall(spark, sf_dir):
     )
 
 
-def _ivf_incr_parts(spark, sf_dir, k=8, iters=3, split=100):
+# The incremental-add delta batch is vec_id < _INCR_SPLIT; the base
+# corpus the frozen quantizer trains on is the rest.
+_INCR_SPLIT = 100
+
+
+def _ivf_incr_parts(spark, sf_dir):
     """(base_cells, delta_cells, centroids) of the INCREMENTALLY
     MAINTAINED IVF index: the coarse quantizer is trained on the base
-    corpus only (vec_id >= ``split``) and FROZEN; the delta batch
-    (vec_id < ``split``) is assigned to its nearest existing cell by a
+    corpus only (vec_id >= _INCR_SPLIT) and FROZEN; the delta batch
+    (vec_id < _INCR_SPLIT) is assigned to its nearest existing cell by a
     map-only broadcast argmin — no retrain, no re-encode of the base.
     This is the production delta-ingest path for a serving index: at
     100 TB a nightly batch appends to the cell-partitioned layout
@@ -2803,31 +2775,19 @@ def _ivf_incr_parts(spark, sf_dir, k=8, iters=3, split=100):
     so. Base training + assignment persist write-once; the delta
     assignment is recomputed per call because the delta is the moving
     part."""
-    from ..core import mat_exists, mat_path, materialize_once
-    from .clustering import _DIST_SQ, kmeans_fit
+    from .clustering import _DIST_SQ
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    base = e.filter(F.col("vec_id") >= split)
-    tok = f"v1:ivf_incr_index:{sf_dir}:k{k}i{iters}s{split}"
-    if not (mat_exists(tok + ":cells") and mat_exists(tok + ":centroids")):
-        assigned, centroids = kmeans_fit(spark, base, k=k, iters=iters, init="pp")
-        base_cells = materialize_once(
-            spark,
-            assigned.select("vec_id", F.col("cluster").alias("cell")),
-            tok + ":cells",
-            partition_col="vec_id",
-            n_partitions=8,
-        )
-        centroids = materialize_once(
-            spark, centroids, tok + ":centroids", n_partitions=1
-        )
-    else:
-        base_cells = spark.read.parquet(mat_path(tok + ":cells"))
-        centroids = spark.read.parquet(mat_path(tok + ":centroids"))
+    base_cells, centroids = materialize_parts_once(
+        spark,
+        f"v1:ivf_incr_index:{sf_dir}:{_IVF_TAG}s{_INCR_SPLIT}",
+        _IVF_PARTS,
+        lambda: _train_ivf(spark, e.filter(F.col("vec_id") >= _INCR_SPLIT)),
+    )
     # frozen-quantizer assignment of the delta: broadcast k centroids,
     # min-struct argmin (map-side combine, no sort)
     delta_scored = (
-        e.filter(F.col("vec_id") < split)
+        e.filter(F.col("vec_id") < _INCR_SPLIT)
         .crossJoin(F.broadcast(centroids))
         .withColumn("dsq", F.expr(_DIST_SQ.format(a="embedding", b="centroid")))
     )
@@ -3258,36 +3218,18 @@ def llm_index_compact_cells_recall(spark, sf_dir):
     return _survivor_recall_metric(ann, e.filter(~_is_tombstoned()), q)
 
 
-def _ivf_dedup_index(spark, sf_dir, k=8, iters=3):
+def _ivf_dedup_index(spark, sf_dir):
     """(assignment, centroids) of the IVF-Flat coarse quantizer trained
     over the DEDUPED corpus — the last index family to get the
     dedup-before-index treatment (flat PQ: r9; IVF-PQ: this round's
     addendum 39; raw IVF-Flat's 3 M-vector k-means cost 131.8 s in the
     same run). Same persisted write-once layout as :func:`_ivf_index`,
     distinct cache token."""
-    from ..core import mat_exists, mat_path, materialize_once
-    from .clustering import kmeans_fit
-
-    tok = f"v1:ivf_dedup_index:{sf_dir}:k{k}i{iters}"
-    if not (mat_exists(tok + ":cells") and mat_exists(tok + ":centroids")):
-        reps = _dedup_reps_materialized(spark, sf_dir)
-        assigned, centroids = kmeans_fit(
-            spark, reps.select("vec_id", "embedding"), k=k, iters=iters, init="pp"
-        )
-        assigned = materialize_once(
-            spark,
-            assigned.select("vec_id", F.col("cluster").alias("cell")),
-            tok + ":cells",
-            partition_col="vec_id",
-            n_partitions=8,
-        )
-        centroids = materialize_once(
-            spark, centroids, tok + ":centroids", n_partitions=1
-        )
-        return assigned, centroids
-    return (
-        spark.read.parquet(mat_path(tok + ":cells")),
-        spark.read.parquet(mat_path(tok + ":centroids")),
+    return materialize_parts_once(
+        spark,
+        f"v1:ivf_dedup_index:{sf_dir}:{_IVF_TAG}",
+        _IVF_PARTS,
+        lambda: _train_ivf(spark, _dedup_reps_materialized(spark, sf_dir)),
     )
 
 
@@ -4065,20 +4007,14 @@ _REBALANCE_FACTOR = 1.10  # split cells above factor x mean occupancy —
 _REBALANCE_SPLIT_ITERS = 2
 
 
-def _rebalanced_index(spark, sf_dir, factor=_REBALANCE_FACTOR):
+def _rebalanced_index(spark, sf_dir):
     """(cells, centroids) after splitting every cell whose occupancy
-    exceeds ``factor`` x mean — cells is (vec_id, cell, parent_cell),
-    centroids is (cluster, centroid).  PERSISTED once per corpus with
-    every training hyperparameter in the token (ADVICE r10: changed
-    params must rebuild, not silently reuse)."""
-    from ..core import mat_exists, mat_path, materialize_once
+    exceeds _REBALANCE_FACTOR x mean — cells is (vec_id, cell,
+    parent_cell), centroids is (cluster, centroid).  PERSISTED once per
+    corpus with every training hyperparameter in the token (ADVICE r10:
+    changed params must rebuild, not silently reuse)."""
 
-    tok = (
-        f"v1:ivf_rebalance:{sf_dir}:k{_IVF_K}i{_IVF_ITERS}"
-        f":f{factor}s2i{_REBALANCE_SPLIT_ITERS}"
-    )
-    names = (":cells", ":centroids")
-    if not all(mat_exists(tok + n) for n in names):
+    def build():
         from .clustering import kmeans_fit
 
         assigned, centroids = _ivf_index(spark, sf_dir)
@@ -4086,7 +4022,7 @@ def _rebalanced_index(spark, sf_dir, factor=_REBALANCE_FACTOR):
         sizes = assigned.groupBy("cell").count().collect()  # k rows
         mean = sum(r["count"] for r in sizes) / len(sizes)
         split_ids = sorted(
-            int(r["cell"]) for r in sizes if r["count"] > factor * mean
+            int(r["cell"]) for r in sizes if r["count"] > _REBALANCE_FACTOR * mean
         )
         next_id = max(int(r["cell"]) for r in sizes) + 1
         keep_cells = assigned.filter(~F.col("cell").isin(split_ids)).select(
@@ -4128,27 +4064,21 @@ def _rebalanced_index(spark, sf_dir, factor=_REBALANCE_FACTOR):
         cents = new_cents[0]
         for df in new_cents[1:]:
             cents = cents.unionByName(df)
-        cells = materialize_once(
-            spark,
+        return (
             cells.select(
                 "vec_id",
                 F.col("cell").cast("long").alias("cell"),
                 F.col("parent_cell").cast("long").alias("parent_cell"),
             ),
-            tok + ":cells",
-            partition_col="vec_id",
-            n_partitions=8,
-        )
-        cents = materialize_once(
-            spark,
             cents.select(F.col("cluster").cast("long").alias("cluster"), "centroid"),
-            tok + ":centroids",
-            n_partitions=1,
         )
-        return cells, cents
-    return (
-        spark.read.parquet(mat_path(tok + ":cells")),
-        spark.read.parquet(mat_path(tok + ":centroids")),
+
+    return materialize_parts_once(
+        spark,
+        f"v1:ivf_rebalance:{sf_dir}:{_IVF_TAG}"
+        f":f{_REBALANCE_FACTOR}s2i{_REBALANCE_SPLIT_ITERS}",
+        _IVF_PARTS,
+        build,
     )
 
 
@@ -4723,42 +4653,21 @@ def llm_corpus_prune_pipeline_audit(spark, sf_dir):
 # directly comparable in the driver ledger.
 
 
-def _ivf_retrained_parts(spark, sf_dir, k=_IVF_K, iters=_IVF_ITERS):
+def _ivf_retrained_parts(spark, sf_dir):
     """(cells, centroids) of the quantizer retrained on the live
     (non-tombstoned) corpus.  PERSISTED write-once with every training
     hyperparameter in the token (ADVICE r10: changed params must
     rebuild, not silently reuse)."""
-    from ..core import mat_exists, mat_path, materialize_once
-    from .clustering import kmeans_fit
-
-    tok = (
-        f"v1:ivf_retrain:{sf_dir}:k{k}i{iters}"
-        f"res{_TOMBSTONE_RESIDUE}"
-    )
-    names = (":cells", ":centroids")
-    if not all(mat_exists(tok + n) for n in names):
-        live = (
+    return materialize_parts_once(
+        spark,
+        f"v1:ivf_retrain:{sf_dir}:{_IVF_TAG}res{_TOMBSTONE_RESIDUE}",
+        _IVF_PARTS,
+        lambda: _train_ivf(
+            spark,
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
-            .filter(~_is_tombstoned())
-        )
-        assigned, centroids = kmeans_fit(
-            spark, live, k=k, iters=iters, init="pp"
-        )
-        cells = materialize_once(
-            spark,
-            assigned.select("vec_id", F.col("cluster").alias("cell")),
-            tok + ":cells",
-            partition_col="vec_id",
-            n_partitions=8,
-        )
-        centroids = materialize_once(
-            spark, centroids, tok + ":centroids", n_partitions=1
-        )
-        return cells, centroids
-    return (
-        spark.read.parquet(mat_path(tok + ":cells")),
-        spark.read.parquet(mat_path(tok + ":centroids")),
+            .filter(~_is_tombstoned()),
+        ),
     )
 
 
@@ -5614,8 +5523,9 @@ def llm_semdedup_crossset_recall(spark, sf_dir):
 #   cannot diverge from the pinned table).
 #
 # Boundary semantics are strict (> for the ratio triggers, < for the
-# recall floor), matching _rebalanced_index's own `count > factor *
-# mean` rule; at-threshold grid rows pin the non-trigger side.
+# recall floor), matching _rebalanced_index's own `count >
+# _REBALANCE_FACTOR * mean` rule; at-threshold grid rows pin the
+# non-trigger side.
 _POLICY_DELTA_TRIGGER = 0.15  # retrain when frozen-quantizer delta rows
 # exceed 15% of the corpus — the drift-share regime where the retrain
 # twin's measured recovery (0.593/0.556 vs 0.444/0.481 frozen) says the

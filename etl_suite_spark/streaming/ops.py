@@ -314,7 +314,7 @@ def _running_counters(
     FROM events GROUP BY 1 ORDER BY 1
     """,
 )
-def stream_stateful_custom(spark, sf_dir, state_shards=None):
+def stream_stateful_custom(spark, sf_dir):
     """applyInPandasWithState: arbitrary per-key state across micro-batches
     (update mode). The memory sink sees one update per (user, batch); the
     final value per user is the one with the max event count.
@@ -334,30 +334,22 @@ def stream_stateful_custom(spark, sf_dir, state_shards=None):
     and a keys-derived shard count (clamp(keys/200, 1, cores), 8 at
     fixture scale) measured FLAT-to-slightly-worse once its own
     distinct-count job is charged (5-pass interleaved: derived 5.26 vs
-    default 4.85 median) — so the derivation was tried and REVERTED;
-    ``state_shards`` stays as an explicit override for deployments that
-    know their key domain. RocksDB provider: no win at any tested shard
-    count. Book closed with the profile on record."""
+    default 4.85 median) — so the derivation was tried and REVERTED.
+    RocksDB provider: no win at any tested shard count. Book closed
+    with the profile on record."""
     drop, schema = _drop_dir(spark, sf_dir)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_shards is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_shards))
-    try:
-        sdf = (
-            _read_stream(spark, drop, schema)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _running_counters,
-                outputStructType=_STATEFUL_OUT,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    sdf = (
+        _read_stream(spark, drop, schema)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _running_counters,
+            outputStructType=_STATEFUL_OUT,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        updates = _run_to_memory(sdf, "update")
-    finally:
-        if state_shards is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    )
+    updates = _run_to_memory(sdf, "update")
     return (
         updates.groupBy("user_id")
         .agg(

@@ -2,15 +2,18 @@
 
 Focused tests for the internals the optimization round changed:
 
-- graph_triangle_count's gated wedge-join broadcast (VERDICT r14 item 3)
-  must not change the counted triangles — the gate knob toggles plan
-  shape only.
+- graph_triangle_count's shuffled-hash closing join (VERDICT r14 item 3)
+  must not change the counted triangles — ``closing_shuffle_hash=False``
+  restores the r14 sort-merge plan and toggles plan shape only; the
+  default plan carries exactly one sort-merge (wedge) and one
+  shuffled-hash (closing) join.
 - llm_corpus_prune_pipeline's per-cell pre-aggregation (item 5) must
   preserve the funnel arithmetic per cell, including cells with zero
   reps/drops (the left-join + coalesce(0) path).
-- connected_components' convergence probe fallback (ADVICE r14 item 3):
-  if the observe() metric never arrives, the probe must fall back to a
-  separate aggregate job with the same value instead of hanging.
+- connected_components' convergence probe fallback (ADVICE r14 item 3,
+  r15 item 2): if the observe() metric never arrives, or reading it
+  raises, the probe must fall back to a separate aggregate job with the
+  same value instead of hanging or leaking a thread traceback.
 - _mat_run_root's lock-guarded init (ADVICE r14 item 2): concurrent
   first calls must agree on ONE root.
 """
@@ -39,16 +42,21 @@ def test_triangle_closing_hint_is_plan_only(spark):
 def test_triangle_closing_join_is_shuffled_hash(spark):
     """The plan must actually carry the ShuffledHashJoin for the closing
     edge (the hint silently degrading back to sort-merge would re-sort
-    the wedge stream)."""
+    the wedge stream): exactly one sort-merge join (the wedge join) and
+    one shuffled-hash join (the closing edge), counted on the formatted
+    plan's per-operator detail headers."""
     import contextlib
     import io
+    import re
 
     from etl_suite_spark.operators.graph import graph_triangle_count
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         graph_triangle_count(spark, SF_DIR).explain("formatted")
-    assert "ShuffledHashJoin" in buf.getvalue()
+    plan = buf.getvalue()
+    assert len(re.findall(r"\(\d+\) SortMergeJoin\b", plan)) == 1, plan
+    assert len(re.findall(r"\(\d+\) ShuffledHashJoin\b", plan)) == 1, plan
 
 
 def test_prune_pipeline_cell_arithmetic(spark):
@@ -95,10 +103,11 @@ def test_observed_sum_reads_posted_metric(spark):
     assert int(_observed_sum(obs, df)) == 45
 
 
-def test_observed_sum_falls_back_on_missing_metric(spark):
-    """Upgrade-hazard path (ADVICE r14 item 3): an observation whose
-    metric never arrives must NOT hang — after the timeout the probe
-    recomputes the sum with a separate aggregate job."""
+def test_observed_sum_falls_back_on_missing_metric(spark, monkeypatch):
+    """Upgrade-hazard paths (ADVICE r14 item 3, r15 item 2): an
+    observation whose metric never arrives must NOT hang, and one whose
+    ``get`` raises must not escape the probe thread — both recompute the
+    sum with a separate aggregate job."""
     from pyspark.sql import functions as F
 
     from etl_suite_spark.llm.dedup import _observed_sum
@@ -110,11 +119,19 @@ def test_observed_sum_falls_back_on_missing_metric(spark):
 
             time.sleep(3600)
 
+    class _Raises:
+        @property
+        def get(self):
+            raise RuntimeError("metrics event lost")
+
+    escaped: list = []
+    monkeypatch.setattr(threading, "excepthook", escaped.append)
     labels = spark.range(10).select(
         F.col("id").alias("node"), F.col("id").alias("label")
     )
-    val = _observed_sum(_NeverPosts(), labels, timeout_sec=0.2)
-    assert int(val) == 45
+    for obs in (_NeverPosts(), _Raises()):
+        assert int(_observed_sum(obs, labels, timeout_sec=0.2)) == 45
+    assert escaped == [], "probe-thread exception escaped to threading.excepthook"
 
 
 def test_mat_run_root_is_single_under_threads():
@@ -141,6 +158,40 @@ def test_mat_run_root_is_single_under_threads():
     finally:
         # restore the real root so other tests keep their artifacts
         core._MAT_RUN_ROOT = old
+
+
+def test_index_builders_train_once_then_reuse(spark, monkeypatch):
+    """materialize_parts_once build-or-reuse: in a fresh artifact root the
+    first call of an IVF and a PQ builder trains and persists, the second
+    call trains nothing and reads back the same rows."""
+    import etl_suite_spark.core as core
+    import etl_suite_spark.llm.clustering as clustering
+    import etl_suite_spark.llm.similarity as sim
+
+    calls = {"kmeans_fit": 0, "_pq_train_encode": 0}
+
+    def counting(mod, name):
+        real = getattr(mod, name)
+
+        def wrapped(*a, **kw):
+            calls[name] += 1
+            return real(*a, **kw)
+
+        monkeypatch.setattr(mod, name, wrapped)
+
+    counting(clustering, "kmeans_fit")
+    counting(sim, "_pq_train_encode")
+    monkeypatch.setattr(core, "_MAT_RUN_ROOT", None)  # fresh, empty root
+
+    def rows(frames):
+        return [sorted(map(tuple, f.collect())) for f in frames]
+
+    ivf_first = rows(sim._ivf_index(spark, SF_DIR))
+    pq_first = rows(sim._pq_index(spark, SF_DIR))
+    assert calls == {"kmeans_fit": 1, "_pq_train_encode": 1}
+    assert rows(sim._ivf_index(spark, SF_DIR)) == ivf_first
+    assert rows(sim._pq_index(spark, SF_DIR)) == pq_first
+    assert calls == {"kmeans_fit": 1, "_pq_train_encode": 1}
 
 
 def test_rerank_candidate_frontier_is_bounded(spark):

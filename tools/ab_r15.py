@@ -6,17 +6,19 @@ at most one pass of any variant; compare medians), timed over bench.py's
 column-consuming checksum action, with the scheduler calibration
 re-measured per pass so drift is visible.
 
-Variants:
-- triangle:   graph_triangle_count with the r15 gated broadcast (new)
-              vs broadcast_threshold_rows=None (the r14 sort-merge wedge
-              join — the knob IS the old plan, no code swap needed).
-- rerank:     llm_sim_ann_pq / llm_index_build_pipeline_ivfpq with the
-              r15 broadcast-candidate _rerank_top3 (new) vs the r14
-              corpus-attach form (old body swapped in via the module
-              attribute — the consumers resolve it by global name).
-- prune:      llm_corpus_prune_pipeline per-cell pre-aggregation (new)
-              vs the r14 corpus-wide funnel joins (old body inlined
-              below, calling the same helpers).
+Targets:
+- triangle:      graph_triangle_count with the r15 shuffled-hash closing
+                 join (new) vs closing_shuffle_hash=False (the r14
+                 sort-merge closing join — the knob IS the old plan, no
+                 code swap needed).
+- rerank_pq,
+  rerank_ivfpq:  llm_sim_ann_pq / llm_index_build_pipeline_ivfpq with the
+                 r15 broadcast-candidate _rerank_top3 (new) vs the r14
+                 corpus-attach form (old body swapped in via the module
+                 attribute — the consumers resolve it by global name).
+- prune:         llm_corpus_prune_pipeline per-cell pre-aggregation (new)
+                 vs the r14 corpus-wide funnel joins (old body inlined
+                 below, calling the same helpers).
 
 Usage: python tools/ab_r15.py --target triangle [--passes 5] [--sf DIR]
 Prints one JSON line: {"target":..., "sf":..., "passes": k,
@@ -138,17 +140,6 @@ def _variants(target: str, spark, sf_dir):
         return {
             "old": lambda: _old_prune_pipeline(spark, sf_dir),
             "new": lambda: sim.llm_corpus_prune_pipeline(spark, sf_dir),
-        }
-    if target == "stateful":
-        from etl_suite_spark.streaming.ops import stream_stateful_custom
-
-        # old = shipped default (session shuffle partitions = 32 state
-        # shards); new = the keys-derived 8-shard variant that was tried
-        # and REVERTED (measured flat-to-worse warm once its own
-        # distinct-count job is charged — see the op docstring).
-        return {
-            "old": lambda: stream_stateful_custom(spark, sf_dir),
-            "new": lambda: stream_stateful_custom(spark, sf_dir, state_shards=8),
         }
     raise SystemExit(f"unknown target {target}")
 
