@@ -209,9 +209,9 @@ def _checksum(df) -> None:
 
 def measure_sched(spark, probes: int = 3) -> tuple[float, list[float]]:
     """The 1k-empty-task scheduler calibration (median of ``probes``).
-    Shared with tools/bench_ab.py so the A/B tool measures the EXACT
-    bench protocol — a drift between the two would silently invalidate
-    its within-session comparison (code-review r9 finding #6)."""
+    Shared with tools/ab.py so the A/B tool measures the EXACT bench
+    protocol — a drift between the two would silently invalidate its
+    within-session comparison (code-review r9 finding #6)."""
     runs = []
     for _ in range(probes):
         t0 = time.perf_counter()
@@ -221,8 +221,9 @@ def measure_sched(spark, probes: int = 3) -> tuple[float, list[float]]:
 
 
 def time_queries(spark, names, sf_dir, repeats) -> dict[str, list[float]]:
-    """The interleaved repeat/checksum timing loop (shared with
-    tools/bench_ab.py, same rationale as measure_sched)."""
+    """The interleaved repeat/checksum timing loop (the same
+    checksum-timed protocol tools/ab.py runs per pass; same rationale as
+    measure_sched)."""
     runs: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(repeats):
         for name in names:

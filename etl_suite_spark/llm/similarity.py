@@ -70,6 +70,50 @@ def _sql_cosine(dot_expr: str, nsq_a: str, nsq_b: str) -> str:
     return f"round({dot_expr} / sqrt({nsq_a} * {nsq_b}), 6)"
 
 
+def _corpus(spark, sf_dir, *extra):
+    """(vec_id, embedding, *extra, nsq) of the raw embeddings table — the
+    candidate side of every exact and ANN search here, with ‖v‖² carried
+    as a column (computed once per vector, see the module docstring)."""
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding", *extra)
+        .withColumn("nsq", dot("embedding", "embedding"))
+    )
+
+
+def _probe_set(e, *extra):
+    """The fixed 10-query probe set (vec_id < 10) of a corpus frame ``e``
+    with an ``nsq`` column: (query_id, q_emb, q_nsq, *extra). ``extra``
+    are further query-side Columns (a bucket, a label, the unit vector)."""
+    return e.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nsq").alias("q_nsq"),
+        *extra,
+    )
+
+
+def _top_k(df, k, *order):
+    """The rows of ``df`` ranked 1..k within their query_id under
+    ``order`` — by default the serving rank, cosine descending with
+    neighbor_id as the tie-break. The rank is kept as ``rn``. The one
+    per-query ranking window: top-k results, ADC pools and coarse
+    routing all go through it."""
+    order = order or (F.col("cosine").desc(), F.col("neighbor_id").asc())
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def _top_k_sorted(cand, k):
+    """(query_id, neighbor_id, cosine) of each query's k best candidates,
+    sorted as every registered top-k search emits them."""
+    return (
+        _top_k(cand, k)
+        .select("query_id", "neighbor_id", "cosine")
+        .orderBy("query_id", F.col("cosine").desc(), "neighbor_id")
+    )
+
+
 @query(
     "llm_sim_cosine_topk",
     oracle=f"""
@@ -96,14 +140,8 @@ def llm_sim_cosine_topk(spark, sf_dir):
     no shuffle of the big side at all. That IS the correct 100 TB plan for
     small query sets; for large ones, switch to llm_sim_ann_lsh below.
     """
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir)
+    q = _probe_set(e)
     # Widen the candidate side to full parallelism before the N·Q dot
     # stage: the per-pair quantized dot is interpreted (higher-order
     # function), so this stage is COMPUTE-bound, and a single-file scan
@@ -116,15 +154,7 @@ def llm_sim_cosine_topk(spark, sf_dir):
         F.col("vec_id").alias("neighbor_id"),
         _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", "cosine")
-        .orderBy("query_id", F.col("cosine").desc(), "neighbor_id")
-    )
+    return _top_k_sorted(joined, 5)
 
 
 @query(
@@ -160,14 +190,8 @@ def llm_sim_range_search(spark, sf_dir):
     p99 of the fixture's query-corpus cosine distribution (measured:
     p90 0.16, p99 0.29, max 0.49), so the result is non-trivial and
     bounded."""
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir)
+    q = _probe_set(e)
     cand = e.repartition(spark.sparkContext.defaultParallelism)
     return (
         cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
@@ -224,17 +248,10 @@ def llm_sim_ann_lsh(spark, sf_dir):
     expectation. Multi-probe (flip one bucket bit) raises recall without
     changing the plan shape.
     """
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn("bucket", F.expr(_BUCKET.format(e="embedding")))
-        .withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir).withColumn(
+        "bucket", F.expr(_BUCKET.format(e="embedding"))
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _probe_set(e, F.col("bucket").alias("q_bucket"))
     joined = e.join(
         F.broadcast(q),
         (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("query_id")),
@@ -243,15 +260,7 @@ def llm_sim_ann_lsh(spark, sf_dir):
         F.col("vec_id").alias("neighbor_id"),
         _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-        .orderBy("query_id", F.col("cosine").desc(), "neighbor_id")
-    )
+    return _top_k_sorted(joined, 3)
 
 
 @query(
@@ -292,17 +301,10 @@ def llm_sim_ann_multiprobe(spark, sf_dir):
     at 100 TB this is the standard recall/cost dial (probes × bucket bits).
     Candidates reached via two different probes are deduped before ranking.
     """
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn("bucket", F.expr(_BUCKET.format(e="embedding")))
-        .withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir).withColumn(
+        "bucket", F.expr(_BUCKET.format(e="embedding"))
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _probe_set(e, F.col("bucket").alias("q_bucket"))
     probes = q.withColumn(
         "pb",
         F.explode(
@@ -324,15 +326,7 @@ def llm_sim_ann_multiprobe(spark, sf_dir):
         )
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-        .orderBy("query_id", F.col("cosine").desc(), "neighbor_id")
-    )
+    return _top_k_sorted(cand, 3)
 
 
 @query(
@@ -368,37 +362,8 @@ def llm_sim_ann_ivf_recall(spark, sf_dir):
     op for the learned-quantizer ANN path. Exact ground truth runs on the
     broadcast 10-query side only, never all-pairs over the corpus."""
     ivf = llm_sim_ann_ivf(spark, sf_dir).select("query_id", "neighbor_id")
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    cos = _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    exact3 = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-        # k-row lineage truncation (r14, the _recall_metric pattern)
-        .localCheckpoint(eager=True)
-    )
-    ivf = ivf.localCheckpoint(eager=True)
-    found = exact3.join(ivf, ["query_id", "neighbor_id"], "left_semi")
-    return exact3.agg(
-        F.count("*").alias("n_exact_pairs"),
-        F.count_distinct("query_id").alias("n_queries"),
-    ).join(found.agg(F.count("*").alias("n_found"))).select(
-        "n_exact_pairs",
-        "n_queries",
-        (F.col("n_found") >= 0.4 * F.col("n_exact_pairs")).alias("recall_ge_40"),
-    )
+    e = _corpus(spark, sf_dir)
+    return _recall_metric(ivf, e, _probe_set(e), 0.4, "recall_ge_40")
 
 
 # Shared IVF-Flat coarse-quantizer hyperparams — named so every index
@@ -441,55 +406,65 @@ def _ivf_index(spark, sf_dir):
     )
 
 
-def _ivf_probe(cells, centroids, q, nprobe=2, q_extra=(), cand_pred=None):
-    """The SHARED IVF-Flat serving path: each broadcast query scores the
-    k cell centroids map-side, keeps its ``nprobe`` nearest cells, and
-    brute-forces EXACT cosine against only the in-cell candidates of
-    ``cells`` (vec_id, embedding, nsq, cell) — used by llm_sim_ann_ivf
-    (raw corpus), llm_index_build_pipeline_ivf (representatives), the
-    delete/rebalance twins, and (via ``q_extra``/``cand_pred``) the
-    filtered-search op — ONE probe so the serving contract cannot
-    diverge between variants (the _survivor_recall_metric discipline,
-    code-review r12).  ``q_extra`` names extra query columns to carry to
-    the candidate join; ``cand_pred`` is an extra join conjunct
-    evaluated DURING the inverted-list scan (payload-filter pushdown)."""
+# The registered IVF operating point: every probe in the family routes a
+# query to its 2 nearest of the _IVF_K cells (the filtered op widens to
+# _FILTERED_NPROBE, the sweep measures 1.._NPROBE_SWEEP_MAX).
+_NPROBE = 2
+
+
+def _route(q, centroids, nprobe, vec_col):
+    """Coarse routing: each query's ``nprobe`` nearest coarse centroids
+    by the query vector ``vec_col``, scored map-side against the
+    broadcast (cluster, centroid) frame. Returns q's columns plus
+    ``cluster``, ``centroid`` (the IVF-PQ residual needs it) and the
+    probe rank ``rn`` (nearest first; ties break on the cluster id).
+    The one router behind every IVF-Flat and IVF-PQ probe."""
     from .clustering import _DIST_SQ
 
     qc = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "cdist", F.expr(_DIST_SQ.format(a="q_emb", b="centroid"))
+        "cdist", F.expr(_DIST_SQ.format(a=vec_col, b="centroid"))
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("cdist").asc(), F.col("cluster").asc()
-    )
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "query_id",
-            "q_emb",
-            "q_nsq",
-            *q_extra,
-            F.col("cluster").alias("p_cell"),
-        )
+    return _top_k(qc, nprobe, F.col("cdist").asc(), F.col("cluster").asc())
+
+
+def _ivf_candidates(cells, centroids, q, nprobe, q_extra=(), cand_pred=None):
+    """(query_id, neighbor_id, cosine, probe_rank) of every in-cell
+    candidate of each query's ``nprobe`` routed cells: the broadcast
+    probe list equi-joined on cell id against ``cells`` (vec_id,
+    embedding, nsq, cell), scored by EXACT cosine. ``q_extra`` names
+    extra query columns to carry to the candidate join; ``cand_pred`` is
+    an extra join conjunct evaluated DURING the inverted-list scan
+    (payload-filter pushdown)."""
+    probes = _route(q, centroids, nprobe, "q_emb").select(
+        "query_id",
+        "q_emb",
+        "q_nsq",
+        *q_extra,
+        F.col("cluster").alias("p_cell"),
+        F.col("rn").alias("probe_rank"),
     )
     cond = (F.col("cell") == F.col("p_cell")) & (
         F.col("vec_id") != F.col("query_id")
     )
     if cand_pred is not None:
         cond = cond & cand_pred
-    cand = cells.join(F.broadcast(probes), cond).select(
+    return cells.join(F.broadcast(probes), cond).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
+        "probe_rank",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-        .orderBy("query_id", F.col("cosine").desc(), "neighbor_id")
+
+
+def _ivf_probe(cells, centroids, q, nprobe=_NPROBE, q_extra=(), cand_pred=None):
+    """The SHARED IVF-Flat serving path: the sorted exact-cosine top-3 of
+    :func:`_ivf_candidates` — used by llm_sim_ann_ivf (raw corpus),
+    llm_index_build_pipeline_ivf (representatives), the incremental,
+    delete, rebalance and retrain twins, and (via ``q_extra``/``cand_pred``)
+    the filtered-search op — ONE probe so the serving contract cannot
+    diverge between variants (code-review r12)."""
+    return _top_k_sorted(
+        _ivf_candidates(cells, centroids, q, nprobe, q_extra, cand_pred), 3
     )
 
 
@@ -508,17 +483,9 @@ def llm_sim_ann_ivf(spark, sf_dir):
     (partition pruning at the scan). Learned centroids adapt to the data
     distribution, unlike the fixed hyperplanes of llm_sim_ann_lsh.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir)
     assigned, centroids = _ivf_index(spark, sf_dir)
-    cells = e.join(assigned, "vec_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    return _ivf_probe(cells, centroids, q)
+    return _ivf_probe(e.join(assigned, "vec_id"), centroids, _probe_set(e))
 
 
 @query(
@@ -620,13 +587,8 @@ def llm_sim_knn_classify(spark, sf_dir):
     generation (``llm_sim_ann_lsh`` / ``llm_sim_ann_ivf``) with this
     same voting tail — the vote logic is candidate-source-agnostic.
     """
-    e = load_table(spark, sf_dir, "embeddings")
-    n = e.select("vec_id", "label", "embedding", dot("embedding", "embedding").alias("nsq"))
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    n = _corpus(spark, sf_dir, "label")
+    q = _probe_set(n)
     pairs = F.broadcast(q).join(n, F.col("vec_id") != F.col("query_id"))
     scored = pairs.select(
         "query_id",
@@ -634,14 +596,10 @@ def llm_sim_knn_classify(spark, sf_dir):
         _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
         "vec_id",
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    top5 = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    top5 = _top_k(scored, 5, F.col("cosine").desc(), F.col("vec_id").asc())
     votes = top5.groupBy("query_id", "label").agg(F.count("*").alias("votes"))
-    wv = Window.partitionBy("query_id").orderBy(F.col("votes").desc(), F.col("label").asc())
-    return (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select("query_id", F.col("label").alias("pred_label"), "votes")
+    return _top_k(votes, 1, F.col("votes").desc(), F.col("label").asc()).select(
+        "query_id", F.col("label").alias("pred_label"), "votes"
     )
 
 
@@ -728,28 +686,14 @@ def llm_sim_ann_recall(spark, sf_dir):
     loses. Both sides are deterministic, so even the quality metric is
     oracle-checked. Ground truth runs on the (tiny, broadcast) query set
     only — never an all-pairs job over the corpus."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn("bucket", F.expr(_BUCKET.format(e="embedding")))
-        .withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir).withColumn(
+        "bucket", F.expr(_BUCKET.format(e="embedding"))
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _probe_set(e, F.col("bucket").alias("q_bucket"))
     cos = _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
 
     def top3(pairs):
-        return (
-            pairs.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .select("query_id", "neighbor_id")
-        )
+        return _top_k(pairs, 3).select("query_id", "neighbor_id")
 
     exact3 = top3(
         e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
@@ -786,6 +730,8 @@ _PQ_M = 8
 _PQ_KSUB = 16
 _PQ_SUBDIM = 8
 _PQ_TAG = f"m{_PQ_M}k{_PQ_KSUB}d{_PQ_SUBDIM}"
+# ADC candidates kept per query for the exact re-rank (flat PQ and IVF-PQ).
+_PQ_POOL = 32
 # Persisted layouts (materialize_parts_once parts): flat PQ is codebooks +
 # vec_id-co-located codes; IVF-PQ is the code table PARTITIONED ON CELL ID
 # (a probe's cell equi-join starts co-located), codebooks, coarse centroids.
@@ -835,37 +781,36 @@ def _seed_ids(en):
     ]
 
 
-def _subvectors(vec_df, vec_col, m, subdim):
-    """(vec_id, subspace, sv): every vector's m sub-vectors in one relation."""
-    return vec_df.select(
-        "vec_id",
+def _subvectors(df, vec_col, key_cols=("vec_id",)):
+    """(*key_cols, subspace, sv): every vector's _PQ_M sub-vectors of
+    _PQ_SUBDIM dims in one relation."""
+    return df.select(
+        *key_cols,
         F.posexplode(
             F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice({vec_col}, s * {subdim} + 1, {subdim}))"
+                f"transform(sequence(0, {_PQ_M - 1}),"
+                f" s -> slice({vec_col}, s * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}))"
             )
         ).alias("subspace", "sv"),
     )
 
 
-def _pq_train_encode(vec_df, m=8, ksub=16, subdim=8, vec_col="unit",
-                     seed_ids=None):
+def _pq_train_encode(vec_df, seed_ids, vec_col="unit"):
     """Train per-subspace codebooks (one multi-key k-means over ALL
     subspaces at once, 2 Lloyd iterations) and encode every vector.
     Returns (cent, codes): cent = (subspace, cluster, centroid), codes =
     (vec_id, codes array ordered by subspace). ``vec_df`` needs
     (vec_id, <vec_col>) — raw unit vectors for flat PQ, cell residuals
-    for IVF-PQ.  Default init seeds each subspace's codebook from the
-    rows with vec_id < ksub — valid ONLY when those ids are guaranteed
-    present (the raw-corpus paths).  Callers whose input may lack low
-    ids (the deduped-representative path: a corpus whose vectors
-    0..15 are near-duplicates keeps just one of them) pass ``seed_ids``,
-    the explicit list of ksub-or-fewer vec_ids to seed from
-    (code-review r9 finding #1 — without it the init could degenerate
-    to a near-single-cluster codebook and collapse recall)."""
+    for IVF-PQ.  Each subspace's codebook is seeded from the sub-vectors
+    of ``seed_ids`` (:func:`_seed_ids`: the _PQ_KSUB smallest vec_ids
+    actually present) — a fixed low-id range would under-seed a corpus
+    whose low ids are missing (the deduped-representative path: vectors
+    0..15 that are near-duplicates keep just one of them; code-review r9
+    finding #1 — the init could degenerate to a near-single-cluster
+    codebook and collapse recall)."""
     from .clustering import _DIST_SQ
 
-    sub = _subvectors(vec_df, vec_col, m, subdim)
+    sub = _subvectors(vec_df, vec_col)
 
     def assign(cent):
         # argmin as a hash aggregate — min over struct(dsq, cluster, sv)
@@ -889,34 +834,26 @@ def _pq_train_encode(vec_df, m=8, ksub=16, subdim=8, vec_col="unit",
             )
         )
 
-    # init: the first k vectors' sub-slices seed every subspace's codebook
-    if seed_ids is None:
-        cent = sub.filter(F.col("vec_id") < ksub).select(
-            "subspace", F.col("vec_id").cast("int").alias("cluster"),
-            F.col("sv").alias("centroid"),
-        )
-    else:
-        # explicit seeds: cluster id = dense rank of the seed id, so the
-        # codebook always starts with len(seed_ids) distinct centroids
-        seed_cluster = {int(v): i for i, v in enumerate(sorted(seed_ids))}
-        # map keys cast to LONG explicitly (ADVICE r9): the lookup column
-        # vec_id is BIGINT, and relying on implicit GetMapValue key
-        # coercion from IntegerType literals is fragile across Spark
-        # versions / ANSI modes.
-        mapping = F.create_map(
-            *[
-                x
-                for k, v in seed_cluster.items()
-                for x in (F.lit(int(k)).cast("long"), F.lit(int(v)))
-            ]
-        )
-        cent = sub.filter(
-            F.col("vec_id").isin([int(v) for v in seed_ids])
-        ).select(
-            "subspace",
-            mapping[F.col("vec_id")].cast("int").alias("cluster"),
-            F.col("sv").alias("centroid"),
-        )
+    # init: the seeds' sub-slices seed every subspace's codebook; cluster
+    # id = dense rank of the seed id, so the codebook always starts with
+    # len(seed_ids) distinct centroids
+    seed_cluster = {int(v): i for i, v in enumerate(sorted(seed_ids))}
+    # map keys cast to LONG explicitly (ADVICE r9): the lookup column
+    # vec_id is BIGINT, and relying on implicit GetMapValue key
+    # coercion from IntegerType literals is fragile across Spark
+    # versions / ANSI modes.
+    mapping = F.create_map(
+        *[
+            x
+            for k, v in seed_cluster.items()
+            for x in (F.lit(int(k)).cast("long"), F.lit(int(v)))
+        ]
+    )
+    cent = sub.filter(F.col("vec_id").isin([int(v) for v in seed_ids])).select(
+        "subspace",
+        mapping[F.col("vec_id")].cast("int").alias("cluster"),
+        F.col("sv").alias("centroid"),
+    )
     for _ in range(2):
         upd = assign(cent).select(
             "subspace", "cluster", F.posexplode("sv").alias("pos", "x")
@@ -944,7 +881,7 @@ def _pq_train_encode(vec_df, m=8, ksub=16, subdim=8, vec_col="unit",
     return cent, codes
 
 
-def _adc_table(qdf, cent, key_cols, vec_col, m=8, ksub=16, subdim=8):
+def _adc_table(qdf, cent, key_cols, vec_col):
     """Per-key ADC lookup tables: a MAP from subspace*k+cluster → squared
     sub-distance of the key's vector to that sub-centroid (a MAP, not a
     positional array — gap-proof when a cluster empties during Lloyd's).
@@ -952,24 +889,18 @@ def _adc_table(qdf, cent, key_cols, vec_col, m=8, ksub=16, subdim=8):
     the per-probed-cell residual tables of IVF-PQ."""
     from .clustering import _DIST_SQ
 
-    qsub = qdf.select(
-        *key_cols,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" s -> slice({vec_col}, s * {subdim} + 1, {subdim}))"
-            )
-        ).alias("subspace", "q_sub"),
-    )
     return (
-        qsub.join(F.broadcast(cent), "subspace")
-        .withColumn("dsq", F.expr(_DIST_SQ.format(a="q_sub", b="centroid")))
+        _subvectors(qdf, vec_col, key_cols)
+        .join(F.broadcast(cent), "subspace")
+        .withColumn("dsq", F.expr(_DIST_SQ.format(a="sv", b="centroid")))
         .groupBy(*key_cols)
         .agg(
             F.map_from_entries(
                 F.collect_list(
                     F.struct(
-                        (F.col("subspace") * ksub + F.col("cluster")).alias("idx"),
+                        (F.col("subspace") * _PQ_KSUB + F.col("cluster")).alias(
+                            "idx"
+                        ),
                         F.col("dsq"),
                     )
                 )
@@ -979,15 +910,10 @@ def _adc_table(qdf, cent, key_cols, vec_col, m=8, ksub=16, subdim=8):
 
 
 def _raw_queries(e):
-    """The 10-query probe set derived from the RAW corpus: normalization
-    runs on just these rows (the q_unit transform is identical to
-    _unit_corpus's, so ADC tables built from it match the index)."""
-    return e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-        F.expr(_UNIT_EXPR).alias("q_unit"),
-    )
+    """The probe set of the RAW corpus ``e`` with its unit vectors: the
+    q_unit transform is _unit_corpus's, run on just these rows, so ADC
+    tables built from it match the index."""
+    return _probe_set(e, F.expr(_UNIT_EXPR).alias("q_unit"))
 
 
 def _pq_index(spark, sf_dir):
@@ -999,46 +925,30 @@ def _pq_index(spark, sf_dir):
     constructing the training plan because Lloyd's iterations execute
     eagerly (checkpointed loop state). Determinism makes the cache sound:
     fixed init + fixed seeds ⇒ the rebuilt index is byte-identical."""
+
+    def build():
+        en = _pq_normalize(spark, sf_dir)
+        return _pq_train_encode(en, _seed_ids(en))
+
     return materialize_parts_once(
-        spark,
-        f"v1:pq_index:{sf_dir}:{_PQ_TAG}",
-        _PQ_PARTS,
-        lambda: _pq_train_encode(
-            _pq_normalize(spark, sf_dir), m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM
-        ),
+        spark, f"v1:pq_index:{sf_dir}:{_PQ_TAG}", _PQ_PARTS, build
     )
 
 
-def _pq_parts(spark, sf_dir):
-    """Shared flat-PQ machinery: cached index + per-query ADC tables.
-    Returns (e, codes, q, qtab); see :func:`llm_sim_ann_pq` for the full
-    design rationale."""
-    cent, codes = _pq_index(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
-    q = _raw_queries(e)
-    qtab = _adc_table(
-        q, cent, ["query_id"], "q_unit", m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM
-    )
-    return e, codes, q, qtab
-
-
-def _adc_expr(m: int, ksub: int) -> F.Column:
-    """Approximate squared distance: m map lookups over the code array."""
-    return F.expr(
-        f"aggregate(sequence(0, {m - 1}), CAST(0.0 AS DOUBLE),"
-        f" (acc, s) -> acc + element_at(tab,"
-        f" s * {ksub} + element_at(codes, s + 1)))"
-    )
+# Approximate squared distance: _PQ_M map lookups over the code array.
+_ADC_EXPR = (
+    f"aggregate(sequence(0, {_PQ_M - 1}), CAST(0.0 AS DOUBLE),"
+    f" (acc, s) -> acc + element_at(tab,"
+    f" s * {_PQ_KSUB} + element_at(codes, s + 1)))"
+)
 
 
 def _rerank_top3(cand, e, q):
     """Exact-cosine re-rank of ADC survivors; emits top-3 per query.
 
     r15 (optimization round; VERDICT r14 item 4): ``cand`` is the pooled
-    ADC frontier — AT MOST pool × n_queries rows (≤ 320 for every
-    consumer: the pool cap is the window's ``rn <= pool`` filter and the
+    ADC frontier — AT MOST _PQ_POOL × n_queries rows (≤ 320 for every
+    consumer: the pool cap is :func:`_adc_rerank`'s top-k filter and the
     query side is the fixed 10-query probe batch), but Catalyst only
     sees a windowed corpus subtree and estimated it huge, so the
     cand⋈corpus attach ran as a sort-merge join that SHUFFLED the whole
@@ -1049,7 +959,7 @@ def _rerank_top3(cand, e, q):
     The bound is structural (serving probes are a bounded batch at any
     corpus size), so no row-count gate is needed; join strategy does not
     change the joined rows, and the emitted top-3 is bit-identical."""
-    rer = (
+    return _top_k_sorted(
         F.broadcast(cand.select("query_id", "neighbor_id"))
         .join(
             e.select(
@@ -1064,17 +974,24 @@ def _rerank_top3(cand, e, q):
             "query_id",
             "neighbor_id",
             _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
-        )
+        ),
+        3,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+
+
+def _adc_rerank(scored, rerank_e, q):
+    """The ADC tail shared by flat PQ and IVF-PQ: score each (query, code)
+    row of ``scored`` by table lookups, keep the _PQ_POOL best per query
+    and exact-cosine re-rank them against ``rerank_e``."""
+    adc = scored.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.expr(_ADC_EXPR).alias("approx_dsq"),
     )
-    return (
-        rer.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cosine")
-        .orderBy("query_id", F.col("cosine").desc(), "neighbor_id")
+    pool = _top_k(
+        adc, _PQ_POOL, F.col("approx_dsq").asc(), F.col("neighbor_id").asc()
     )
+    return _rerank_top3(pool, rerank_e, q)
 
 
 @query("llm_sim_ann_pq")  # rows-only: per-subspace k-means training is iterative
@@ -1132,30 +1049,35 @@ def llm_sim_ann_pq(spark, sf_dir):
     and pay only ADC probe + re-rank — measured at sf0.1: 3.17 s
     (retrain-per-call) → 0.87-1.03 s warm, cold build 10.2 s visible in
     pass 1 and in the scale smoke."""
-    pool = 32
-    e, codes, q, qtab = _pq_parts(spark, sf_dir)
+    cent, codes = _pq_index(spark, sf_dir)
+    e = _corpus(spark, sf_dir)
+    return _pq_probe(cent, codes, e, _raw_queries(e))
 
-    # ADC scoring: broadcast the 10 query tables; per (vector, query) cost
-    # is m map lookups — aggregate over the code array, all inside codegen
-    adc = codes.crossJoin(F.broadcast(qtab)).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _adc_expr(_PQ_M, _PQ_KSUB).alias("approx_dsq"),
-    ).filter(F.col("neighbor_id") != F.col("query_id"))
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dsq").asc(), F.col("neighbor_id").asc()
+
+def _pq_probe(cent, codes, rerank_e, q):
+    """The SHARED flat-PQ serving path (llm_sim_ann_pq over the raw
+    corpus, llm_index_build_pipeline over the representatives): one ADC
+    table per query, broadcast against the code table — per (vector,
+    query) cost is _PQ_M map lookups, an aggregate over the code array
+    inside codegen — then the pooled exact re-rank of
+    :func:`_adc_rerank`."""
+    qtab = _adc_table(q, cent, ["query_id"], "q_unit")
+    return _adc_rerank(
+        codes.crossJoin(F.broadcast(qtab)).filter(
+            F.col("vec_id") != F.col("query_id")
+        ),
+        rerank_e,
+        q,
     )
-    cand = adc.withColumn("rn", F.row_number().over(wc)).filter(F.col("rn") <= pool)
-    return _rerank_top3(cand, e, q)
 
 
-def _ivfpq_build(spark, en, seed_ids=None):
+def _ivfpq_build(spark, en):
     """Train the IVF-PQ index over ``en`` (vec_id + `unit` normalized
     vectors) and return its (coded, cent, coarse) frames — the SHARED
-    build body of :func:`_ivfpq_index` (raw corpus, default low-id
-    codebook seeding) and :func:`_ivfpq_dedup_index` (representatives,
-    explicit seeds) so a quantizer change cannot silently diverge
-    between the raw and dedup families (code-review r10 finding #3).
+    build body of :func:`_ivfpq_index` (raw corpus) and
+    :func:`_ivfpq_dedup_index` (representatives) so a quantizer change
+    cannot silently diverge between the raw and dedup families
+    (code-review r10 finding #3).
     Coarse quantizer: :func:`_train_ivf` over the unit vectors; PQ
     trains and encodes each vector's RESIDUAL from its cell centroid."""
     assigned, coarse = _train_ivf(
@@ -1173,59 +1095,36 @@ def _ivfpq_build(spark, en, seed_ids=None):
             "zip_with(unit, centroid, (x, c) -> CAST(x - c AS FLOAT))"
         ).alias("runit"),
     ).localCheckpoint(eager=True)  # reused by 3 assign passes + encode
-    cent, codes = _pq_train_encode(
-        resid, m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM, vec_col="runit",
-        seed_ids=seed_ids,
-    )
+    cent, codes = _pq_train_encode(resid, _seed_ids(en), vec_col="runit")
     return codes.join(resid.select("vec_id", "cell"), "vec_id"), cent, coarse
 
 
-def _ivfpq_probe(coded, cent, coarse, rerank_e, q,
-                 m=8, ksub=16, subdim=8, pool=32, nprobe=2):
+def _ivfpq_probe(coded, cent, coarse, rerank_e, q):
     """The SHARED IVF-PQ serving path (code-review r10 finding #3):
-    coarse-route each broadcast query to its ``nprobe`` nearest cells,
+    coarse-route each broadcast query to its _NPROBE nearest cells,
     build one ADC table per probed cell from the query's PER-CELL
     residual, equi-join the cell-partitioned code table against the
-    broadcast probe tables, keep the ``pool`` best ADC candidates per
-    query, and exact-cosine re-rank them against ``rerank_e`` (the raw
-    corpus for llm_sim_ann_ivfpq; the representative set for
+    broadcast probe tables, then the pooled exact re-rank of
+    :func:`_adc_rerank` against ``rerank_e`` (the raw corpus for
+    llm_sim_ann_ivfpq; the representative set for
     llm_index_build_pipeline_ivfpq)."""
-    from .clustering import _DIST_SQ
-
-    qc = q.crossJoin(
-        F.broadcast(coarse.select(F.col("cluster").alias("p_cell"), "centroid"))
-    ).withColumn("cdist", F.expr(_DIST_SQ.format(a="q_unit", b="centroid")))
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("cdist").asc(), F.col("p_cell").asc()
-    )
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "query_id",
-            "p_cell",
-            F.expr(
-                "zip_with(q_unit, centroid, (x, c) -> CAST(x - c AS FLOAT))"
-            ).alias("q_res"),
-        )
-    )
-    ptab = _adc_table(
-        probes, cent, ["query_id", "p_cell"], "q_res",
-        m=m, ksub=ksub, subdim=subdim,
-    )
-    adc = coded.join(
-        F.broadcast(ptab),
-        (F.col("cell") == F.col("p_cell")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
+    probes = _route(q, coarse, _NPROBE, "q_unit").select(
         "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _adc_expr(m, ksub).alias("approx_dsq"),
+        F.col("cluster").alias("p_cell"),
+        F.expr(
+            "zip_with(q_unit, centroid, (x, c) -> CAST(x - c AS FLOAT))"
+        ).alias("q_res"),
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dsq").asc(), F.col("neighbor_id").asc()
+    ptab = _adc_table(probes, cent, ["query_id", "p_cell"], "q_res")
+    return _adc_rerank(
+        coded.join(
+            F.broadcast(ptab),
+            (F.col("cell") == F.col("p_cell"))
+            & (F.col("vec_id") != F.col("query_id")),
+        ),
+        rerank_e,
+        q,
     )
-    cand = adc.withColumn("rn", F.row_number().over(wc)).filter(F.col("rn") <= pool)
-    return _rerank_top3(cand, rerank_e, q)
 
 
 def _ivfpq_index(spark, sf_dir):
@@ -1277,34 +1176,31 @@ def llm_sim_ann_ivfpq(spark, sf_dir):
     corpus and cached (measured at sf0.1: 6.19 s retrain-per-call →
     0.83-0.86 s warm probe; cold build 7.2 s in pass 1 / scale smoke)."""
     coded, cent, coarse = _ivfpq_index(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
-    q = _raw_queries(e)
-    return _ivfpq_probe(
-        coded, cent, coarse, e, q, m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM
-    )
+    e = _corpus(spark, sf_dir)
+    return _ivfpq_probe(coded, cent, coarse, e, _raw_queries(e))
 
 
-def _exact_top3(e, q):
+def _exact_top3(e, q, pred=None):
     """Brute-force exact top-3 cosine pairs for the broadcast query set —
-    the shared ground truth of every ANN recall gate."""
+    the shared ground truth of every ANN recall gate. ``pred`` is an
+    extra pair predicate (the filtered twin's same-label rule)."""
     cos = _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    cond = F.col("vec_id") != F.col("query_id")
+    if pred is not None:
+        cond = cond & pred
+    pairs = e.join(F.broadcast(q), cond).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
     )
-    return (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
+    return _top_k(pairs, 3).select("query_id", "neighbor_id")
 
 
-def _recall_metric(ann, e, q, threshold, flag_name):
-    """(n_exact_pairs, n_queries, <flag>): measured recall of ``ann``
-    pairs against the exact top-3, flagged at ``threshold``.
+def _recall_metric(ann, e, q, threshold, flag_name, extra=None, pred=None):
+    """(n_exact_pairs, n_queries, [extra,] <flag>): measured recall of
+    ``ann`` pairs against the exact top-3 (under ``pred``, see
+    :func:`_exact_top3`), flagged at ``threshold``. ``extra`` maps the
+    checkpointed ``ann`` to a one-row frame of further counts (deleted
+    ids surfaced, filter violations, vectors assigned), placed between
+    n_queries and the flag.
 
     r14 (optimization round; results bit-identical): ``exact3`` and
     ``ann`` are localCheckpoint-ed before the metric fans out. Both are
@@ -1317,15 +1213,20 @@ def _recall_metric(ann, e, q, threshold, flag_name):
     exactly once (guide §2.4/§5: cut the plan where the data is small,
     e.g. llm_index_tombstone_probe_recall 12 parquet scans / 11
     shuffle exchanges -> 0 scans (checkpoint reads) / 6, plans/r14/)."""
-    exact3 = _exact_top3(e, q).localCheckpoint(eager=True)
+    exact3 = _exact_top3(e, q, pred).localCheckpoint(eager=True)
     ann = ann.localCheckpoint(eager=True)
     found = exact3.join(ann, ["query_id", "neighbor_id"], "left_semi")
-    return exact3.agg(
+    out = exact3.agg(
         F.count("*").alias("n_exact_pairs"),
         F.count_distinct("query_id").alias("n_queries"),
-    ).join(found.agg(F.count("*").alias("n_found"))).select(
-        "n_exact_pairs",
-        "n_queries",
+    ).join(found.agg(F.count("*").alias("n_found")))
+    cols = ["n_exact_pairs", "n_queries"]
+    if extra is not None:
+        counts = extra(ann)
+        out = out.join(counts)
+        cols += counts.columns
+    return out.select(
+        *cols,
         (F.col("n_found") >= threshold * F.col("n_exact_pairs")).alias(flag_name),
     )
 
@@ -1364,15 +1265,8 @@ def llm_sim_ann_pq_recall(spark, sf_dir):
     scores at the random-chance rate (32/N), and only a measured recall
     gate makes that visible."""
     pq = llm_sim_ann_pq(spark, sf_dir).select("query_id", "neighbor_id")
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    return _recall_metric(pq, e, q, 0.4, "recall_ge_40")
+    e = _corpus(spark, sf_dir)
+    return _recall_metric(pq, e, _probe_set(e), 0.4, "recall_ge_40")
 
 
 @query(
@@ -1406,15 +1300,8 @@ def llm_sim_ann_ivfpq_recall(spark, sf_dir):
     """Recall@3 of the IVF-PQ composite against brute-force exact top-3 —
     the measured honesty metric for the cell-routed compressed index."""
     ann = llm_sim_ann_ivfpq(spark, sf_dir).select("query_id", "neighbor_id")
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    return _recall_metric(ann, e, q, 0.3, "recall_ge_30")
+    e = _corpus(spark, sf_dir)
+    return _recall_metric(ann, e, _probe_set(e), 0.3, "recall_ge_30")
 
 
 @query("llm_sim_mmr_rerank")  # rows-only: greedy MMR selection is sequential
@@ -1436,14 +1323,8 @@ def llm_sim_mmr_rerank(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir)
+    q = _probe_set(e)
     cand = e.repartition(spark.sparkContext.defaultParallelism)
     scored = cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
@@ -1452,14 +1333,9 @@ def llm_sim_mmr_rerank(spark, sf_dir):
         "embedding",
         "nsq",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("relevance").desc(), F.col("neighbor_id").asc()
-    )
-    pool = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 16)
-        .drop("rn")
-    )
+    pool = _top_k(
+        scored, 16, F.col("relevance").desc(), F.col("neighbor_id").asc()
+    ).drop("rn")
 
     out_schema = (
         "query_id long, neighbor_id long, mmr_rank long, relevance double"
@@ -1627,15 +1503,8 @@ def llm_hard_negatives(spark, sf_dir):
     predicate inside the join (so same-class candidates are dropped
     before scoring, not ranked then filtered: the returned rank is the
     rank AMONG negatives)."""
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    e = _corpus(spark, sf_dir, "label")
+    q = _probe_set(e, F.col("label").alias("query_label"))
     cand = e.repartition(spark.sparkContext.defaultParallelism)
     scored = cand.join(
         F.broadcast(q), F.col("label") != F.col("query_label")
@@ -1646,12 +1515,9 @@ def llm_hard_negatives(spark, sf_dir):
         F.col("label").cast("int").alias("neg_label"),
         _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neg_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
+        _top_k(scored, 3, F.col("cosine").desc(), F.col("neg_id").asc())
+        .select(*scored.columns, F.col("rn").cast("int").alias("rank"))
         .orderBy("query_id", "rank")
     )
 
@@ -1759,47 +1625,31 @@ def llm_retrieval_ndcg(spark, sf_dir):
     construction. DCG folds in DECIMAL(10,8) (see _NDCG_DISC) so both
     engines sum exactly; all final divisions are double-on-double with
     identical operand trees."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .withColumn("bucket", F.expr(_BUCKET.format(e="embedding")))
-        .withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir).withColumn(
+        "bucket", F.expr(_BUCKET.format(e="embedding"))
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
+    q = _probe_set(e, F.col("bucket").alias("q_bucket"))
     cand = e.repartition(spark.sparkContext.defaultParallelism)
-    truth = (
-        cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
+    truth = _top_k(
+        cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
-        )
-        .withColumn("trank", F.row_number().over(wq))
-        .filter(F.col("trank") <= 10)
-        .select("query_id", "neighbor_id", "trank")
-    )
-    retr = (
+        ),
+        10,
+    ).select("query_id", "neighbor_id", F.col("rn").alias("trank"))
+    retr = _top_k(
         e.join(
             F.broadcast(q),
             (F.col("bucket") == F.col("q_bucket"))
             & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
+        ).select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
-        )
-        .withColumn("pos", F.row_number().over(wq))
-        .filter(F.col("pos") <= 10)
-        .select("query_id", "neighbor_id", "pos")
-    )
+        ),
+        10,
+    ).select("query_id", "neighbor_id", F.col("rn").alias("pos"))
     disc = F.expr(_DISC_ARRAY)
     zero_disc = F.lit("0").cast("decimal(10,8)")
     ragg = (
@@ -2314,20 +2164,27 @@ def _dedup_reps_materialized(spark, sf_dir):
     )
 
 
+def _rep_corpus(spark, sf_dir):
+    """The representative set with ``nsq`` — the :func:`_corpus` of the
+    dedup-before-index pipelines (their queries still come from the raw
+    corpus)."""
+    return _dedup_reps_materialized(spark, sf_dir).withColumn(
+        "nsq", dot("embedding", "embedding")
+    )
+
+
 def _pq_dedup_index(spark, sf_dir):
     """(cent, codes) of the flat-PQ index built over the DEDUPED corpus,
     persisted once per corpus (same write-once serving-layout rationale
     as :func:`_pq_index`, distinct cache token). The k-means init seeds
-    from the ksub SMALLEST representative ids (a bounded TakeOrdered) —
-    the raw-path `vec_id < ksub` filter would silently under-seed when
-    the corpus's low ids are near-duplicates of each other (code-review
-    r9 finding #1)."""
+    from the _PQ_KSUB SMALLEST representative ids (:func:`_seed_ids`, a
+    bounded TakeOrdered) — a fixed `vec_id < _PQ_KSUB` filter would
+    silently under-seed when the corpus's low ids are near-duplicates of
+    each other (code-review r9 finding #1)."""
 
     def build():
         en = _unit_corpus(spark, _dedup_reps_materialized(spark, sf_dir))
-        return _pq_train_encode(
-            en, m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM, seed_ids=_seed_ids(en)
-        )
+        return _pq_train_encode(en, _seed_ids(en))
 
     return materialize_parts_once(
         spark, f"v2:pq_dedup_index:{sf_dir}:{_PQ_TAG}", _PQ_PARTS, build
@@ -2360,27 +2217,9 @@ def llm_index_build_pipeline(spark, sf_dir):
     proportional to duplicate mass: at a 1.11x-dup corpus the pipeline
     is only ~1.1x on build and parity on probe (addendum 44) — a corpus
     known near-duplicate-free can keep the raw build."""
-    pool = 32
     cent, codes = _pq_dedup_index(spark, sf_dir)
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = _raw_queries(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
-    qtab = _adc_table(q, cent, ["query_id"], "q_unit", m=_PQ_M, ksub=_PQ_KSUB)
-    adc = codes.crossJoin(F.broadcast(qtab)).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _adc_expr(_PQ_M, _PQ_KSUB).alias("approx_dsq"),
-    ).filter(F.col("neighbor_id") != F.col("query_id"))
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dsq").asc(), F.col("neighbor_id").asc()
-    )
-    cand = adc.withColumn("rn", F.row_number().over(wc)).filter(F.col("rn") <= pool)
-    return _rerank_top3(cand, reps, q)
+    reps = _rep_corpus(spark, sf_dir)
+    return _pq_probe(cent, codes, reps, _raw_queries(_corpus(spark, sf_dir)))
 
 
 @query(
@@ -2427,18 +2266,8 @@ def llm_index_build_pipeline_recall(spark, sf_dir):
     exact top-3 over the deduped representatives — the driver-checkable
     form of the addendum-26 remedy measurement."""
     ann = llm_index_build_pipeline(spark, sf_dir).select("query_id", "neighbor_id")
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            dot("embedding", "embedding").alias("q_nsq"),
-        )
-    )
+    reps = _rep_corpus(spark, sf_dir)
+    q = _probe_set(_corpus(spark, sf_dir))
     return _recall_metric(ann, reps, q, 0.4, "recall_ge_40")
 
 
@@ -2451,17 +2280,18 @@ def _ivfpq_dedup_index(spark, sf_dir):
     train on the raw corpus; over representatives both see only the
     collapsed set). Same persisted layout as :func:`_ivfpq_index`:
     ``coded`` PARTITIONED ON CELL ID so a probe's cell equi-join starts
-    co-located. The residual-PQ init seeds from the ksub smallest
-    REPRESENTATIVE ids (the `vec_id < ksub` default would under-seed
-    when low ids dedup away — the same code-review r9 finding #1 that
-    bit the flat dedup path)."""
-
-    def build():
-        en = _unit_corpus(spark, _dedup_reps_materialized(spark, sf_dir))
-        return _ivfpq_build(spark, en, seed_ids=_seed_ids(en))
+    co-located. The residual-PQ init seeds from the _PQ_KSUB smallest
+    REPRESENTATIVE ids (:func:`_ivfpq_build`; a fixed `vec_id < _PQ_KSUB`
+    filter would under-seed when low ids dedup away — the same
+    code-review r9 finding #1 that bit the flat dedup path)."""
 
     return materialize_parts_once(
-        spark, f"v1:ivfpq_dedup_index:{sf_dir}:{_PQ_TAG}", _IVFPQ_PARTS, build
+        spark,
+        f"v1:ivfpq_dedup_index:{sf_dir}:{_PQ_TAG}",
+        _IVFPQ_PARTS,
+        lambda: _ivfpq_build(
+            spark, _unit_corpus(spark, _dedup_reps_materialized(spark, sf_dir))
+        ),
     )
 
 
@@ -2491,16 +2321,9 @@ def llm_index_build_pipeline_ivfpq(spark, sf_dir):
     corpus KNOWN near-duplicate-free can keep the raw build; at unknown
     dup mass the stage is ~free insurance."""
     coded, cent, coarse = _ivfpq_dedup_index(spark, sf_dir)
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = _raw_queries(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    reps = _rep_corpus(spark, sf_dir)
     return _ivfpq_probe(
-        coded, cent, coarse, reps, q, m=_PQ_M, ksub=_PQ_KSUB, subdim=_PQ_SUBDIM
+        coded, cent, coarse, reps, _raw_queries(_corpus(spark, sf_dir))
     )
 
 
@@ -2553,18 +2376,8 @@ def llm_index_build_pipeline_ivfpq_recall(spark, sf_dir):
     ann = llm_index_build_pipeline_ivfpq(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            dot("embedding", "embedding").alias("q_nsq"),
-        )
-    )
+    reps = _rep_corpus(spark, sf_dir)
+    q = _probe_set(_corpus(spark, sf_dir))
     return _recall_metric(ann, reps, q, 0.3, "recall_ge_30")
 
 # ---------------------------------------------------------------------------
@@ -2876,46 +2689,11 @@ def llm_index_incremental_add_recall(spark, sf_dir):
     (frozen base quantizer + delta assigned map-only) against brute-force
     exact top-3 over the FULL corpus — the measured proof that the
     delta-ingest path serves queries without a retrain."""
-    from .clustering import _DIST_SQ
-
     base_cells, delta_cells, centroids = _ivf_incr_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    ).withColumn("nsq", dot("embedding", "embedding"))
+    e = _corpus(spark, sf_dir)
     cells = e.join(base_cells.unionByName(delta_cells), "vec_id")
-
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    qc = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "cdist", F.expr(_DIST_SQ.format(a="q_emb", b="centroid"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("cdist").asc(), F.col("cluster").asc()
-    )
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= 2)
-        .select("query_id", F.col("cluster").alias("p_cell"))
-    )
-    cand = cells.join(
-        F.broadcast(probes.join(q, "query_id")),
-        (F.col("cell") == F.col("p_cell")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    ann = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
+    q = _probe_set(e)
+    ann = _ivf_probe(cells, centroids, q).select("query_id", "neighbor_id")
     return _recall_metric(ann, e, q, 0.3, "recall_ge_30")
 
 
@@ -2935,33 +2713,18 @@ def _is_tombstoned():
 def _survivor_recall_metric(ann, survivors, q):
     """(n_exact_pairs, n_queries, n_deleted_surfaced, recall_ge_30) of
     tombstone-aware ANN results against exact top-3 over the SURVIVOR
-    corpus — shared by the logical (filtered-probe) and physical
-    (compacted-cells) delete twins so the metric contract cannot
-    diverge between them (code-review r11).
-
-    Same k-row lineage truncation as :func:`_recall_metric` (r14): the
-    three metric branches (exact3 agg, semi-join, surfaced filter) read
-    checkpointed ≤30-row frames instead of re-deriving the corpus-wide
-    scoring/probe subtrees per branch."""
-    exact3 = _exact_top3(survivors, q).localCheckpoint(eager=True)
-    ann = ann.localCheckpoint(eager=True)
-    found = exact3.join(ann, ["query_id", "neighbor_id"], "left_semi")
-    surfaced = ann.filter((F.col("neighbor_id") % _TOMBSTONE_RESIDUE) == 0)
-    return (
-        exact3.agg(
-            F.count("*").alias("n_exact_pairs"),
-            F.count_distinct("query_id").alias("n_queries"),
-        )
-        .join(found.agg(F.count("*").alias("n_found")))
-        .join(surfaced.agg(F.count("*").cast("long").alias("n_deleted_surfaced")))
-        .select(
-            "n_exact_pairs",
-            "n_queries",
-            "n_deleted_surfaced",
-            (F.col("n_found") >= 0.3 * F.col("n_exact_pairs")).alias(
-                "recall_ge_30"
-            ),
-        )
+    corpus — shared by the logical (filtered-probe), physical
+    (compacted-cells) and retrained delete twins so the metric contract
+    cannot diverge between them (code-review r11)."""
+    return _recall_metric(
+        ann,
+        survivors,
+        q,
+        0.3,
+        "recall_ge_30",
+        extra=lambda a: a.filter(
+            (F.col("neighbor_id") % _TOMBSTONE_RESIDUE) == 0
+        ).agg(F.count("*").cast("long").alias("n_deleted_surfaced")),
     )
 
 
@@ -3058,21 +2821,12 @@ def llm_index_tombstone_probe_recall(spark, sf_dir):
     query set also excludes tombstoned ids (erased subjects don't
     query). Same frozen, persisted quantizer as llm_sim_ann_ivf — the
     index trained BEFORE the deletes, which is the production order."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
-    survivors = e.filter(~_is_tombstoned())
+    survivors = _corpus(spark, sf_dir).filter(~_is_tombstoned())
     assigned, centroids = _ivf_index(spark, sf_dir)
     # serving-layer delete: the live candidate set is the cell assignment
     # minus the tombstone set — the write-once index files are untouched
     live_cells = survivors.join(assigned, "vec_id")
-    q = survivors.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _probe_set(survivors)
     ann = _ivf_probe(live_cells, centroids, q).select("query_id", "neighbor_id")
     return _survivor_recall_metric(ann, survivors, q)
 
@@ -3195,27 +2949,17 @@ def llm_index_compact_cells_recall(spark, sf_dir):
     surfaced (structurally zero only if compaction really removed
     them). The physical-delete proof to the tombstone twin's
     logical-delete proof."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    e = _corpus(spark, sf_dir)
     assigned, centroids = _ivf_index(spark, sf_dir)
     # in-plan compaction result: live assignment only (equivalent to the
     # compacted warehouse llm_index_compact_cells writes; recomputed here
     # so this op needs no cross-op temp-dir handshake)
     compacted = assigned.filter(~_is_tombstoned())
     cells = e.join(compacted, "vec_id")  # dead ids drop out of the join
-    q = (
-        e.filter((F.col("vec_id") < 10) & ~_is_tombstoned())
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nsq").alias("q_nsq"),
-        )
-    )
+    survivors = e.filter(~_is_tombstoned())
+    q = _probe_set(survivors)
     ann = _ivf_probe(cells, centroids, q).select("query_id", "neighbor_id")
-    return _survivor_recall_metric(ann, e.filter(~_is_tombstoned()), q)
+    return _survivor_recall_metric(ann, survivors, q)
 
 
 def _ivf_dedup_index(spark, sf_dir):
@@ -3251,20 +2995,10 @@ def llm_index_build_pipeline_ivf(spark, sf_dir):
     Gain is proportional to duplicate mass — at 1.11x dup the pipeline
     is ~parity with the raw build (addendum 44); skip the stage only
     when the corpus is KNOWN near-duplicate-free."""
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
+    reps = _rep_corpus(spark, sf_dir)
     assigned, centroids = _ivf_dedup_index(spark, sf_dir)
     cells = reps.join(assigned, "vec_id")
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            dot("embedding", "embedding").alias("q_nsq"),
-        )
-    )
+    q = _probe_set(_corpus(spark, sf_dir))
     return _ivf_probe(cells, centroids, q)
 
 
@@ -3310,18 +3044,8 @@ def llm_index_build_pipeline_ivf_recall(spark, sf_dir):
     ann = llm_index_build_pipeline_ivf(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    reps = _dedup_reps_materialized(spark, sf_dir).withColumn(
-        "nsq", dot("embedding", "embedding")
-    )
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            dot("embedding", "embedding").alias("q_nsq"),
-        )
-    )
+    reps = _rep_corpus(spark, sf_dir)
+    q = _probe_set(_corpus(spark, sf_dir))
     return _recall_metric(ann, reps, q, 0.4, "recall_ge_40")
 
 
@@ -3861,19 +3585,10 @@ def llm_sim_ann_filtered(spark, sf_dir):
     (k-means cells engine-specific); the oracled
     llm_sim_ann_filtered_recall twin hash-pins the zero-violation
     contract and gates recall against the exact filtered ground truth."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding", "label")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    e = _corpus(spark, sf_dir, "label")
     assigned, centroids = _ivf_index(spark, sf_dir)
     cells = e.join(assigned, "vec_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("label").alias("q_label"),
-    )
+    q = _probe_set(e, F.col("label").alias("q_label"))
     return _ivf_probe_filtered(cells, centroids, q)
 
 
@@ -3913,76 +3628,28 @@ def llm_sim_ann_filtered_recall(spark, sf_dir):
     top-3, plus the measured count of filter-violating results (must be
     zero) — the filtered-search analogue of the tombstone twin's
     n_deleted_surfaced contract."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding", "label")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    e = _corpus(spark, sf_dir, "label")
     ann = llm_sim_ann_filtered(spark, sf_dir).select("query_id", "neighbor_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("label").alias("q_label"),
-    )
-    exact3 = (
-        e.join(
-            F.broadcast(q),
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") == F.col("q_label")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias("cosine"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cosine").desc(), F.col("neighbor_id").asc()
-                )
-            ),
-        )
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-        # k-row lineage truncation (r14, the _recall_metric pattern):
-        # exact3 and the filtered probe each compute once; the found and
-        # violations branches read the ≤30-row checkpoints.
-        .localCheckpoint(eager=True)
-    )
-    ann = ann.localCheckpoint(eager=True)
-    found = exact3.join(ann, ["query_id", "neighbor_id"], "left_semi")
-    violations = (
-        ann.join(
-            e.select(F.col("vec_id").alias("neighbor_id"), "label"),
-            "neighbor_id",
-        )
-        .join(
-            q.select("query_id", "q_label"),
-            "query_id",
-        )
-        .filter(F.col("label") != F.col("q_label"))
-    )
-    return (
-        exact3.agg(
-            F.count("*").alias("n_exact_pairs"),
-            F.count_distinct("query_id").alias("n_queries"),
-        )
-        .join(found.agg(F.count("*").alias("n_found")))
-        .join(
-            violations.agg(
-                F.count("*").cast("long").alias("n_filter_violations")
+    q = _probe_set(e, F.col("label").alias("q_label"))
+
+    def violations(a):
+        return (
+            a.join(
+                e.select(F.col("vec_id").alias("neighbor_id"), "label"), "neighbor_id"
             )
+            .join(q.select("query_id", "q_label"), "query_id")
+            .filter(F.col("label") != F.col("q_label"))
+            .agg(F.count("*").cast("long").alias("n_filter_violations"))
         )
-        .select(
-            "n_exact_pairs",
-            "n_queries",
-            "n_filter_violations",
-            (F.col("n_found") >= 0.3 * F.col("n_exact_pairs")).alias(
-                "recall_ge_30"
-            ),
-        )
+
+    return _recall_metric(
+        ann,
+        e,
+        q,
+        0.3,
+        "recall_ge_30",
+        extra=violations,
+        pred=F.col("label") == F.col("q_label"),
     )
 
 
@@ -4144,43 +3811,20 @@ def llm_index_cell_rebalance_recall(spark, sf_dir):
     against brute-force exact top-3, plus the measured size of the
     rebalanced assignment (hash-pinned to the corpus count — the
     conservation contract)."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+    e = _corpus(spark, sf_dir)
     cells_assign, cents = _rebalanced_index(spark, sf_dir)
     cells = e.join(cells_assign.select("vec_id", "cell"), "vec_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    # k-row lineage truncation (r14, the _recall_metric pattern): the
-    # probe and the brute-force pass each run once; the three metric
-    # branches read ≤30-row checkpoints instead of re-deriving them.
-    ann = (
-        _ivf_probe(cells, cents, q)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    exact3 = _exact_top3(e, q).localCheckpoint(eager=True)
-    found = exact3.join(ann, ["query_id", "neighbor_id"], "left_semi")
-    return (
-        exact3.agg(
-            F.count("*").alias("n_exact_pairs"),
-            F.count_distinct("query_id").alias("n_queries"),
-        )
-        .join(found.agg(F.count("*").alias("n_found")))
-        .join(cells_assign.agg(F.count("*").cast("long").alias("n_assigned")))
-        .select(
-            "n_exact_pairs",
-            "n_queries",
-            "n_assigned",
-            (F.col("n_found") >= 0.3 * F.col("n_exact_pairs")).alias(
-                "recall_ge_30"
-            ),
-        )
+    q = _probe_set(e)
+    ann = _ivf_probe(cells, cents, q).select("query_id", "neighbor_id")
+    return _recall_metric(
+        ann,
+        e,
+        q,
+        0.3,
+        "recall_ge_30",
+        extra=lambda _: cells_assign.agg(
+            F.count("*").cast("long").alias("n_assigned")
+        ),
     )
 
 
@@ -4731,19 +4375,10 @@ def llm_index_retrain_recall(spark, sf_dir):
     ids that surfaced (structurally zero — the retrain corpus never
     contained them).  Measured: 0.593/0.556 retrained vs 0.444/0.481
     frozen at sf0.001/sf0.01 — see the oracle comment."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
-    survivors = e.filter(~_is_tombstoned())
+    survivors = _corpus(spark, sf_dir).filter(~_is_tombstoned())
     new_cells, centroids = _ivf_retrained_parts(spark, sf_dir)
     cells = survivors.join(new_cells, "vec_id")
-    q = survivors.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
+    q = _probe_set(survivors)
     ann = _ivf_probe(cells, centroids, q).select("query_id", "neighbor_id")
     return _survivor_recall_metric(ann, survivors, q)
 
@@ -4762,71 +4397,26 @@ def llm_index_retrain_recall(spark, sf_dir):
 _NPROBE_SWEEP_MAX = 4
 
 
-def _nprobe_sweep_candidates(spark, sf_dir, max_nprobe=_NPROBE_SWEEP_MAX):
-    """(exact3, per-candidate (query_id, neighbor_id, cosine,
-    probe_rank), q) over the shared persisted IVF index."""
-    from .clustering import _DIST_SQ
-
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
+def _nprobe_sweep_curve(spark, sf_dir):
+    """One (nprobe, n_candidates, n_found, recall) row per prefix, over
+    the shared persisted IVF index. The candidates are the registered
+    probe's (:func:`_ivf_candidates`) at _NPROBE_SWEEP_MAX with their
+    probe rank, so every prefix is routed exactly as ``_ivf_probe`` at
+    that nprobe routes."""
+    e = _corpus(spark, sf_dir)
     assigned, centroids = _ivf_index(spark, sf_dir)
-    cells = e.join(assigned, "vec_id")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    qc = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "cdist", F.expr(_DIST_SQ.format(a="q_emb", b="centroid"))
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("cdist").asc(), F.col("cluster").asc()
-    )
-    probes = (
-        qc.withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= max_nprobe)
-        .select("query_id", F.col("cluster").alias("p_cell"), "probe_rank")
-    )
-    cand = (
-        cells.join(
-            F.broadcast(probes.join(q, "query_id")),
-            (F.col("cell") == F.col("p_cell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cosine(dot("q_emb", "embedding"), "q_nsq", "nsq").alias(
-                "cosine"
-            ),
-            "probe_rank",
-        )
-        # one candidate fetch feeds every curve row (4 prefix windows +
-        # the twin's metric joins would otherwise re-run the probe join
-        # per prefix)
-        .localCheckpoint(eager=True)
-    )
-    return _exact_top3(e, q), cand, q
-
-
-def _nprobe_sweep_curve(spark, sf_dir, max_nprobe=_NPROBE_SWEEP_MAX):
-    """One (nprobe, n_candidates, n_found, recall) row per prefix."""
-    exact3, cand, _ = _nprobe_sweep_candidates(spark, sf_dir, max_nprobe)
+    q = _probe_set(e)
+    # one candidate fetch feeds every curve row (4 prefix windows + the
+    # twin's metric joins would otherwise re-run the probe join per prefix)
+    cand = _ivf_candidates(
+        e.join(assigned, "vec_id"), centroids, q, _NPROBE_SWEEP_MAX
+    ).localCheckpoint(eager=True)
+    exact3 = _exact_top3(e, q)
     n_truth = exact3.agg(F.count("*").cast("long").alias("n_exact_pairs"))
     curve = None
-    for n in range(1, max_nprobe + 1):
+    for n in range(1, _NPROBE_SWEEP_MAX + 1):
         pre = cand.filter(F.col("probe_rank") <= n)
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id").asc()
-        )
-        ann = (
-            pre.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .select("query_id", "neighbor_id")
-        )
+        ann = _top_k(pre, 3).select("query_id", "neighbor_id")
         row = (
             pre.agg(F.count("*").cast("long").alias("n_candidates"))
             .join(
@@ -4916,17 +4506,8 @@ def llm_sim_ann_nprobe_sweep_recall(spark, sf_dir):
             ).otherwise(False)
         ).alias("recall_monotone")
     )
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .withColumn("nsq", dot("embedding", "embedding"))
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    exact3 = _exact_top3(e, q)
+    e = _corpus(spark, sf_dir)
+    exact3 = _exact_top3(e, _probe_set(e))
     at2 = curve.filter(F.col("nprobe") == 2).select(
         (F.col("recall") >= 0.3).alias("recall_ge_30_at_2")
     )

@@ -363,11 +363,12 @@ def test_nprobe_sweep_curve_shape(spark):
         assert 0.0 <= r["recall"] <= 1.0
 
 
-def test_nprobe_sweep_matches_registered_probe_at_2(spark):
-    """The sweep's nprobe=2 row must reproduce the registered
-    llm_sim_ann_ivf operating point exactly (same index, same queries,
-    same k) — a sweep that disagrees with the op it calibrates is
-    measuring something else."""
+@pytest.mark.parametrize("nprobe", [1, 2, 3, 4])
+def test_nprobe_sweep_matches_registered_probe(spark, nprobe):
+    """Every prefix row of the sweep must reproduce the registered probe
+    at that nprobe exactly (same index, same queries, same router, same
+    k) — nprobe=2 is llm_sim_ann_ivf's operating point, and a sweep that
+    disagrees with the probe it calibrates is measuring something else."""
     from etl_suite_spark.io import load_table
     from etl_suite_spark.llm.similarity import (
         _exact_top3,
@@ -377,10 +378,10 @@ def test_nprobe_sweep_matches_registered_probe_at_2(spark):
     )
     from etl_suite_spark.registry import QUERIES
 
-    row2 = [
+    row = [
         r
         for r in QUERIES["llm_sim_ann_nprobe_sweep"](spark, SF_DIR).collect()
-        if r["nprobe"] == 2
+        if r["nprobe"] == nprobe
     ][0]
     e = (
         load_table(spark, SF_DIR, "embeddings")
@@ -394,10 +395,12 @@ def test_nprobe_sweep_matches_registered_probe_at_2(spark):
         F.col("embedding").alias("q_emb"),
         F.col("nsq").alias("q_nsq"),
     )
-    ann = _ivf_probe(cells, cents, q).select("query_id", "neighbor_id")
+    ann = _ivf_probe(cells, cents, q, nprobe=nprobe).select(
+        "query_id", "neighbor_id"
+    )
     exact3 = _exact_top3(e, q)
     n_found = exact3.join(ann, ["query_id", "neighbor_id"], "left_semi").count()
-    assert row2["n_found"] == n_found
+    assert row["n_found"] == n_found
 
 
 def test_nprobe_sweep_recall_twin_contract(spark):
