@@ -21,6 +21,9 @@ These helpers exist so each operator module states intent, not mechanics.
 
 from __future__ import annotations
 
+import logging
+import time
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -92,6 +95,46 @@ def as_long(c: Column) -> Column:
     """Normalize integer-ish computed columns to BIGINT on both sides —
     Spark year()/count() etc. return int vs DuckDB's bigint."""
     return c.cast("long")
+
+
+_LOG = logging.getLogger("etl_suite_spark")
+_LOGGED: set[str] = set()
+
+
+def log_once(name: str, message: str) -> None:
+    """Log a gate decision or fallback the first time ``name`` fires in
+    this process, so a run explains itself without repeating per call."""
+    if name not in _LOGGED:
+        _LOGGED.add(name)
+        _LOG.warning("%s: %s", name, message)
+
+
+def observed(obs, timeout_s: float = 10.0) -> dict | None:
+    """The metrics an ``Observation`` collected, or None when they are
+    missing, empty or unreadable; the caller then runs its own fallback.
+
+    ``Observation.get`` blocks until the observed action posts its
+    metrics, forever if it never does, and raises when the action
+    completed the observation with an empty row (adaptive execution
+    pruned the observed operator from the final plan, e.g. above an
+    empty input or under an inner join against one). So the JVM observation's future is polled until
+    ``timeout_s`` and ``get`` is only called once it has completed: no
+    helper thread is started, and none is left behind. On a healthy
+    runtime the metric lands a few milliseconds after the action."""
+    from py4j.protocol import Py4JError
+
+    deadline = time.monotonic() + timeout_s
+    pause = 0.001
+    try:
+        future = obs._jo.future()
+        while not future.isCompleted():
+            if time.monotonic() >= deadline:
+                return None
+            time.sleep(pause)
+            pause = min(2 * pause, 0.05)
+        return obs.get or None
+    except (AttributeError, Py4JError):  # no JVM observation, or an empty row
+        return None
 
 
 _MAT_RUN_ROOT: str | None = None

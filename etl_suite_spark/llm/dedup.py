@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..core import d2d, materialize_once
+from ..core import d2d, log_once, materialize_once, observed
 from ..io import byte_gated_broadcast, load_table
 from ..registry import query
 
@@ -728,35 +728,23 @@ def llm_dedup_editdist(spark, sf_dir):
 
 def _observed_sum(obs, labels: DataFrame, timeout_sec: float = 10.0):
     """The Σlabel convergence probe, read from an ``observe()`` attached
-    to the eager localCheckpoint action — with a timeout fallback.
+    to the eager localCheckpoint action, with a fallback.
 
     ``Observation.get`` relies on the checkpoint action firing
     QueryExecution listeners (true on current Spark, where
     localCheckpoint runs through withAction) but that is undocumented
-    behavior, and ``get`` blocks FOREVER if the metrics event is never
-    posted — a silent hang on a Spark upgrade instead of a clean error
-    (ADVICE r14 item 3). The checkpoint has already materialized by the
-    time this is called, so on a healthy runtime the metric arrives in
-    milliseconds; if it hasn't within ``timeout_sec``, fall back to a
-    separate one-row aggregate job over the checkpointed labels — the
-    exact pre-r14 probe, same value by construction. A ``get`` that
-    RAISES takes the same fallback: the exception is caught inside the
-    probe thread, so it never escapes as an unhandled-thread traceback."""
-    import threading
-
-    out: dict = {}
-
-    def probe():
-        try:
-            out.update(obs.get)
-        except Exception:  # fall through to the aggregate fallback below
-            pass
-
-    t = threading.Thread(target=probe, daemon=True)
-    t.start()
-    t.join(timeout_sec)
-    if "s" in out:
-        return out["s"]
+    behavior (ADVICE r14 item 3). ``core.observed`` reads the metric
+    without blocking past ``timeout_sec``; when it is missing, empty or
+    unreadable, the sum comes from a separate one-row aggregate job over
+    the checkpointed labels — the exact pre-r14 probe, same value by
+    construction."""
+    metrics = observed(obs, timeout_sec)
+    if metrics is not None:
+        return metrics["s"]
+    log_once(
+        "connected_components.label_sum",
+        "observed Σlabel missing; summing with a separate job",
+    )
     return labels.agg(
         F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     ).collect()[0]["s"]

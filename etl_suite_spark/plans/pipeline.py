@@ -28,13 +28,25 @@ column pruning back to the scan). Nothing executes until the sink runs.
 The incremental block injects ``watermark_col > saved_watermark`` directly
 above the source scan (pushdown → row-group skipping), exactly like the
 reference's checkpoint-window extraction.
+
+``run_pipeline`` then advances the watermark to the max ``watermark_col``
+of that slice. With a sink, the max is observed inside the sink's own job
+(``observe()`` directly above the watermark filter, before any transform),
+so a tick reads the source once and runs no separate max job, and the
+watermark covers exactly the rows the sink consumed. A second compile plus
+an aggregate job remains the fallback when the spec has no sink, when it
+has a ``limit`` transform (the observation would only see the rows the
+limit let through), and when the observation is missing or empty. Adaptive
+execution leaves it empty when it prunes the observed operator from the
+final plan: an empty slice, or an inner join against an empty table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core import log_once, observed
 from ..io import load_table
 from ..registry import query
 from .incremental import advance_watermark, read_watermark
@@ -79,14 +91,26 @@ def _apply_transform(spark: SparkSession, sf_dir: str, df: DataFrame, t: dict) -
     raise ValueError(f"unknown pipeline op: {op}")
 
 
-def compile_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
+def compile_pipeline(
+    spark: SparkSession,
+    sf_dir: str,
+    spec: dict,
+    observation: Observation | None = None,
+) -> DataFrame:
     """Spec → single DataFrame plan (unsunk). Incremental filter, if any,
-    goes directly above the scan so it pushes into the reader."""
+    goes directly above the scan so it pushes into the reader.
+    ``observation`` (``run_pipeline`` only) observes the max watermark
+    column right above that filter, over the whole extracted slice.
+    Catalyst does not push a later ``filter`` transform below the
+    observation, so with one only the watermark predicate reaches the
+    reader (column pruning still does)."""
     df = load_table(spark, sf_dir, spec["source"]["table"])
     inc = spec.get("incremental")
     if inc:
         wm = read_watermark(inc["state_path"], inc.get("default", "1970-01-01 00:00:00"))
         df = df.filter(F.col(inc["watermark_col"]) > F.to_timestamp(F.lit(wm)))
+        if observation is not None:
+            df = df.observe(observation, F.max(inc["watermark_col"]).alias("hi"))
     for t in spec.get("transforms", ()):
         df = _apply_transform(spark, sf_dir, df, t)
     return df
@@ -98,9 +122,21 @@ def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
     Sink writes are partitioned when the spec says so — at 100 TB an
     unpartitioned sink is a bug, not a choice. Returns the compiled frame
     for inspection/chaining.
+
+    With both a sink and an incremental block, the new watermark is the
+    max observed inside the sink's job: one compile, one source read and
+    no extra job per tick, and a file that lands after the write stays
+    past the watermark for the next tick. The fallback (a second compile
+    and a max job over a fresh read of the slice) runs when there is no
+    sink, when a ``limit`` transform would hide rows from the
+    observation, and when the observation is missing or empty. A max of
+    None (empty slice) leaves the watermark where it was.
     """
-    df = compile_pipeline(spark, sf_dir, spec)
     sink = spec.get("sink")
+    inc = spec.get("incremental")
+    limited = any(t["op"] == "limit" for t in spec.get("transforms", ()))
+    obs = Observation() if sink and inc and not limited else None
+    df = compile_pipeline(spark, sf_dir, spec, observation=obs)
     if sink:
         # declarative sink dispatch through the pluggable registry
         # (sources/sinks.py): parquet/orc/csv/json/jdbc run here;
@@ -108,13 +144,18 @@ def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
         from ..sources.sinks import write_sink
 
         write_sink(df, sink)
-    inc = spec.get("incremental")
     if inc:
-        hi = (
-            compile_pipeline(spark, sf_dir, {"source": spec["source"], "incremental": inc})
-            .agg(F.max(inc["watermark_col"]).alias("hi"))
-            .collect()[0]["hi"]
-        )
+        metrics = observed(obs) if obs is not None else None
+        if metrics is not None:
+            hi = metrics["hi"]
+        else:
+            reason = "no_sink" if not sink else "limit" if limited else "unobserved"
+            log_once(f"pipeline.watermark.{reason}", "watermark from a separate max job")
+            hi = (
+                compile_pipeline(spark, sf_dir, {"source": spec["source"], "incremental": inc})
+                .agg(F.max(inc["watermark_col"]).alias("hi"))
+                .collect()[0]["hi"]
+            )
         if hi is not None:
             advance_watermark(inc["state_path"], hi.strftime("%Y-%m-%d %H:%M:%S.%f"))
     return df

@@ -1,0 +1,204 @@
+"""Single-pass ETL tick (plans/pipeline.py): ``run_pipeline`` takes the new
+watermark from an ``observe()`` inside the sink's own job. A second compile
+plus a max job is only the fallback: no sink, a ``limit`` transform, or an
+observation that comes back missing or empty.
+
+Every expectation is computed independently with DuckDB over the same
+parquet files."""
+
+from __future__ import annotations
+
+import os
+import shutil
+import threading
+from types import SimpleNamespace
+
+import duckdb
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
+from conftest import SF_DIR
+
+from etl_suite_spark.plans.incremental import advance_watermark, read_watermark
+from etl_suite_spark.plans.pipeline import run_pipeline
+
+WM0 = "2024-01-15 00:00:00"
+FMT = "%Y-%m-%d %H:%M:%S.%f"
+DAILY = [
+    {"op": "derive", "cols": {"day": "to_date(ts)"}},
+    {"op": "groupby", "keys": ["day", "event_type"], "aggs": {"n": "count(*)"}},
+]
+
+
+@pytest.fixture
+def tick(tmp_path):
+    """A private sf dir whose events table is a directory new batches can
+    land in, a watermark state file at ``WM0`` and an append sink path."""
+    events = tmp_path / "sf" / "events.parquet"
+    events.mkdir(parents=True)
+    shutil.copy(os.path.join(SF_DIR, "events.parquet"), events / "part-0.parquet")
+    state = str(tmp_path / "state.json")
+    advance_watermark(state, WM0)
+    return SimpleNamespace(
+        sf=str(tmp_path / "sf"), events=str(events), state=state, sink=str(tmp_path / "sink")
+    )
+
+
+@pytest.fixture
+def reads(monkeypatch):
+    """Every ``DataFrameReader.parquet`` call made while the test runs."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls: list = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **options):
+        calls.append(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    return calls
+
+
+def spec(t, transforms=DAILY):
+    return {
+        "source": {"table": "events"},
+        "transforms": transforms,
+        "sink": {"format": "parquet", "path": t.sink, "mode": "append"},
+        "incremental": {"watermark_col": "ts", "state_path": t.state},
+    }
+
+
+def slice_max(files: str) -> str:
+    hi = duckdb.sql(
+        f"SELECT max(ts) FROM read_parquet('{files}') WHERE ts > TIMESTAMP '{WM0}'"
+    ).fetchone()[0]
+    return hi.strftime(FMT)
+
+
+def expected_daily(files: str) -> dict:
+    rows = duckdb.sql(
+        f"SELECT CAST(ts AS DATE), event_type, count(*) FROM read_parquet('{files}')"
+        f" WHERE ts > TIMESTAMP '{WM0}' GROUP BY 1, 2"
+    ).fetchall()
+    return {(day, et): n for day, et, n in rows}
+
+
+def sunk_daily(spark, t) -> dict:
+    rows = (
+        spark.read.parquet(t.sink)
+        .groupBy("day", "event_type")
+        .agg(F.sum("n").alias("n"))
+        .collect()
+    )
+    return {(r.day, r.event_type): r.n for r in rows}
+
+
+def land_late_batch(path: str) -> None:
+    """The fixture's events shifted 40 days later under fresh event ids:
+    every row is past any watermark the first slice can produce."""
+    t = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    ts = t.column("ts").to_numpy() + np.timedelta64(40, "D")
+    t = t.set_column(t.schema.get_field_index("ts"), "ts", pa.array(ts, pa.timestamp("us")))
+    ids = pa.array(t.column("event_id").to_numpy() + 1_000_000)
+    t = t.set_column(t.schema.get_field_index("event_id"), "event_id", ids)
+    pq.write_table(t, path)
+
+
+def test_tick_watermark_is_observed_in_the_sink_job(spark, tick, reads):
+    run_pipeline(spark, tick.sf, spec(tick))
+    assert len(reads) == 1, reads  # one compile, no second read for the max
+    files = f"{tick.events}/*.parquet"
+    assert read_watermark(tick.state, "") == slice_max(files)
+    assert sunk_daily(spark, tick) == expected_daily(files)
+
+
+def test_empty_slice_leaves_watermark_unchanged(spark, tick):
+    run_pipeline(spark, tick.sf, spec(tick))
+    wm = read_watermark(tick.state, "")
+    before = sunk_daily(spark, tick)
+    run_pipeline(spark, tick.sf, spec(tick))  # nothing past the watermark
+    assert read_watermark(tick.state, "") == wm
+    assert sunk_daily(spark, tick) == before
+
+
+def test_limit_spec_takes_the_fallback_max(spark, tick, reads):
+    """An observation under ``limit`` would only see the rows the limit let
+    through; the watermark must still be the whole slice's max."""
+    run_pipeline(spark, tick.sf, spec(tick, [{"op": "limit", "n": 20}]))
+    assert len(reads) == 2, reads  # the sink read, then the fallback's
+    assert read_watermark(tick.state, "") == slice_max(f"{tick.events}/*.parquet")
+
+
+def test_join_to_empty_table_takes_the_fallback_max(spark, tick, reads):
+    """Adaptive execution prunes the scan under an inner join against an
+    empty table, so the observation completes with an empty row."""
+    schema = pq.read_schema(os.path.join(SF_DIR, "customer.parquet"))
+    pq.write_table(schema.empty_table(), os.path.join(tick.sf, "customer.parquet"))
+    join = {"op": "join", "table": "customer", "on": "user_id = c_custkey", "how": "inner"}
+    run_pipeline(spark, tick.sf, spec(tick, [join]))
+    assert len(reads) == 3, reads  # events, customer, then the fallback's events
+    assert read_watermark(tick.state, "") == slice_max(f"{tick.events}/*.parquet")
+
+
+def test_file_landing_after_the_write_is_sunk_next_tick(spark, tick, monkeypatch):
+    """A batch that lands between the sink write and the watermark update
+    must stay past the watermark: the watermark is the max of what the sink
+    consumed, not of a listing taken after it."""
+    from etl_suite_spark.sources import sinks
+
+    write_sink = sinks.write_sink
+    late = os.path.join(tick.events, "part-1.parquet")
+
+    def write_then_land(df, sink):
+        write_sink(df, sink)
+        if not os.path.exists(late):
+            land_late_batch(late)
+
+    monkeypatch.setattr(sinks, "write_sink", write_then_land)
+    run_pipeline(spark, tick.sf, spec(tick))
+    assert read_watermark(tick.state, "") == slice_max(os.path.join(tick.events, "part-0.parquet"))
+    run_pipeline(spark, tick.sf, spec(tick))
+    files = f"{tick.events}/*.parquet"
+    assert read_watermark(tick.state, "") == slice_max(files)
+    assert sunk_daily(spark, tick) == expected_daily(files)
+
+
+# --- the shared observation reader (core.observed) --------------------------
+
+
+def _labels(spark):
+    return spark.range(10).select(F.col("id").alias("node"), F.col("id").alias("label"))
+
+
+def _label_sum():
+    return F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+
+
+def test_observed_sum_falls_back_on_observation_that_never_fires(spark):
+    from etl_suite_spark.llm.dedup import _observed_sum
+
+    obs = Observation()
+    labels = _labels(spark)
+    labels.observe(obs, _label_sum())  # no action ever runs on it
+    threads = threading.active_count()
+    assert int(_observed_sum(obs, labels, timeout_sec=0.2)) == 45
+    assert threading.active_count() == threads
+
+
+def test_observed_sum_falls_back_on_empty_observation(spark):
+    from etl_suite_spark.core import observed
+    from etl_suite_spark.llm.dedup import _observed_sum
+
+    obs = Observation()
+    labels = _labels(spark)
+    empty = spark.range(0).select(F.col("id").alias("node"))
+    labels.observe(obs, _label_sum()).join(empty, "node").collect()
+    assert observed(obs) is None
+    threads = threading.active_count()
+    assert int(_observed_sum(obs, labels)) == 45
+    assert threading.active_count() == threads

@@ -224,13 +224,13 @@ def test_incremental_filter_pushed_to_scan(spark):
     assert "PushedFilters: [" in plan
 
 
-def test_pipeline_spec_incremental_and_sink(spark):
+def test_pipeline_spec_incremental_and_sink(spark, duck, tmp_path):
     """Full pipeline spec: incremental source + transform + partitioned
-    sink; second run consumes nothing new."""
+    sink; the watermark lands exactly on the slice's max ts."""
     from etl_suite_spark.plans.incremental import advance_watermark, read_watermark
     from etl_suite_spark.plans.pipeline import run_pipeline
 
-    root = tempfile.mkdtemp(prefix="pipetest_")
+    root = str(tmp_path)
     state = os.path.join(root, "state.json")
     advance_watermark(state, "2024-01-15 00:00:00")
     spec = {
@@ -253,17 +253,20 @@ def test_pipeline_spec_incremental_and_sink(spark):
     run_pipeline(spark, SF_DIR, spec)
     written = spark.read.parquet(os.path.join(root, "out"))
     assert written.count() > 0
-    assert read_watermark(state, "x") > "2024-01-15"
+    hi = duck.execute(
+        "SELECT max(ts) FROM events WHERE ts > TIMESTAMP '2024-01-15 00:00:00'"
+    ).fetchone()[0]
+    assert read_watermark(state, "x") == hi.strftime("%Y-%m-%d %H:%M:%S.%f")
 
 
-def test_scheduler_runs_due_jobs_and_advances_watermark(spark):
+def test_scheduler_runs_due_jobs_and_advances_watermark(spark, tmp_path):
     """Two scheduler passes: the first tick processes the window past the
     initial watermark; the second pass (immediately due again) extracts
     nothing new but still runs idempotently."""
     from etl_suite_spark.plans.incremental import advance_watermark, read_watermark
     from etl_suite_spark.plans.scheduler import Job, Scheduler
 
-    root = tempfile.mkdtemp(prefix="schedtest_")
+    root = str(tmp_path)
     state = os.path.join(root, "wm.json")
     advance_watermark(state, "2024-01-15 00:00:00")
     spec = {
