@@ -78,25 +78,15 @@ def prepare_corpus(
     #    never enters the corpus, and any training doc sharing a 3-gram
     #    with it is dropped (broadcast semi-join on the shingle — the
     #    eval shingle set is small by construction).
-    from .dedup import _shingles
+    from .traindata import contaminated_docs, gopher_metrics
 
-    sh = _shingles(docs)
-    bench_sh = sh.filter(F.col("doc_id") % 50 == 0).select("shingle").distinct()
-    dirty = (
-        sh.filter(F.col("doc_id") % 50 != 0)
-        .join(F.broadcast(bench_sh), "shingle", "left_semi")
-        .select("doc_id")
-        .distinct()
-    )
     decontaminated = (
         near_deduped.filter(F.col("doc_id") % 50 != 0)
-        .join(dirty, "doc_id", "left_anti")
+        .join(contaminated_docs(docs), "doc_id", "left_anti")
     )
 
     # 5. Quality gate: token-count floor (map-only) + Gopher repetition
     #    verdict (two uniform-key groupBys, computed on the survivors).
-    from .traindata import gopher_metrics
-
     keep_ids = gopher_metrics(decontaminated).filter(F.col("keep")).select("doc_id")
     with_tokens = decontaminated.withColumn(
         "n_tokens", F.size(F.split("text", " "))

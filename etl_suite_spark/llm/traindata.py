@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..core import d2d
 from ..io import load_table
 from ..registry import query
-from .dedup import _NORM_SQL, _normalized_text, _shingles
+from .dedup import _NORM_SQL, _SHINGLE_SETS_SQL, _normalized_text, _shingles
 
 _PACK_BUDGET = 2048  # tokens per packed sequence bin
 _MIX_QUOTA = 5000  # token quota per source
@@ -89,6 +89,22 @@ def llm_seq_packing(spark, sf_dir):
     ).orderBy("source", "doc_id")
 
 
+def contaminated_docs(docs):
+    """(doc_id) of the training docs (doc_id % 50 ≠ 0) of ``docs`` that
+    share any word 3-gram with the benchmark split (doc_id % 50 = 0); see
+    :func:`llm_decontaminate` for the plan shape."""
+    sh = _shingles(docs)
+    bench_sh = (
+        sh.filter(F.col("doc_id") % 50 == 0).select("shingle").distinct()
+    )
+    return (
+        sh.filter(F.col("doc_id") % 50 != 0)
+        .join(F.broadcast(bench_sh), "shingle", "left_semi")
+        .select("doc_id")
+        .distinct()
+    )
+
+
 @query(
     "llm_decontaminate",
     oracle=f"""
@@ -121,16 +137,7 @@ def llm_decontaminate(spark, sf_dir):
     pairs. This is how eval-leakage scrubbing runs at 100 TB (cf. GPT-3
     appendix C / PaLM's 13-gram overlap, here 3-gram at fixture scale)."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = _shingles(docs)
-    bench_sh = (
-        sh.filter(F.col("doc_id") % 50 == 0).select("shingle").distinct()
-    )
-    dirty = (
-        sh.filter(F.col("doc_id") % 50 != 0)
-        .join(F.broadcast(bench_sh), "shingle", "left_semi")
-        .select("doc_id")
-        .distinct()
-    )
+    dirty = contaminated_docs(docs)
     return (
         docs.filter(F.col("doc_id") % 50 != 0)
         .join(dirty, "doc_id", "left_anti")
@@ -1023,14 +1030,7 @@ def llm_sft_lint(spark, sf_dir):
 @query(
     "llm_split_leakage",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(range(1, len(w) - 1),
-                           i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s
-      FROM t WHERE len(w) >= 3
-    ), p AS (
+    WITH {_SHINGLE_SETS_SQL}, p AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              len(list_intersect(a.s, b.s)) AS shared,
              len(a.s) AS na, len(b.s) AS nb

@@ -111,19 +111,6 @@ def sink_parquet_partitioned(spark, sf_dir):
     )
 
 
-def scan_avro_roundtrip(spark, sf_dir):
-    """Avro interchange (the Kafka-ecosystem wire format). NOT registered:
-    this environment ships only avro-core jars, not the ``spark-avro``
-    data source module (`org.apache.spark:spark-avro_2.13`), so
-    ``format("avro")`` raises. On a cluster with the module deployed the
-    call shape is exactly the parquet/orc roundtrip:
-
-        df.write.format("avro").save(path)
-        spark.read.format("avro").load(path)
-    """
-    raise NotImplementedError("spark-avro data source module not deployed here")
-
-
 @query("scan_orc_roundtrip", oracle="SELECT * FROM orders")
 def scan_orc_roundtrip(spark, sf_dir):
     """ORC roundtrip — the other columnar warehouse format; same pushdown/

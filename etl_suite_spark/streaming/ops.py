@@ -580,60 +580,6 @@ def stream_stream_join(spark, sf_dir):
     )
 
 
-def stream_stateful_tws(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4.x's successor to
-    applyInPandasWithState: ValueState/ListState/MapState, timers, TTL per
-    key). NOT registered: the API's python worker requires the
-    ``protobuf`` package, which this container does not ship
-    (ImportError: google.protobuf.descriptor) and installs are disallowed.
-    On a normally-provisioned cluster the call shape is:
-
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        class RunningExtremes(StatefulProcessor):
-            def init(self, handle):
-                self._state = handle.getValueState("extremes", "mx DOUBLE, n BIGINT")
-            def handleInputRows(self, key, rows, timerValues):
-                ...update state, yield a pandas frame...
-            def close(self): ...
-
-        (df.groupBy("user_id")
-           .transformWithStateInPandas(RunningExtremes(),
-               outputStructType="user_id BIGINT, max_value DOUBLE, n_events BIGINT",
-               outputMode="Update", timeMode="None"))
-
-    with ``spark.sql.streaming.stateStore.providerClass`` set to the
-    RocksDB provider. stream_stateful_custom covers the same semantics on
-    the stable applyInPandasWithState API.
-    """
-    raise NotImplementedError("protobuf python package not available here")
-
-
-def stream_kafka_source(spark: SparkSession, bootstrap: str, topic: str):
-    """Kafka ingestion. NOT registered: this deployment ships no
-    spark-sql-kafka connector jar (verified — SURVEY.md §0 [V]), so
-    ``format("kafka")`` raises at lookup. On a cluster with
-    ``org.apache.spark:spark-sql-kafka-0-10_2.13`` deployed, the
-    engine's call shape is:
-
-        raw = (spark.readStream.format("kafka")
-               .option("kafka.bootstrap.servers", bootstrap)
-               .option("subscribe", topic)
-               .option("startingOffsets", "earliest")
-               .load())                       # key/value BINARY + metadata
-        ev = raw.select(
-            F.from_json(F.col("value").cast("string"), EVENTS_SCHEMA).alias("e")
-        ).select("e.*")
-        # downstream: identical to the file-source operators above —
-        # withWatermark + windowed aggs / dedup / foreachBatch upsert all
-        # compose unchanged; checkpointLocation carries the Kafka offsets.
-
-    Every registered streaming operator in this module is source-agnostic
-    past the first select, which is the point of documenting the stub.
-    """
-    raise NotImplementedError("spark-sql-kafka connector not deployed here")
-
-
 @query(
     "stream_ohlc",
     # emitted set = hourly windows finalized by the watermark (max ts − 10

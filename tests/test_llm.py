@@ -498,7 +498,7 @@ def test_embedding_neardup_probe_index_asymmetry(spark):
     is 'common': a symmetric indexed⋈indexed candidate join misses the
     pair (the bug this test pins), while the full-postings-probe⋈indexed
     join finds it; cosine = 100/√(101·107) ≈ 0.962 ≥ 0.95."""
-    from etl_suite_spark.llm.dedup import _hashed_tf_neardup_pairs
+    from etl_suite_spark.llm.dedup import _hashed_tf, _hashed_tf_neardup_pairs
 
     docs = spark.createDataFrame(
         [
@@ -508,7 +508,7 @@ def test_embedding_neardup_probe_index_asymmetry(spark):
         ],
         "doc_id long, text string",
     )
-    rows = _hashed_tf_neardup_pairs(spark, docs, tau=0.95).collect()
+    rows = _hashed_tf_neardup_pairs(_hashed_tf(docs)).collect()
     assert [(r.doc_a, r.doc_b) for r in rows] == [(1, 2)]
     assert abs(rows[0].cosine - 100 / (101 * 107) ** 0.5) < 1e-6
 
@@ -843,6 +843,78 @@ def test_containment_catches_subset_doc_jaccard_misses(spark, tmp_path):
     assert not any(3 in pair for pair in cont)
     jac = QUERIES["llm_dedup_ngram_jaccard"](spark, d).collect()
     assert not any({r.doc_a, r.doc_b} == {1, 2} for r in jac)
+
+
+@pytest.fixture(scope="module")
+def jaccard_edge_docs(spark, tmp_path_factory):
+    """A documents table planting the shingle-overlap edge cases: docs
+    under 3 words, a doc repeating a 3-gram, case and whitespace variants
+    (\\x0b included), identical docs, a subset doc, and cross-set pairs
+    with the batch doc (doc_id % 10 == 0) above and below its corpus
+    match."""
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    texts = {
+        1: base,
+        2: "The QUICK  brown fox\tjumps over the\x0blazy dog near the river bank",
+        3: base.replace("bank", "side"),
+        4: "hi there",
+        5: "hi there",
+        6: "x y z x y z x y z x y z",
+        7: "x y z x y z x y z",
+        8: "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+        9: "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+        15: "alpha beta gamma delta epsilon",
+        10: "one two three four five six seven eight nine ten eleven",
+        13: "one two three four five six seven eight nine ten twelve",
+        11: "red green blue yellow orange purple pink brown black white",
+        20: "red green blue yellow orange purple pink brown black grey",
+        30: "sun moon star sky cloud rain snow wind fog hail",
+        31: "sun moon star sky cloud rain snow wind mist sleet",
+        12: "completely different words entirely other tokens here now",
+        40: "short",
+    }
+    df = spark.createDataFrame(
+        [(i, t, "en", "s", len(t)) for i, t in sorted(texts.items())],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    d = str(tmp_path_factory.mktemp("jaccard_edges"))
+    df.coalesce(1).write.parquet(f"{d}/documents.parquet")
+    return d
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "llm_dedup_ngram_jaccard",
+        "llm_dedup_containment",
+        "llm_dedup_crossset",
+        "llm_dedup_editdist",
+        "llm_dedup_threshold_sweep",
+        "llm_dedup_clusters",
+    ],
+)
+def test_jaccard_family_matches_oracle_on_planted_edges(
+    spark, jaccard_edge_docs, name
+):
+    """Each exact-Jaccard-family op equals its DuckDB oracle on the
+    planted edge corpus — the fixture does not isolate these cases, so
+    this guards the shared shingle-overlap kernel and its callers."""
+    import duckdb
+    from verify_local import canon_duck, canon_spark
+
+    from etl_suite_spark.registry import ORACLES
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{jaccard_edge_docs}/documents.parquet/*.parquet')"
+    )
+    sc, sr = canon_spark(QUERIES[name](spark, jaccard_edge_docs))
+    oc, orr = canon_duck(con, ORACLES[name])
+    con.close()
+    assert sc == oc
+    assert sr == orr
+    assert sr, "the planted corpus must produce rows"
 
 
 def test_connected_components_adversarial_chain(spark):

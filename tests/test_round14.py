@@ -72,7 +72,6 @@ def test_scored_union_keeps_exactly_the_true_pair(spark, distribution_dup_docs):
     channels run the same scorer at the same tau; the registered op
     itself is driver-gated at all three fixtures.)"""
     from etl_suite_spark.llm.dedup import (
-        _EMB_TAU,
         _TF_SIMHASH_MAX_HAMMING,
         _band_candidates,
         _hashed_tf,
@@ -90,8 +89,8 @@ def test_scored_union_keeps_exactly_the_true_pair(spark, distribution_dup_docs):
         _simhash_prints(spark, distribution_dup_docs), _TF_SIMHASH_MAX_HAMMING
     ).select("doc_a", "doc_b")
     cand = seq.unionByName(dist).distinct()
-    tf = _hashed_tf(spark, distribution_dup_docs)
-    out = _score_candidate_pairs(cand, tf, tau=_EMB_TAU).collect()
+    tf = _hashed_tf(distribution_dup_docs)
+    out = _score_candidate_pairs(cand, tf).collect()
     assert [(r.doc_a, r.doc_b, r.cosine) for r in out] == [(1, 2, 1.0)]
 
 
