@@ -21,12 +21,19 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core import SUBJECT_RESIDUE, d2d, dsum, sql_dsum
 from ..io import load_table
 from ..registry import query
+
+
+# The watermark's one codec: a microsecond timestamp string in the SESSION
+# zone, parsed and rendered inside Spark so it round-trips whatever zone the
+# Python process runs in (a collected datetime would be in the process's).
+DEFAULT_WATERMARK = "1970-01-01 00:00:00"
+_WATERMARK_FORMAT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
 def read_watermark(state_path: str, default: str) -> str:
@@ -45,24 +52,39 @@ def advance_watermark(state_path: str, new_watermark: str) -> None:
     os.replace(tmp, state_path)
 
 
+def past_watermark(df: DataFrame, watermark_col: str, state_path: str, default: str) -> DataFrame:
+    """The one watermark filter: rows of ``df`` past the saved watermark.
+    Attach it directly above the scan so it reaches the parquet reader as
+    a pushed predicate (verified in test_plans.py)."""
+    wm = read_watermark(state_path, default)
+    return df.filter(F.col(watermark_col) > F.to_timestamp(F.lit(wm)))
+
+
+def encoded_max(watermark_col: str) -> Column:
+    """``max(watermark_col)`` as the state-file string, aliased ``hi``; null
+    on an empty slice. An aggregate, so it also serves inside ``observe``."""
+    return F.date_format(F.max(watermark_col), _WATERMARK_FORMAT).alias("hi")
+
+
+def slice_max(df: DataFrame, watermark_col: str) -> str | None:
+    """The slice's new watermark from one aggregate job, or None if empty."""
+    return df.agg(encoded_max(watermark_col)).collect()[0]["hi"]
+
+
 def incremental_extract(
     spark: SparkSession,
     sf_dir: str,
     table: str,
     state_path: str,
     watermark_col: str = "ts",
-    default: str = "1970-01-01 00:00:00",
+    default: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
     """Extract only rows newer than the saved watermark.
 
-    The filter is attached directly above the scan so it reaches the
-    parquet reader as a pushed predicate (verified in test_plans.py) —
-    an incremental tick over a 100 TB event log reads only the new
-    row groups.
+    The filter is attached directly above the scan, so an incremental tick
+    over a 100 TB event log reads only the new row groups.
     """
-    wm = read_watermark(state_path, default)
-    df = load_table(spark, sf_dir, table)
-    return df.filter(F.col(watermark_col) > F.to_timestamp(F.lit(wm)))
+    return past_watermark(load_table(spark, sf_dir, table), watermark_col, state_path, default)
 
 
 def run_incremental_tick(
@@ -71,23 +93,23 @@ def run_incremental_tick(
     state_path: str,
     transform,
     watermark_col: str = "ts",
-    default: str = "1970-01-01 00:00:00",
+    default: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """One scheduler tick: extract past the watermark, transform, advance.
+    """One scheduler tick: extract past the watermark, advance, transform.
 
-    Returns the transformed frame; the caller sinks it. The watermark only
-    advances to the max extracted timestamp AFTER the extract plan is
-    built, mirroring the reference's read-checkpoint → process → persist
-    cycle. Re-running a tick with no new data yields an empty frame and
-    leaves the watermark unchanged.
+    Returns the transformed frame; the caller sinks it. The watermark
+    advances to the slice's max BEFORE the caller sinks, so a crash in
+    between leaves that window behind the watermark, never sunk; it is
+    the only tick that does (``pipeline.run_pipeline`` advances after its
+    sink). A tick with no new data leaves the watermark unchanged.
     """
     inc = incremental_extract(
         spark, sf_dir, "events", state_path, watermark_col, default
     )
-    hi = inc.agg(F.max(watermark_col).alias("hi")).collect()[0]["hi"]
+    hi = slice_max(inc, watermark_col)
     out = transform(inc)
     if hi is not None:
-        advance_watermark(state_path, hi.strftime("%Y-%m-%d %H:%M:%S.%f"))
+        advance_watermark(state_path, hi)
     return out
 
 
@@ -112,8 +134,6 @@ def inc_batch_watermark(spark, sf_dir):
     up per (day, event_type), advance the watermark. The state file cycle
     (read → filter → advance) is exercised for real in a temp dir; the
     fixed initial watermark keeps the oracle replayable."""
-    state = os.path.join(tempfile.mkdtemp(prefix="etl_wm_"), "state.json")
-    advance_watermark(state, _FIXED_WM)
 
     def rollup(inc: DataFrame) -> DataFrame:
         return inc.groupBy(
@@ -123,10 +143,12 @@ def inc_batch_watermark(spark, sf_dir):
             dsum("value", 4).alias("sum_value"),
         )
 
-    out = run_incremental_tick(spark, sf_dir, state, rollup)
-    # the tick advanced the durable watermark to max(ts) — a second tick
-    # would extract nothing (asserted in tests).
-    return out
+    # the returned frame carries the watermark as a literal and never reads
+    # the state file again, so the state dir goes when the tick returns
+    with tempfile.TemporaryDirectory(prefix="etl_wm_") as root:
+        state = os.path.join(root, "state.json")
+        advance_watermark(state, _FIXED_WM)
+        return run_incremental_tick(spark, sf_dir, state, rollup)
 
 
 # --- CDC apply / SCD2 --------------------------------------------------------
@@ -253,7 +275,7 @@ def dim_scd2_build(spark, sf_dir):
 
 def scd2_intervals(ev):
     """(user_id, ts, event_id, event_type) → SCD2 interval rows; the
-    full-rebuild core shared by dim_scd2_build, dim_scd2_lookup's twin,
+    full-rebuild core shared by dim_scd2_build, dim_scd2_lookup's dimension,
     and the inc_scd2_apply equivalence oracle."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     hist = ev.select(
@@ -324,27 +346,11 @@ def dim_scd2_lookup(spark, sf_dir):
     version (two changes at one timestamp) matches nothing — exactly-one
     match per fact is structural, not data-dependent."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    hist = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.col("event_type").alias("attr"),
-        F.lag("event_type").over(w).alias("prev_attr"),
-    )
-    changes = hist.filter(
-        F.col("prev_attr").isNull() | (F.col("attr") != F.col("prev_attr"))
-    )
-    scd2 = changes.select(
-        "user_id",
-        "attr",
-        F.col("ts").alias("valid_from"),
-        F.lead("ts").over(w).alias("valid_to"),
-    )
     facts = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    d = scd2.select(
+    # Catalyst prunes the unused is_current column
+    d = scd2_intervals(ev).select(
         F.col("user_id").alias("d_user_id"), "attr", "valid_from", "valid_to"
     )
     return (

@@ -29,6 +29,11 @@ The incremental block injects ``watermark_col > saved_watermark`` directly
 above the source scan (pushdown → row-group skipping), exactly like the
 reference's checkpoint-window extraction.
 
+The linear, DAG and checkpointed compilers share one stage builder
+(``_build_stage``: source → incremental filter → transforms, every table or
+stage reference through one resolver); a linear spec is a one-stage build
+and both DAG paths take one memoized, cycle-checked walk (``_walk_dag``).
+
 ``run_pipeline`` then advances the watermark to the max ``watermark_col``
 of that slice. With a sink, the max is observed inside the sink's own job
 (``observe()`` directly above the watermark filter, before any transform),
@@ -49,10 +54,40 @@ from pyspark.sql import functions as F
 from ..core import log_once, observed
 from ..io import load_table
 from ..registry import query
-from .incremental import advance_watermark, read_watermark
+from .incremental import (
+    DEFAULT_WATERMARK,
+    advance_watermark,
+    encoded_max,
+    past_watermark,
+    slice_max,
+)
 
 
-def _apply_transform(spark: SparkSession, sf_dir: str, df: DataFrame, t: dict) -> DataFrame:
+def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, observation) -> DataFrame:
+    """The one stage builder: source → incremental filter (plus
+    ``observation`` of the encoded max right above it) → transforms.
+    ``up`` is a DAG walk's upstream lookup, None for a linear spec."""
+
+    def resolve(ref: dict) -> DataFrame:  # {"table": name} or {"stage": name}
+        if "stage" not in ref:
+            return load_table(spark, sf_dir, ref["table"])
+        if up is None:
+            raise ValueError(f"stage reference outside a DAG: {ref['stage']!r}")
+        return up(ref["stage"])
+
+    df = resolve(spec["source"])
+    inc = spec.get("incremental")
+    if inc:
+        col = inc["watermark_col"]
+        df = past_watermark(df, col, inc["state_path"], inc.get("default", DEFAULT_WATERMARK))
+        if observation is not None:
+            df = df.observe(observation, encoded_max(col))
+    for t in spec.get("transforms", ()):
+        df = _apply_transform(df, t, resolve)
+    return df
+
+
+def _apply_transform(df: DataFrame, t: dict, resolve) -> DataFrame:
     op = t["op"]
     if op == "filter":
         return df.filter(t["predicate"])
@@ -63,7 +98,7 @@ def _apply_transform(spark: SparkSession, sf_dir: str, df: DataFrame, t: dict) -
     if op == "select":
         return df.select(*t["cols"])
     if op == "join":
-        other = load_table(spark, sf_dir, t["table"])
+        other = resolve(t)
         if t.get("broadcast"):
             other = F.broadcast(other)
         if "on_cols" in t:  # equi-join on shared column names
@@ -104,16 +139,7 @@ def compile_pipeline(
     Catalyst does not push a later ``filter`` transform below the
     observation, so with one only the watermark predicate reaches the
     reader (column pruning still does)."""
-    df = load_table(spark, sf_dir, spec["source"]["table"])
-    inc = spec.get("incremental")
-    if inc:
-        wm = read_watermark(inc["state_path"], inc.get("default", "1970-01-01 00:00:00"))
-        df = df.filter(F.col(inc["watermark_col"]) > F.to_timestamp(F.lit(wm)))
-        if observation is not None:
-            df = df.observe(observation, F.max(inc["watermark_col"]).alias("hi"))
-    for t in spec.get("transforms", ()):
-        df = _apply_transform(spark, sf_dir, df, t)
-    return df
+    return _build_stage(spark, sf_dir, spec, None, observation)
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
@@ -151,13 +177,12 @@ def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
         else:
             reason = "no_sink" if not sink else "limit" if limited else "unobserved"
             log_once(f"pipeline.watermark.{reason}", "watermark from a separate max job")
-            hi = (
-                compile_pipeline(spark, sf_dir, {"source": spec["source"], "incremental": inc})
-                .agg(F.max(inc["watermark_col"]).alias("hi"))
-                .collect()[0]["hi"]
+            hi = slice_max(
+                compile_pipeline(spark, sf_dir, {"source": spec["source"], "incremental": inc}),
+                inc["watermark_col"],
             )
         if hi is not None:
-            advance_watermark(inc["state_path"], hi.strftime("%Y-%m-%d %H:%M:%S.%f"))
+            advance_watermark(inc["state_path"], hi)
     return df
 
 
@@ -286,7 +311,7 @@ def compile_pipeline_stream(
     for t in spec.get("transforms", ()):
         if t["op"] not in ("filter", "derive", "select"):
             raise ValueError(f"op not streamable without window_agg: {t['op']}")
-        df = _apply_transform(spark, None, df, t)
+        df = _apply_transform(df, t, None)
     wa = spec.get("window_agg")
     if wa:
         aggs = [F.expr(expr).alias(name) for name, expr in wa["aggs"].items()]
@@ -349,6 +374,26 @@ def pipeline_spec_stream(spark, sf_dir):
     return _run_to_memory(sdf, "append").orderBy("win_start", "event_type")
 
 
+def _walk_dag(dag: dict, visit) -> dict:
+    """The one walk over a DAG's stage references: ``visit(name, spec, up)``
+    returns a stage's value, ``up(name)`` an upstream's, computed on first
+    use and memoized (a diamond's shared stage is visited once); a
+    reference back into the current path raises. Returns ``{name: value}``."""
+    stages = dag["stages"]
+    memo: dict = {}
+
+    def value(name: str, path: tuple[str, ...]):
+        if name in memo:
+            return memo[name]
+        if name in path:
+            raise ValueError(f"pipeline DAG cycle: {' -> '.join(path + (name,))}")
+        memo[name] = visit(name, stages[name], lambda up: value(up, path + (name,)))
+        return memo[name]
+
+    value(dag["output"], ())
+    return memo
+
+
 def compile_dag(spark: SparkSession, sf_dir: str, dag: dict) -> DataFrame:
     """Multi-stage DAG of specs → ONE DataFrame plan.
 
@@ -362,36 +407,8 @@ def compile_dag(spark: SparkSession, sf_dir: str, dag: dict) -> DataFrame:
     are rejected at compile time. Nothing executes until the caller
     sinks the returned frame.
     """
-    stages = dag["stages"]
-    cache: dict[str, DataFrame] = {}
-
-    def build(name: str, visiting: tuple[str, ...]) -> DataFrame:
-        if name in cache:
-            return cache[name]
-        if name in visiting:
-            raise ValueError(f"pipeline DAG cycle: {' -> '.join(visiting + (name,))}")
-        spec = stages[name]
-        src = spec["source"]
-        df = (
-            build(src["stage"], visiting + (name,))
-            if "stage" in src
-            else load_table(spark, sf_dir, src["table"])
-        )
-        for t in spec.get("transforms", ()):
-            if t["op"] == "join" and "stage" in t:
-                other = build(t["stage"], visiting + (name,))
-                if t.get("broadcast"):
-                    other = F.broadcast(other)
-                if "on_cols" in t:
-                    df = df.join(other, t["on_cols"], t.get("how", "inner"))
-                else:
-                    df = df.join(other, F.expr(t["on"]), t.get("how", "inner"))
-            else:
-                df = _apply_transform(spark, sf_dir, df, t)
-        cache[name] = df
-        return df
-
-    return build(dag["output"], ())
+    stages = _walk_dag(dag, lambda name, spec, up: _build_stage(spark, sf_dir, spec, up, None))
+    return stages[dag["output"]]
 
 
 # Declared demonstrator: a diamond DAG — one shared filtered base feeding
@@ -510,29 +527,15 @@ def _dag_fingerprints(dag: dict) -> dict[str, str]:
     import hashlib
     import json
 
-    stages = dag["stages"]
-    fps: dict[str, str] = {}
-
-    def fp(name: str, visiting: tuple[str, ...]) -> str:
-        if name in fps:
-            return fps[name]
-        if name in visiting:
-            raise ValueError(f"pipeline DAG cycle: {' -> '.join(visiting + (name,))}")
-        spec = stages[name]
+    def fp(name: str, spec: dict, up) -> str:
         ups = sorted(
             ({spec["source"]["stage"]} if "stage" in spec["source"] else set())
             | {t["stage"] for t in spec.get("transforms", ()) if t.get("op") == "join" and "stage" in t}
         )
-        payload = json.dumps(
-            {"spec": spec, "up": {u: fp(u, visiting + (name,)) for u in ups}},
-            sort_keys=True,
-        )
-        h = hashlib.sha256(payload.encode()).hexdigest()[:16]
-        fps[name] = h
-        return h
+        payload = json.dumps({"spec": spec, "up": {u: up(u) for u in ups}}, sort_keys=True)
+        return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
-    fp(dag["output"], ())
-    return fps
+    return _walk_dag(dag, fp)
 
 
 def run_dag_checkpointed(
@@ -557,44 +560,20 @@ def run_dag_checkpointed(
     scans of only the reused outputs."""
     import os
 
-    stages = dag["stages"]
     fps = _dag_fingerprints(dag)
     _LAST_COMPUTED.clear()
-    done: dict[str, DataFrame] = {}
 
-    def build(name: str) -> DataFrame:
-        if name in done:
-            return done[name]
+    def stage(name: str, spec: dict, up) -> DataFrame:
         path = os.path.join(ckpt_root, f"{name}-{fps[name]}")
         marker = os.path.join(path, "_COMPLETE")
         if not os.path.exists(marker):
-            spec = stages[name]
-            src = spec["source"]
-            df = (
-                build(src["stage"])
-                if "stage" in src
-                else load_table(spark, sf_dir, src["table"])
-            )
-            for t in spec.get("transforms", ()):
-                if t["op"] == "join" and "stage" in t:
-                    other = build(t["stage"])
-                    if t.get("broadcast"):
-                        other = F.broadcast(other)
-                    if "on_cols" in t:
-                        df = df.join(other, t["on_cols"], t.get("how", "inner"))
-                    else:
-                        df = df.join(other, F.expr(t["on"]), t.get("how", "inner"))
-                else:
-                    df = _apply_transform(spark, sf_dir, df, t)
-            df.write.mode("overwrite").parquet(path)
+            _build_stage(spark, sf_dir, spec, up, None).write.mode("overwrite").parquet(path)
             with open(marker, "w") as fh:
                 fh.write(fps[name])
             _LAST_COMPUTED.append(name)
-        out = spark.read.parquet(path)
-        done[name] = out
-        return out
+        return spark.read.parquet(path)
 
-    return build(dag["output"])
+    return _walk_dag(dag, stage)[dag["output"]]
 
 
 @query(

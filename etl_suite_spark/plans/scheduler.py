@@ -16,12 +16,14 @@ scheduler runs each due job's incremental tick. Two modes:
 Idempotency contract: a job's sink must be dynamic-partition-overwrite or
 merge-by-key (operators/scale.py / streaming foreachBatch upsert), so
 re-running a tick after a crash re-writes the same window harmlessly. The
-watermark advances only after the sink returns, to the max watermark
+contract relies on ``pipeline.run_pipeline``'s tick, which every job runs:
+the watermark advances only after the sink returns, to the max watermark
 column observed inside the sink's own job, i.e. over exactly the rows it
 consumed; a file landing mid-tick is picked up by the next tick. Specs
 with no sink or a ``limit`` transform, and ticks whose observation comes
-back missing or empty, take the max from a separate job instead
-(``run_pipeline``).
+back missing or empty, take the max from a separate job instead.
+``incremental.run_incremental_tick`` advances BEFORE its caller sinks, so
+a crash in between would skip that window; the scheduler does not use it.
 """
 
 from __future__ import annotations

@@ -1,7 +1,9 @@
 """Single-pass ETL tick (plans/pipeline.py): ``run_pipeline`` takes the new
 watermark from an ``observe()`` inside the sink's own job. A second compile
 plus a max job is only the fallback: no sink, a ``limit`` transform, or an
-observation that comes back missing or empty.
+observation that comes back missing or empty. The stored watermark is
+rendered in the session zone, so it round-trips under any process zone.
+The linear, DAG and checkpointed compilers share one stage builder.
 
 Every expectation is computed independently with DuckDB over the same
 parquet files."""
@@ -10,7 +12,9 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 import threading
+import time
 from types import SimpleNamespace
 
 import duckdb
@@ -23,8 +27,8 @@ from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 
-from etl_suite_spark.plans.incremental import advance_watermark, read_watermark
-from etl_suite_spark.plans.pipeline import run_pipeline
+from etl_suite_spark.plans.incremental import advance_watermark, read_watermark, run_incremental_tick
+from etl_suite_spark.plans.pipeline import compile_dag, compile_pipeline, run_dag_checkpointed, run_pipeline
 
 WM0 = "2024-01-15 00:00:00"
 FMT = "%Y-%m-%d %H:%M:%S.%f"
@@ -166,6 +170,75 @@ def test_file_landing_after_the_write_is_sunk_next_tick(spark, tick, monkeypatch
     files = f"{tick.events}/*.parquet"
     assert read_watermark(tick.state, "") == slice_max(files)
     assert sunk_daily(spark, tick) == expected_daily(files)
+
+
+@pytest.fixture
+def new_york(monkeypatch):
+    """The Python process in a non-UTC zone; the Spark session stays UTC."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_watermark_is_zone_free_under_a_non_utc_process(spark, tick, new_york):
+    """PySpark renders a collected timestamp in the process's zone while
+    ``to_timestamp`` reads the stored string in the session zone; the
+    stored watermark must be the session-zone max, or the next tick
+    re-sinks the offset's rows into the append sink."""
+    files = f"{tick.events}/*.parquet"
+    run_pipeline(spark, tick.sf, spec(tick))
+    assert read_watermark(tick.state, "") == slice_max(files)
+    run_pipeline(spark, tick.sf, spec(tick))  # nothing new past the watermark
+    assert read_watermark(tick.state, "") == slice_max(files)
+    assert sunk_daily(spark, tick) == expected_daily(files)  # nothing re-sunk
+
+    state = os.path.join(os.path.dirname(tick.state), "tick.json")
+    advance_watermark(state, WM0)
+    run_incremental_tick(spark, tick.sf, state, lambda df: df)
+    assert read_watermark(state, "") == slice_max(files)
+
+
+def test_inc_batch_watermark_leaves_no_state_dir(spark, tmp_path, monkeypatch):
+    from etl_suite_spark.registry import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert QUERIES["inc_batch_watermark"](spark, SF_DIR).collect()
+    assert not list(tmp_path.glob("etl_wm_*"))
+
+
+def test_linear_dag_and_checkpointed_compilers_agree(spark, tmp_path):
+    """A spec with a broadcast table join and a filter gives the same rows
+    through the linear compiler, a one-stage DAG and the checkpointed
+    runner; the checkpointed runner rejects a cycle before computing."""
+    linear = {
+        "source": {"table": "orders"},
+        "transforms": [
+            {
+                "op": "join",
+                "table": "customer",
+                "on": "o_custkey = c_custkey",
+                "how": "inner",
+                "broadcast": True,
+            },
+            {"op": "filter", "predicate": "c_mktsegment = 'BUILDING'"},
+            {"op": "select", "cols": ["o_orderkey", "c_name", "o_totalprice"]},
+        ],
+    }
+    dag = {"stages": {"only": linear}, "output": "only"}
+    want = sorted(compile_pipeline(spark, SF_DIR, linear).collect())
+    assert want
+    assert sorted(compile_dag(spark, SF_DIR, dag).collect()) == want
+    ckpt = str(tmp_path / "ckpt")
+    assert sorted(run_dag_checkpointed(spark, SF_DIR, dag, ckpt).collect()) == want
+
+    cycle = {
+        "stages": {"a": {"source": {"stage": "b"}}, "b": {"source": {"stage": "a"}}},
+        "output": "a",
+    }
+    with pytest.raises(ValueError, match="cycle"):
+        run_dag_checkpointed(spark, SF_DIR, cycle, ckpt)
 
 
 # --- the shared observation reader (core.observed) --------------------------

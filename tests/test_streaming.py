@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -192,7 +191,7 @@ def test_stream_stream_join_matches_batch_within_bound(spark):
     assert out == base
 
 
-def test_incremental_second_tick_is_empty(spark):
+def test_incremental_second_tick_is_empty(spark, tmp_path):
     """After one tick the watermark sits at max(ts); a second tick must
     extract zero rows and leave the state file unchanged."""
     from etl_suite_spark.plans.incremental import (
@@ -201,7 +200,7 @@ def test_incremental_second_tick_is_empty(spark):
         run_incremental_tick,
     )
 
-    state = os.path.join(tempfile.mkdtemp(prefix="wmtest_"), "state.json")
+    state = str(tmp_path / "state.json")
     advance_watermark(state, "2024-01-15 00:00:00")
     first = run_incremental_tick(spark, SF_DIR, state, lambda df: df)
     assert first.count() > 0
@@ -214,11 +213,11 @@ def test_incremental_second_tick_is_empty(spark):
         assert json.load(f)["watermark"] == wm_after_first
 
 
-def test_incremental_filter_pushed_to_scan(spark):
+def test_incremental_filter_pushed_to_scan(spark, tmp_path):
     """The watermark predicate must reach the parquet reader."""
     from etl_suite_spark.plans.incremental import advance_watermark, incremental_extract
 
-    state = os.path.join(tempfile.mkdtemp(prefix="wmtest_"), "state.json")
+    state = str(tmp_path / "state.json")
     advance_watermark(state, "2024-01-15 00:00:00")
     plan = incremental_extract(spark, SF_DIR, "events", state)._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan
