@@ -27,6 +27,8 @@ import time
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .io import read_parquet
+
 # Wide-enough decimal for exact sums at 100 TB row counts: 38 total digits,
 # scale matched to the data (money = 2dp, rates = 4dp).
 MONEY = "decimal(18,2)"
@@ -209,7 +211,10 @@ def materialize_once(spark, df, token: str, partition_col: str | None = None,
     its copy and reads the winner's, which is byte-equivalent because the
     ``token`` must uniquely determine the derivation (version it when the
     producing logic changes). A complete dir carries Spark's _SUCCESS
-    marker, so readers never see a half-written result.
+    marker, so readers never see a half-written result. The read-back goes
+    through ``io.read_parquet``'s schema memo: the dir is written once, so
+    every read after the first passes the stored schema and runs no
+    footer-inference job.
 
     At 100 TB this is the "write the shared intermediate to the object
     store once, bucketed on its join key" move: pass ``partition_col`` so
@@ -231,7 +236,7 @@ def materialize_once(spark, df, token: str, partition_col: str | None = None,
             os.rename(tmp, final)
         except OSError:  # concurrent builder won the rename; use theirs
             shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(final)
+    return read_parquet(spark, final)
 
 
 def materialize_parts_once(spark, token: str, parts, build):
@@ -248,7 +253,7 @@ def materialize_parts_once(spark, token: str, parts, build):
     frames as a tuple."""
     if all(mat_exists(token + suffix) for suffix, _, _ in parts):
         return tuple(
-            spark.read.parquet(mat_path(token + suffix)) for suffix, _, _ in parts
+            read_parquet(spark, mat_path(token + suffix)) for suffix, _, _ in parts
         )
     return tuple(
         materialize_once(spark, df, token + suffix, partition_col=col, n_partitions=n)

@@ -4,12 +4,30 @@ Canonical fixture tables (TESTDATA.md) are parquet; ``load_table`` is the
 single scan entry point so every operator benefits from the same pushdown /
 pruning behavior. At 100 TB these would be partitioned/ bucketed warehouse
 tables — the API is path-based so the same code reads a 1000-file dataset.
+
+Every parquet read of a table or a materialized artifact goes through
+``read_parquet``, which keeps an in-process schema memo: a read without a
+schema makes Spark run one job that opens a footer to infer it, so the
+inferred schema is stored and later reads pass it back with
+``.schema(...)``. The memo is metadata, not results: every read still scans
+the parquet files. Spark's non-merging inference opens only the first data
+file in full-path sort order, so the memo key is the path, that file's
+(path, length, modification time) from a Hadoop FileSystem listing (no Spark
+job; hidden ``_``/``.`` names skipped as Spark skips them) and the session
+confs that change the parquet → Spark type mapping. A rewritten table misses;
+a growing directory whose first file stays put still hits. There is one entry
+per path, replaced when its key changes. Three cases fall back to plain
+inference and store nothing: subdirectories (``k=v`` partition inference, or
+files below the top level), a ``_metadata``/``_common_metadata`` summary
+file, and ``spark.sql.parquet.mergeSchema=true``.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from .session import configure
@@ -32,11 +50,126 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Every SQLConf getter ParquetToSparkSchemaConverter reads in Spark 4.1: the
+# confs that change how a footer's types map to Spark's.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+)
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+
+# path -> (key, schema); see the module docstring. Entries are immutable
+# pairs replaced whole, so concurrent readers need no lock: a racing store
+# leaves one valid pair, at worst an older key that the next read misses.
+_SCHEMAS: dict[str, tuple] = {}
+
+
+def _listed(name: str) -> bool:
+    """Spark's file-index filter: hidden ``_``/``.`` names and in-flight
+    ``._COPYING_`` files are skipped; summary files and ``_k=v`` are kept."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(_SUMMARY_FILES)
+
+
+def _hadoop(spark: SparkSession, path: str):
+    """The Hadoop FileSystem of ``path`` and its JVM ``Path``."""
+    root = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)(path)
+    return root.getFileSystem(spark._jsc.hadoopConfiguration()), root
+
+
+def _listing(spark: SparkSession, fs, root):
+    """One Hadoop listing of ``root`` (``root`` itself if it is a file): the
+    JVM ``FileStatus`` array and the sorted (full path, array index) of the
+    entries Spark's file index keeps. The names arrive as one NUL-joined
+    string, so the py4j round trips do not grow with the entry count."""
+    gateway = spark._jvm._gateway_client
+    statuses = fs.listStatus(root)
+    paths = JavaClass("org.apache.hadoop.fs.FileUtil", gateway).stat2Paths(statuses)
+    seq = JavaClass("scala.collection.immutable.ArraySeq", gateway).unsafeWrapArray(paths)
+    joined = seq.mkString("\0")
+    names = joined.split("\0") if joined else []
+    if len(names) != len(statuses):
+        raise ValueError(f"a name under {root.toString()} holds a NUL")
+    return statuses, sorted((n, i) for i, n in enumerate(names) if _listed(n.rpartition("/")[2]))
+
+
+def data_files(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
+    """The sorted (path, length, modification time) of every file a parquet
+    read of ``path`` lists: ``path`` itself if it is a file, else the files
+    below it, recursively, filtered as Spark filters them. Hadoop
+    FileSystem listings only (no Spark job), so it is FS-agnostic and safe
+    at plan-construction time; it costs a few py4j round trips per file."""
+    fs, root = _hadoop(spark, path)
+
+    def walk(p):
+        statuses, entries = _listing(spark, fs, p)
+        for full, i in entries:
+            st = statuses[i]
+            if st.isDirectory():
+                yield from walk(st.getPath())
+            else:
+                yield full, st.getLen(), st.getModificationTime()
+
+    return sorted(walk(root))
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """The memo key of ``path`` (module docstring), or None when inference
+    may read more than the first data file, or the listing fails. Its py4j
+    cost does not grow with the number of files."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+        return None
+    try:
+        fs, root = _hadoop(spark, path)
+        if fs.getContentSummary(root).getDirectoryCount() > 1:
+            return None  # subdirectories: partition inference, nested files
+        statuses, entries = _listing(spark, fs, root)
+    except (Py4JJavaError, ValueError):  # e.g. a missing path: the plain read raises
+        return None
+    if not entries or any(n.rpartition("/")[2].startswith(_SUMMARY_FILES) for n, _ in entries):
+        return None
+    first, i = entries[0]
+    st = statuses[i]
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    return (first, st.getLen(), st.getModificationTime()), confs
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` through the schema memo: a hit passes the
+    memoized schema and launches no inference job; a miss infers as usual
+    and stores the schema when the layout has a key (module docstring)."""
+    key = _schema_key(spark, path)
+    hit = _SCHEMAS.get(path)
+    if key is not None and hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one canonical table. Column pruning + predicate pushdown are
-    Catalyst's job — callers just ``.select``/``.filter`` declaratively."""
+    Catalyst's job — callers just ``.select``/``.filter`` declaratively.
+
+    The read goes through :func:`read_parquet`'s schema memo, keyed on the
+    path, the (path, length, mtime) of its first data file and the parquet
+    type-mapping confs; subdirectories (``k=v`` partitions), summary files
+    and ``mergeSchema`` fall back to plain inference. A hit holds the real
+    inferred schema, so the ``events.ts`` dispatch below is unchanged."""
     configure(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         # ts is parquet TIMESTAMP(NANOS). How Spark surfaces it varies by
         # version/conf: either TIMESTAMP_NTZ (Spark 4.1 default: ns

@@ -52,13 +52,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core import log_once, observed
-from ..io import load_table
+from ..io import data_files, load_table, table_path
 from ..registry import query
 from .incremental import (
     DEFAULT_WATERMARK,
     advance_watermark,
     encoded_max,
     past_watermark,
+    read_watermark,
     slice_max,
 )
 
@@ -507,9 +508,10 @@ def pipeline_dag_run(spark, sf_dir):
 # --- Checkpointed DAG runs (the reference's restartable scheduler) --------
 #
 # ``run_dag_checkpointed`` materializes every stage to a parquet checkpoint
-# keyed by a Merkle fingerprint of (stage spec, upstream fingerprints): a
-# finished run can be killed and re-launched and only the stages whose
-# checkpoint is missing OR whose spec/upstream lineage changed recompute.
+# keyed by a Merkle fingerprint of (stage spec, source-table files,
+# watermark, upstream fingerprints): a finished run can be killed and
+# re-launched and only the stages whose checkpoint is missing OR whose
+# spec, input data or upstream lineage changed recompute.
 # This is the durability contrast to ``compile_dag`` (one lazy plan,
 # recompute-under-pushdown): a scheduler restarting a 40-stage nightly DAG
 # at 100 TB wants to pay for the 3 stages that died, not the 37 that
@@ -520,19 +522,29 @@ def pipeline_dag_run(spark, sf_dir):
 _LAST_COMPUTED: list[str] = []
 
 
-def _dag_fingerprints(dag: dict) -> dict[str, str]:
-    """Merkle fingerprint per stage: sha256 over the stage's own spec plus
-    its upstream stages' fingerprints — driver-side metadata only, no jobs.
-    A spec edit anywhere invalidates exactly its downstream cone."""
+def _dag_fingerprints(spark: SparkSession, sf_dir: str, dag: dict) -> dict[str, str]:
+    """Merkle fingerprint per stage: sha256 over the stage's own spec, the
+    (path, length, mtime) of every data file of each table it reads (source
+    and join sides, from ``io.data_files``), its current watermark when it
+    has an ``incremental`` block, and its upstream stages' fingerprints —
+    driver-side metadata only, no jobs. A spec edit anywhere invalidates
+    exactly its downstream cone; so does a rewritten source table or an
+    advanced watermark."""
     import hashlib
     import json
 
     def fp(name: str, spec: dict, up) -> str:
-        ups = sorted(
-            ({spec["source"]["stage"]} if "stage" in spec["source"] else set())
-            | {t["stage"] for t in spec.get("transforms", ()) if t.get("op") == "join" and "stage" in t}
-        )
-        payload = json.dumps({"spec": spec, "up": {u: up(u) for u in ups}}, sort_keys=True)
+        refs = [spec["source"], *(t for t in spec.get("transforms", ()) if t.get("op") == "join")]
+        ups = sorted({r["stage"] for r in refs if "stage" in r})
+        tables = sorted({r["table"] for r in refs if "table" in r})
+        inc = spec.get("incremental")
+        wm = inc and read_watermark(inc["state_path"], inc.get("default", DEFAULT_WATERMARK))
+        payload = json.dumps({
+            "spec": spec,
+            "up": {u: up(u) for u in ups},
+            "tables": {t: data_files(spark, table_path(sf_dir, t)) for t in tables},
+            "watermark": wm,
+        }, sort_keys=True)
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
     return _walk_dag(dag, fp)
@@ -551,16 +563,17 @@ def run_dag_checkpointed(
     checkpoint (on HDFS/S3A the final marker put is atomic; plain
     ``_SUCCESS`` is not enough because a RERUN of a changed spec could
     observe the old dir). Fingerprints chain Merkle-style, so editing one
-    stage recomputes exactly its downstream cone and nothing upstream.
+    stage, rewriting a table it reads or advancing its watermark recomputes
+    exactly its downstream cone and nothing upstream.
 
     Scale: checkpoint writes are ordinary distributed parquet sinks (the
     stage's own partitioning, every executor writes); the fingerprint
-    pass is driver-side string hashing — no Spark job until a stage
-    actually computes. Resume cost is one metadata listing per stage plus
+    pass is driver-side file listings and string hashing — no Spark job
+    until a stage actually computes. Resume cost is one metadata listing per stage plus
     scans of only the reused outputs."""
     import os
 
-    fps = _dag_fingerprints(dag)
+    fps = _dag_fingerprints(spark, sf_dir, dag)
     _LAST_COMPUTED.clear()
 
     def stage(name: str, spec: dict, up) -> DataFrame:
@@ -682,7 +695,7 @@ def pipeline_run_report(spark, sf_dir):
     cold = set(_LAST_COMPUTED)
     run_dag_checkpointed(spark, sf_dir, _DAG, root)
     warm_recomputed = set(_LAST_COMPUTED)
-    fps = _dag_fingerprints(_DAG)
+    fps = _dag_fingerprints(spark, sf_dir, _DAG)
     import os
 
     rows = []

@@ -21,6 +21,14 @@ from ..io import load_table, table_path
 from ..registry import query
 
 
+def _pinned(df, root: str):
+    """``df`` pinned into the block manager, then its scratch ``root``
+    removed: the returned frame no longer scans anything under it."""
+    out = df.localCheckpoint(eager=True)
+    shutil.rmtree(root, ignore_errors=True)
+    return out
+
+
 @query("scan_parquet", oracle="SELECT * FROM lineitem")
 def scan_parquet(spark, sf_dir):
     return load_table(spark, sf_dir, "lineitem")
@@ -63,10 +71,11 @@ def scan_csv_roundtrip(spark, sf_dir):
     schema-on-read discipline: inference is allowed only for ad-hoc ingest
     (SURVEY §1.2), canonical tables always get a declared StructType."""
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_csv_"), "orders_csv")
+    root = tempfile.mkdtemp(prefix="etl_csv_")
+    out = os.path.join(root, "orders_csv")
     o.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.schema(_CSV_SCHEMA).option("header", True).csv(out)
-    return back.orderBy("o_orderkey")
+    return _pinned(back, root).orderBy("o_orderkey")
 
 
 @query(
@@ -81,10 +90,11 @@ def scan_json_roundtrip(spark, sf_dir):
     # ref analog: Mongo-ish document ingest [K] — JSON lines with explicit
     # schema on read.
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_json_"), "orders_json")
+    root = tempfile.mkdtemp(prefix="etl_json_")
+    out = os.path.join(root, "orders_json")
     o.write.mode("overwrite").json(out)
     back = spark.read.schema(_CSV_SCHEMA).json(out)
-    return back.orderBy("o_orderkey")
+    return _pinned(back, root).orderBy("o_orderkey")
 
 
 @query(
@@ -100,14 +110,17 @@ def sink_parquet_partitioned(spark, sf_dir):
     the partition column is the dominant filter (date/lang/tenant) so scans
     prune whole directories; verified by re-reading one partition."""
     li = load_table(spark, sf_dir, "lineitem")
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_part_"), "lineitem_by_flag")
+    root = tempfile.mkdtemp(prefix="etl_part_")
+    out = os.path.join(root, "lineitem_by_flag")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     back = spark.read.parquet(out)
     # partition pruning demonstrator: only the 'R' directory is scanned
-    return (
+    # (the pinning job runs the pruned read, before the dir is removed)
+    return _pinned(
         back.filter(F.col("l_returnflag") == "R")
         .groupBy("l_returnflag", "l_linestatus")
-        .count()
+        .count(),
+        root,
     )
 
 
@@ -116,10 +129,11 @@ def scan_orc_roundtrip(spark, sf_dir):
     """ORC roundtrip — the other columnar warehouse format; same pushdown/
     pruning properties as parquet from Catalyst's perspective."""
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_orc_"), "orders_orc")
+    root = tempfile.mkdtemp(prefix="etl_orc_")
+    out = os.path.join(root, "orders_orc")
     o.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
-    return back.orderBy("o_orderkey")
+    return _pinned(back, root).orderBy("o_orderkey")
 
 
 _JDBC_PROPS = {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}

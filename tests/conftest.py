@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -11,6 +12,21 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def spark_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched, counted through a
+    job group once the listener bus has delivered every job-start event."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -25,8 +25,9 @@ import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
+from conftest import SF_DIR, spark_jobs
 
+from etl_suite_spark.plans import pipeline
 from etl_suite_spark.plans.incremental import advance_watermark, read_watermark, run_incremental_tick
 from etl_suite_spark.plans.pipeline import compile_dag, compile_pipeline, run_dag_checkpointed, run_pipeline
 
@@ -113,10 +114,27 @@ def land_late_batch(path: str) -> None:
     pq.write_table(t, path)
 
 
-def test_tick_watermark_is_observed_in_the_sink_job(spark, tick, reads):
+def test_tick_watermark_is_observed_in_the_sink_job(spark, tick, reads, monkeypatch):
     run_pipeline(spark, tick.sf, spec(tick))
     assert len(reads) == 1, reads  # one compile, no second read for the max
     files = f"{tick.events}/*.parquet"
+    assert read_watermark(tick.state, "") == slice_max(files)
+    assert sunk_daily(spark, tick) == expected_daily(files)
+
+    # the next tick's source has grown behind its first file, so the schema
+    # memo hits: construction launches no job, the tick's jobs are the sink's
+    compiled = []
+    compile_ = pipeline.compile_pipeline
+
+    def counted(*args, **kwargs):
+        compiled.append(spark_jobs(spark, lambda: compile_(*args, **kwargs)))
+        return compiled[-1][0]
+
+    monkeypatch.setattr(pipeline, "compile_pipeline", counted)
+    land_late_batch(os.path.join(tick.events, "part-1.parquet"))
+    run_pipeline(spark, tick.sf, spec(tick))
+    assert [jobs for _, jobs in compiled] == [0]
+    assert reads.count(reads[0]) == 2, reads  # one source read per tick
     assert read_watermark(tick.state, "") == slice_max(files)
     assert sunk_daily(spark, tick) == expected_daily(files)
 
@@ -239,6 +257,50 @@ def test_linear_dag_and_checkpointed_compilers_agree(spark, tmp_path):
     }
     with pytest.raises(ValueError, match="cycle"):
         run_dag_checkpointed(spark, SF_DIR, cycle, ckpt)
+
+
+def test_checkpoints_recompute_after_a_source_rewrite(spark, tmp_path):
+    """The checkpoint fingerprint folds in the source tables' files: a
+    rewritten ``orders`` recomputes every stage of the diamond DAG, and the
+    rows are the lazy compiler's over the new data."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    orders = sf / "orders.parquet"
+    shutil.copy(os.path.join(SF_DIR, "orders.parquet"), orders)
+    ckpt = str(tmp_path / "ckpt")
+    run_dag_checkpointed(spark, str(sf), pipeline._DAG, ckpt)
+    assert sorted(pipeline._LAST_COMPUTED) == ["base", "hi", "lo", "out"]
+    run_dag_checkpointed(spark, str(sf), pipeline._DAG, ckpt)
+    assert pipeline._LAST_COMPUTED == []
+
+    t = pq.read_table(orders)
+    pq.write_table(t.slice(0, t.num_rows // 2), orders)
+    got = sorted(run_dag_checkpointed(spark, str(sf), pipeline._DAG, ckpt).collect())
+    assert sorted(pipeline._LAST_COMPUTED) == ["base", "hi", "lo", "out"]
+    assert got == sorted(compile_dag(spark, str(sf), pipeline._DAG).collect())
+
+
+def test_checkpoints_recompute_after_the_watermark_advances(spark, tick, tmp_path):
+    """A stage with an ``incremental`` block recomputes once its watermark
+    has moved, and then holds only the rows past the new watermark."""
+    dag = {
+        "stages": {
+            "daily": {
+                "source": {"table": "events"},
+                "incremental": {"watermark_col": "ts", "state_path": tick.state},
+                "transforms": DAILY,
+            }
+        },
+        "output": "daily",
+    }
+    ckpt = str(tmp_path / "ckpt")
+    run_dag_checkpointed(spark, tick.sf, dag, ckpt)
+    assert pipeline._LAST_COMPUTED == ["daily"]
+    advance_watermark(tick.state, "2024-01-25 00:00:00")
+    got = sorted(run_dag_checkpointed(spark, tick.sf, dag, ckpt).collect())
+    assert pipeline._LAST_COMPUTED == ["daily"]
+    assert got == sorted(compile_dag(spark, tick.sf, dag).collect())
+    assert min(r.day for r in got).isoformat() >= "2024-01-25"
 
 
 # --- the shared observation reader (core.observed) --------------------------

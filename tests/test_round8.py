@@ -371,7 +371,7 @@ def test_dag_checkpoint_resume_semantics(spark, tmp_path):
 
     # crash-resume: a job that died during 'lo' never wrote lo or out →
     # relaunch recomputes exactly those two, reusing base and hi
-    fps = pl._dag_fingerprints(pl._DAG)
+    fps = pl._dag_fingerprints(spark, SF_DIR, pl._DAG)
     shutil.rmtree(f"{root}/lo-{fps['lo']}")
     shutil.rmtree(f"{root}/out-{fps['out']}")
     run(pl._DAG)

@@ -225,3 +225,14 @@ def test_zorder_files_disjoint_in_z(spark, tmp_path):
     ).collect()
     for r in sample:
         assert r.a_back == r.o_custkey % 65536
+
+
+def test_roundtrip_scans_leave_no_temp_dir(spark, tmp_path, monkeypatch):
+    """Each roundtrip pins its read-back and removes its scratch dir."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in ("scan_csv_roundtrip", "scan_json_roundtrip", "scan_orc_roundtrip",
+                 "sink_parquet_partitioned"):
+        assert QUERIES[name](spark, SF_DIR).collect(), name
+    left = [p.name for pat in ("etl_csv_*", "etl_json_*", "etl_orc_*", "etl_part_*")
+            for p in tmp_path.glob(pat)]
+    assert left == []
