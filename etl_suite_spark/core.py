@@ -21,13 +21,16 @@ These helpers exist so each operator module states intent, not mechanics.
 
 from __future__ import annotations
 
+import contextlib
 import logging
+import shutil
+import tempfile
 import time
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .io import read_parquet
+from .io import forget_schemas, read_parquet
 
 # Wide-enough decimal for exact sums at 100 TB row counts: 38 total digits,
 # scale matched to the data (money = 2dp, rates = 4dp).
@@ -175,6 +178,25 @@ def _mat_run_root() -> str:
                 atexit.register(shutil.rmtree, root, True)
                 _MAT_RUN_ROOT = root
     return _MAT_RUN_ROOT
+
+
+@contextlib.contextmanager
+def scratch(prefix: str):
+    """A fresh ``mkdtemp`` dir for one query's intermediate files, removed
+    (with its schema-memo entries) when the block exits, raised or not.
+
+    Spark reads lazily, so a frame that scans the dir fails once the block
+    has exited. A query that returns such a frame pins it inside the block
+    with ``localCheckpoint(eager=True)``, below any final ``orderBy``, and
+    orders the pinned frame after the block. A frame built only from values
+    already collected, or from a memory sink's rows, reads nothing under
+    the dir and needs no pin."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        forget_schemas(root)
 
 
 def mat_path(token: str) -> str:

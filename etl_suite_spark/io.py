@@ -159,6 +159,14 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def forget_schemas(root: str) -> None:
+    """Drop the memo entries of every path at or below ``root``: a removed
+    scratch dir's paths are never read again."""
+    below = root.rstrip(os.sep) + os.sep
+    for path in [p for p in _SCHEMAS if p == root or p.startswith(below)]:
+        _SCHEMAS.pop(path, None)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one canonical table. Column pruning + predicate pushdown are
     Catalyst's job — callers just ``.select``/``.filter`` declaratively.

@@ -19,11 +19,11 @@ partitioned write. Quality scoring and chunking are map-only.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core import scratch
 from ..io import load_table
 from ..registry import query
 from .dedup import _normalized_text, llm_dedup_minhash, llm_dedup_ngram_jaccard
@@ -32,14 +32,16 @@ from .dedup import _normalized_text, llm_dedup_minhash, llm_dedup_ngram_jaccard
 def prepare_corpus(
     spark: SparkSession,
     sf_dir: str,
-    out_dir: str | None = None,
+    out_dir: str,
     min_quality_tokens: int = 20,
     chunk_size: int = 32,
     chunk_stride: int = 16,
     near_dup: str = "minhash",
 ) -> dict[str, DataFrame]:
-    """Run the full preparation pipeline; returns each stage's frame so
-    callers (and tests) can audit per-stage row accounting.
+    """Run the full preparation pipeline, writing the chunked corpus to
+    ``out_dir`` (partitioned by language); returns each stage's frame so
+    callers (and tests) can audit per-stage row accounting. ``chunks``
+    scans ``out_dir``, so the caller keeps the dir while it reads them.
 
     ``near_dup`` picks the pair source for stage 3: ``"minhash"`` (LSH
     candidates — the 100 TB default) or ``"jaccard"`` (exact 3-gram
@@ -114,8 +116,7 @@ def prepare_corpus(
     )
 
     # 7. Language-partitioned corpus sink (directory pruning downstream).
-    out = out_dir or os.path.join(tempfile.mkdtemp(prefix="etl_corpus_"), "corpus")
-    chunks.write.mode("overwrite").partitionBy("lang").parquet(out)
+    chunks.write.mode("overwrite").partitionBy("lang").parquet(out_dir)
 
     return {
         "input": docs,
@@ -123,7 +124,7 @@ def prepare_corpus(
         "near_deduped": near_deduped,
         "decontaminated": decontaminated,
         "quality": quality,
-        "chunks": spark.read.parquet(out),
+        "chunks": spark.read.parquet(out_dir),
     }
 
 
@@ -216,15 +217,19 @@ def llm_corpus_pipeline(spark, sf_dir):
     decontamination, Gopher gate, chunk accounting — is replicated in the
     DuckDB twin (the MinHash configuration stays the scale default; its
     Spark-seeded hashes aren't reproducible oracle-side)."""
-    stages = prepare_corpus(spark, sf_dir, near_dup="jaccard")
-    per_lang = (
-        stages["chunks"]
-        .groupBy("lang")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count("*").alias("n_chunks"),
+    with scratch("etl_corpus_") as root:
+        stages = prepare_corpus(
+            spark, sf_dir, os.path.join(root, "corpus"), near_dup="jaccard"
         )
-    )
+        per_lang = (
+            stages["chunks"]
+            .groupBy("lang")
+            .agg(
+                F.countDistinct("doc_id").alias("n_docs"),
+                F.count("*").alias("n_chunks"),
+            )
+            .localCheckpoint(eager=True)
+        )
     totals = (
         stages["input"].groupBy("lang").agg(F.count("*").alias("n_input_docs"))
     )

@@ -30,7 +30,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..core import SUBJECT_RESIDUE, d2d, materialize_once, materialize_parts_once
+from ..core import (
+    SUBJECT_RESIDUE,
+    d2d,
+    materialize_once,
+    materialize_parts_once,
+    scratch,
+)
 from ..io import load_table
 from ..registry import query
 
@@ -2831,12 +2837,9 @@ def llm_index_tombstone_probe_recall(spark, sf_dir):
     return _survivor_recall_metric(ann, survivors, q)
 
 
-# Pytest hooks for llm_index_compact_cells: [warehouse, pre-compaction
-# per-cell file snapshot] of the most recent run; _KEEP_COMPACT_WH=True
-# keeps the temp warehouse for file-level inspection (pytest reclaims
-# it) — same discipline as inc_subject_erasure.
+# Pytest hook for llm_index_compact_cells: [warehouse, pre-compaction
+# per-cell file snapshot] of the most recent run.
 _LAST_COMPACT_WH: list = []
-_KEEP_COMPACT_WH = False
 
 
 @query("llm_index_compact_cells")  # rows-only: k-means cells are iterative
@@ -2865,21 +2868,8 @@ def llm_index_compact_cells(spark, sf_dir):
     DELETE compiles to."""
     import os
     import shutil
-    import tempfile
 
     assigned, _ = _ivf_index(spark, sf_dir)
-    wh = os.path.join(tempfile.mkdtemp(prefix="etl_ivf_compact_"), "cells_by_cell")
-    assigned.write.partitionBy("cell").mode("overwrite").parquet(wh)
-    snap = {
-        d: sorted(
-            f for f in os.listdir(os.path.join(wh, d)) if f.endswith(".parquet")
-        )
-        for d in os.listdir(wh)
-        if d.startswith("cell=")
-    }
-    _LAST_COMPACT_WH.clear()
-    _LAST_COMPACT_WH.extend([wh, snap])
-
     before = assigned.groupBy("cell").agg(
         F.count("*").alias("n_before"),
         F.sum(F.when(_is_tombstoned(), 1).otherwise(0)).alias("n_tombstoned"),
@@ -2897,39 +2887,39 @@ def llm_index_compact_cells(spark, sf_dir):
         .filter(~_is_tombstoned())
         .select("vec_id", "cell")
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        live.write.partitionBy("cell").mode("overwrite").parquet(wh)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-    # fully-dead cells emit zero rows into the dynamic overwrite → stale
-    # files need an explicit partition drop (≤k cells, bounded read)
-    for r in before.filter(F.col("n_before") == F.col("n_tombstoned")).collect():
-        shutil.rmtree(os.path.join(wh, f"cell={int(r['cell'])}"), ignore_errors=True)
-
-    after = (
-        spark.read.option("basePath", wh)
-        .parquet(wh)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n_after"))
-    )
-    audit = (
-        before.join(after, "cell", "left")
-        .select(
+    with scratch("etl_ivf_compact_") as root:
+        wh = os.path.join(root, "cells_by_cell")
+        assigned.write.partitionBy("cell").mode("overwrite").parquet(wh)
+        snap = {
+            d: sorted(
+                f for f in os.listdir(os.path.join(wh, d)) if f.endswith(".parquet")
+            )
+            for d in os.listdir(wh)
+            if d.startswith("cell=")
+        }
+        _LAST_COMPACT_WH.clear()
+        _LAST_COMPACT_WH.extend([wh, snap])
+        live.write.partitionBy("cell").mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(wh)
+        # fully-dead cells emit zero rows into the dynamic overwrite → stale
+        # files need an explicit partition drop (≤k cells, bounded read)
+        for r in before.filter(F.col("n_before") == F.col("n_tombstoned")).collect():
+            shutil.rmtree(os.path.join(wh, f"cell={int(r['cell'])}"), ignore_errors=True)
+        after = (
+            spark.read.option("basePath", wh)
+            .parquet(wh)
+            .groupBy("cell")
+            .agg(F.count("*").alias("n_after"))
+        )
+        audit = before.join(after, "cell", "left").select(
             F.col("cell").cast("long").alias("cell"),
             F.col("n_before").cast("long").alias("n_before"),
             F.col("n_tombstoned").cast("long").alias("n_tombstoned"),
             F.coalesce(F.col("n_after"), F.lit(0)).cast("long").alias("n_after"),
             (F.col("n_tombstoned") > 0).alias("compacted"),
-        )
-        .orderBy("cell")
-    )
-    if _KEEP_COMPACT_WH:
-        return audit  # pytest inspects (and reclaims) the warehouse
-    audit = audit.localCheckpoint(eager=True)
-    shutil.rmtree(os.path.dirname(wh), ignore_errors=True)
-    return audit
+        ).localCheckpoint(eager=True)
+    return audit.orderBy("cell")
 
 
 @query(

@@ -22,12 +22,11 @@ operator; Salton & Buckley (1988) — TF-IDF weighting.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..core import as_long, d2d, davg, sql_davg
+from ..core import as_long, d2d, davg, scratch, sql_davg
 from ..io import byte_gated_broadcast, load_table
 from ..registry import query
 
@@ -351,15 +350,17 @@ def llm_lang_partition(spark, sf_dir):
     The filter on the partition column prunes at the directory level —
     the layout every multilingual 100 TB corpus should have."""
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_lang_"), "docs_by_lang")
-    d.write.mode("overwrite").partitionBy("lang").parquet(out)
-    back = spark.read.parquet(out)
-    return (
-        back.filter(F.col("lang").isin("en", "de"))
-        .groupBy("lang", "source")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("lang", "source")
-    )
+    with scratch("etl_lang_") as root:
+        out = os.path.join(root, "docs_by_lang")
+        d.write.mode("overwrite").partitionBy("lang").parquet(out)
+        back = spark.read.parquet(out)
+        counts = (
+            back.filter(F.col("lang").isin("en", "de"))
+            .groupBy("lang", "source")
+            .agg(F.count("*").alias("n_docs"))
+            .localCheckpoint(eager=True)
+        )
+    return counts.orderBy("lang", "source")
 
 
 @query(

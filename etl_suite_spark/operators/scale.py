@@ -17,6 +17,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core import _mat_run_root, scratch
 from ..io import load_table
 from ..registry import query
 
@@ -96,8 +97,10 @@ def sink_bucketed_colocated_join(spark, sf_dir):
     """Bucket orders and lineitem by orderkey, then join the two bucketed
     tables: the plan has no Exchange on either side (pinned in
     test_plans.py). At 100 TB this converts the biggest recurring shuffle
-    (fact⋈fact on orderkey) into a local merge per bucket."""
-    root = tempfile.mkdtemp(prefix="etl_bucket_")
+    (fact⋈fact on orderkey) into a local merge per bucket. The returned
+    frame stays lazy for that plan check, so the tables' files live under
+    the process run root (``core._mat_run_root``, removed at exit)."""
+    root = tempfile.mkdtemp(prefix="etl_bucket_", dir=_mat_run_root())
     suffix = uuid.uuid4().hex[:8]
     o_name, l_name = f"orders_b_{suffix}", f"lineitem_b_{suffix}"
     o = load_table(spark, sf_dir, "orders").select(
@@ -136,23 +139,27 @@ def sink_overwrite_partition(spark, sf_dir):
     """Idempotent window reload via dynamic partition overwrite: rewrite
     ONLY the partitions present in the incoming batch, leaving the rest of
     the warehouse untouched — the reference's delete-then-reload recovery,
-    done natively by the committer (no manual deletes)."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    done natively by the committer (no manual deletes). The overwrite
+    mode is a per-write option, so the session conf is left as it was."""
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_dynpart_"), "events_by_day")
-    ev.write.mode("overwrite").partitionBy("day").parquet(out)
-    # re-load one day twice (the idempotent re-run) — only that directory
-    # is rewritten; totals must not change.
     one_day = ev.filter(F.col("day") == "2024-01-15")
-    one_day.write.mode("overwrite").partitionBy("day").parquet(out)
-    back = spark.read.parquet(out)
-    return (
-        back.groupBy("day")
-        .agg(F.count("*").alias("n"))
-        .orderBy("day")
-    )
+    with scratch("etl_dynpart_") as root:
+        out = os.path.join(root, "events_by_day")
+        # load, then re-load one day (the idempotent re-run) — only that
+        # directory is rewritten; totals must not change.
+        for df in (ev, one_day):
+            df.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("day").parquet(out)
+        days = (
+            spark.read.parquet(out)
+            .groupBy("day")
+            .agg(F.count("*").alias("n"))
+            .localCheckpoint(eager=True)
+        )
+    return days.orderBy("day")
 
 
 # ---------------------------------------------------------------------------

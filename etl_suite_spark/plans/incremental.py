@@ -19,12 +19,12 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..core import SUBJECT_RESIDUE, d2d, dsum, sql_dsum
+from ..core import SUBJECT_RESIDUE, d2d, dsum, scratch, sql_dsum
 from ..io import load_table
 from ..registry import query
 
@@ -145,7 +145,7 @@ def inc_batch_watermark(spark, sf_dir):
 
     # the returned frame carries the watermark as a literal and never reads
     # the state file again, so the state dir goes when the tick returns
-    with tempfile.TemporaryDirectory(prefix="etl_wm_") as root:
+    with scratch("etl_wm_") as root:
         state = os.path.join(root, "state.json")
         advance_watermark(state, _FIXED_WM)
         return run_incremental_tick(spark, sf_dir, state, rollup)
@@ -1001,14 +1001,6 @@ def dim_calendar_build(spark, sf_dir):
 # everything; code-review r8 finding).
 _LAST_ERASURE_WH: list = []
 
-# Pytest sets this True to keep the temp warehouse on disk for file-level
-# inspection (and reclaims it itself). Default False: the op eagerly
-# materializes its audit result and rmtrees the warehouse before
-# returning — each invocation otherwise leaks an events-sized parquet
-# copy under /tmp, gigabytes per run at the 50M-row scale tier
-# (ADVICE r8 item 2; same reclamation the DAG checkpoint ops do).
-_KEEP_ERASURE_WH = False
-
 
 def _bucket_file_snapshot(wh: str) -> dict[str, dict[str, float]]:
     snap: dict[str, dict[str, float]] = {}
@@ -1070,65 +1062,47 @@ def inc_subject_erasure(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").withColumn(
         "bucket", (F.col("user_id") % 16).cast("long")
     )
-    wh = os.path.join(tempfile.mkdtemp(prefix="etl_erasure_"), "events_by_subject")
-    ev.write.partitionBy("bucket").mode("overwrite").parquet(wh)
-    _LAST_ERASURE_WH.clear()
-    _LAST_ERASURE_WH.extend([wh, _bucket_file_snapshot(wh)])
-
     is_subject = (F.col("user_id") % SUBJECT_RESIDUE) == 0
     affected = ev.filter(is_subject).select("bucket").distinct()
     retained = ev.join(F.broadcast(affected), "bucket", "left_semi").filter(
         ~is_subject
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        retained.write.partitionBy("bucket").mode("overwrite").parquet(wh)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-
     stats = ev.groupBy("bucket").agg(
         F.count("*").alias("rows_before"),
         F.sum(F.when(is_subject, 1).otherwise(0)).alias("rows_deleted"),
     )
-    # fully-erased buckets: zero retained rows → dynamic overwrite never
-    # touched them → explicit partition drop (≤16 buckets, bounded read)
-    import shutil
-
-    for r in stats.filter(F.col("rows_before") == F.col("rows_deleted")).collect():
-        shutil.rmtree(os.path.join(wh, f"bucket={int(r['bucket'])}"), ignore_errors=True)
-
-    after = (
-        spark.read.parquet(wh)
-        .groupBy("bucket")
-        .agg(F.count("*").alias("rows_after"))
-    )
-    audit = (
-        stats.join(after, "bucket", "left")
-        .select(
+    # the warehouse is events-sized: it lives in a scratch dir, and the
+    # ≤16-row audit is pinned before the dir goes
+    with scratch("etl_erasure_") as root:
+        wh = os.path.join(root, "events_by_subject")
+        ev.write.partitionBy("bucket").mode("overwrite").parquet(wh)
+        _LAST_ERASURE_WH.clear()
+        _LAST_ERASURE_WH.extend([wh, _bucket_file_snapshot(wh)])
+        retained.write.partitionBy("bucket").mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(wh)
+        # fully-erased buckets: zero retained rows → dynamic overwrite never
+        # touched them → explicit partition drop (≤16 buckets, bounded read)
+        for r in stats.filter(F.col("rows_before") == F.col("rows_deleted")).collect():
+            shutil.rmtree(os.path.join(wh, f"bucket={int(r['bucket'])}"), ignore_errors=True)
+        after = (
+            spark.read.parquet(wh)
+            .groupBy("bucket")
+            .agg(F.count("*").alias("rows_after"))
+        )
+        audit = stats.join(after, "bucket", "left").select(
             F.col("bucket").cast("long").alias("bucket"),
             F.col("rows_before").cast("long").alias("rows_before"),
             F.col("rows_deleted").cast("long").alias("rows_deleted"),
             F.coalesce(F.col("rows_after"), F.lit(0)).cast("long").alias("rows_after"),
             (F.col("rows_deleted") > 0).alias("rewritten"),
-        )
-        .orderBy("bucket")
-    )
-    if _KEEP_ERASURE_WH:
-        return audit  # pytest inspects (and reclaims) the warehouse
-    # pin the ≤16-row audit into the block manager, then reclaim the
-    # events-sized temp warehouse its lazy plan would otherwise scan
-    audit = audit.localCheckpoint(eager=True)
-    shutil.rmtree(os.path.dirname(wh), ignore_errors=True)
-    return audit
+        ).localCheckpoint(eager=True)
+    return audit.orderBy("bucket")
 
 
 # Pytest hook for inc_subject_export: [warehouse_path, pruned_input_files]
-# of the most recent run. _KEEP_EXPORT_WH=True keeps the temp warehouse
-# for inspection (pytest reclaims it); default False reclaims before
-# returning, same discipline as inc_subject_erasure.
+# of the most recent run.
 _LAST_EXPORT_WH: list = []
-_KEEP_EXPORT_WH = False
 
 
 @query(
@@ -1158,65 +1132,57 @@ def inc_subject_export(spark, sf_dir):
     value total (the dsum discipline).
 
     Same reclamation as erasure: the export result (subject-count-sized)
-    is eagerly checkpointed and the events-sized temp warehouse removed
-    before returning, unless pytest keeps it for file-level inspection."""
+    is eagerly checkpointed and the events-sized scratch warehouse removed
+    before returning."""
     ev = load_table(spark, sf_dir, "events").withColumn(
         "bucket", (F.col("user_id") % 16).cast("long")
     )
-    wh = os.path.join(tempfile.mkdtemp(prefix="etl_export_"), "events_by_subject")
-    ev.write.partitionBy("bucket").mode("overwrite").parquet(wh)
-
     is_subject = (F.col("user_id") % SUBJECT_RESIDUE) == 0
     buckets = sorted(
         int(r["bucket"])
         for r in ev.filter(is_subject).select("bucket").distinct().collect()
     )  # bounded by 16 — the watermark-read pattern
-    # explicit partition-directory selection (manifest-level pruning):
-    # only subject buckets are even LISTED — the structural form of the
-    # O(subject) scan; basePath keeps the bucket partition column.
-    # (A filter on the partition column prunes identically in the
-    # physical scan, but inputFiles() reports the pre-pruning relation,
-    # so the explicit form is also the testable one.)
-    if buckets:
-        pruned = (
-            spark.read.option("basePath", wh)
-            .parquet(*[os.path.join(wh, f"bucket={b}") for b in buckets])
+    with scratch("etl_export_") as root:
+        wh = os.path.join(root, "events_by_subject")
+        ev.write.partitionBy("bucket").mode("overwrite").parquet(wh)
+        # explicit partition-directory selection (manifest-level pruning):
+        # only subject buckets are even LISTED — the structural form of the
+        # O(subject) scan; basePath keeps the bucket partition column.
+        # (A filter on the partition column prunes identically in the
+        # physical scan, but inputFiles() reports the pre-pruning relation,
+        # so the explicit form is also the testable one.)
+        if buckets:
+            pruned = (
+                spark.read.option("basePath", wh)
+                .parquet(*[os.path.join(wh, f"bucket={b}") for b in buckets])
+            )
+            scanned = list(pruned.inputFiles())
+        else:
+            # zero-subject corpus (ADVICE r9): `.parquet(*[])` raises, and
+            # there is nothing to list — an empty frame with the warehouse
+            # schema preserves the export contract and scans no files.
+            pruned = ev.limit(0)
+            scanned = []
+        _LAST_EXPORT_WH.clear()
+        _LAST_EXPORT_WH.extend([wh, scanned])
+        export = (
+            pruned.filter(is_subject)
+            .groupBy("user_id")
+            .agg(
+                F.count("*").cast("long").alias("n_events"),
+                F.count_distinct("event_type").cast("long").alias("n_event_types"),
+                F.min("ts").alias("first_ts"),
+                F.max("ts").alias("last_ts"),
+                dsum("value", 4).alias("total_value"),
+            )
+            .select(
+                F.col("user_id").cast("long").alias("user_id"),
+                "n_events",
+                "n_event_types",
+                "first_ts",
+                "last_ts",
+                "total_value",
+            )
+            .localCheckpoint(eager=True)
         )
-        scanned = list(pruned.inputFiles())
-    else:
-        # zero-subject corpus (ADVICE r9): `.parquet(*[])` raises, and
-        # there is nothing to list — an empty frame with the warehouse
-        # schema preserves the export contract, scans no files, and the
-        # temp-warehouse reclamation below still runs.
-        pruned = ev.limit(0)
-        scanned = []
-    _LAST_EXPORT_WH.clear()
-    _LAST_EXPORT_WH.extend([wh, scanned])
-
-    export = (
-        pruned.filter(is_subject)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.count_distinct("event_type").cast("long").alias("n_event_types"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-            dsum("value", 4).alias("total_value"),
-        )
-        .select(
-            F.col("user_id").cast("long").alias("user_id"),
-            "n_events",
-            "n_event_types",
-            "first_ts",
-            "last_ts",
-            "total_value",
-        )
-        .orderBy("user_id")
-    )
-    if _KEEP_EXPORT_WH:
-        return export
-    export = export.localCheckpoint(eager=True)
-    import shutil
-
-    shutil.rmtree(os.path.dirname(wh), ignore_errors=True)
-    return export
+    return export.orderBy("user_id")

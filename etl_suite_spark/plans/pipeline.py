@@ -51,8 +51,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..core import log_once, observed
-from ..io import data_files, load_table, table_path
+from ..core import log_once, observed, scratch
+from ..io import data_files, load_table, read_parquet, table_path
 from ..registry import query
 from .incremental import (
     DEFAULT_WATERMARK,
@@ -284,13 +284,8 @@ def pipeline_sink_jdbc(spark, sf_dir):
 # --- streaming compile -------------------------------------------------------
 
 
-def compile_pipeline_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    spec: dict,
-) -> DataFrame:
-    """Compile the SAME spec dialect against a streaming file source.
+def compile_pipeline_stream(df: DataFrame, spec: dict) -> DataFrame:
+    """Compile the SAME spec dialect against a streaming source frame ``df``.
 
     Stateless ops (filter/derive/select) reuse ``_apply_transform``
     verbatim — the spec is execution-mode-agnostic, which is the point:
@@ -301,11 +296,6 @@ def compile_pipeline_stream(
     aggregation) since arbitrary batch groupbys aren't streamable
     unchanged.
     """
-    df = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
     wm = spec.get("watermark")
     if wm:
         df = df.withWatermark(wm["col"], wm["delay"])
@@ -368,11 +358,12 @@ def pipeline_spec_stream(spark, sf_dir):
     """The spec compiler's continuous path: identical spec dialect compiled
     to readStream → watermark → stateless transforms → tumbling windowed
     agg, run AvailableNow into a memory sink (no Kafka in env [V])."""
-    from ..streaming.ops import _drop_dir, _run_to_memory
+    from ..streaming.ops import _stream_to_memory
 
-    drop, schema = _drop_dir(spark, sf_dir)
-    sdf = compile_pipeline_stream(spark, drop, schema, _STREAM_SPEC)
-    return _run_to_memory(sdf, "append").orderBy("win_start", "event_type")
+    out = _stream_to_memory(
+        spark, sf_dir, "append", lambda read: compile_pipeline_stream(read(), _STREAM_SPEC)
+    )
+    return out.orderBy("win_start", "event_type")
 
 
 def _walk_dag(dag: dict, visit) -> dict:
@@ -584,7 +575,7 @@ def run_dag_checkpointed(
             with open(marker, "w") as fh:
                 fh.write(fps[name])
             _LAST_COMPUTED.append(name)
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
 
     return _walk_dag(dag, stage)[dag["output"]]
 
@@ -617,21 +608,13 @@ def pipeline_dag_resume(spark, sf_dir):
     root), pass 2 re-launches the identical DAG against the same root and
     must load every stage from checkpoint (pytest pins pass-2 computes
     = 0, partial-state crash resume, and Merkle cone invalidation). The
-    returned frame is pass 2's output — a plain scan of the output
-    checkpoint, proving the restart path yields byte-identical results
+    returned frame is pass 2's output — the output checkpoint's scan,
+    pinned before the checkpoint root is removed, proving the restart path yields byte-identical results
     to the lazy compiler (shared oracle with pipeline_dag_run)."""
-    import tempfile
-
-    import shutil
-
-    root = tempfile.mkdtemp(prefix="etl_dagckpt_")
-    run_dag_checkpointed(spark, sf_dir, _DAG, root)  # cold: computes all
-    out = run_dag_checkpointed(spark, sf_dir, _DAG, root)  # warm: resume
-    # pin the output stage into the block manager so the checkpoint root
-    # can be reclaimed before returning (each invocation otherwise leaks
-    # a materialized copy of the base stage under /tmp)
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
+    with scratch("etl_dagckpt_") as root:
+        run_dag_checkpointed(spark, sf_dir, _DAG, root)  # cold: computes all
+        out = run_dag_checkpointed(spark, sf_dir, _DAG, root)  # warm: resume
+        out = out.localCheckpoint(eager=True)
     return (
         out.select(
             F.col("o_orderpriority"),
@@ -688,28 +671,19 @@ def pipeline_run_report(spark, sf_dir):
 
     Plan: the report is stage-count-sized (4 rows); each count is a scan
     of that stage's checkpoint (metadata-cheap on parquet footers)."""
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="etl_dagreport_")
-    run_dag_checkpointed(spark, sf_dir, _DAG, root)
-    cold = set(_LAST_COMPUTED)
-    run_dag_checkpointed(spark, sf_dir, _DAG, root)
-    warm_recomputed = set(_LAST_COMPUTED)
-    fps = _dag_fingerprints(spark, sf_dir, _DAG)
     import os
 
-    rows = []
-    for name in sorted(_DAG["stages"]):
-        n = spark.read.parquet(os.path.join(root, f"{name}-{fps[name]}")).count()
-        rows.append(
-            (name, n, name in cold, name not in warm_recomputed)
-        )
-    # the report is built from already-collected counts, so the
-    # checkpoint root can be reclaimed before returning (no lazy scan
-    # depends on it — unlike pipeline_dag_resume's returned frame)
-    import shutil
-
-    shutil.rmtree(root, ignore_errors=True)
+    with scratch("etl_dagreport_") as root:
+        run_dag_checkpointed(spark, sf_dir, _DAG, root)
+        cold = set(_LAST_COMPUTED)
+        run_dag_checkpointed(spark, sf_dir, _DAG, root)
+        warm_recomputed = set(_LAST_COMPUTED)
+        fps = _dag_fingerprints(spark, sf_dir, _DAG)
+        rows = []
+        for name in sorted(_DAG["stages"]):
+            n = read_parquet(spark, os.path.join(root, f"{name}-{fps[name]}")).count()
+            rows.append((name, n, name in cold, name not in warm_recomputed))
+    # the report is built from already-collected counts: nothing to pin
     return spark.createDataFrame(
         rows, "stage STRING, n_rows BIGINT, computed_cold BOOLEAN, reused_warm BOOLEAN"
     ).orderBy("stage")

@@ -10,23 +10,14 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core import d2d, dec
+from ..core import _mat_run_root, d2d, dec, scratch
 from ..io import load_table, table_path
 from ..registry import query
-
-
-def _pinned(df, root: str):
-    """``df`` pinned into the block manager, then its scratch ``root``
-    removed: the returned frame no longer scans anything under it."""
-    out = df.localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 @query("scan_parquet", oracle="SELECT * FROM lineitem")
@@ -71,11 +62,12 @@ def scan_csv_roundtrip(spark, sf_dir):
     schema-on-read discipline: inference is allowed only for ad-hoc ingest
     (SURVEY §1.2), canonical tables always get a declared StructType."""
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="etl_csv_")
-    out = os.path.join(root, "orders_csv")
-    o.write.mode("overwrite").option("header", True).csv(out)
-    back = spark.read.schema(_CSV_SCHEMA).option("header", True).csv(out)
-    return _pinned(back, root).orderBy("o_orderkey")
+    with scratch("etl_csv_") as root:
+        out = os.path.join(root, "orders_csv")
+        o.write.mode("overwrite").option("header", True).csv(out)
+        back = spark.read.schema(_CSV_SCHEMA).option("header", True).csv(out)
+        back = back.localCheckpoint(eager=True)
+    return back.orderBy("o_orderkey")
 
 
 @query(
@@ -90,11 +82,11 @@ def scan_json_roundtrip(spark, sf_dir):
     # ref analog: Mongo-ish document ingest [K] — JSON lines with explicit
     # schema on read.
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="etl_json_")
-    out = os.path.join(root, "orders_json")
-    o.write.mode("overwrite").json(out)
-    back = spark.read.schema(_CSV_SCHEMA).json(out)
-    return _pinned(back, root).orderBy("o_orderkey")
+    with scratch("etl_json_") as root:
+        out = os.path.join(root, "orders_json")
+        o.write.mode("overwrite").json(out)
+        back = spark.read.schema(_CSV_SCHEMA).json(out).localCheckpoint(eager=True)
+    return back.orderBy("o_orderkey")
 
 
 @query(
@@ -110,18 +102,18 @@ def sink_parquet_partitioned(spark, sf_dir):
     the partition column is the dominant filter (date/lang/tenant) so scans
     prune whole directories; verified by re-reading one partition."""
     li = load_table(spark, sf_dir, "lineitem")
-    root = tempfile.mkdtemp(prefix="etl_part_")
-    out = os.path.join(root, "lineitem_by_flag")
-    li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-    back = spark.read.parquet(out)
-    # partition pruning demonstrator: only the 'R' directory is scanned
-    # (the pinning job runs the pruned read, before the dir is removed)
-    return _pinned(
-        back.filter(F.col("l_returnflag") == "R")
-        .groupBy("l_returnflag", "l_linestatus")
-        .count(),
-        root,
-    )
+    with scratch("etl_part_") as root:
+        out = os.path.join(root, "lineitem_by_flag")
+        li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+        # partition pruning demonstrator: only the 'R' directory is scanned
+        # (the pinning job runs the pruned read, before the dir is removed)
+        return (
+            spark.read.parquet(out)
+            .filter(F.col("l_returnflag") == "R")
+            .groupBy("l_returnflag", "l_linestatus")
+            .count()
+            .localCheckpoint(eager=True)
+        )
 
 
 @query("scan_orc_roundtrip", oracle="SELECT * FROM orders")
@@ -129,11 +121,11 @@ def scan_orc_roundtrip(spark, sf_dir):
     """ORC roundtrip — the other columnar warehouse format; same pushdown/
     pruning properties as parquet from Catalyst's perspective."""
     o = load_table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="etl_orc_")
-    out = os.path.join(root, "orders_orc")
-    o.write.mode("overwrite").orc(out)
-    back = spark.read.orc(out)
-    return _pinned(back, root).orderBy("o_orderkey")
+    with scratch("etl_orc_") as root:
+        out = os.path.join(root, "orders_orc")
+        o.write.mode("overwrite").orc(out)
+        back = spark.read.orc(out).localCheckpoint(eager=True)
+    return back.orderBy("o_orderkey")
 
 
 _JDBC_PROPS = {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
@@ -205,14 +197,6 @@ def scan_csv_badrecords(spark, sf_dir):
     instead of failing the job (or silently vanishing), so the pipeline
     can route them to a quarantine sink. The per-mode contract
     (PERMISSIVE/DROPMALFORMED/FAILFAST) is pinned in tests."""
-    root = tempfile.mkdtemp(prefix="etl_badcsv_")
-    path = os.path.join(root, "mixed.csv")
-    with open(path, "w") as f:
-        f.write("k,price,day\n")
-        f.write("1,10.5,2024-01-01\n")
-        f.write("2,not_a_number,2024-01-02\n")  # type mismatch
-        f.write("3,30.25,2024-01-03\n")
-        f.write("4,40.0\n")  # missing column
     schema = T.StructType(
         [
             T.StructField("k", T.LongType()),
@@ -221,18 +205,27 @@ def scan_csv_badrecords(spark, sf_dir):
             T.StructField("_corrupt_record", T.StringType()),
         ]
     )
-    df = (
-        spark.read.schema(schema)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(path)
-    )
-    return df.select(
-        "k",
-        "price",
-        F.col("_corrupt_record").isNotNull().alias("is_corrupt"),
-    ).orderBy("k")
+    with scratch("etl_badcsv_") as root:
+        path = os.path.join(root, "mixed.csv")
+        with open(path, "w") as f:
+            f.write("k,price,day\n")
+            f.write("1,10.5,2024-01-01\n")
+            f.write("2,not_a_number,2024-01-02\n")  # type mismatch
+            f.write("3,30.25,2024-01-03\n")
+            f.write("4,40.0\n")  # missing column
+        df = (
+            spark.read.schema(schema)
+            .option("header", True)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt_record")
+            .csv(path)
+        )
+        out = df.select(
+            "k",
+            "price",
+            F.col("_corrupt_record").isNotNull().alias("is_corrupt"),
+        ).localCheckpoint(eager=True)
+    return out.orderBy("k")
 
 
 @query(
@@ -251,23 +244,24 @@ def scan_parquet_schema_evolution(spark, sf_dir):
     (a column added later) merge under mergeSchema=true — old files yield
     NULL for the new column. The append-only warehouse reality at 100 TB:
     producers upgrade, history stays readable."""
-    root = tempfile.mkdtemp(prefix="etl_evolve_")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     v1 = o.filter(F.col("o_orderkey") % 2 == 0)
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).withColumn(
         "priority_band",
         F.when(F.col("o_totalprice") > 200000, "high").otherwise("normal"),
     )
-    v1.write.mode("overwrite").parquet(os.path.join(root, "batch=1"))
-    v2.write.mode("overwrite").parquet(os.path.join(root, "batch=2"))
-    merged = spark.read.option("mergeSchema", True).parquet(
-        os.path.join(root, "batch=1"), os.path.join(root, "batch=2")
-    )
-    return (
-        merged.groupBy("priority_band")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.col("priority_band").asc_nulls_first())
-    )
+    with scratch("etl_evolve_") as root:
+        v1.write.mode("overwrite").parquet(os.path.join(root, "batch=1"))
+        v2.write.mode("overwrite").parquet(os.path.join(root, "batch=2"))
+        merged = spark.read.option("mergeSchema", True).parquet(
+            os.path.join(root, "batch=1"), os.path.join(root, "batch=2")
+        )
+        out = (
+            merged.groupBy("priority_band")
+            .agg(F.count("*").alias("n"))
+            .localCheckpoint(eager=True)
+        )
+    return out.orderBy(F.col("priority_band").asc_nulls_first())
 
 
 @query(
@@ -284,15 +278,17 @@ def scan_text_roundtrip(spark, sf_dir):
     text directory and re-derives per-line length to prove lossless
     transport (newline-free fixture text by construction)."""
     docs = load_table(spark, sf_dir, "documents")
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_text_"), "docs_txt")
-    docs.select("text").write.mode("overwrite").text(out)
-    back = spark.read.text(out)  # column: value
-    return (
-        back.select(F.length("value").cast("long").alias("n_chars"))
-        .groupBy("n_chars")
-        .count()
-        .orderBy("n_chars")
-    )
+    with scratch("etl_text_") as root:
+        out = os.path.join(root, "docs_txt")
+        docs.select("text").write.mode("overwrite").text(out)
+        back = spark.read.text(out)  # column: value
+        counts = (
+            back.select(F.length("value").cast("long").alias("n_chars"))
+            .groupBy("n_chars")
+            .count()
+            .localCheckpoint(eager=True)
+        )
+    return counts.orderBy("n_chars")
 
 
 @query(
@@ -313,22 +309,25 @@ def sink_sorted_layout(spark, sf_dir):
     with a tight ship-date filter — correctness here; the pruning effect is
     visible in the scan's rowgroup stats at scale."""
     li = load_table(spark, sf_dir, "lineitem")
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_sorted_"), "lineitem_sorted")
-    (
-        li.repartition(8, F.month("l_shipdate"))
-        .sortWithinPartitions("l_shipdate", "l_orderkey")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    back = spark.read.parquet(out)
-    return (
-        back.filter(
-            (F.col("l_shipdate") >= "1998-03-01") & (F.col("l_shipdate") < "1998-04-01")
+    with scratch("etl_sorted_") as root:
+        out = os.path.join(root, "lineitem_sorted")
+        (
+            li.repartition(8, F.month("l_shipdate"))
+            .sortWithinPartitions("l_shipdate", "l_orderkey")
+            .write.mode("overwrite")
+            .parquet(out)
         )
-        .groupBy(F.to_date(F.date_trunc("day", "l_shipdate")).alias("ship_day"))
-        .agg(F.count("*").alias("n"))
-        .orderBy("ship_day")
-    )
+        back = spark.read.parquet(out)
+        days = (
+            back.filter(
+                (F.col("l_shipdate") >= "1998-03-01")
+                & (F.col("l_shipdate") < "1998-04-01")
+            )
+            .groupBy(F.to_date(F.date_trunc("day", "l_shipdate")).alias("ship_day"))
+            .agg(F.count("*").alias("n"))
+            .localCheckpoint(eager=True)
+        )
+    return days.orderBy("ship_day")
 
 
 @query(
@@ -351,9 +350,13 @@ def join_dpp_partition_pruned(spark, sf_dir):
     partitions matching the filtered dim survive — at 100 TB this is what
     turns a star-schema join over a date/tenant-partitioned warehouse from
     a full scan into a handful of directories. Plan shape pinned in
-    tests/test_plans.py."""
+    tests/test_plans.py, so the returned frame stays lazy: the fact table
+    is written under the process run root (``core._mat_run_root``), which
+    is removed at interpreter exit, not in a per-call scratch dir."""
     li = load_table(spark, sf_dir, "lineitem")
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_dpp_"), "lineitem_by_flag")
+    out = os.path.join(
+        tempfile.mkdtemp(prefix="etl_dpp_", dir=_mat_run_root()), "lineitem_by_flag"
+    )
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     fact = spark.read.parquet(out)
     # The dim-side predicate is computed at runtime (minority-share flags),
@@ -401,53 +404,45 @@ def sink_compact_small_files(spark, sf_dir):
     fragmented vs compacted — flips to false on any lost/corrupted row),
     and ``compaction_ok`` is the measured files_after < files_before."""
     o = load_table(spark, sf_dir, "orders")
-    # PID token (ADVICE r3): this op rewrites its own scratch dataset, so
-    # two concurrent sessions must not share one dir — unlike the pagerank
-    # edge cache there is no reuse value, hence per-process isolation
-    # instead of atomic-rename sharing.
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "etl_compact_"
-        + hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-        + f"_{os.getpid()}",
-    )
-    frag_dir = os.path.join(base, "fragmented")
-    compact_dir = os.path.join(base, "compacted")
-    o.repartition(64).write.mode("overwrite").parquet(frag_dir)
+    # the result is built from collected values: nothing to pin
+    with scratch("etl_compact_") as base:
+        frag_dir = os.path.join(base, "fragmented")
+        compact_dir = os.path.join(base, "compacted")
+        o.repartition(64).write.mode("overwrite").parquet(frag_dir)
 
-    frag = spark.read.parquet(frag_dir)
-    n_frag_files = len([f for f in os.listdir(frag_dir) if f.endswith(".parquet")])
-    # target size derived from actual on-disk bytes, not a guess
-    total_bytes = sum(
-        os.path.getsize(os.path.join(frag_dir, f))
-        for f in os.listdir(frag_dir)
-        if f.endswith(".parquet")
-    )
-    target_file_bytes = 4 * 1024 * 1024
-    n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
-    frag.repartition(int(n_out)).write.mode("overwrite").parquet(compact_dir)
-
-    back = spark.read.parquet(compact_dir)
-    n_comp_files = len([f for f in os.listdir(compact_dir) if f.endswith(".parquet")])
-
-    def content_sig(df):
-        # Order-insensitive whole-table signature: one scan, map-side
-        # partial SUM, no shuffle of data rows.  SUM (not bit_xor — ADVICE
-        # r3): xor cancels pairwise, so dropping two copies of row X and
-        # adding two copies of row Y preserved both xor and count; additive
-        # sums shift by 2·(h(Y)−h(X)) instead.  decimal(38,0) keeps the sum
-        # exact without ANSI bigint overflow: |h| < 2^63 ≈ 9.2e18 leaves
-        # ~1e19 rows of headroom — comfortably past the 100 TB shape.
-        cols = [F.col(c) for c in sorted(df.columns)]
-        row = (
-            df.select(F.xxhash64(*cols).cast("decimal(38,0)").alias("h"))
-            .agg(F.sum("h").alias("sig"), F.count("*").alias("n"))
-            .collect()[0]
+        frag = spark.read.parquet(frag_dir)
+        n_frag_files = len([f for f in os.listdir(frag_dir) if f.endswith(".parquet")])
+        # target size derived from actual on-disk bytes, not a guess
+        total_bytes = sum(
+            os.path.getsize(os.path.join(frag_dir, f))
+            for f in os.listdir(frag_dir)
+            if f.endswith(".parquet")
         )
-        return row["sig"], row["n"]
+        target_file_bytes = 4 * 1024 * 1024
+        n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
+        frag.repartition(int(n_out)).write.mode("overwrite").parquet(compact_dir)
 
-    frag_sig, frag_n = content_sig(frag)
-    comp_sig, comp_n = content_sig(back)
+        back = spark.read.parquet(compact_dir)
+        n_comp_files = len([f for f in os.listdir(compact_dir) if f.endswith(".parquet")])
+
+        def content_sig(df):
+            # Order-insensitive whole-table signature: one scan, map-side
+            # partial SUM, no shuffle of data rows.  SUM (not bit_xor — ADVICE
+            # r3): xor cancels pairwise, so dropping two copies of row X and
+            # adding two copies of row Y preserved both xor and count; additive
+            # sums shift by 2·(h(Y)−h(X)) instead.  decimal(38,0) keeps the sum
+            # exact without ANSI bigint overflow: |h| < 2^63 ≈ 9.2e18 leaves
+            # ~1e19 rows of headroom — comfortably past the 100 TB shape.
+            cols = [F.col(c) for c in sorted(df.columns)]
+            row = (
+                df.select(F.xxhash64(*cols).cast("decimal(38,0)").alias("h"))
+                .agg(F.sum("h").alias("sig"), F.count("*").alias("n"))
+                .collect()[0]
+            )
+            return row["sig"], row["n"]
+
+        frag_sig, frag_n = content_sig(frag)
+        comp_sig, comp_n = content_sig(back)
     return spark.range(1).select(
         F.lit(comp_n).cast("long").alias("n_rows"),
         F.lit(frag_sig == comp_sig and frag_n == comp_n).alias("content_matches"),
@@ -505,29 +500,31 @@ def sink_zorder_layout(spark, sf_dir):
     z = F.expr(
         _Z_SPARK.format(a="o_custkey % 65536", b=f"({day}) % 65536")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="etl_zorder_"), "orders_z")
-    (
-        o.withColumn("z", z)
-        .repartitionByRange(8, "z")
-        .sortWithinPartitions("z")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    back = spark.read.parquet(out)
-    return (
-        back.filter(
-            F.col("o_custkey").between(100, 299)
-            & F.col("o_orderdate")
-            .cast("date")
-            .between("1996-01-01", "1996-12-31")
+    with scratch("etl_zorder_") as root:
+        out = os.path.join(root, "orders_z")
+        (
+            o.withColumn("z", z)
+            .repartitionByRange(8, "z")
+            .sortWithinPartitions("z")
+            .write.mode("overwrite")
+            .parquet(out)
         )
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n"),
-            d2d(F.sum(dec("o_totalprice"))).alias("revenue"),
+        back = spark.read.parquet(out)
+        revenue = (
+            back.filter(
+                F.col("o_custkey").between(100, 299)
+                & F.col("o_orderdate")
+                .cast("date")
+                .between("1996-01-01", "1996-12-31")
+            )
+            .groupBy("o_orderpriority")
+            .agg(
+                F.count("*").alias("n"),
+                d2d(F.sum(dec("o_totalprice"))).alias("revenue"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .orderBy("o_orderpriority")
-    )
+    return revenue.orderBy("o_orderpriority")
 
 
 @query(

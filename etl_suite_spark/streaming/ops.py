@@ -20,6 +20,13 @@ below therefore carries a DuckDB oracle that replicates the watermark
 contract with a `max(ts) - delay` CTE; pytest goldens additionally pin
 the batch-by-batch behavior.
 
+Scratch files: each query lands its drop files, checkpoint and (for the
+foreachBatch sinks) upsert warehouse in one ``core.scratch`` dir, removed
+before it returns. Memory-sink operators go through ``_stream_to_memory``,
+which drops the sink's temporary view; the returned frame reads the sink's
+driver-held rows, so it needs no pin. The foreachBatch operators pin their
+per-type warehouse counts before the dir goes.
+
 Scale notes: stateful aggregation state lives in the HDFS/RocksDB state
 store keyed by group — at 100 TB of events the state is bounded by the
 watermark horizon, not the stream length; ``spark.sql.shuffle.partitions``
@@ -28,9 +35,9 @@ sizes the state-store shard count.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
-import tempfile
 import uuid
 from collections.abc import Iterator
 
@@ -41,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..core import d2d, dec
+from ..core import d2d, dec, scratch
 from ..io import load_table
 from ..registry import query
 
@@ -61,29 +68,25 @@ def _write_one_file(df: DataFrame, target: str) -> None:
     shutil.rmtree(tmp)
 
 
-def _drop_dir(
-    spark: SparkSession, sf_dir: str, extra: DataFrame | None = None
-) -> tuple[str, T.StructType]:
-    """Write events as three time-ordered drop files; returns (dir, schema).
-
-    ``extra`` rows (duplicates / late arrivals for the dedup and late-data
-    operators) are appended to the LAST file, after the watermark has
-    already advanced past the earlier slices.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    drop = tempfile.mkdtemp(prefix="etl_stream_drop_")
-    slices = [
+def _slices(ev: DataFrame, extra: DataFrame | None = None) -> list[DataFrame]:
+    """The events cut at ``_CUTS`` into three time slices, in order;
+    ``extra`` rows are appended to the last slice."""
+    last = ev.filter(F.col("ts") >= _CUTS[1])
+    return [
         ev.filter(F.col("ts") < _CUTS[0]),
         ev.filter((F.col("ts") >= _CUTS[0]) & (F.col("ts") < _CUTS[1])),
-        ev.filter(F.col("ts") >= _CUTS[1]),
+        last if extra is None else last.unionByName(extra),
     ]
-    if extra is not None:
-        slices[2] = slices[2].unionByName(extra)
-    for i, s in enumerate(slices):
+
+
+def _land(drop: str, slices: list[DataFrame], first: int = 0) -> None:
+    """Write each slice as one drop file ``data-NNN.parquet``, numbered from
+    ``first``, with mtimes ascending by number so the file source takes
+    them in order."""
+    for i, s in enumerate(slices, first):
         target = os.path.join(drop, f"data-{i:03d}.parquet")
         _write_one_file(s, target)
         os.utime(target, (1700000000 + i * 60, 1700000000 + i * 60))
-    return drop, ev.schema
 
 
 def _read_stream(spark: SparkSession, drop: str, schema: T.StructType) -> DataFrame:
@@ -94,21 +97,62 @@ def _read_stream(spark: SparkSession, drop: str, schema: T.StructType) -> DataFr
     )
 
 
-def _run_to_memory(sdf: DataFrame, mode: str) -> DataFrame:
-    """Run an AvailableNow pass into a memory sink; return the result table."""
-    name = "s" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix="etl_stream_ckpt_")
-    spark = sdf.sparkSession
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+def _batches(q) -> list[dict]:
+    """The progress records of ``q``'s micro-batches that read input rows
+    (trailing no-data commit batches skipped)."""
+    out = []
+    for p in q.recentProgress:
+        d = p if isinstance(p, dict) else json.loads(p.json)
+        if int(d.get("numInputRows", 0)) > 0:
+            out.append(d)
+    return out
+
+
+def _type_counts(spark: SparkSession, warehouse: str) -> DataFrame:
+    """Per-event-type row counts of an upsert warehouse, pinned so the
+    frame outlives the scratch dir that holds the warehouse."""
+    return (
+        spark.read.parquet(warehouse)
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n"))
+        .localCheckpoint(eager=True)
     )
+
+
+def _run(writer, ckpt: str):
+    """Run ``writer`` (a configured ``writeStream``) AvailableNow against
+    checkpoint ``ckpt`` until it terminates; returns the finished query."""
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     q.awaitTermination()
-    return spark.table(name)
+    return q
+
+
+def _stream_to_memory(
+    spark: SparkSession, sf_dir: str, mode: str, build, extra: DataFrame | None = None
+) -> DataFrame:
+    """Land events as three time-ordered drop files, run ``build(read)``
+    AvailableNow into a memory sink in output ``mode``, and return the
+    sink's rows.
+
+    ``read()`` returns a fresh stream over the drop files (one file per
+    micro-batch). ``extra`` rows (duplicates / late arrivals for the dedup
+    and late-data operators) are appended to the LAST file, after the
+    watermark has already advanced past the earlier slices. The drop
+    files and the checkpoint share one ``scratch`` dir, removed on return,
+    and the sink's temporary view is dropped: the returned frame reads the
+    memory sink itself, which keeps the rows in the driver for as long as
+    the frame is referenced, so nothing needs pinning."""
+    ev = load_table(spark, sf_dir, "events")
+    name = "s" + uuid.uuid4().hex[:12]
+    with scratch("etl_stream_") as root:
+        drop = os.path.join(root, "drop")
+        _land(drop, _slices(ev, extra))
+        sdf = build(lambda: _read_stream(spark, drop, ev.schema))
+        writer = sdf.writeStream.format("memory").queryName(name).outputMode(mode)
+        _run(writer, os.path.join(root, "ckpt"))
+        out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(
@@ -129,9 +173,8 @@ def stream_tumbling_agg(spark, sf_dir):
     """Per-5-minute tumbling counts/sums by event_type, 10-minute
     watermark, append mode — only *finalized* windows emit. The decimal
     sum keeps emitted values merge-order-independent."""
-    drop, schema = _drop_dir(spark, sf_dir)
-    sdf = (
-        _read_stream(spark, drop, schema)
+    out = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n"), d2d(F.sum(dec("value", 4))).alias("sum_value"))
@@ -141,8 +184,8 @@ def stream_tumbling_agg(spark, sf_dir):
             "n",
             "sum_value",
         )
-    )
-    return _run_to_memory(sdf, "append").orderBy("win_start", "event_type")
+    ))
+    return out.orderBy("win_start", "event_type")
 
 
 @query(
@@ -169,15 +212,14 @@ def stream_tumbling_agg(spark, sf_dir):
 def stream_sliding_agg(spark, sf_dir):
     """10-minute windows sliding every 5 — each event lands in two windows;
     same watermark/append discipline as tumbling."""
-    drop, schema = _drop_dir(spark, sf_dir)
-    sdf = (
-        _read_stream(spark, drop, schema)
+    out = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("win.start").alias("win_start"), "event_type", "n")
-    )
-    return _run_to_memory(sdf, "append").orderBy("win_start", "event_type")
+    ))
+    return out.orderBy("win_start", "event_type")
 
 
 @query(
@@ -215,9 +257,8 @@ def stream_session_window(spark, sf_dir):
     """Session windows with a 30-minute gap per user: state merges as
     events extend a session; a session closes (and emits) once the
     watermark passes gap-end."""
-    drop, schema = _drop_dir(spark, sf_dir)
-    sdf = (
-        _read_stream(spark, drop, schema)
+    out = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
         .withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "30 minutes").alias("sess"), "user_id")
         .agg(F.count("*").alias("n_events"))
@@ -227,8 +268,8 @@ def stream_session_window(spark, sf_dir):
             F.col("sess.end").alias("sess_end"),
             "n_events",
         )
-    )
-    return _run_to_memory(sdf, "append").orderBy("user_id", "sess_start")
+    ))
+    return out.orderBy("user_id", "sess_start")
 
 
 def _dup_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,14 +303,12 @@ def stream_dedup(spark, sf_dir):
     were seen within the 1-hour watermark horizon in a PRIOR batch —
     cross-batch dedup state, not same-batch dedup. Output = deduped
     per-type counts."""
-    dups = _dup_sample(spark, sf_dir)
-    drop, schema = _drop_dir(spark, sf_dir, extra=dups)
-    deduped = (
-        _read_stream(spark, drop, schema)
+    out = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    out = _run_to_memory(deduped.select("event_id", "event_type"), "append")
+        .select("event_id", "event_type")
+    ), extra=_dup_sample(spark, sf_dir))
     return out.groupBy("event_type").agg(F.count("*").alias("n")).orderBy("event_type")
 
 
@@ -281,6 +320,22 @@ _STATEFUL_OUT = T.StructType(
         T.StructField("sum_value", T.DoubleType()),
     ]
 )
+
+
+def _running_counters_stream(read) -> DataFrame:
+    """stream_stateful_custom's stream: ``_running_counters`` per user,
+    emitting in update mode."""
+    return (
+        read()
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _running_counters,
+            outputStructType=_STATEFUL_OUT,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
 
 
 def _running_counters(
@@ -337,19 +392,7 @@ def stream_stateful_custom(spark, sf_dir):
     default 4.85 median) — so the derivation was tried and REVERTED.
     RocksDB provider: no win at any tested shard count. Book closed
     with the profile on record."""
-    drop, schema = _drop_dir(spark, sf_dir)
-    sdf = (
-        _read_stream(spark, drop, schema)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _running_counters,
-            outputStructType=_STATEFUL_OUT,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    updates = _run_to_memory(sdf, "update")
+    updates = _stream_to_memory(spark, sf_dir, "update", _running_counters_stream)
     return (
         updates.groupBy("user_id")
         .agg(
@@ -412,24 +455,18 @@ def stream_foreachbatch_upsert(spark, sf_dir):
     parquet warehouse via the dedup-latest idiom (newest row per event_id
     wins), so re-delivery and window re-runs are idempotent — the
     reference's delete-then-reload recovery model, Spark-side."""
-    dups = _dup_sample(spark, sf_dir)
-    drop, schema = _drop_dir(spark, sf_dir, extra=dups)
-    warehouse = os.path.join(tempfile.mkdtemp(prefix="etl_wh_"), "events_merged")
+    ev = load_table(spark, sf_dir, "events")
+    with scratch("etl_stream_upsert_") as root:
+        drop, warehouse = os.path.join(root, "drop"), os.path.join(root, "wh")
+        _land(drop, _slices(ev, _dup_sample(spark, sf_dir)))
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _upsert_batch(batch_df, batch_id, warehouse)
+        def merge(batch_df: DataFrame, batch_id: int) -> None:
+            _upsert_batch(batch_df, batch_id, warehouse)
 
-    ckpt = tempfile.mkdtemp(prefix="etl_stream_ckpt_")
-    q = (
-        _read_stream(spark, drop, schema)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = spark.read.parquet(warehouse)
-    return final.groupBy("event_type").agg(F.count("*").alias("n")).orderBy("event_type")
+        stream = _read_stream(spark, drop, ev.schema)
+        _run(stream.writeStream.foreachBatch(merge), os.path.join(root, "ckpt"))
+        out = _type_counts(spark, warehouse)
+    return out.orderBy("event_type")
 
 
 @query(
@@ -454,15 +491,13 @@ def stream_late_data(spark, sf_dir):
         ev.filter(F.col("ts") < "2024-01-02 00:00:00")
         .withColumn("event_id", F.col("event_id") + 10_000_000)
     )
-    drop, schema = _drop_dir(spark, sf_dir, extra=late)
-    sdf = (
-        _read_stream(spark, drop, schema)
+    out = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("win"))
         .agg(F.count("*").alias("n"))
         .select(F.col("win.start").alias("win_start"), "n")
-    )
-    out = _run_to_memory(sdf, "append")
+    ), extra=late)
     return out.filter(F.col("win_start") < "2024-01-02 00:00:00").orderBy("win_start")
 
 
@@ -506,11 +541,11 @@ def stream_static_join(spark, sf_dir):
                                            F.col("user_id").asc())).alias("tier"),
         )
     )
-    drop, schema = _drop_dir(spark, sf_dir)
-    sdf = _read_stream(spark, drop, schema).join(F.broadcast(tiers), "user_id")
-    out = _run_to_memory(
-        sdf.select("event_id", "event_type", "tier"), "append"
-    )
+    out = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
+        .join(F.broadcast(tiers), "user_id")
+        .select("event_id", "event_type", "tier")
+    ))
     return (
         out.groupBy("tier", "event_type")
         .agg(F.count("*").alias("n"))
@@ -542,37 +577,37 @@ def stream_stream_join(spark, sf_dir):
     length (the classic unbounded-state footgun of unconstrained
     stream-stream joins). Deterministic here: both streams read the same
     time-ordered drop files, so watermarks advance in lockstep."""
-    drop, schema = _drop_dir(spark, sf_dir)
-    clicks = (
-        _read_stream(spark, drop, schema)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
+
+    def attributed(read) -> DataFrame:
+        clicks = (
+            read()
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("user_id").alias("c_user"),
+                F.col("event_id").alias("click_id"),
+                F.col("ts").alias("click_ts"),
+            )
+            .withWatermark("click_ts", "1 hour")
         )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        _read_stream(spark, drop, schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
+        purchases = (
+            read()
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                "user_id",
+                F.col("event_id").alias("purchase_id"),
+                F.col("ts").alias("purchase_ts"),
+            )
+            .withWatermark("purchase_ts", "1 hour")
         )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "c_user = user_id AND purchase_ts >= click_ts"
-            " AND purchase_ts <= click_ts + interval 30 minutes"
-        ),
-    )
-    out = _run_to_memory(
-        joined.select("user_id", "click_id", "purchase_id"), "append"
-    )
+        return clicks.join(
+            purchases,
+            F.expr(
+                "c_user = user_id AND purchase_ts >= click_ts"
+                " AND purchase_ts <= click_ts + interval 30 minutes"
+            ),
+        ).select("user_id", "click_id", "purchase_id")
+
+    out = _stream_to_memory(spark, sf_dir, "append", attributed)
     return (
         out.groupBy("user_id")
         .agg(F.count("*").alias("n_attributed"))
@@ -612,11 +647,10 @@ def stream_ohlc(spark, sf_dir):
     100 TB/day ingest. Batch/stream parity on the same input is the
     oracle: append-mode emission == watermark-gated batch SQL (same
     contract as every op in this module)."""
-    drop, schema = _drop_dir(spark, sf_dir)
     first = F.min(F.struct("ts", "event_id", "value"))["value"]
     last = F.max(F.struct("ts", "event_id", "value"))["value"]
-    sdf = (
-        _read_stream(spark, drop, schema)
+    out = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("win"))
         .agg(
@@ -634,8 +668,8 @@ def stream_ohlc(spark, sf_dir):
             "close",
             "n_events",
         )
-    )
-    return _run_to_memory(sdf, "append").orderBy("win_start")
+    ))
+    return out.orderBy("win_start")
 
 
 @query(
@@ -678,15 +712,13 @@ def stream_topk_per_window(spark, sf_dir):
     by."""
     from pyspark.sql import Window
 
-    drop, schema = _drop_dir(spark, sf_dir)
-    sdf = (
-        _read_stream(spark, drop, schema)
+    emitted = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "15 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("win.start").alias("win_start"), "event_type", "n")
-    )
-    emitted = _run_to_memory(sdf, "append")
+    ))
     w = Window.partitionBy("win_start").orderBy(
         F.col("n").desc(), F.col("event_type")
     )
@@ -743,18 +775,17 @@ def stream_anomaly_zscore(spark, sf_dir):
     integer power sums rendered to double (< 2^53, conversion exact);
     all z math is scalar IEEE. Zero-variance or single-window types
     score 0 by definition rather than dividing by zero."""
-    drop, schema = _drop_dir(spark, sf_dir)
-    sdf = (
-        _read_stream(spark, drop, schema)
+    emitted = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "15 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("win.start").alias("win_start"), "event_type", F.col("n").cast("long").alias("n"))
-    )
-    # the memory-sink view is consumed by two plan branches (stats + join);
+    ))
+    # the memory-sink rows are consumed by two plan branches (stats + join);
     # localCheckpoint gives them independent lineage (a MemoryPlan self-join
     # otherwise trips conflicting-reference resolution)
-    emitted = _run_to_memory(sdf, "append").localCheckpoint(eager=True)
+    emitted = emitted.localCheckpoint(eager=True)
     st = emitted.groupBy("event_type").agg(
         F.count("*").alias("nw"),
         F.sum("n").cast("double").alias("sn"),
@@ -808,15 +839,14 @@ def stream_content_dedup(spark, sf_dir):
     ev_dups = _dup_sample(spark, sf_dir).withColumn(
         "event_id", F.col("event_id") + 10_000_000
     )
-    drop, schema = _drop_dir(spark, sf_dir, extra=ev_dups)
-    deduped = (
-        _read_stream(spark, drop, schema)
+    out = _stream_to_memory(spark, sf_dir, "append", lambda read: (
+        read()
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(
             ["user_id", "ts", "event_type", "value", "props"]
         )
-    )
-    out = _run_to_memory(deduped.select("event_id", "event_type"), "append")
+        .select("event_id", "event_type")
+    ), extra=ev_dups)
     return out.groupBy("event_type").agg(F.count("*").alias("n")).orderBy("event_type")
 
 
@@ -853,50 +883,25 @@ def stream_checkpoint_resume(spark, sf_dir):
     redeployed job resumes without reprocessing — and without double
     counting what the dead run already committed."""
     ev = load_table(spark, sf_dir, "events")
-    drop = tempfile.mkdtemp(prefix="etl_stream_resume_")
-    slices = [
-        ev.filter(F.col("ts") < _CUTS[0]),
-        ev.filter((F.col("ts") >= _CUTS[0]) & (F.col("ts") < _CUTS[1])),
-        ev.filter(F.col("ts") >= _CUTS[1]),
-    ]
-    for i, s in enumerate(slices[:2]):
-        target = os.path.join(drop, f"data-{i:03d}.parquet")
-        _write_one_file(s, target)
-        os.utime(target, (1700000000 + i * 60, 1700000000 + i * 60))
-    warehouse = os.path.join(tempfile.mkdtemp(prefix="etl_wh_"), "events_resumed")
-    ckpt = tempfile.mkdtemp(prefix="etl_stream_ckpt_")
+    slices = _slices(ev)
     _RESUME_LEDGER.clear()
+    with scratch("etl_stream_resume_") as root:
+        drop, warehouse = os.path.join(root, "drop"), os.path.join(root, "wh")
 
-    def run(run_idx: int) -> None:
-        def merge(batch_df: DataFrame, batch_id: int) -> None:
-            _RESUME_LEDGER.append((run_idx, batch_id, batch_df.count()))
-            _upsert_batch(batch_df, batch_id, warehouse)
+        def run(run_idx: int) -> None:
+            def merge(batch_df: DataFrame, batch_id: int) -> None:
+                _RESUME_LEDGER.append((run_idx, batch_id, batch_df.count()))
+                _upsert_batch(batch_df, batch_id, warehouse)
 
-        q = (
-            _read_stream(spark, drop, schema=ev.schema)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+            stream = _read_stream(spark, drop, ev.schema)
+            _run(stream.writeStream.foreachBatch(merge), os.path.join(root, "ckpt"))
 
-    run(1)
-    target = os.path.join(drop, "data-002.parquet")
-    _write_one_file(slices[2], target)
-    os.utime(target, (1700000000 + 120, 1700000000 + 120))
-    run(2)
-    final = spark.read.parquet(warehouse)
-    out = (
-        final.groupBy("event_type").agg(F.count("*").alias("n")).orderBy("event_type")
-    )
-    # same corpus-sized reclamation as stream_restart_backlog_drain
-    # (this op predates the discipline; code-review r11 applied it here)
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(drop, ignore_errors=True)
-    shutil.rmtree(os.path.dirname(warehouse), ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        _land(drop, slices[:2])
+        run(1)
+        _land(drop, slices[2:], first=2)
+        run(2)
+        out = _type_counts(spark, warehouse)
+    return out.orderBy("event_type")
 
 
 @query(
@@ -944,25 +949,19 @@ def stream_progress_report(spark, sf_dir):
     mode); the report itself is batch-count-sized driver telemetry —
     this is the observability surface a 100 TB streaming deployment
     alarms on (rows/batch, state growth), not a data-plane operator."""
-    import json as _json
-
-    drop, schema = _drop_dir(spark, sf_dir)
-    sdf = _read_stream(spark, drop, schema)
-    agg = sdf.groupBy("event_type").agg(F.count("*").alias("n"))
-    ckpt = tempfile.mkdtemp(prefix="etl_stream_prog_")
-    q = (
-        agg.writeStream.format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ev = load_table(spark, sf_dir, "events")
+    with scratch("etl_stream_prog_") as root:
+        drop = os.path.join(root, "drop")
+        _land(drop, _slices(ev))
+        agg = _read_stream(spark, drop, ev.schema).groupBy("event_type").agg(
+            F.count("*").alias("n")
+        )
+        q = _run(
+            agg.writeStream.format("noop").outputMode("update"),
+            os.path.join(root, "ckpt"),
+        )
     rows = []
-    for p in q.recentProgress:
-        d = p if isinstance(p, dict) else _json.loads(p.json)
-        if int(d.get("numInputRows", 0)) <= 0:
-            continue  # trailing no-data commit batch
+    for d in _batches(q):
         st = (d.get("stateOperators") or [{}])[0]
         rows.append(
             (
@@ -972,8 +971,6 @@ def stream_progress_report(spark, sf_dir):
                 int(st.get("numRowsUpdated", 0)),
             )
         )
-    shutil.rmtree(drop, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "batch_id BIGINT, num_input_rows BIGINT,"
@@ -1038,7 +1035,6 @@ def stream_restart_backlog_drain(spark, sf_dir):
     drain is just another restart. Throttle knob transfers verbatim to
     Kafka (maxOffsetsPerTrigger) on a cluster."""
     ev = load_table(spark, sf_dir, "events")
-    drop = tempfile.mkdtemp(prefix="etl_stream_backlog_")
     pre_outage = ev.filter(F.col("ts") < _CUTS[0])
     bounds = (_CUTS[0], *_BACKLOG_CUTS, None)
     backlog = [
@@ -1048,64 +1044,37 @@ def stream_restart_backlog_drain(spark, sf_dir):
         )
         for i in range(len(bounds) - 1)
     ]
-    target = os.path.join(drop, "data-000.parquet")
-    _write_one_file(pre_outage, target)
-    os.utime(target, (1700000000, 1700000000))
-    warehouse = os.path.join(tempfile.mkdtemp(prefix="etl_wh_"), "events_drained")
-    ckpt = tempfile.mkdtemp(prefix="etl_stream_ckpt_")
     _BACKLOG_LEDGER.clear()
     _BACKLOG_ENGINE_LEDGER.clear()
+    with scratch("etl_stream_backlog_") as root:
+        drop, warehouse = os.path.join(root, "drop"), os.path.join(root, "wh")
 
-    def run(run_idx: int) -> None:
-        import json as _json
+        def run(run_idx: int) -> None:
+            def merge(batch_df: DataFrame, batch_id: int) -> None:
+                # persist: the ledger count and the upsert are two actions —
+                # unpersisted, each re-reads the micro-batch from the source
+                # (the engine's numInputRows honestly reported 2x the batch,
+                # which is how the round-13 telemetry pin CAUGHT this)
+                batch_df.persist()
+                try:
+                    _BACKLOG_LEDGER.append((run_idx, batch_id, batch_df.count()))
+                    _upsert_batch(batch_df, batch_id, warehouse)
+                finally:
+                    batch_df.unpersist()
 
-        def merge(batch_df: DataFrame, batch_id: int) -> None:
-            # persist: the ledger count and the upsert are two actions —
-            # unpersisted, each re-reads the micro-batch from the source
-            # (the engine's numInputRows honestly reported 2x the batch,
-            # which is how the round-13 telemetry pin CAUGHT this)
-            batch_df.persist()
-            try:
-                _BACKLOG_LEDGER.append((run_idx, batch_id, batch_df.count()))
-                _upsert_batch(batch_df, batch_id, warehouse)
-            finally:
-                batch_df.unpersist()
+            stream = _read_stream(spark, drop, ev.schema)
+            q = _run(stream.writeStream.foreachBatch(merge), os.path.join(root, "ckpt"))
+            # engine-side account of the drain (same harvest as
+            # stream_progress_report)
+            for d in _batches(q):
+                _BACKLOG_ENGINE_LEDGER.append(
+                    (run_idx, int(d["batchId"]), int(d["numInputRows"]))
+                )
 
-        q = (
-            _read_stream(spark, drop, schema=ev.schema)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # engine-side account of the drain (same harvest shape as
-        # stream_progress_report; trailing no-data commit batches skipped)
-        for p in q.recentProgress:
-            d = p if isinstance(p, dict) else _json.loads(p.json)
-            if int(d.get("numInputRows", 0)) <= 0:
-                continue
-            _BACKLOG_ENGINE_LEDGER.append(
-                (run_idx, int(d["batchId"]), int(d["numInputRows"]))
-            )
-
-    run(1)
-    # outage: the job is down while the whole backlog lands
-    for i, s in enumerate(backlog):
-        t = os.path.join(drop, f"data-{i + 1:03d}.parquet")
-        _write_one_file(s, t)
-        os.utime(t, (1700000000 + 60 * (i + 1), 1700000000 + 60 * (i + 1)))
-    run(2)
-    final = spark.read.parquet(warehouse)
-    out = (
-        final.groupBy("event_type").agg(F.count("*").alias("n")).orderBy("event_type")
-    )
-    # pin the event-type-sized result, then reclaim the two corpus-sized
-    # temp copies (drop dir + merged warehouse) and the checkpoint — at
-    # the 500x events tier each leaked pair is ~a full corpus on /tmp
-    # (code-review r11; same discipline as inc_subject_erasure)
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(drop, ignore_errors=True)
-    shutil.rmtree(os.path.dirname(warehouse), ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        _land(drop, [pre_outage])
+        run(1)
+        # outage: the job is down while the whole backlog lands
+        _land(drop, backlog, first=1)
+        run(2)
+        out = _type_counts(spark, warehouse)
+    return out.orderBy("event_type")

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import tempfile
 import uuid
 
 import duckdb
@@ -27,6 +29,14 @@ def spark_jobs(spark, fn):
             sc.setLocalProperty(prop, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def kept_scratch(prefix):
+    """``core.scratch`` without the removal: a test that inspects a query's
+    scratch files puts this in place of the query module's ``scratch`` and
+    removes the dir itself."""
+    yield tempfile.mkdtemp(prefix=prefix)
 
 
 @pytest.fixture(scope="session")

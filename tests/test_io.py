@@ -162,3 +162,17 @@ def test_data_files_lists_what_spark_reads(spark, tmp_path):
     assert [os.path.relpath(f.split(":", 1)[1], d) for f, _, _ in files] == names
     assert [n for _, n, _ in files] == [os.path.getsize(d / name) for name in names]
     assert io.data_files(spark, str(d / "a.parquet"))[0] == files[0]
+
+
+def test_scratch_removes_its_dir_and_memo_entries_when_the_block_raises(spark):
+    from etl_suite_spark.core import scratch
+
+    with pytest.raises(RuntimeError, match="mid-block"):
+        with scratch("etl_unit_") as root:
+            path = os.path.join(root, "t")
+            spark.range(3).write.parquet(path)
+            io.read_parquet(spark, path)
+            assert path in io._SCHEMAS
+            raise RuntimeError("mid-block")
+    assert not os.path.exists(root)
+    assert path not in io._SCHEMAS

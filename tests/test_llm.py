@@ -308,12 +308,12 @@ def test_data_mixture_respects_quota(spark):
     assert {r.source for r in rows} == srcs
 
 
-def test_corpus_pipeline_stage_accounting(spark):
+def test_corpus_pipeline_stage_accounting(spark, tmp_path):
     """Monotone row accounting through the pipeline; no near-dup pair
     survives; every chunk within size bounds."""
     from etl_suite_spark.llm.corpus import prepare_corpus
 
-    stages = prepare_corpus(spark, SF_DIR)
+    stages = prepare_corpus(spark, SF_DIR, str(tmp_path / "corpus"))
     n_in = stages["input"].count()
     n_exact = stages["exact_deduped"].count()
     n_near = stages["near_deduped"].count()

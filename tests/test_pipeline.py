@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import threading
 import time
 from types import SimpleNamespace
@@ -218,14 +217,6 @@ def test_watermark_is_zone_free_under_a_non_utc_process(spark, tick, new_york):
     assert read_watermark(state, "") == slice_max(files)
 
 
-def test_inc_batch_watermark_leaves_no_state_dir(spark, tmp_path, monkeypatch):
-    from etl_suite_spark.registry import QUERIES
-
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    assert QUERIES["inc_batch_watermark"](spark, SF_DIR).collect()
-    assert not list(tmp_path.glob("etl_wm_*"))
-
-
 def test_linear_dag_and_checkpointed_compilers_agree(spark, tmp_path):
     """A spec with a broadcast table join and a filter gives the same rows
     through the linear compiler, a one-stage DAG and the checkpointed
@@ -278,6 +269,19 @@ def test_checkpoints_recompute_after_a_source_rewrite(spark, tmp_path):
     got = sorted(run_dag_checkpointed(spark, str(sf), pipeline._DAG, ckpt).collect())
     assert sorted(pipeline._LAST_COMPUTED) == ["base", "hi", "lo", "out"]
     assert got == sorted(compile_dag(spark, str(sf), pipeline._DAG).collect())
+
+
+def test_warm_checkpointed_run_launches_no_job(spark, tmp_path):
+    """A warm run over an unchanged checkpoint root reads every stage
+    through the schema memo: no stage computes and no job is launched."""
+    ckpt = str(tmp_path / "ckpt")
+    run_dag_checkpointed(spark, SF_DIR, pipeline._DAG, ckpt)
+    out, jobs = spark_jobs(
+        spark, lambda: run_dag_checkpointed(spark, SF_DIR, pipeline._DAG, ckpt)
+    )
+    assert pipeline._LAST_COMPUTED == []
+    assert jobs == 0
+    assert sorted(out.collect()) == sorted(compile_dag(spark, SF_DIR, pipeline._DAG).collect())
 
 
 def test_checkpoints_recompute_after_the_watermark_advances(spark, tick, tmp_path):

@@ -201,7 +201,7 @@ def test_tombstone_audit_counts(spark):
     assert all(r["n_live"] + r["n_tombstoned"] == r["n_total"] for r in rows)
 
 
-def test_compact_cells_rewrites_only_affected_partitions(spark):
+def test_compact_cells_rewrites_only_affected_partitions(spark, monkeypatch):
     """llm_index_compact_cells: cells without dead rows keep their exact
     original files; cells with dead rows are rewritten and hold zero
     tombstoned ids afterward; audit n_after matches the rewritten
@@ -210,7 +210,9 @@ def test_compact_cells_rewrites_only_affected_partitions(spark):
 
     from etl_suite_spark.llm import similarity as sim
 
-    sim._KEEP_COMPACT_WH = True
+    from tests.conftest import kept_scratch
+
+    monkeypatch.setattr(sim, "scratch", kept_scratch)
     try:
         rows = {
             r["cell"]: r
@@ -248,7 +250,6 @@ def test_compact_cells_rewrites_only_affected_partitions(spark):
         )
         assert left == 0
     finally:
-        sim._KEEP_COMPACT_WH = False
         wh = sim._LAST_COMPACT_WH[0] if sim._LAST_COMPACT_WH else None
         if wh:
             shutil.rmtree(os.path.dirname(wh), ignore_errors=True)

@@ -522,7 +522,7 @@ def test_stream_checkpoint_resume_processes_only_new_files(spark):
     assert sum(out.values()) == n1 + n2 + n3
 
 
-def test_subject_erasure_rewrites_only_affected_buckets(spark):
+def test_subject_erasure_rewrites_only_affected_buckets(spark, monkeypatch):
     """inc_subject_erasure: untouched buckets keep their exact original
     files (names + mtimes); affected buckets are rewritten; the warehouse
     holds zero subject rows afterward."""
@@ -531,7 +531,9 @@ def test_subject_erasure_rewrites_only_affected_buckets(spark):
 
     from etl_suite_spark.plans import incremental as inc
 
-    inc._KEEP_ERASURE_WH = True  # keep the temp warehouse for inspection
+    from tests.conftest import kept_scratch
+
+    monkeypatch.setattr(inc, "scratch", kept_scratch)  # keep it for inspection
     try:
         rows = {
             r["bucket"]: r
@@ -570,7 +572,6 @@ def test_subject_erasure_rewrites_only_affected_buckets(spark):
             post = files(b) if os.path.isdir(d) else {}
             assert post != pre[f"bucket={b}"]
     finally:
-        inc._KEEP_ERASURE_WH = False
         if inc._LAST_ERASURE_WH:
             shutil.rmtree(
                 os.path.dirname(inc._LAST_ERASURE_WH[0]), ignore_errors=True
@@ -585,7 +586,6 @@ def test_subject_erasure_reclaims_warehouse(spark):
 
     from etl_suite_spark.plans import incremental as inc
 
-    assert inc._KEEP_ERASURE_WH is False
     df = QUERIES["inc_subject_erasure"](spark, SF_DIR)
     wh = inc._LAST_ERASURE_WH[0]
     assert not os.path.exists(os.path.dirname(wh))

@@ -294,7 +294,7 @@ def test_checkpoint_resume_midbatch_kill(spark):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_subject_export_prunes_to_subject_buckets(spark):
+def test_subject_export_prunes_to_subject_buckets(spark, monkeypatch):
     """inc_subject_export: the pruned scan's input files lie ONLY in
     subject buckets (partition pruning reached the directory listing),
     the export matches a direct full-scan computation, and the default
@@ -307,7 +307,9 @@ def test_subject_export_prunes_to_subject_buckets(spark):
     from etl_suite_spark.io import load_table
     from etl_suite_spark.plans import incremental as inc
 
-    inc._KEEP_EXPORT_WH = True
+    from conftest import kept_scratch
+
+    monkeypatch.setattr(inc, "scratch", kept_scratch)
     try:
         rows = {
             r["user_id"]: r
@@ -352,7 +354,7 @@ def test_subject_export_prunes_to_subject_buckets(spark):
             assert r["first_ts"] == direct[uid]["first_ts"]
             assert r["last_ts"] == direct[uid]["last_ts"]
     finally:
-        inc._KEEP_EXPORT_WH = False
+        monkeypatch.undo()
         if inc._LAST_EXPORT_WH:
             shutil.rmtree(
                 os.path.dirname(inc._LAST_EXPORT_WH[0]), ignore_errors=True

@@ -227,12 +227,51 @@ def test_zorder_files_disjoint_in_z(spark, tmp_path):
         assert r.a_back == r.o_custkey % 65536
 
 
-def test_roundtrip_scans_leave_no_temp_dir(spark, tmp_path, monkeypatch):
-    """Each roundtrip pins its read-back and removes its scratch dir."""
+# Every query that writes intermediate files. Each removes them before it
+# returns, drops any temporary view it made and leaves the session's
+# partition-overwrite mode as it found it.
+_SCRATCH_QUERIES = (
+    "stream_tumbling_agg", "stream_sliding_agg", "stream_session_window",
+    "stream_dedup", "stream_stateful_custom", "stream_late_data",
+    "stream_static_join", "stream_stream_join", "stream_ohlc",
+    "stream_topk_per_window", "stream_anomaly_zscore", "stream_content_dedup",
+    "pipeline_spec_stream", "stream_foreachbatch_upsert",
+    "stream_checkpoint_resume", "stream_restart_backlog_drain",
+    "stream_progress_report",
+    "scan_csv_roundtrip", "scan_json_roundtrip", "scan_orc_roundtrip",
+    "sink_parquet_partitioned", "scan_csv_badrecords",
+    "scan_parquet_schema_evolution", "scan_text_roundtrip",
+    "sink_sorted_layout", "sink_zorder_layout", "sink_compact_small_files",
+    "sink_overwrite_partition", "llm_lang_partition", "llm_corpus_pipeline",
+    "llm_index_compact_cells", "inc_subject_erasure", "inc_subject_export",
+    "inc_batch_watermark", "pipeline_dag_resume", "pipeline_run_report",
+)
+# Tests pin the plans of the lazy frames these two return, so their files
+# stay, under the process run root (removed at interpreter exit).
+_RUN_ROOT_QUERIES = {
+    "join_dpp_partition_pruned": "etl_dpp_",
+    "sink_bucketed_colocated_join": "etl_bucket_",
+}
+
+
+@pytest.mark.parametrize("name", [*_SCRATCH_QUERIES, *_RUN_ROOT_QUERIES])
+def test_scratch_queries_leave_nothing(spark, tmp_path, monkeypatch, name):
+    from etl_suite_spark.core import _mat_run_root
+
+    run_root = _mat_run_root()  # made before the temp dir moves
+    in_run_root = set(os.listdir(run_root))
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(mode)
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    views = temp_views()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    for name in ("scan_csv_roundtrip", "scan_json_roundtrip", "scan_orc_roundtrip",
-                 "sink_parquet_partitioned"):
-        assert QUERIES[name](spark, SF_DIR).collect(), name
-    left = [p.name for pat in ("etl_csv_*", "etl_json_*", "etl_orc_*", "etl_part_*")
-            for p in tmp_path.glob(pat)]
-    assert left == []
+    QUERIES[name](spark, SF_DIR).collect()
+    assert [p.name for p in tmp_path.iterdir()] == []
+    assert temp_views() == views
+    assert spark.conf.get(mode) == before
+    if name in _RUN_ROOT_QUERIES:
+        new = set(os.listdir(run_root)) - in_run_root
+        assert sum(n.startswith(_RUN_ROOT_QUERIES[name]) for n in new) == 1

@@ -23,22 +23,22 @@ import argparse
 import json
 import os
 import sys
-import tempfile
 import time
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_suite_spark.core import scratch  # noqa: E402
+from etl_suite_spark.io import load_table  # noqa: E402
 from etl_suite_spark.session import get_spark  # noqa: E402
 from etl_suite_spark.streaming.ops import (  # noqa: E402
-    _STATE_SCHEMA,
-    _STATEFUL_OUT,
-    _drop_dir,
+    _land,
     _read_stream,
-    _running_counters,
+    _run,
+    _running_counters_stream,
+    _slices,
 )
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: E402
 
 
 def run_once(spark, sf_dir: str, partitions: int, provider: str | None) -> dict:
@@ -52,36 +52,24 @@ def run_once(spark, sf_dir: str, partitions: int, provider: str | None) -> dict:
             spark.conf.set(
                 "spark.sql.streaming.stateStore.providerClass", provider
             )
-        drop, schema = _drop_dir(spark, sf_dir)
-        sdf = (
-            _read_stream(spark, drop, schema)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _running_counters,
-                outputStructType=_STATEFUL_OUT,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
+        ev = load_table(spark, sf_dir, "events")
         name = "p" + uuid.uuid4().hex[:12]
-        ckpt = tempfile.mkdtemp(prefix="etl_profile_ckpt_")
-        t0 = time.perf_counter()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # drive the same downstream agg the registered query runs
-        spark.table(name).groupBy("user_id").agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("sum_value", "n_events").alias("sum_value"),
-        ).orderBy("user_id").collect()
-        wall = round(time.perf_counter() - t0, 3)
+        # stream_stateful_custom's run, spelled out to keep the query's
+        # progress records (the op itself returns only the sink's rows)
+        with scratch("etl_profile_") as root:
+            drop = os.path.join(root, "drop")
+            _land(drop, _slices(ev))
+            sdf = _running_counters_stream(lambda: _read_stream(spark, drop, ev.schema))
+            t0 = time.perf_counter()
+            writer = sdf.writeStream.format("memory").queryName(name).outputMode("update")
+            q = _run(writer, os.path.join(root, "ckpt"))
+            # drive the same downstream agg the registered query runs
+            spark.table(name).groupBy("user_id").agg(
+                F.max("n_events").alias("n_events"),
+                F.max_by("sum_value", "n_events").alias("sum_value"),
+            ).orderBy("user_id").collect()
+            wall = round(time.perf_counter() - t0, 3)
+        spark.catalog.dropTempView(name)
         batches = []
         for p in q.recentProgress:
             batches.append(
