@@ -199,16 +199,20 @@ def scratch(prefix: str):
         forget_schemas(root)
 
 
-def mat_path(token: str) -> str:
-    """Deterministic per-process cache dir for :func:`materialize_once`."""
+def run_root_path(prefix: str, key: str) -> str:
+    """``<run root>/<prefix><sha1(key)[:12]>``: one deterministic path per
+    ``key`` within this process, removed with the run root at exit."""
     import hashlib
     import os
 
-    return os.path.join(
-        _mat_run_root(),
-        "etl_mat_" + hashlib.sha1(token.encode()).hexdigest()[:12],
-        "data",
-    )
+    return os.path.join(_mat_run_root(), prefix + hashlib.sha1(key.encode()).hexdigest()[:12])
+
+
+def mat_path(token: str) -> str:
+    """Deterministic per-process cache dir for :func:`materialize_once`."""
+    import os
+
+    return os.path.join(run_root_path("etl_mat_", token), "data")
 
 
 def mat_exists(token: str) -> bool:

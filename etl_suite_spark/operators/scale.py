@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame
@@ -85,6 +86,11 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
+# Name prefixes of sink_bucketed_colocated_join's two catalog tables.
+_BUCKETED = ("orders_b_", "lineitem_b_")
+_BUCKETED_LOCK = threading.Lock()
+
+
 @query(
     "sink_bucketed_colocated_join",
     oracle="""
@@ -99,24 +105,31 @@ def sink_bucketed_colocated_join(spark, sf_dir):
     test_plans.py). At 100 TB this converts the biggest recurring shuffle
     (fact⋈fact on orderkey) into a local merge per bucket. The returned
     frame stays lazy for that plan check, so the tables' files live under
-    the process run root (``core._mat_run_root``, removed at exit)."""
+    the process run root (``core._mat_run_root``, removed at exit). Each
+    call first drops the pair of catalog tables an earlier call registered:
+    a returned frame has already resolved its tables, so it still runs, and
+    the catalog holds at most one pair."""
     root = tempfile.mkdtemp(prefix="etl_bucket_", dir=_mat_run_root())
     suffix = uuid.uuid4().hex[:8]
-    o_name, l_name = f"orders_b_{suffix}", f"lineitem_b_{suffix}"
+    o_name, l_name = (prefix + suffix for prefix in _BUCKETED)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
-    write_bucketed(o, o_name, "o_orderkey", path=os.path.join(root, "o"))
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"),
-        l_name,
-        "o_orderkey",
-        path=os.path.join(root, "l"),
-    )
-    ob, lb = spark.table(o_name), spark.table(l_name)
+    with _BUCKETED_LOCK:  # a concurrent call must not drop tables before they resolve
+        for t in spark.catalog.listTables(pattern="|".join(p + "*" for p in _BUCKETED)):
+            if not t.isTemporary:
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+        write_bucketed(o, o_name, "o_orderkey", path=os.path.join(root, "o"))
+        write_bucketed(
+            li.withColumnRenamed("l_orderkey", "o_orderkey"),
+            l_name,
+            "o_orderkey",
+            path=os.path.join(root, "l"),
+        )
+        ob, lb = spark.table(o_name), spark.table(l_name)
     return (
         ob.join(lb, "o_orderkey")
         .groupBy("o_orderkey")

@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..core import log_once, observed, scratch
+from ..core import log_once, observed, run_root_path, scratch
 from ..io import data_files, load_table, read_parquet, table_path
 from ..registry import query
 from .incremental import (
@@ -253,15 +253,7 @@ def pipeline_sink_jdbc(spark, sf_dir):
     against ClickHouse-JDBC/MySQL only url+driver change), read back and
     oracle-checked — the load path itself is correctness-gated, not just
     the transform."""
-    import hashlib as _hashlib
-    import os as _os
-    import tempfile as _tempfile
-
-    db = _os.path.join(
-        _tempfile.gettempdir(),
-        "etl_sinkjdbc_" + _hashlib.sha1(sf_dir.encode()).hexdigest()[:12],
-    )
-    url = f"jdbc:derby:{db};create=true"
+    url = f"jdbc:derby:{run_root_path('etl_sinkjdbc_', sf_dir)};create=true"
     spec = dict(_SPEC)
     spec["sink"] = {
         "format": "jdbc",

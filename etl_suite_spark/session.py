@@ -8,6 +8,24 @@ Scale notes (100 TB design): AQE on for runtime shuffle coalescing and skew
 splitting; shuffle partitions sized for local mode here but meant to be
 overridden (``spark.sql.shuffle.partitions``) cluster-side; UTC session TZ
 so timestamp semantics match across engines and clusters.
+
+Deployment builder confs. Two static confs in ``get_spark`` cut per-operation
+driver cost; being static, ``configure`` cannot apply them to a session built
+elsewhere, so a deployment sets them on its own builder (or spark-submit):
+
+- ``spark.sql.codegen.cache.maxEntries=1000`` (default 100). The codegen
+  cache is split into 4 LRU segments of ~25 entries; the six-query perfbench
+  mix alone generates 95 classes at sf0.01, so each warm pass recompiled
+  32–56 classes with byte-identical source, and a recompiled class runs
+  interpreted until the JIT catches up. At 1000 a warm pass compiles none.
+- ``spark.python.sql.dataFrameDebugging.enabled=false`` (default true). The
+  PySpark DataFrame-debugging wrapper adds ~8 py4j round trips and a Python
+  stack walk to every ``Column`` method; off, building ``agg_group_basic``
+  takes ~200 round trips instead of 760. The cost: analysis errors no longer
+  carry PySpark's Python call site in their DataFrame query context.
+
+``tools/driver_sim.py`` builds its own session and keeps Spark's defaults on
+purpose, so correctness is still checked under a driver-built session.
 """
 
 from __future__ import annotations
@@ -70,6 +88,9 @@ def get_spark(app_name: str = "etl-suite-spark", shuffle_partitions: int | None 
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # deployment builder confs (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     return configure(spark)

@@ -8,14 +8,13 @@ partitioned parquet sink that enables partition pruning downstream.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core import _mat_run_root, d2d, dec, scratch
+from ..core import _mat_run_root, d2d, dec, run_root_path, scratch
 from ..io import load_table, table_path
 from ..registry import query
 
@@ -154,11 +153,7 @@ def scan_jdbc(spark, sf_dir):
     OLTP-dimension extract feeding broadcast joins; bound numPartitions by
     what the source DB tolerates, not by cluster size.
     """
-    db = os.path.join(
-        tempfile.gettempdir(),
-        "etl_jdbc_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:12],
-    )
-    url = f"jdbc:derby:{db};create=true"
+    url = f"jdbc:derby:{run_root_path('etl_jdbc_', sf_dir)};create=true"
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -246,17 +246,21 @@ _SCRATCH_QUERIES = (
     "llm_index_compact_cells", "inc_subject_erasure", "inc_subject_export",
     "inc_batch_watermark", "pipeline_dag_resume", "pipeline_run_report",
 )
-# Tests pin the plans of the lazy frames these two return, so their files
-# stay, under the process run root (removed at interpreter exit).
+# These keep their files under the process run root (removed at interpreter
+# exit): tests pin the plans of the lazy frames the first two return, and
+# the Derby databases of the JDBC pair are one per sf_dir, made by the
+# first call in a process and reused by later ones.
 _RUN_ROOT_QUERIES = {
     "join_dpp_partition_pruned": "etl_dpp_",
     "sink_bucketed_colocated_join": "etl_bucket_",
+    "scan_jdbc": "etl_jdbc_",
+    "pipeline_sink_jdbc": "etl_sinkjdbc_",
 }
 
 
 @pytest.mark.parametrize("name", [*_SCRATCH_QUERIES, *_RUN_ROOT_QUERIES])
 def test_scratch_queries_leave_nothing(spark, tmp_path, monkeypatch, name):
-    from etl_suite_spark.core import _mat_run_root
+    from etl_suite_spark.core import _mat_run_root, run_root_path
 
     run_root = _mat_run_root()  # made before the temp dir moves
     in_run_root = set(os.listdir(run_root))
@@ -273,5 +277,25 @@ def test_scratch_queries_leave_nothing(spark, tmp_path, monkeypatch, name):
     assert temp_views() == views
     assert spark.conf.get(mode) == before
     if name in _RUN_ROOT_QUERIES:
-        new = set(os.listdir(run_root)) - in_run_root
-        assert sum(n.startswith(_RUN_ROOT_QUERIES[name]) for n in new) == 1
+        prefix = _RUN_ROOT_QUERIES[name]
+        after = {n for n in os.listdir(run_root) if n.startswith(prefix)}
+        if name.endswith("jdbc"):
+            db = os.path.basename(run_root_path(prefix, SF_DIR))
+            assert db in after and after - in_run_root <= {db}
+        else:
+            assert len(after - in_run_root) == 1
+
+
+def test_bucketed_join_keeps_one_table_pair(spark):
+    """Each call drops the previous call's two bucketed catalog tables; the
+    frame the previous call returned still runs, with the same rows."""
+    q = QUERIES["sink_bucketed_colocated_join"]
+    first = q(spark, SF_DIR)
+    second = q(spark, SF_DIR)
+    names = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith(("orders_b_", "lineitem_b_"))
+    ]
+    assert len(names) <= 2
+    assert first.collect() == second.collect()
