@@ -208,6 +208,21 @@ def run_root_path(prefix: str, key: str) -> str:
     return os.path.join(_mat_run_root(), prefix + hashlib.sha1(key.encode()).hexdigest()[:12])
 
 
+def derby_url(spark, prefix: str, key: str) -> str:
+    """The JDBC URL of an embedded-Derby database at
+    ``run_root_path(prefix, key)``. Derby writes its error log to
+    ``derby.stream.error.file``, ``derby.log`` in the working directory by
+    default, when it first boots in the JVM; unless the caller has set that
+    property, it is pointed under the run root first, so the log goes with
+    the database at exit."""
+    import os
+
+    system = spark._jvm.java.lang.System
+    if system.getProperty("derby.stream.error.file") is None:
+        system.setProperty("derby.stream.error.file", os.path.join(_mat_run_root(), "derby.log"))
+    return f"jdbc:derby:{run_root_path(prefix, key)};create=true"
+
+
 def mat_path(token: str) -> str:
     """Deterministic per-process cache dir for :func:`materialize_once`."""
     import os

@@ -20,11 +20,17 @@ per path, replaced when its key changes. Three cases fall back to plain
 inference and store nothing: subdirectories (``k=v`` partition inference, or
 files below the top level), a ``_metadata``/``_common_metadata`` summary
 file, and ``spark.sql.parquet.mergeSchema=true``.
+
+The memo's listing (``flat_files``) also serves an incremental tick, which
+reads a subset of it (``load_files``): one ``DataFrameReader.parquet`` of
+the listed files with the schema the whole path's read has, so one listing
+gives both the key and the files, and a warm read runs no inference job.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
@@ -88,20 +94,37 @@ def _hadoop(spark: SparkSession, path: str):
     return root.getFileSystem(spark._jsc.hadoopConfiguration()), root
 
 
-def _listing(spark: SparkSession, fs, root):
+# The part of Hadoop's ``FileStatus.toString`` a listing reads. The path is
+# matched greedily, so the fields that follow it are the status's own.
+_STATUS = re.compile(
+    r"\{path=(.*); isDirectory=(true|false)"
+    r"(?:; length=(\d+); replication=\d+; blocksize=\d+)?"
+    r"; modification_time=(\d+); access_time=",
+    re.DOTALL,
+)
+
+
+def _listing(spark: SparkSession, fs, root) -> list[tuple[str, bool, int, int]]:
     """One Hadoop listing of ``root`` (``root`` itself if it is a file): the
-    JVM ``FileStatus`` array and the sorted (full path, array index) of the
-    entries Spark's file index keeps. The names arrive as one NUL-joined
-    string, so the py4j round trips do not grow with the entry count."""
-    gateway = spark._jvm._gateway_client
+    sorted (full path, is directory, length, modification time) of the
+    entries Spark's file index keeps. The statuses arrive as one NUL-joined
+    string of their ``toString``, so the py4j round trips do not grow with
+    the entry count; a status that does not parse raises ValueError."""
     statuses = fs.listStatus(root)
-    paths = JavaClass("org.apache.hadoop.fs.FileUtil", gateway).stat2Paths(statuses)
-    seq = JavaClass("scala.collection.immutable.ArraySeq", gateway).unsafeWrapArray(paths)
-    joined = seq.mkString("\0")
-    names = joined.split("\0") if joined else []
-    if len(names) != len(statuses):
+    seq = JavaClass("scala.collection.immutable.ArraySeq", spark._jvm._gateway_client)
+    joined = seq.unsafeWrapArray(statuses).mkString("\0")
+    shown = joined.split("\0") if joined else []
+    if len(shown) != len(statuses):
         raise ValueError(f"a name under {root.toString()} holds a NUL")
-    return statuses, sorted((n, i) for i, n in enumerate(names) if _listed(n.rpartition("/")[2]))
+    entries = []
+    for status in shown:
+        m = _STATUS.search(status)
+        if m is None:
+            raise ValueError(f"unparsed file status {status!r}")
+        full, is_dir, length, mtime = m.groups()
+        if _listed(full.rpartition("/")[2]):
+            entries.append((full, is_dir == "true", int(length or 0), int(mtime)))
+    return sorted(entries)
 
 
 def data_files(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
@@ -109,54 +132,64 @@ def data_files(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
     read of ``path`` lists: ``path`` itself if it is a file, else the files
     below it, recursively, filtered as Spark filters them. Hadoop
     FileSystem listings only (no Spark job), so it is FS-agnostic and safe
-    at plan-construction time; it costs a few py4j round trips per file."""
-    fs, root = _hadoop(spark, path)
+    at plan-construction time; it costs a few py4j round trips per
+    directory."""
 
-    def walk(p):
-        statuses, entries = _listing(spark, fs, p)
-        for full, i in entries:
-            st = statuses[i]
-            if st.isDirectory():
-                yield from walk(st.getPath())
+    def walk(p: str):
+        for full, is_dir, length, mtime in _listing(spark, *_hadoop(spark, p)):
+            if is_dir:
+                yield from walk(full)
             else:
-                yield full, st.getLen(), st.getModificationTime()
+                yield full, length, mtime
 
-    return sorted(walk(root))
+    return sorted(walk(path))
 
 
-def _schema_key(spark: SparkSession, path: str) -> tuple | None:
-    """The memo key of ``path`` (module docstring), or None when inference
-    may read more than the first data file, or the listing fails. Its py4j
-    cost does not grow with the number of files."""
+def flat_files(spark: SparkSession, path: str) -> list[tuple[str, int, int]] | None:
+    """The sorted (path, length, modification time) of the data files of a
+    flat parquet ``path``, from one Hadoop listing, or None when a read must
+    go through Spark's own inference and file index: ``mergeSchema``,
+    subdirectories (``k=v`` partition columns, nested files), a summary
+    file, an empty listing or one that fails. It is the memo's gate and key
+    source, and an incremental tick's record of the files it consumed."""
     if spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
         return None
     try:
         fs, root = _hadoop(spark, path)
         if fs.getContentSummary(root).getDirectoryCount() > 1:
             return None  # subdirectories: partition inference, nested files
-        statuses, entries = _listing(spark, fs, root)
+        entries = _listing(spark, fs, root)
     except (Py4JJavaError, ValueError):  # e.g. a missing path: the plain read raises
         return None
-    if not entries or any(n.rpartition("/")[2].startswith(_SUMMARY_FILES) for n, _ in entries):
+    if not entries or any(full.rpartition("/")[2].startswith(_SUMMARY_FILES) for full, *_ in entries):
         return None
-    first, i = entries[0]
-    st = statuses[i]
-    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
-    return (first, st.getLen(), st.getModificationTime()), confs
+    return [(full, length, mtime) for full, _, length, mtime in entries]
+
+
+def _read(spark: SparkSession, path: str, listing, files) -> DataFrame:
+    """One ``DataFrameReader.parquet`` of ``files`` (all of ``path`` when
+    None), a subset of ``listing`` (``flat_files(spark, path)``), with the
+    schema a read of ``path`` infers. A hit passes the memoized schema; a
+    miss infers it from ``files`` when they start with the listing's first
+    file (the one inference opens), else from ``path``, and stores it."""
+    paths = [path] if files is None else [full for full, _, _ in files]
+    if listing is None:
+        return spark.read.parquet(*paths)
+    key = listing[0], tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(*paths)
+    same = files is None or files[:1] == listing[:1]
+    df = spark.read.parquet(*paths) if same else spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df if same else spark.read.schema(df.schema).parquet(*paths)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` through the schema memo: a hit passes the
     memoized schema and launches no inference job; a miss infers as usual
     and stores the schema when the layout has a key (module docstring)."""
-    key = _schema_key(spark, path)
-    hit = _SCHEMAS.get(path)
-    if key is not None and hit is not None and hit[0] == key:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    if key is not None:
-        _SCHEMAS[path] = (key, df.schema)
-    return df
+    return _read(spark, path, flat_files(spark, path), None)
 
 
 def forget_schemas(root: str) -> None:
@@ -175,9 +208,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path, the (path, length, mtime) of its first data file and the parquet
     type-mapping confs; subdirectories (``k=v`` partitions), summary files
     and ``mergeSchema`` fall back to plain inference. A hit holds the real
-    inferred schema, so the ``events.ts`` dispatch below is unchanged."""
+    inferred schema, so the ``events.ts`` dispatch is unchanged."""
+    return load_files(spark, sf_dir, name, flat_files(spark, table_path(sf_dir, name)), None)
+
+
+def load_files(spark: SparkSession, sf_dir: str, name: str, listing, files) -> DataFrame:
+    """:func:`load_table` over ``files``, a subset of the table's
+    ``listing`` (``flat_files``; all of the table when ``files`` is None),
+    as one parquet read with the schema the whole table's read has."""
     configure(spark)
-    df = read_parquet(spark, table_path(sf_dir, name))
+    df = _read(spark, table_path(sf_dir, name), listing, files)
     if name == "events":
         # ts is parquet TIMESTAMP(NANOS). How Spark surfaces it varies by
         # version/conf: either TIMESTAMP_NTZ (Spark 4.1 default: ns

@@ -6,11 +6,23 @@ stores the last-processed timestamp, extracts only ``[watermark, now)`` on
 the next tick, and reloads idempotently (SURVEY §0.1 [K]). Re-expressed
 Spark-first:
 
-- the watermark is a tiny JSON state file next to the sink (on a cluster:
-  object storage), read driver-side before planning;
+- the state is a tiny JSON file next to the sink (on a cluster: object
+  storage), read driver-side before planning and replaced whole with a
+  write-then-rename: ``{"watermark": ..., "files": [[path, length, mtime],
+  ...]}``. ``files`` is the listing of the source the last tick took, the
+  way Spark's ``FileStreamSource`` logs the files it has consumed. A state
+  without it (written before the record existed), or with the empty one
+  ``advance_watermark`` writes, consumed nothing;
+- a tick lists its source table once (``tick_listing``) and reads only the
+  listed files not in the record, so its cost follows the new data, not
+  the history. A file is known by (path, length, mtime), so one rewritten
+  in place is read again. A source with subdirectories has no flat listing
+  and is read whole;
 - the extract injects ``ts > watermark`` *before* the scan, so Catalyst
   pushes it into the parquet reader and row-group min/max statistics skip
-  everything already processed — the whole point at 100 TB;
+  what an unconsumed file holds at or below the watermark. The file skip
+  is exact: after a tick every row of each recorded file is at or below
+  the new watermark, so a skipped file holds no row the filter would keep;
 - idempotency comes from delete-or-overwrite of the affected window plus
   the ``dedup_by_key_latest`` idiom, not from fragile exactly-once sinks.
 """
@@ -25,7 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core import SUBJECT_RESIDUE, d2d, dsum, scratch, sql_dsum
-from ..io import load_table
+from ..io import flat_files, load_files, load_table, table_path
 from ..registry import query
 
 
@@ -36,28 +48,77 @@ DEFAULT_WATERMARK = "1970-01-01 00:00:00"
 _WATERMARK_FORMAT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
-def read_watermark(state_path: str, default: str) -> str:
-    """Read the saved watermark (ISO timestamp string) or ``default``."""
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            return json.load(f)["watermark"]
-    return default
+def read_state(state_path: str, default: str) -> tuple[str, set]:
+    """The saved watermark (or ``default``) and the set of (path, length,
+    mtime) files earlier ticks consumed; a state with no ``"files"`` key
+    consumed none."""
+    if not os.path.exists(state_path):
+        return default, set()
+    with open(state_path) as f:
+        state = json.load(f)
+    return state["watermark"], {tuple(entry) for entry in state.get("files", ())}
 
 
-def advance_watermark(state_path: str, new_watermark: str) -> None:
-    """Persist the new watermark atomically (write-then-rename)."""
+def write_state(state_path: str, watermark: str, files) -> None:
+    """Persist the watermark and the consumed files atomically
+    (write-then-rename)."""
     tmp = state_path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"watermark": new_watermark}, f)
+        json.dump({"watermark": watermark, "files": list(files)}, f)
     os.replace(tmp, state_path)
 
 
-def past_watermark(df: DataFrame, watermark_col: str, state_path: str, default: str) -> DataFrame:
-    """The one watermark filter: rows of ``df`` past the saved watermark.
-    Attach it directly above the scan so it reaches the parquet reader as
-    a pushed predicate (verified in test_plans.py)."""
-    wm = read_watermark(state_path, default)
-    return df.filter(F.col(watermark_col) > F.to_timestamp(F.lit(wm)))
+def read_watermark(state_path: str, default: str) -> str:
+    """Read the saved watermark (ISO timestamp string) or ``default``."""
+    return read_state(state_path, default)[0]
+
+
+def advance_watermark(state_path: str, new_watermark: str) -> None:
+    """Set the watermark and clear the consumed-file record, so the next
+    tick reads every file of its source past the new watermark."""
+    write_state(state_path, new_watermark, ())
+
+
+def tick_listing(spark: SparkSession, sf_dir: str, spec: dict) -> list | None:
+    """The one listing a tick takes of its incremental table source
+    (``io.flat_files``): its reads and its record both come from it. None
+    without an ``incremental`` block, for a stage source, and for a layout
+    Spark's file index must read (subdirectories, so ``k=v`` partition
+    columns, and the schema memo's other fallbacks)."""
+    source = spec["source"]
+    if not spec.get("incremental") or "table" not in source:
+        return None
+    return flat_files(spark, table_path(sf_dir, source["table"]))
+
+
+def extract(spark: SparkSession, sf_dir: str, spec: dict, listing, resolve) -> DataFrame:
+    """The one incremental extract: rows past the saved watermark from the
+    files of the tick's ``listing`` (taken here when None) that no earlier
+    tick consumed, read as one parquet read through the schema memo. A
+    source with no listing is read whole by ``resolve(source)``. The filter
+    sits directly above the scan, so it reaches the parquet reader as a
+    pushed predicate (verified in test_plans.py)."""
+    inc = spec["incremental"]
+    wm, consumed = read_state(inc["state_path"], inc.get("default", DEFAULT_WATERMARK))
+    source = spec["source"]
+    if listing is None:
+        listing = tick_listing(spark, sf_dir, spec)
+    if listing is None:
+        df = resolve(source)
+    else:
+        fresh = [entry for entry in listing if entry not in consumed]
+        df = load_files(spark, sf_dir, source["table"], listing, fresh)
+    return df.filter(F.col(inc["watermark_col"]) > F.to_timestamp(F.lit(wm)))
+
+
+def record_tick(inc: dict, hi: str | None, listing) -> None:
+    """Store a finished tick: the new watermark ``hi`` (the old one when the
+    slice was empty) with every file of its listing. Each row of those files
+    is now at or below the watermark, so the next tick skips them; a file
+    that landed after the listing is not in it and is read next tick."""
+    state_path = inc["state_path"]
+    wm = hi if hi is not None else read_watermark(state_path, inc.get("default", DEFAULT_WATERMARK))
+    write_state(state_path, wm, listing or ())
 
 
 def encoded_max(watermark_col: str) -> Column:
@@ -71,6 +132,18 @@ def slice_max(df: DataFrame, watermark_col: str) -> str | None:
     return df.agg(encoded_max(watermark_col)).collect()[0]["hi"]
 
 
+def _table_spec(table: str, state_path: str, watermark_col: str, default: str) -> dict:
+    return {
+        "source": {"table": table},
+        "incremental": {"watermark_col": watermark_col, "state_path": state_path, "default": default},
+    }
+
+
+def _whole(spark: SparkSession, sf_dir: str):
+    """Read a table source whole (one with no flat listing)."""
+    return lambda source: load_table(spark, sf_dir, source["table"])
+
+
 def incremental_extract(
     spark: SparkSession,
     sf_dir: str,
@@ -79,12 +152,14 @@ def incremental_extract(
     watermark_col: str = "ts",
     default: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """Extract only rows newer than the saved watermark.
+    """Extract only rows newer than the saved watermark, from the files no
+    earlier tick consumed (:func:`extract`).
 
     The filter is attached directly above the scan, so an incremental tick
     over a 100 TB event log reads only the new row groups.
     """
-    return past_watermark(load_table(spark, sf_dir, table), watermark_col, state_path, default)
+    spec = _table_spec(table, state_path, watermark_col, default)
+    return extract(spark, sf_dir, spec, None, _whole(spark, sf_dir))
 
 
 def run_incremental_tick(
@@ -97,19 +172,19 @@ def run_incremental_tick(
 ) -> DataFrame:
     """One scheduler tick: extract past the watermark, advance, transform.
 
-    Returns the transformed frame; the caller sinks it. The watermark
-    advances to the slice's max BEFORE the caller sinks, so a crash in
-    between leaves that window behind the watermark, never sunk; it is
-    the only tick that does (``pipeline.run_pipeline`` advances after its
-    sink). A tick with no new data leaves the watermark unchanged.
+    Returns the transformed frame; the caller sinks it. The frame reads
+    exactly the files this tick listed. The watermark and that file record
+    advance to the slice's max BEFORE the caller sinks, so a crash in
+    between leaves that window behind the watermark, never sunk; it is the
+    only tick that does (``pipeline.run_pipeline`` records after its sink).
+    A tick with no new data leaves the watermark unchanged.
     """
-    inc = incremental_extract(
-        spark, sf_dir, "events", state_path, watermark_col, default
-    )
+    spec = _table_spec("events", state_path, watermark_col, default)
+    listing = tick_listing(spark, sf_dir, spec)
+    inc = extract(spark, sf_dir, spec, listing, _whole(spark, sf_dir))
     hi = slice_max(inc, watermark_col)
     out = transform(inc)
-    if hi is not None:
-        advance_watermark(state_path, hi)
+    record_tick(spec["incremental"], hi, listing)
     return out
 
 

@@ -27,23 +27,29 @@ column pruning back to the scan). Nothing executes until the sink runs.
 
 The incremental block injects ``watermark_col > saved_watermark`` directly
 above the source scan (pushdown → row-group skipping), exactly like the
-reference's checkpoint-window extraction.
+reference's checkpoint-window extraction. A table source is read from the
+files no earlier tick consumed (``incremental.extract``), so a tick does not
+reopen the source's history; one with subdirectories is read whole.
 
 The linear, DAG and checkpointed compilers share one stage builder
-(``_build_stage``: source → incremental filter → transforms, every table or
+(``_build_stage``: source → incremental extract → transforms, every table or
 stage reference through one resolver); a linear spec is a one-stage build
 and both DAG paths take one memoized, cycle-checked walk (``_walk_dag``).
 
-``run_pipeline`` then advances the watermark to the max ``watermark_col``
-of that slice. With a sink, the max is observed inside the sink's own job
-(``observe()`` directly above the watermark filter, before any transform),
-so a tick reads the source once and runs no separate max job, and the
-watermark covers exactly the rows the sink consumed. A second compile plus
-an aggregate job remains the fallback when the spec has no sink, when it
-has a ``limit`` transform (the observation would only see the rows the
-limit let through), and when the observation is missing or empty. Adaptive
-execution leaves it empty when it prunes the observed operator from the
-final plan: an empty slice, or an inner join against an empty table.
+``run_pipeline`` lists the source once per tick, compiles over the
+unconsumed files of that listing, and after the sink records the listing
+with the new watermark, the max ``watermark_col`` of that slice. With a
+sink, the max is observed inside the sink's own job (``observe()``
+directly above the watermark filter, before any transform), so a tick
+reads the source once and runs no separate max job, and the watermark
+covers exactly the rows the sink consumed. A second compile plus an
+aggregate job over the same files remains the fallback when the spec has
+no sink, when it has a ``limit`` transform (the observation would only see
+the rows the limit let through), and when the observation is missing or
+empty. Adaptive execution leaves it empty when it prunes the observed
+operator from the final plan: an empty slice, or an inner join against an
+empty table. Either way a file that lands mid-tick is neither counted nor
+recorded, so the next tick reads it.
 """
 
 from __future__ import annotations
@@ -51,23 +57,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..core import log_once, observed, run_root_path, scratch
+from ..core import derby_url, log_once, observed, scratch
 from ..io import data_files, load_table, read_parquet, table_path
 from ..registry import query
 from .incremental import (
     DEFAULT_WATERMARK,
-    advance_watermark,
     encoded_max,
-    past_watermark,
+    extract,
     read_watermark,
+    record_tick,
     slice_max,
+    tick_listing,
 )
 
 
-def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, observation) -> DataFrame:
-    """The one stage builder: source → incremental filter (plus
+def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, observation, listing) -> DataFrame:
+    """The one stage builder: source → incremental extract (plus
     ``observation`` of the encoded max right above it) → transforms.
-    ``up`` is a DAG walk's upstream lookup, None for a linear spec."""
+    ``up`` is a DAG walk's upstream lookup, None for a linear spec.
+    ``listing`` is the tick's listing of an incremental table source
+    (``incremental.tick_listing``); the extract takes it when None."""
 
     def resolve(ref: dict) -> DataFrame:  # {"table": name} or {"stage": name}
         if "stage" not in ref:
@@ -76,13 +85,13 @@ def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, observation) 
             raise ValueError(f"stage reference outside a DAG: {ref['stage']!r}")
         return up(ref["stage"])
 
-    df = resolve(spec["source"])
     inc = spec.get("incremental")
     if inc:
-        col = inc["watermark_col"]
-        df = past_watermark(df, col, inc["state_path"], inc.get("default", DEFAULT_WATERMARK))
+        df = extract(spark, sf_dir, spec, listing, resolve)
         if observation is not None:
-            df = df.observe(observation, encoded_max(col))
+            df = df.observe(observation, encoded_max(inc["watermark_col"]))
+    else:
+        df = resolve(spec["source"])
     for t in spec.get("transforms", ()):
         df = _apply_transform(df, t, resolve)
     return df
@@ -132,15 +141,17 @@ def compile_pipeline(
     sf_dir: str,
     spec: dict,
     observation: Observation | None = None,
+    listing: list | None = None,
 ) -> DataFrame:
     """Spec → single DataFrame plan (unsunk). Incremental filter, if any,
     goes directly above the scan so it pushes into the reader.
-    ``observation`` (``run_pipeline`` only) observes the max watermark
-    column right above that filter, over the whole extracted slice.
-    Catalyst does not push a later ``filter`` transform below the
-    observation, so with one only the watermark predicate reaches the
-    reader (column pruning still does)."""
-    return _build_stage(spark, sf_dir, spec, None, observation)
+    ``observation`` and ``listing`` are ``run_pipeline``'s: the observation
+    of the max watermark column right above that filter, over the whole
+    extracted slice, and the tick's one listing of the source, so every
+    compile of a tick reads the same files. Catalyst does not push a later
+    ``filter`` transform below the observation, so with one only the
+    watermark predicate reaches the reader (column pruning still does)."""
+    return _build_stage(spark, sf_dir, spec, None, observation, listing)
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
@@ -150,20 +161,27 @@ def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
     unpartitioned sink is a bug, not a choice. Returns the compiled frame
     for inspection/chaining.
 
+    An incremental tick lists its source table once. Both compiles below
+    read the files of that listing that no earlier tick consumed, and after
+    the sink returns the tick records the whole listing with the new
+    watermark, so the next tick skips those files. A source with
+    subdirectories has no listing and reads whole, as before.
+
     With both a sink and an incremental block, the new watermark is the
     max observed inside the sink's job: one compile, one source read and
-    no extra job per tick, and a file that lands after the write stays
-    past the watermark for the next tick. The fallback (a second compile
-    and a max job over a fresh read of the slice) runs when there is no
-    sink, when a ``limit`` transform would hide rows from the
-    observation, and when the observation is missing or empty. A max of
-    None (empty slice) leaves the watermark where it was.
+    no extra job per tick, and a file that lands after the listing stays
+    past the watermark and out of the record for the next tick. The
+    fallback (a second compile and a max job over the same files) runs
+    when there is no sink, when a ``limit`` transform would hide rows from
+    the observation, and when the observation is missing or empty. A max
+    of None (empty slice) leaves the watermark where it was.
     """
     sink = spec.get("sink")
     inc = spec.get("incremental")
     limited = any(t["op"] == "limit" for t in spec.get("transforms", ()))
     obs = Observation() if sink and inc and not limited else None
-    df = compile_pipeline(spark, sf_dir, spec, observation=obs)
+    listing = tick_listing(spark, sf_dir, spec)
+    df = compile_pipeline(spark, sf_dir, spec, obs, listing)
     if sink:
         # declarative sink dispatch through the pluggable registry
         # (sources/sinks.py): parquet/orc/csv/json/jdbc run here;
@@ -178,12 +196,9 @@ def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
         else:
             reason = "no_sink" if not sink else "limit" if limited else "unobserved"
             log_once(f"pipeline.watermark.{reason}", "watermark from a separate max job")
-            hi = slice_max(
-                compile_pipeline(spark, sf_dir, {"source": spec["source"], "incremental": inc}),
-                inc["watermark_col"],
-            )
-        if hi is not None:
-            advance_watermark(inc["state_path"], hi)
+            extracted = {"source": spec["source"], "incremental": inc}
+            hi = slice_max(compile_pipeline(spark, sf_dir, extracted, None, listing), inc["watermark_col"])
+        record_tick(inc, hi, listing)
     return df
 
 
@@ -253,7 +268,7 @@ def pipeline_sink_jdbc(spark, sf_dir):
     against ClickHouse-JDBC/MySQL only url+driver change), read back and
     oracle-checked — the load path itself is correctness-gated, not just
     the transform."""
-    url = f"jdbc:derby:{run_root_path('etl_sinkjdbc_', sf_dir)};create=true"
+    url = derby_url(spark, "etl_sinkjdbc_", sf_dir)
     spec = dict(_SPEC)
     spec["sink"] = {
         "format": "jdbc",
@@ -391,7 +406,7 @@ def compile_dag(spark: SparkSession, sf_dir: str, dag: dict) -> DataFrame:
     are rejected at compile time. Nothing executes until the caller
     sinks the returned frame.
     """
-    stages = _walk_dag(dag, lambda name, spec, up: _build_stage(spark, sf_dir, spec, up, None))
+    stages = _walk_dag(dag, lambda name, spec, up: _build_stage(spark, sf_dir, spec, up, None, None))
     return stages[dag["output"]]
 
 
@@ -563,7 +578,7 @@ def run_dag_checkpointed(
         path = os.path.join(ckpt_root, f"{name}-{fps[name]}")
         marker = os.path.join(path, "_COMPLETE")
         if not os.path.exists(marker):
-            _build_stage(spark, sf_dir, spec, up, None).write.mode("overwrite").parquet(path)
+            _build_stage(spark, sf_dir, spec, up, None, None).write.mode("overwrite").parquet(path)
             with open(marker, "w") as fh:
                 fh.write(fps[name])
             _LAST_COMPUTED.append(name)

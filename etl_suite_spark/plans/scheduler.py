@@ -16,14 +16,23 @@ scheduler runs each due job's incremental tick. Two modes:
 Idempotency contract: a job's sink must be dynamic-partition-overwrite or
 merge-by-key (operators/scale.py / streaming foreachBatch upsert), so
 re-running a tick after a crash re-writes the same window harmlessly. The
-contract relies on ``pipeline.run_pipeline``'s tick, which every job runs:
-the watermark advances only after the sink returns, to the max watermark
-column observed inside the sink's own job, i.e. over exactly the rows it
-consumed; a file landing mid-tick is picked up by the next tick. Specs
-with no sink or a ``limit`` transform, and ticks whose observation comes
-back missing or empty, take the max from a separate job instead.
-``incremental.run_incremental_tick`` advances BEFORE its caller sinks, so
-a crash in between would skip that window; the scheduler does not use it.
+contract relies on ``pipeline.run_pipeline``'s tick, which every job runs.
+The tick lists its source once and reads only the listed files that the
+state's consumed-file record does not hold. Only after the sink returns
+does it write the state: the max watermark column observed inside the
+sink's own job, i.e. over exactly the rows it consumed, together with the
+listing as the new record. Every row of a recorded file is then at or
+below the watermark, so skipping it on the next tick loses nothing. A
+crashed tick writes neither, so its rerun reads the same files again. A
+file landing mid-tick is in neither the listing nor the max, and the next
+tick picks it up; a file rewritten in place has a new (length, mtime) and
+is read again. Specs with no sink or a ``limit`` transform, and ticks
+whose observation comes back missing or empty, take the max from a
+separate job over the same files instead. A source with subdirectories
+has no flat listing: its ticks read it whole under the watermark filter
+and record no files. ``incremental.run_incremental_tick`` advances BEFORE
+its caller sinks, so a crash in between would skip that window; the
+scheduler does not use it.
 """
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ import tempfile
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..core import _mat_run_root, d2d, dec, run_root_path, scratch
+from ..core import _mat_run_root, d2d, dec, derby_url, scratch
 from ..io import load_table, table_path
 from ..registry import query
 
@@ -153,7 +153,7 @@ def scan_jdbc(spark, sf_dir):
     OLTP-dimension extract feeding broadcast joins; bound numPartitions by
     what the source DB tolerates, not by cluster size.
     """
-    url = f"jdbc:derby:{run_root_path('etl_jdbc_', sf_dir)};create=true"
+    url = derby_url(spark, "etl_jdbc_", sf_dir)
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -161,7 +161,28 @@ def test_data_files_lists_what_spark_reads(spark, tmp_path):
     names = ["a.parquet", "k=1/b.parquet"]
     assert [os.path.relpath(f.split(":", 1)[1], d) for f, _, _ in files] == names
     assert [n for _, n, _ in files] == [os.path.getsize(d / name) for name in names]
+    assert [m for _, _, m in files] == [os.stat(d / name).st_mtime_ns // 10**6 for name in names]
     assert io.data_files(spark, str(d / "a.parquet"))[0] == files[0]
+    assert io.flat_files(spark, str(d)) is None  # a subdirectory: Spark's own index reads it
+    assert io.flat_files(spark, str(d / "k=1")) == [files[1]]
+
+
+def test_file_list_read_takes_the_whole_paths_schema(spark, tmp_path):
+    """A subset of a listing reads with the schema a read of the whole path
+    infers (the first file's), cold or warm; a warm read runs no job."""
+    d = tmp_path / "f"
+    d.mkdir()
+    write(d / "a.parquet", x=[1], y=["s"])
+    write(d / "b.parquet", x=[2])
+    write(d / "c.parquet", x=[3])
+    listing = io.flat_files(spark, str(d))
+    for files, want_jobs in ((listing[1:], 1), (listing[2:], 0), (listing[:1], 0)):
+        df, jobs = spark_jobs(spark, lambda: io._read(spark, str(d), listing, files))
+        assert (df.schema.simpleString(), jobs) == ("struct<x:bigint,y:string>", want_jobs)
+        assert sorted(os.path.basename(f) for f in df.inputFiles()) == [
+            os.path.basename(f) for f, _, _ in files
+        ]
+    assert sorted(io._read(spark, str(d), listing, listing[1:]).collect()) == [(2, None), (3, None)]
 
 
 def test_scratch_removes_its_dir_and_memo_entries_when_the_block_raises(spark):

@@ -3,13 +3,17 @@ watermark from an ``observe()`` inside the sink's own job. A second compile
 plus a max job is only the fallback: no sink, a ``limit`` transform, or an
 observation that comes back missing or empty. The stored watermark is
 rendered in the session zone, so it round-trips under any process zone.
-The linear, DAG and checkpointed compilers share one stage builder.
+A tick lists its source once and reads only the files that the state's
+consumed-file record does not hold; every compile of the tick reads that
+same set. The linear, DAG and checkpointed compilers share one stage
+builder.
 
 Every expectation is computed independently with DuckDB over the same
 parquet files."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -102,15 +106,33 @@ def sunk_daily(spark, t) -> dict:
     return {(r.day, r.event_type): r.n for r in rows}
 
 
-def land_late_batch(path: str) -> None:
-    """The fixture's events shifted 40 days later under fresh event ids:
-    every row is past any watermark the first slice can produce."""
+def late_batch(days: int = 40) -> pa.Table:
+    """The fixture's events shifted ``days`` later under fresh event ids:
+    with the default, every row is past any watermark the first slice can
+    produce."""
     t = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
-    ts = t.column("ts").to_numpy() + np.timedelta64(40, "D")
+    ts = t.column("ts").to_numpy() + np.timedelta64(days, "D")
     t = t.set_column(t.schema.get_field_index("ts"), "ts", pa.array(ts, pa.timestamp("us")))
-    ids = pa.array(t.column("event_id").to_numpy() + 1_000_000)
-    t = t.set_column(t.schema.get_field_index("event_id"), "event_id", ids)
-    pq.write_table(t, path)
+    ids = pa.array(t.column("event_id").to_numpy() + 25_000 * days)
+    return t.set_column(t.schema.get_field_index("event_id"), "event_id", ids)
+
+
+def land_late_batch(path: str, days: int = 40) -> None:
+    pq.write_table(late_batch(days), path)
+
+
+def source_reads(reads: list, t) -> list:
+    """The file names of each parquet read of the tick's events table."""
+    return [
+        tuple(os.path.basename(p) for p in paths)
+        for paths in reads
+        if all(os.path.dirname(p).endswith(t.events) for p in paths)
+    ]
+
+
+def read_names(df) -> list:
+    """The names of the files the compiled slice ``df`` reads."""
+    return sorted(os.path.basename(f) for f in df.inputFiles())
 
 
 def test_tick_watermark_is_observed_in_the_sink_job(spark, tick, reads, monkeypatch):
@@ -133,7 +155,8 @@ def test_tick_watermark_is_observed_in_the_sink_job(spark, tick, reads, monkeypa
     land_late_batch(os.path.join(tick.events, "part-1.parquet"))
     run_pipeline(spark, tick.sf, spec(tick))
     assert [jobs for _, jobs in compiled] == [0]
-    assert reads.count(reads[0]) == 2, reads  # one source read per tick
+    # one source read per tick, of the files landed since the last
+    assert source_reads(reads, tick) == [("part-0.parquet",), ("part-1.parquet",)], reads
     assert read_watermark(tick.state, "") == slice_max(files)
     assert sunk_daily(spark, tick) == expected_daily(files)
 
@@ -187,6 +210,102 @@ def test_file_landing_after_the_write_is_sunk_next_tick(spark, tick, monkeypatch
     files = f"{tick.events}/*.parquet"
     assert read_watermark(tick.state, "") == slice_max(files)
     assert sunk_daily(spark, tick) == expected_daily(files)
+
+
+def test_late_file_on_the_limit_spec_is_sunk_next_tick(spark, tick, monkeypatch):
+    """The fallback max job of a ``limit`` spec reads the files the sink
+    compile read, not a listing taken after the write, so a batch landing
+    in between stays past the watermark."""
+    from etl_suite_spark.sources import sinks
+
+    write_sink = sinks.write_sink
+    late = os.path.join(tick.events, "part-1.parquet")
+
+    def write_then_land(df, sink):
+        write_sink(df, sink)
+        if not os.path.exists(late):
+            land_late_batch(late)
+
+    monkeypatch.setattr(sinks, "write_sink", write_then_land)
+    limited = spec(tick, DAILY + [{"op": "limit", "n": 10**9}])
+    run_pipeline(spark, tick.sf, limited)
+    assert read_watermark(tick.state, "") == slice_max(os.path.join(tick.events, "part-0.parquet"))
+    assert read_names(run_pipeline(spark, tick.sf, limited)) == ["part-1.parquet"]
+    files = f"{tick.events}/*.parquet"
+    assert read_watermark(tick.state, "") == slice_max(files)
+    assert sunk_daily(spark, tick) == expected_daily(files)
+
+
+def test_each_tick_reads_only_the_files_landed_since_the_last(spark, tick):
+    assert read_names(run_pipeline(spark, tick.sf, spec(tick))) == ["part-0.parquet"]
+    for i, days in enumerate((40, 80), start=1):
+        land_late_batch(os.path.join(tick.events, f"part-{i}.parquet"), days)
+        assert read_names(run_pipeline(spark, tick.sf, spec(tick))) == [f"part-{i}.parquet"]
+    wm = read_watermark(tick.state, "")
+    assert read_names(run_pipeline(spark, tick.sf, spec(tick))) == []
+    files = f"{tick.events}/*.parquet"
+    assert read_watermark(tick.state, "") == wm == slice_max(files)
+    assert sunk_daily(spark, tick) == expected_daily(files)
+    with open(tick.state) as f:
+        assert sorted(os.path.basename(p) for p, _, _ in json.load(f)["files"]) == [
+            "part-0.parquet", "part-1.parquet", "part-2.parquet"
+        ]
+
+
+def test_consumed_file_rewritten_in_place_is_read_again(spark, tick):
+    """A file is known by (path, length, mtime): rewritten with rows past
+    the watermark, it is new to the next tick, whose filter keeps only
+    those rows."""
+    part0 = os.path.join(tick.events, "part-0.parquet")
+    run_pipeline(spark, tick.sf, spec(tick))
+    pq.write_table(pa.concat_tables([pq.read_table(part0), late_batch()]), part0)
+    assert read_names(run_pipeline(spark, tick.sf, spec(tick))) == ["part-0.parquet"]
+    assert read_watermark(tick.state, "") == slice_max(part0)
+    assert sunk_daily(spark, tick) == expected_daily(part0)
+
+
+def test_legacy_state_without_files_reads_everything_once(spark, tick):
+    """A state file written before the consumed-file record consumed
+    nothing: its first tick reads every file, then records them."""
+    with open(tick.state, "w") as f:
+        json.dump({"watermark": WM0}, f)
+    land_late_batch(os.path.join(tick.events, "part-1.parquet"))
+    first = run_pipeline(spark, tick.sf, spec(tick))
+    assert read_names(first) == ["part-0.parquet", "part-1.parquet"]
+    assert read_names(run_pipeline(spark, tick.sf, spec(tick))) == []
+    files = f"{tick.events}/*.parquet"
+    assert read_watermark(tick.state, "") == slice_max(files)
+    assert sunk_daily(spark, tick) == expected_daily(files)
+
+
+def test_partitioned_source_reads_whole_and_sinks_the_same(spark, tmp_path):
+    """A ``k=v`` source has no flat listing: every tick reads the whole
+    table under the filter and records no files. It sinks the same rows
+    and watermark as the same batches in a flat source, which records."""
+    ticks = {}
+    for layout in ("flat", "partitioned"):
+        root = tmp_path / layout
+        events = root / "sf" / "events.parquet"
+        events.mkdir(parents=True)
+        t = SimpleNamespace(
+            sf=str(root / "sf"), events=str(events), state=str(root / "state.json"),
+            sink=str(root / "sink"),
+        )
+        advance_watermark(t.state, WM0)
+        dirs = ("", "") if layout == "flat" else ("k=0", "k=1")
+        for i, d in enumerate(dirs):
+            (events / d).mkdir(exist_ok=True)
+            if i == 0:
+                shutil.copy(os.path.join(SF_DIR, "events.parquet"), events / d / "part-0.parquet")
+            else:
+                land_late_batch(str(events / d / "part-1.parquet"))
+            df = run_pipeline(spark, t.sf, spec(t))
+        with open(t.state) as f:
+            state = json.load(f)
+        ticks[layout] = (state["watermark"], sunk_daily(spark, t), len(state["files"]), len(df.inputFiles()))
+    assert ticks["flat"][:2] == ticks["partitioned"][:2]
+    assert ticks["flat"][2:] == (2, 1)  # recorded both, read only the new one
+    assert ticks["partitioned"][2:] == (0, 2)  # recorded none, read both
 
 
 @pytest.fixture

@@ -3,12 +3,14 @@
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import tempfile
 
 import pytest
 from pyspark.sql import types as T
 
-from conftest import SF_DIR
+from conftest import REPO, SF_DIR
 
 from etl_suite_spark.registry import QUERIES
 
@@ -299,3 +301,44 @@ def test_bucketed_join_keeps_one_table_pair(spark):
     ]
     assert len(names) <= 2
     assert first.collect() == second.collect()
+
+
+def test_derby_log_goes_under_the_run_root(tmp_path):
+    """Embedded Derby writes ``derby.log`` to the working directory when it
+    first boots, unless ``derby.stream.error.file`` is set. A fresh process
+    running ``scan_jdbc`` leaves none there; the log is under the run
+    root."""
+    code = f"""
+import os, sys
+sys.path.insert(0, {REPO!r})
+import etl_suite_spark
+from etl_suite_spark.core import _mat_run_root
+from etl_suite_spark.registry import QUERIES
+from etl_suite_spark.session import get_spark
+spark = get_spark("derby_log", shuffle_partitions=2)
+QUERIES["scan_jdbc"](spark, {SF_DIR!r}).collect()
+log = spark._jvm.java.lang.System.getProperty("derby.stream.error.file")
+print(log == os.path.join(_mat_run_root(), "derby.log"), os.path.isfile(log))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, capture_output=True, text=True, timeout=600
+    )
+    assert out.stdout.split()[-2:] == ["True", "True"], out.stderr[-3000:]
+    assert not (tmp_path / "derby.log").exists()
+
+
+def test_derby_url_keeps_a_caller_set_error_file(spark):
+    from etl_suite_spark.core import derby_url
+
+    system = spark._jvm.java.lang.System
+    key = "derby.stream.error.file"
+    saved = system.getProperty(key)
+    system.setProperty(key, "/elsewhere/derby.log")
+    try:
+        derby_url(spark, "etl_jdbc_", SF_DIR)
+        assert system.getProperty(key) == "/elsewhere/derby.log"
+    finally:
+        if saved is None:
+            system.clearProperty(key)
+        else:
+            system.setProperty(key, saved)
