@@ -25,6 +25,8 @@ The memo's listing (``flat_files``) also serves an incremental tick, which
 reads a subset of it (``load_files``): one ``DataFrameReader.parquet`` of
 the listed files with the schema the whole path's read has, so one listing
 gives both the key and the files, and a warm read runs no inference job.
+The tick also asks ``timestamp_floor`` whether the footers of those files
+prove every row past its watermark (``plans/incremental.py``).
 """
 
 from __future__ import annotations
@@ -164,6 +166,52 @@ def flat_files(spark: SparkSession, path: str) -> list[tuple[str, int, int]] | N
     if not entries or any(full.rpartition("/")[2].startswith(_SUMMARY_FILES) for full, *_ in entries):
         return None
     return [(full, length, mtime) for full, _, length, mtime in entries]
+
+
+# A parquet TIMESTAMP unit as (multiplier, divisor) to microseconds.
+_TO_MICROS = {"milliseconds": (1000, 1), "microseconds": (1, 1), "nanoseconds": (1, 1000)}
+
+
+def timestamp_floor(files, column: str, above: int) -> int | None:
+    """The least value of the top-level ``column`` over ``files`` (a
+    listing's (path, length, mtime) entries) in microseconds since the
+    epoch, NANOS floored, read from parquet footer statistics alone, when
+    it is greater than ``above``; None as soon as one file does not prove
+    that: a path that is not ``file:``, a file no longer at its listed
+    length and mtime, a column that is not INT64 TIMESTAMP (MILLIS, MICROS
+    or NANOS; INT96 and every other type fail), a row group without min/max
+    statistics and a null count, or with a null (min/max skip nulls). One
+    pyarrow footer read per file, no Spark job."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    lo = None
+    for path, length, mtime in files:
+        if not path.startswith("file:"):
+            return None
+        try:
+            with open(path[len("file:"):], "rb") as f:
+                st = os.fstat(f.fileno())
+                md = pq.read_metadata(f)
+        except (OSError, ValueError):  # gone or unreadable: the scan reports it
+            return None
+        if (st.st_size, st.st_mtime_ns // 1_000_000) != (length, mtime):
+            return None
+        fields = [md.schema.column(i) for i in range(md.num_columns)]
+        i = next((i for i, c in enumerate(fields) if c.path == column), None)
+        if i is None or fields[i].physical_type != "INT64" or fields[i].logical_type.type != "TIMESTAMP":
+            return None
+        mul, div = _TO_MICROS[json.loads(fields[i].logical_type.to_json())["timeUnit"]]
+        for g in range(md.num_row_groups):
+            stats = md.row_group(g).column(i).statistics
+            if stats is None or not (stats.has_min_max and stats.has_null_count) or stats.null_count:
+                return None
+            us = stats.min_raw * mul // div
+            if us <= above:
+                return None
+            lo = us if lo is None else min(lo, us)
+    return lo
 
 
 def _read(spark: SparkSession, path: str, listing, files) -> DataFrame:

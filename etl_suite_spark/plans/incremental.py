@@ -13,16 +13,21 @@ Spark-first:
   way Spark's ``FileStreamSource`` logs the files it has consumed. A state
   without it (written before the record existed), or with the empty one
   ``advance_watermark`` writes, consumed nothing;
-- a tick lists its source table once (``tick_listing``) and reads only the
+- a tick lists its source table once (``Tick``) and reads only the
   listed files not in the record, so its cost follows the new data, not
   the history. A file is known by (path, length, mtime), so one rewritten
   in place is read again. A source with subdirectories has no flat listing
   and is read whole;
-- the extract injects ``ts > watermark`` *before* the scan, so Catalyst
+- the extract puts ``ts > watermark`` directly above the scan, so Catalyst
   pushes it into the parquet reader and row-group min/max statistics skip
   what an unconsumed file holds at or below the watermark. The file skip
   is exact: after a tick every row of each recorded file is at or below
-  the new watermark, so a skipped file holds no row the filter would keep;
+  the new watermark, so a skipped file holds no row the filter would keep.
+  When the parquet footers of the unconsumed files prove that every row is
+  past the watermark (``io.timestamp_floor``: INT64 TIMESTAMP statistics
+  with no null, min above the watermark), the filter is left out. The plan
+  then holds no per-tick literal, so a warm tick reuses the code Spark
+  generated for the last one instead of compiling its scan stage anew;
 - idempotency comes from delete-or-overwrite of the affected window plus
   the ``dedup_by_key_latest`` idiom, not from fragile exactly-once sinks.
 """
@@ -32,12 +37,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from datetime import datetime, timedelta
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core import SUBJECT_RESIDUE, d2d, dsum, scratch, sql_dsum
-from ..io import flat_files, load_files, load_table, table_path
+from ..io import flat_files, load_files, load_table, table_path, timestamp_floor
 from ..registry import query
 
 
@@ -79,36 +85,85 @@ def advance_watermark(state_path: str, new_watermark: str) -> None:
     write_state(state_path, new_watermark, ())
 
 
-def tick_listing(spark: SparkSession, sf_dir: str, spec: dict) -> list | None:
-    """The one listing a tick takes of its incremental table source
-    (``io.flat_files``): its reads and its record both come from it. None
-    without an ``incremental`` block, for a stage source, and for a layout
+class Tick:
+    """One tick of an incremental spec, shared by the steps that build, run
+    and record it. ``listing`` is the one listing of its table source
+    (``io.flat_files``), taken when the tick starts: its reads and its record
+    both come from it. It is None for a stage source and for a layout
     Spark's file index must read (subdirectories, so ``k=v`` partition
-    columns, and the schema memo's other fallbacks)."""
-    source = spec["source"]
-    if not spec.get("incremental") or "table" not in source:
-        return None
-    return flat_files(spark, table_path(sf_dir, source["table"]))
+    columns, and the schema memo's other fallbacks). Once :func:`extract`
+    has built it, ``slice`` is the extracted frame and ``fresh`` the listed
+    files no earlier tick consumed (None without a listing)."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str, spec: dict) -> None:
+        source = spec["source"]
+        self.listing = None
+        if "table" in source:
+            self.listing = flat_files(spark, table_path(sf_dir, source["table"]))
+        self.fresh: list | None = None
+        self.slice: DataFrame | None = None
 
 
-def extract(spark: SparkSession, sf_dir: str, spec: dict, listing, resolve) -> DataFrame:
+def extract(spark: SparkSession, sf_dir: str, spec: dict, tick: Tick | None, resolve) -> DataFrame:
     """The one incremental extract: rows past the saved watermark from the
-    files of the tick's ``listing`` (taken here when None) that no earlier
-    tick consumed, read as one parquet read through the schema memo. A
-    source with no listing is read whole by ``resolve(source)``. The filter
-    sits directly above the scan, so it reaches the parquet reader as a
-    pushed predicate (verified in test_plans.py)."""
+    files of ``tick``'s listing (a new :class:`Tick` when None) that no
+    earlier tick consumed, read as one parquet read through the schema
+    memo. A source with no listing is read whole by ``resolve(source)``.
+
+    The filter ``watermark_col > watermark`` sits directly above the scan,
+    so it reaches the parquet reader as a pushed predicate (verified in
+    test_plans.py), unless the footers of the unconsumed files prove that
+    every row is past the watermark (:func:`_proven_past`). Then the plan
+    holds no watermark literal, so a warm tick's plan, and the code Spark
+    generates for it, is the same from tick to tick."""
     inc = spec["incremental"]
+    col = inc["watermark_col"]
     wm, consumed = read_state(inc["state_path"], inc.get("default", DEFAULT_WATERMARK))
     source = spec["source"]
-    if listing is None:
-        listing = tick_listing(spark, sf_dir, spec)
-    if listing is None:
+    tick = tick or Tick(spark, sf_dir, spec)
+    if tick.listing is None:
         df = resolve(source)
     else:
-        fresh = [entry for entry in listing if entry not in consumed]
-        df = load_files(spark, sf_dir, source["table"], listing, fresh)
-    return df.filter(F.col(inc["watermark_col"]) > F.to_timestamp(F.lit(wm)))
+        tick.fresh = [entry for entry in tick.listing if entry not in consumed]
+        df = load_files(spark, sf_dir, source["table"], tick.listing, tick.fresh)
+    if not _proven_past(spark, df, col, wm, tick.fresh):
+        df = df.filter(F.col(col) > F.to_timestamp(F.lit(wm)))
+    tick.slice = df
+    return df
+
+
+_EPOCH = datetime(1970, 1, 1)
+
+
+def _utc_micros(wm: str) -> int | None:
+    """A watermark string as microseconds since the epoch, read as a UTC
+    wall-clock time (never in the process zone), or None when it is not in
+    one of the two forms the engine writes."""
+    for fmt in ("%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S"):
+        try:
+            return (datetime.strptime(wm, fmt) - _EPOCH) // timedelta(microseconds=1)
+        except ValueError:
+            continue
+    return None
+
+
+def _proven_past(spark: SparkSession, df: DataFrame, col: str, wm: str, files) -> bool:
+    """Whether every row ``df`` reads from ``files`` is past ``wm`` in
+    ``col``: trivially for no file, else from their footers
+    (``io.timestamp_floor``), provided the session zone is UTC (``to_timestamp``
+    reads ``wm`` in it), ``wm`` parses and ``df`` reads ``col`` as a
+    timestamp. A source with no listing (``files`` None) proves nothing."""
+    if files is None:
+        return False
+    if not files:
+        return True
+    wm_us = _utc_micros(wm)
+    return (
+        wm_us is not None
+        and spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        and dict(df.dtypes).get(col, "").startswith("timestamp")
+        and timestamp_floor(files, col, wm_us) is not None
+    )
 
 
 def record_tick(inc: dict, hi: str | None, listing) -> None:
@@ -180,11 +235,11 @@ def run_incremental_tick(
     A tick with no new data leaves the watermark unchanged.
     """
     spec = _table_spec("events", state_path, watermark_col, default)
-    listing = tick_listing(spark, sf_dir, spec)
-    inc = extract(spark, sf_dir, spec, listing, _whole(spark, sf_dir))
-    hi = slice_max(inc, watermark_col)
+    tick = Tick(spark, sf_dir, spec)
+    inc = extract(spark, sf_dir, spec, tick, _whole(spark, sf_dir))
+    hi = None if tick.fresh == [] else slice_max(inc, watermark_col)
     out = transform(inc)
-    record_tick(spec["incremental"], hi, listing)
+    record_tick(spec["incremental"], hi, tick.listing)
     return out
 
 

@@ -27,29 +27,32 @@ column pruning back to the scan). Nothing executes until the sink runs.
 
 The incremental block injects ``watermark_col > saved_watermark`` directly
 above the source scan (pushdown → row-group skipping), exactly like the
-reference's checkpoint-window extraction. A table source is read from the
-files no earlier tick consumed (``incremental.extract``), so a tick does not
-reopen the source's history; one with subdirectories is read whole.
+reference's checkpoint-window extraction, unless the parquet footers of the
+files it reads prove every row past the watermark. A table source is read
+from the files no earlier tick consumed (``incremental.extract``), so a
+tick does not reopen the source's history; one with subdirectories is read
+whole.
 
 The linear, DAG and checkpointed compilers share one stage builder
 (``_build_stage``: source → incremental extract → transforms, every table or
 stage reference through one resolver); a linear spec is a one-stage build
 and both DAG paths take one memoized, cycle-checked walk (``_walk_dag``).
 
-``run_pipeline`` lists the source once per tick, compiles over the
-unconsumed files of that listing, and after the sink records the listing
-with the new watermark, the max ``watermark_col`` of that slice. With a
-sink, the max is observed inside the sink's own job (``observe()``
-directly above the watermark filter, before any transform), so a tick
-reads the source once and runs no separate max job, and the watermark
-covers exactly the rows the sink consumed. A second compile plus an
-aggregate job over the same files remains the fallback when the spec has
-no sink, when it has a ``limit`` transform (the observation would only see
-the rows the limit let through), and when the observation is missing or
-empty. Adaptive execution leaves it empty when it prunes the observed
-operator from the final plan: an empty slice, or an inner join against an
-empty table. Either way a file that lands mid-tick is neither counted nor
-recorded, so the next tick reads it.
+``run_pipeline`` lists the source once per tick (``incremental.Tick``),
+compiles over the unconsumed files of that listing, and after the sink
+records the listing with the new watermark, the max ``watermark_col`` of
+that slice. With a sink, the max is observed inside the sink's own job
+(``observe()`` directly above the extract, before any transform), so a
+tick reads the source once and runs no separate max job, and the watermark
+covers exactly the rows the sink consumed. An aggregate job over the
+extracted frame the sink's compile built remains the fallback when the
+spec has no sink, when it has a ``limit`` transform (the observation would
+only see the rows the limit let through), and when the observation is
+missing or empty. Adaptive execution leaves it empty when it prunes the
+observed operator from the final plan: an empty slice, or an inner join
+against an empty table. A frame's files are fixed when it is built, so
+either way a file that lands mid-tick is neither counted nor recorded, and
+the next tick reads it. A tick with no unconsumed file runs no max job.
 """
 
 from __future__ import annotations
@@ -62,21 +65,21 @@ from ..io import data_files, load_table, read_parquet, table_path
 from ..registry import query
 from .incremental import (
     DEFAULT_WATERMARK,
+    Tick,
     encoded_max,
     extract,
     read_watermark,
     record_tick,
     slice_max,
-    tick_listing,
 )
 
 
-def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, observation, listing) -> DataFrame:
+def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, observation, tick) -> DataFrame:
     """The one stage builder: source → incremental extract (plus
     ``observation`` of the encoded max right above it) → transforms.
     ``up`` is a DAG walk's upstream lookup, None for a linear spec.
-    ``listing`` is the tick's listing of an incremental table source
-    (``incremental.tick_listing``); the extract takes it when None."""
+    ``tick`` is ``run_pipeline``'s :class:`incremental.Tick`, which keeps
+    the extracted slice; the extract starts its own when None."""
 
     def resolve(ref: dict) -> DataFrame:  # {"table": name} or {"stage": name}
         if "stage" not in ref:
@@ -87,7 +90,7 @@ def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, observation, 
 
     inc = spec.get("incremental")
     if inc:
-        df = extract(spark, sf_dir, spec, listing, resolve)
+        df = extract(spark, sf_dir, spec, tick, resolve)
         if observation is not None:
             df = df.observe(observation, encoded_max(inc["watermark_col"]))
     else:
@@ -141,17 +144,19 @@ def compile_pipeline(
     sf_dir: str,
     spec: dict,
     observation: Observation | None = None,
-    listing: list | None = None,
+    tick: Tick | None = None,
 ) -> DataFrame:
-    """Spec → single DataFrame plan (unsunk). Incremental filter, if any,
-    goes directly above the scan so it pushes into the reader.
-    ``observation`` and ``listing`` are ``run_pipeline``'s: the observation
-    of the max watermark column right above that filter, over the whole
-    extracted slice, and the tick's one listing of the source, so every
-    compile of a tick reads the same files. Catalyst does not push a later
+    """Spec → single DataFrame plan (unsunk). The incremental filter, if
+    any, goes directly above the scan so it pushes into the reader; it is
+    left out when the footers of the files the tick reads prove every row
+    past the watermark (``incremental.extract``). ``observation`` and
+    ``tick`` are ``run_pipeline``'s: the observation of the max watermark
+    column right above the extract, over the whole slice, and the tick
+    whose one listing of the source the compile reads and which keeps the
+    extracted slice for the fallback max. Catalyst does not push a later
     ``filter`` transform below the observation, so with one only the
     watermark predicate reaches the reader (column pruning still does)."""
-    return _build_stage(spark, sf_dir, spec, None, observation, listing)
+    return _build_stage(spark, sf_dir, spec, None, observation, tick)
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
@@ -161,27 +166,30 @@ def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
     unpartitioned sink is a bug, not a choice. Returns the compiled frame
     for inspection/chaining.
 
-    An incremental tick lists its source table once. Both compiles below
-    read the files of that listing that no earlier tick consumed, and after
-    the sink returns the tick records the whole listing with the new
-    watermark, so the next tick skips those files. A source with
-    subdirectories has no listing and reads whole, as before.
+    An incremental tick lists its source table once (``incremental.Tick``).
+    The one compile reads the files of that listing that no earlier tick
+    consumed, with no watermark filter when their footers prove every row
+    past it, and after the sink returns the tick records the whole listing
+    with the new watermark, so the next tick skips those files. A source
+    with subdirectories has no listing and reads whole, as before.
 
     With both a sink and an incremental block, the new watermark is the
     max observed inside the sink's job: one compile, one source read and
     no extra job per tick, and a file that lands after the listing stays
     past the watermark and out of the record for the next tick. The
-    fallback (a second compile and a max job over the same files) runs
-    when there is no sink, when a ``limit`` transform would hide rows from
-    the observation, and when the observation is missing or empty. A max
-    of None (empty slice) leaves the watermark where it was.
+    fallback, a max job over the extracted frame the compile built (so over
+    the files the sink read, whatever lands later), runs when there is no
+    sink, when a ``limit`` transform would hide rows from the observation,
+    and when the observation is missing or empty. With no unconsumed file
+    the slice is empty and no max job runs. A max of None (empty slice)
+    leaves the watermark where it was.
     """
     sink = spec.get("sink")
     inc = spec.get("incremental")
     limited = any(t["op"] == "limit" for t in spec.get("transforms", ()))
     obs = Observation() if sink and inc and not limited else None
-    listing = tick_listing(spark, sf_dir, spec)
-    df = compile_pipeline(spark, sf_dir, spec, obs, listing)
+    tick = Tick(spark, sf_dir, spec) if inc else None
+    df = compile_pipeline(spark, sf_dir, spec, obs, tick)
     if sink:
         # declarative sink dispatch through the pluggable registry
         # (sources/sinks.py): parquet/orc/csv/json/jdbc run here;
@@ -190,15 +198,15 @@ def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
 
         write_sink(df, sink)
     if inc:
-        metrics = observed(obs) if obs is not None else None
-        if metrics is not None:
+        if tick.fresh == []:  # no unconsumed file: the slice is empty, no job
+            hi = None
+        elif obs is not None and (metrics := observed(obs)) is not None:
             hi = metrics["hi"]
         else:
             reason = "no_sink" if not sink else "limit" if limited else "unobserved"
             log_once(f"pipeline.watermark.{reason}", "watermark from a separate max job")
-            extracted = {"source": spec["source"], "incremental": inc}
-            hi = slice_max(compile_pipeline(spark, sf_dir, extracted, None, listing), inc["watermark_col"])
-        record_tick(inc, hi, listing)
+            hi = slice_max(tick.slice, inc["watermark_col"])
+        record_tick(inc, hi, tick.listing)
     return df
 
 

@@ -28,7 +28,7 @@ file landing mid-tick is in neither the listing nor the max, and the next
 tick picks it up; a file rewritten in place has a new (length, mtime) and
 is read again. Specs with no sink or a ``limit`` transform, and ticks
 whose observation comes back missing or empty, take the max from a
-separate job over the same files instead. A source with subdirectories
+separate job over the frame the sink read instead. A source with subdirectories
 has no flat listing: its ticks read it whole under the watermark filter
 and record no files. ``incremental.run_incremental_tick`` advances BEFORE
 its caller sinks, so a crash in between would skip that window; the

@@ -197,3 +197,46 @@ def test_scratch_removes_its_dir_and_memo_entries_when_the_block_raises(spark):
             raise RuntimeError("mid-block")
     assert not os.path.exists(root)
     assert path not in io._SCHEMAS
+
+
+def test_timestamp_floor_needs_every_footer_to_prove_it(tmp_path, monkeypatch):
+    """``io.timestamp_floor``: the least µs of an INT64 TIMESTAMP column
+    from footer statistics alone (MILLIS scaled, NANOS floored) when it is
+    above the bound; None as soon as one footer cannot prove that."""
+    t0 = 1_700_000_000_000_000  # µs since the epoch
+
+    def entry(name, ts, unit="us", **options):
+        path = tmp_path / name
+        table = pa.table({"ts": pa.array(ts, pa.timestamp(unit)), "x": pa.array(range(len(ts)))})
+        pq.write_table(table, path, **options)
+        st = os.stat(path)
+        return f"file:{path}", st.st_size, st.st_mtime_ns // 10**6
+
+    micros = entry("us.parquet", [t0 + 5, t0 + 2], row_group_size=1)
+    millis = entry("ms.parquet", [t0 // 1000 + 1], "ms")
+    nanos = entry("ns.parquet", [(t0 + 3) * 1000 + 999], "ns")
+    assert io.timestamp_floor([micros], "ts", t0) == t0 + 2
+    assert io.timestamp_floor([millis], "ts", t0) == t0 + 1000
+    assert io.timestamp_floor([nanos], "ts", t0) == t0 + 3
+    assert io.timestamp_floor([micros, millis, nanos], "ts", t0) == t0 + 2
+    assert io.timestamp_floor([micros], "ts", t0 + 2) is None  # the min must be above
+    assert io.timestamp_floor([nanos], "ts", t0 + 3) is None  # read truncated to t0 + 3
+
+    unproven = {
+        "null": entry("null.parquet", [t0 + 5, None]),
+        "no statistics": entry("nostats.parquet", [t0 + 5], write_statistics=False),
+        "INT96": entry("int96.parquet", [t0 + 5], use_deprecated_int96_timestamps=True),
+        "not file:": ("hdfs:" + micros[0][len("file:"):], *micros[1:]),
+        "changed since listed": (micros[0], micros[1], micros[2] - 1),
+        "missing": ("file:" + str(tmp_path / "gone.parquet"), 1, 1),
+    }
+    for why, bad in unproven.items():
+        assert io.timestamp_floor([micros, bad], "ts", t0) is None, why
+    assert io.timestamp_floor([micros], "x", -1) is None  # INT64 without TIMESTAMP
+    assert io.timestamp_floor([micros], "absent", t0) is None
+
+    opened = []
+    read_metadata = pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata", lambda f: opened.append(f) or read_metadata(f))
+    assert io.timestamp_floor([micros, millis, nanos], "ts", t0 + 2) is None
+    assert len(opened) == 1  # stops at the first file that fails

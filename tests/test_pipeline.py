@@ -4,9 +4,11 @@ plus a max job is only the fallback: no sink, a ``limit`` transform, or an
 observation that comes back missing or empty. The stored watermark is
 rendered in the session zone, so it round-trips under any process zone.
 A tick lists its source once and reads only the files that the state's
-consumed-file record does not hold; every compile of the tick reads that
-same set. The linear, DAG and checkpointed compilers share one stage
-builder.
+consumed-file record does not hold, and a fallback max job runs over the
+frame the sink's compile built. The watermark filter is left out only when
+the footers of those files prove every row past the watermark, so a warm
+tick compiles no generated class. The linear, DAG and checkpointed
+compilers share one stage builder.
 
 Every expectation is computed independently with DuckDB over the same
 parquet files."""
@@ -31,7 +33,7 @@ from pyspark.sql import functions as F
 from conftest import SF_DIR, spark_jobs
 
 from etl_suite_spark.plans import pipeline
-from etl_suite_spark.plans.incremental import advance_watermark, read_watermark, run_incremental_tick
+from etl_suite_spark.plans.incremental import _utc_micros, advance_watermark, read_watermark, run_incremental_tick
 from etl_suite_spark.plans.pipeline import compile_dag, compile_pipeline, run_dag_checkpointed, run_pipeline
 
 WM0 = "2024-01-15 00:00:00"
@@ -70,6 +72,20 @@ def reads(monkeypatch):
 
     monkeypatch.setattr(DataFrameReader, "parquet", counted)
     return calls
+
+
+@pytest.fixture
+def max_jobs(monkeypatch):
+    """The frame of every fallback max job ``run_pipeline`` runs."""
+    frames: list = []
+    slice_max_ = pipeline.slice_max
+
+    def counted(df, watermark_col):
+        frames.append(df)
+        return slice_max_(df, watermark_col)
+
+    monkeypatch.setattr(pipeline, "slice_max", counted)
+    return frames
 
 
 def spec(t, transforms=DAILY):
@@ -165,27 +181,31 @@ def test_empty_slice_leaves_watermark_unchanged(spark, tick):
     run_pipeline(spark, tick.sf, spec(tick))
     wm = read_watermark(tick.state, "")
     before = sunk_daily(spark, tick)
-    run_pipeline(spark, tick.sf, spec(tick))  # nothing past the watermark
+    # no unconsumed file: the sink's write runs, no max job over no files
+    _, jobs = spark_jobs(spark, lambda: run_pipeline(spark, tick.sf, spec(tick)))
+    assert jobs == 1
     assert read_watermark(tick.state, "") == wm
     assert sunk_daily(spark, tick) == before
 
 
-def test_limit_spec_takes_the_fallback_max(spark, tick, reads):
+def test_limit_spec_takes_the_fallback_max(spark, tick, reads, max_jobs):
     """An observation under ``limit`` would only see the rows the limit let
     through; the watermark must still be the whole slice's max."""
     run_pipeline(spark, tick.sf, spec(tick, [{"op": "limit", "n": 20}]))
-    assert len(reads) == 2, reads  # the sink read, then the fallback's
+    assert len(max_jobs) == 1
+    assert len(reads) == 1, reads  # the fallback runs over the sink compile's read
     assert read_watermark(tick.state, "") == slice_max(f"{tick.events}/*.parquet")
 
 
-def test_join_to_empty_table_takes_the_fallback_max(spark, tick, reads):
+def test_join_to_empty_table_takes_the_fallback_max(spark, tick, reads, max_jobs):
     """Adaptive execution prunes the scan under an inner join against an
     empty table, so the observation completes with an empty row."""
     schema = pq.read_schema(os.path.join(SF_DIR, "customer.parquet"))
     pq.write_table(schema.empty_table(), os.path.join(tick.sf, "customer.parquet"))
     join = {"op": "join", "table": "customer", "on": "user_id = c_custkey", "how": "inner"}
     run_pipeline(spark, tick.sf, spec(tick, [join]))
-    assert len(reads) == 3, reads  # events, customer, then the fallback's events
+    assert len(max_jobs) == 1
+    assert len(reads) == 2, reads  # events and customer; the fallback reuses the events read
     assert read_watermark(tick.state, "") == slice_max(f"{tick.events}/*.parquet")
 
 
@@ -212,26 +232,36 @@ def test_file_landing_after_the_write_is_sunk_next_tick(spark, tick, monkeypatch
     assert sunk_daily(spark, tick) == expected_daily(files)
 
 
-def test_late_file_on_the_limit_spec_is_sunk_next_tick(spark, tick, monkeypatch):
-    """The fallback max job of a ``limit`` spec reads the files the sink
-    compile read, not a listing taken after the write, so a batch landing
-    in between stays past the watermark."""
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_late_file_on_the_limit_spec_is_sunk_next_tick(spark, tick, monkeypatch, layout):
+    """The fallback max job of a ``limit`` spec runs over the frame the sink
+    compile extracted, whose files were fixed when it was built, not over a
+    read taken after the write, so a batch landing in between stays past
+    the watermark. A ``k=v`` source has no flat listing, so only the frame
+    pins its files."""
     from etl_suite_spark.sources import sinks
 
+    first, late = "part-0.parquet", "part-1.parquet"
+    if layout == "partitioned":
+        os.mkdir(os.path.join(tick.events, "k=0"))
+        os.replace(os.path.join(tick.events, first), os.path.join(tick.events, "k=0", first))
+        os.mkdir(os.path.join(tick.events, "k=1"))
+        first, late = os.path.join("k=0", first), os.path.join("k=1", late)
     write_sink = sinks.write_sink
-    late = os.path.join(tick.events, "part-1.parquet")
 
     def write_then_land(df, sink):
         write_sink(df, sink)
-        if not os.path.exists(late):
-            land_late_batch(late)
+        if not os.path.exists(os.path.join(tick.events, late)):
+            land_late_batch(os.path.join(tick.events, late))
 
     monkeypatch.setattr(sinks, "write_sink", write_then_land)
     limited = spec(tick, DAILY + [{"op": "limit", "n": 10**9}])
     run_pipeline(spark, tick.sf, limited)
-    assert read_watermark(tick.state, "") == slice_max(os.path.join(tick.events, "part-0.parquet"))
-    assert read_names(run_pipeline(spark, tick.sf, limited)) == ["part-1.parquet"]
-    files = f"{tick.events}/*.parquet"
+    assert read_watermark(tick.state, "") == slice_max(os.path.join(tick.events, first))
+    second = read_names(run_pipeline(spark, tick.sf, limited))
+    # a flat source reads only the late file, a partitioned one reads whole
+    assert second == (["part-1.parquet"] if layout == "flat" else ["part-0.parquet", "part-1.parquet"])
+    files = f"{tick.events}/**/*.parquet"
     assert read_watermark(tick.state, "") == slice_max(files)
     assert sunk_daily(spark, tick) == expected_daily(files)
 
@@ -308,6 +338,95 @@ def test_partitioned_source_reads_whole_and_sinks_the_same(spark, tmp_path):
     assert ticks["partitioned"][2:] == (0, 2)  # recorded none, read both
 
 
+def compiled_classes(spark) -> int:
+    """Generated classes Spark has compiled in this JVM so far."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def watermark_filtered(df) -> bool:
+    """Whether the optimized plan of a compiled tick filters on ``ts``."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return any(line.lstrip(" :+-").startswith("Filter") and "ts#" in line for line in plan.splitlines())
+
+
+def test_warm_ticks_compile_no_generated_class(spark, tick):
+    """Once the footers prove each new batch past the watermark, a tick's
+    plan holds no watermark literal, so after the warm-up every class it
+    needs comes from the codegen cache (with the filter, each new
+    watermark compiled 2 classes)."""
+    run_pipeline(spark, tick.sf, spec(tick))  # the first file holds rows at or below WM0
+    compiled, filtered = [], []
+    for i, days in enumerate((40, 80, 120, 160), start=1):
+        land_late_batch(os.path.join(tick.events, f"part-{i}.parquet"), days)
+        before = compiled_classes(spark)
+        filtered.append(watermark_filtered(run_pipeline(spark, tick.sf, spec(tick))))
+        compiled.append(compiled_classes(spark) - before)
+    assert compiled[2:] == [0, 0], compiled
+    assert filtered == [False] * 4
+    files = f"{tick.events}/*.parquet"
+    assert read_watermark(tick.state, "") == slice_max(files)
+    assert sunk_daily(spark, tick) == expected_daily(files)
+
+
+@pytest.fixture
+def nanos_as_long(spark):
+    """Spark 4.1 reads parquet TIMESTAMP(NANOS) only as raw longs, which
+    ``io.load_files`` turns into µs timestamps (floor); restored after."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    yield
+    spark.conf.set(key, saved)
+
+
+def duck_tick(path: str, wm: str):
+    """DuckDB's daily counts and max ts over the rows of ``path`` past ``wm``."""
+    where = f"FROM read_parquet('{path}') WHERE ts > TIMESTAMP '{wm}'"
+    rows = duckdb.sql(f"SELECT CAST(ts AS DATE), event_type, count(*) {where} GROUP BY 1, 2").fetchall()
+    return {(day, et): n for day, et, n in rows}, duckdb.sql(f"SELECT max(ts) {where}").fetchone()[0]
+
+
+@pytest.mark.parametrize("case", ["past", "equal", "below", "null", "nanos", "no_statistics"])
+def test_watermark_filter_is_left_out_only_when_footers_prove_it(spark, tick, request, case):
+    """The second tick's file is a late batch whose first row is replaced
+    (except for ``past``) by one the filter must drop: at the watermark,
+    1 µs below it, a null ``ts``, a NANOS row 500 ns past it (Spark reads
+    it truncated to the watermark's µs), or, in a file written without
+    statistics, 1 µs below it. Only ``past`` plans no filter, and every
+    case sinks and stores exactly what DuckDB computes."""
+    unit = "us"
+    part0 = os.path.join(tick.events, "part-0.parquet")
+    if case == "nanos":
+        request.getfixturevalue("nanos_as_long")
+        unit = "ns"
+        t = pq.read_table(part0)
+        ts = t.column("ts").cast(pa.timestamp(unit))
+        pq.write_table(t.set_column(t.schema.get_field_index("ts"), "ts", ts), part0)
+    run_pipeline(spark, tick.sf, spec(tick))
+    wm = read_watermark(tick.state, "")
+    w = np.datetime64(wm.replace(" ", "T"), unit)
+    bad = {"equal": w, "below": w - 1, "null": None, "nanos": w + 500, "no_statistics": w - 1}
+    t = late_batch()
+    ts = list(t.column("ts").cast(pa.timestamp(unit)).to_numpy())
+    ets = t.column("event_type").to_pylist()
+    if case != "past":
+        ts[0], ets[0] = bad[case], "straggler"
+    t = t.set_column(t.schema.get_field_index("ts"), "ts", pa.array(ts, pa.timestamp(unit)))
+    t = t.set_column(t.schema.get_field_index("event_type"), "event_type", pa.array(ets))
+    part1 = os.path.join(tick.events, "part-1.parquet")
+    pq.write_table(t, part1, write_statistics=case != "no_statistics")
+
+    df = run_pipeline(spark, tick.sf, spec(tick))
+    assert read_names(df) == ["part-1.parquet"]
+    assert watermark_filtered(df) == (case != "past")
+    first, _ = duck_tick(part0, WM0)
+    second, hi = duck_tick(part1, wm)
+    sunk = sunk_daily(spark, tick)
+    assert not any(et == "straggler" for _, et in sunk)
+    assert sunk == {k: first.get(k, 0) + second.get(k, 0) for k in first.keys() | second.keys()}
+    assert read_watermark(tick.state, "") == hi.strftime(FMT)
+
+
 @pytest.fixture
 def new_york(monkeypatch):
     """The Python process in a non-UTC zone; the Spark session stays UTC."""
@@ -334,6 +453,15 @@ def test_watermark_is_zone_free_under_a_non_utc_process(spark, tick, new_york):
     advance_watermark(state, WM0)
     run_incremental_tick(spark, tick.sf, state, lambda df: df)
     assert read_watermark(state, "") == slice_max(files)
+
+
+def test_watermark_parses_as_utc_wall_clock_under_a_non_utc_process(new_york):
+    """The footer proof reads the watermark as the UTC session zone does,
+    whatever zone the Python process runs in; a form the engine does not
+    write proves nothing, so the filter stays."""
+    assert _utc_micros("1970-01-01 00:00:00") == 0
+    assert _utc_micros("2024-01-15 00:00:00.5") == 1_705_276_800_500_000
+    assert _utc_micros("2024-01-15T00:00:00") is None
 
 
 def test_linear_dag_and_checkpointed_compilers_agree(spark, tmp_path):
