@@ -25,8 +25,9 @@ The memo's listing (``flat_files``) also serves an incremental tick, which
 reads a subset of it (``load_files``): one ``DataFrameReader.parquet`` of
 the listed files with the schema the whole path's read has, so one listing
 gives both the key and the files, and a warm read runs no inference job.
-The tick also asks ``timestamp_floor`` whether the footers of those files
-prove every row past its watermark (``plans/incremental.py``).
+The tick also reads the range of its watermark column from the footers of
+those files (``timestamp_range``), which decides its filter and gives its
+new watermark (``plans/incremental.py``).
 """
 
 from __future__ import annotations
@@ -172,21 +173,21 @@ def flat_files(spark: SparkSession, path: str) -> list[tuple[str, int, int]] | N
 _TO_MICROS = {"milliseconds": (1000, 1), "microseconds": (1, 1), "nanoseconds": (1, 1000)}
 
 
-def timestamp_floor(files, column: str, above: int) -> int | None:
-    """The least value of the top-level ``column`` over ``files`` (a
+def timestamp_range(files, column: str) -> tuple[int | None, int | None] | None:
+    """The (min, max) of the top-level ``column`` over ``files`` (a
     listing's (path, length, mtime) entries) in microseconds since the
-    epoch, NANOS floored, read from parquet footer statistics alone, when
-    it is greater than ``above``; None as soon as one file does not prove
-    that: a path that is not ``file:``, a file no longer at its listed
-    length and mtime, a column that is not INT64 TIMESTAMP (MILLIS, MICROS
-    or NANOS; INT96 and every other type fail), a row group without min/max
-    statistics and a null count, or with a null (min/max skip nulls). One
-    pyarrow footer read per file, no Spark job."""
+    epoch, MILLIS scaled and NANOS floored at both ends, read from parquet
+    footer statistics alone; ``(None, None)`` for no file. None when any
+    file cannot give it: a path that is not ``file:``, a file no longer at
+    its listed length and mtime, a column that is not INT64 TIMESTAMP
+    (MILLIS, MICROS or NANOS; INT96 and every other type fail), a row group
+    without min/max statistics and a null count, or with a null (min/max
+    skip nulls). One pyarrow footer read per file, no Spark job."""
     import json
 
     import pyarrow.parquet as pq
 
-    lo = None
+    lo = hi = None
     for path, length, mtime in files:
         if not path.startswith("file:"):
             return None
@@ -207,11 +208,10 @@ def timestamp_floor(files, column: str, above: int) -> int | None:
             stats = md.row_group(g).column(i).statistics
             if stats is None or not (stats.has_min_max and stats.has_null_count) or stats.null_count:
                 return None
-            us = stats.min_raw * mul // div
-            if us <= above:
-                return None
-            lo = us if lo is None else min(lo, us)
-    return lo
+            g_lo, g_hi = stats.min_raw * mul // div, stats.max_raw * mul // div
+            lo = g_lo if lo is None else min(lo, g_lo)
+            hi = g_hi if hi is None else max(hi, g_hi)
+    return lo, hi
 
 
 def _read(spark: SparkSession, path: str, listing, files) -> DataFrame:
@@ -267,12 +267,14 @@ def load_files(spark: SparkSession, sf_dir: str, name: str, listing, files) -> D
     configure(spark)
     df = _read(spark, table_path(sf_dir, name), listing, files)
     if name == "events":
-        # ts is parquet TIMESTAMP(NANOS). How Spark surfaces it varies by
-        # version/conf: either TIMESTAMP_NTZ (Spark 4.1 default: ns
-        # truncated to µs — byte-identical to DuckDB's read_parquet
-        # truncation, verified) or raw int64 nanos (when
-        # spark.sql.legacy.parquet.nanosAsLong is in effect). Dispatch on
-        # the ACTUAL read schema — never assume a conf took effect — and
+        # The fixtures' ts is parquet INT64 TIMESTAMP(MICROS,
+        # isAdjustedToUTC=false), which Spark 4.1 reads as TIMESTAMP_NTZ
+        # (the "timestamp" branch below); a UTC-adjusted file reads as
+        # TIMESTAMP and takes it too. Spark 4.1 raises PARQUET_TYPE_ILLEGAL
+        # on TIMESTAMP(NANOS) unless spark.sql.legacy.parquet.nanosAsLong
+        # is true, and then reads raw int64 nanos (the "bigint" branch,
+        # floored to µs as DuckDB's read_parquet truncates). Dispatch on the
+        # ACTUAL read schema — never assume a conf took effect — and
         # normalize to session-TZ (UTC) TimestampType so every downstream
         # operator sees one ts type.
         from pyspark.sql import functions as F

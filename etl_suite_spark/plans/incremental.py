@@ -22,12 +22,15 @@ Spark-first:
   pushes it into the parquet reader and row-group min/max statistics skip
   what an unconsumed file holds at or below the watermark. The file skip
   is exact: after a tick every row of each recorded file is at or below
-  the new watermark, so a skipped file holds no row the filter would keep.
-  When the parquet footers of the unconsumed files prove that every row is
-  past the watermark (``io.timestamp_floor``: INT64 TIMESTAMP statistics
-  with no null, min above the watermark), the filter is left out. The plan
-  then holds no per-tick literal, so a warm tick reuses the code Spark
-  generated for the last one instead of compiling its scan stage anew;
+  the new watermark, so a skipped file holds no row the filter would keep;
+- one footer read ends the tick. ``io.timestamp_range`` reads the (min,
+  max) of the watermark column from the parquet footers of the unconsumed
+  files (INT64 TIMESTAMP statistics with no null). A min above the
+  watermark leaves the filter out, so the plan holds no per-tick literal
+  and a warm tick reuses the code Spark generated for the last one; the
+  max is the new watermark. A source the footers cannot cover (a ``k=v``
+  layout, a file without statistics or with a null, another column type)
+  keeps the filter and pays one max job over the extracted frame per tick;
 - idempotency comes from delete-or-overwrite of the affected window plus
   the ``dedup_by_key_latest`` idiom, not from fragile exactly-once sinks.
 """
@@ -39,17 +42,20 @@ import os
 import shutil
 from datetime import datetime, timedelta
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..core import SUBJECT_RESIDUE, d2d, dsum, scratch, sql_dsum
-from ..io import flat_files, load_files, load_table, table_path, timestamp_floor
+from ..core import SUBJECT_RESIDUE, d2d, dsum, log_once, scratch, sql_dsum
+from ..io import flat_files, load_files, load_table, table_path, timestamp_range
 from ..registry import query
 
 
-# The watermark's one codec: a microsecond timestamp string in the SESSION
-# zone, parsed and rendered inside Spark so it round-trips whatever zone the
-# Python process runs in (a collected datetime would be in the process's).
+# The watermark's codec: a microsecond timestamp string in the SESSION zone,
+# parsed and rendered inside Spark so it round-trips whatever zone the Python
+# process runs in (a collected datetime would be in the process's). Beside
+# it, _utc_micros and _utc_string parse and render the same string as a UTC
+# wall-clock time in Python, for the footer range; they are used only when
+# the session zone is UTC.
 DEFAULT_WATERMARK = "1970-01-01 00:00:00"
 _WATERMARK_FORMAT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
@@ -87,21 +93,39 @@ def advance_watermark(state_path: str, new_watermark: str) -> None:
 
 class Tick:
     """One tick of an incremental spec, shared by the steps that build, run
-    and record it. ``listing`` is the one listing of its table source
+    and end it. ``listing`` is the one listing of its table source
     (``io.flat_files``), taken when the tick starts: its reads and its record
     both come from it. It is None for a stage source and for a layout
     Spark's file index must read (subdirectories, so ``k=v`` partition
-    columns, and the schema memo's other fallbacks). Once :func:`extract`
-    has built it, ``slice`` is the extracted frame and ``fresh`` the listed
-    files no earlier tick consumed (None without a listing)."""
+    columns, and the schema memo's other fallbacks). :func:`extract` fills
+    the rest: ``start``, the saved watermark; ``fresh``, the listed files no
+    earlier tick consumed (None without a listing); ``slice``, the extracted
+    frame; and ``end``, the new watermark when the footers of ``fresh`` give
+    it, else None. :meth:`finish` ends the tick."""
 
     def __init__(self, spark: SparkSession, sf_dir: str, spec: dict) -> None:
+        self.inc = spec["incremental"]
         source = spec["source"]
         self.listing = None
         if "table" in source:
             self.listing = flat_files(spark, table_path(sf_dir, source["table"]))
+        self.start: str | None = None
         self.fresh: list | None = None
         self.slice: DataFrame | None = None
+        self.end: str | None = None
+
+    def finish(self) -> None:
+        """Store the finished tick: the new watermark (the saved one when the
+        slice is empty) with every file of its listing. Each row of those
+        files is now at or below the watermark, so the next tick skips them;
+        a file that landed after the listing is not in it and is read next
+        tick. The watermark is ``end`` when the footers gave it, else one
+        max job over ``slice``, whose files were fixed when it was built."""
+        end = self.end
+        if end is None:
+            log_once("incremental.watermark.max_job", "footers do not cover the slice: watermark from a max job")
+            end = slice_max(self.slice, self.inc["watermark_col"]) or self.start
+        write_state(self.inc["state_path"], end, self.listing or ())
 
 
 def extract(spark: SparkSession, sf_dir: str, spec: dict, tick: Tick | None, resolve) -> DataFrame:
@@ -113,21 +137,28 @@ def extract(spark: SparkSession, sf_dir: str, spec: dict, tick: Tick | None, res
     The filter ``watermark_col > watermark`` sits directly above the scan,
     so it reaches the parquet reader as a pushed predicate (verified in
     test_plans.py), unless the footers of the unconsumed files prove that
-    every row is past the watermark (:func:`_proven_past`). Then the plan
+    every row is past the watermark (:func:`_footer_range`). Then the plan
     holds no watermark literal, so a warm tick's plan, and the code Spark
-    generates for it, is the same from tick to tick."""
+    generates for it, is the same from tick to tick. The same footer range
+    gives the tick's new watermark (``tick.end``)."""
     inc = spec["incremental"]
     col = inc["watermark_col"]
     wm, consumed = read_state(inc["state_path"], inc.get("default", DEFAULT_WATERMARK))
     source = spec["source"]
     tick = tick or Tick(spark, sf_dir, spec)
+    tick.start = wm
     if tick.listing is None:
         df = resolve(source)
     else:
         tick.fresh = [entry for entry in tick.listing if entry not in consumed]
         df = load_files(spark, sf_dir, source["table"], tick.listing, tick.fresh)
-    if not _proven_past(spark, df, col, wm, tick.fresh):
+    wm_us = _utc_micros(wm)
+    rng = _footer_range(spark, df, col, wm_us, tick.fresh)
+    if rng is None or (rng[0] is not None and rng[0] <= wm_us):
         df = df.filter(F.col(col) > F.to_timestamp(F.lit(wm)))
+    if rng is not None:
+        hi = rng[1]
+        tick.end = _utc_string(hi) if hi is not None and hi > wm_us else wm
     tick.slice = df
     return df
 
@@ -147,44 +178,37 @@ def _utc_micros(wm: str) -> int | None:
     return None
 
 
-def _proven_past(spark: SparkSession, df: DataFrame, col: str, wm: str, files) -> bool:
-    """Whether every row ``df`` reads from ``files`` is past ``wm`` in
-    ``col``: trivially for no file, else from their footers
-    (``io.timestamp_floor``), provided the session zone is UTC (``to_timestamp``
-    reads ``wm`` in it), ``wm`` parses and ``df`` reads ``col`` as a
-    timestamp. A source with no listing (``files`` None) proves nothing."""
-    if files is None:
-        return False
-    if not files:
-        return True
-    wm_us = _utc_micros(wm)
-    return (
-        wm_us is not None
-        and spark.conf.get("spark.sql.session.timeZone") == "UTC"
-        and dict(df.dtypes).get(col, "").startswith("timestamp")
-        and timestamp_floor(files, col, wm_us) is not None
-    )
+def _utc_string(us: int) -> str | None:
+    """Microseconds since the epoch as the watermark string ``slice_max``
+    renders under a UTC session, or None outside Python's years 1–9999."""
+    try:
+        return (_EPOCH + timedelta(microseconds=us)).isoformat(" ", "microseconds")
+    except OverflowError:
+        return None
 
 
-def record_tick(inc: dict, hi: str | None, listing) -> None:
-    """Store a finished tick: the new watermark ``hi`` (the old one when the
-    slice was empty) with every file of its listing. Each row of those files
-    is now at or below the watermark, so the next tick skips them; a file
-    that landed after the listing is not in it and is read next tick."""
-    state_path = inc["state_path"]
-    wm = hi if hi is not None else read_watermark(state_path, inc.get("default", DEFAULT_WATERMARK))
-    write_state(state_path, wm, listing or ())
-
-
-def encoded_max(watermark_col: str) -> Column:
-    """``max(watermark_col)`` as the state-file string, aliased ``hi``; null
-    on an empty slice. An aggregate, so it also serves inside ``observe``."""
-    return F.date_format(F.max(watermark_col), _WATERMARK_FORMAT).alias("hi")
+def _footer_range(spark: SparkSession, df: DataFrame, col: str, wm_us: int | None, files):
+    """The (min, max) µs of ``col`` over ``files`` from their footers
+    (``io.timestamp_range``; ``(None, None)`` for no file), provided the
+    session zone is UTC (``to_timestamp`` reads the watermark in it, and
+    ``slice_max`` renders in it), the watermark parsed (``wm_us``) and
+    ``df`` reads ``col`` as a timestamp; else None. A source with no
+    listing (``files`` None) gives None."""
+    if (
+        files is None
+        or wm_us is None
+        or spark.conf.get("spark.sql.session.timeZone") != "UTC"
+        or not dict(df.dtypes).get(col, "").startswith("timestamp")
+    ):
+        return None
+    return timestamp_range(files, col)
 
 
 def slice_max(df: DataFrame, watermark_col: str) -> str | None:
-    """The slice's new watermark from one aggregate job, or None if empty."""
-    return df.agg(encoded_max(watermark_col)).collect()[0]["hi"]
+    """The slice's new watermark, ``max(watermark_col)`` as the state-file
+    string, from one aggregate job; None if the slice is empty."""
+    hi = F.date_format(F.max(watermark_col), _WATERMARK_FORMAT).alias("hi")
+    return df.agg(hi).collect()[0]["hi"]
 
 
 def _table_spec(table: str, state_path: str, watermark_col: str, default: str) -> dict:
@@ -232,14 +256,14 @@ def run_incremental_tick(
     advance to the slice's max BEFORE the caller sinks, so a crash in
     between leaves that window behind the watermark, never sunk; it is the
     only tick that does (``pipeline.run_pipeline`` records after its sink).
-    A tick with no new data leaves the watermark unchanged.
+    A tick with no new data leaves the watermark unchanged. The max comes
+    from the footers of the files read, so the tick runs no Spark job; a
+    source they cannot cover pays one max job (:meth:`Tick.finish`).
     """
     spec = _table_spec("events", state_path, watermark_col, default)
     tick = Tick(spark, sf_dir, spec)
-    inc = extract(spark, sf_dir, spec, tick, _whole(spark, sf_dir))
-    hi = None if tick.fresh == [] else slice_max(inc, watermark_col)
-    out = transform(inc)
-    record_tick(spec["incremental"], hi, tick.listing)
+    out = transform(extract(spark, sf_dir, spec, tick, _whole(spark, sf_dir)))
+    tick.finish()
     return out
 
 

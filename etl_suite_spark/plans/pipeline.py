@@ -40,43 +40,31 @@ and both DAG paths take one memoized, cycle-checked walk (``_walk_dag``).
 
 ``run_pipeline`` lists the source once per tick (``incremental.Tick``),
 compiles over the unconsumed files of that listing, and after the sink
-records the listing with the new watermark, the max ``watermark_col`` of
-that slice. With a sink, the max is observed inside the sink's own job
-(``observe()`` directly above the extract, before any transform), so a
-tick reads the source once and runs no separate max job, and the watermark
-covers exactly the rows the sink consumed. An aggregate job over the
-extracted frame the sink's compile built remains the fallback when the
-spec has no sink, when it has a ``limit`` transform (the observation would
-only see the rows the limit let through), and when the observation is
-missing or empty. Adaptive execution leaves it empty when it prunes the
-observed operator from the final plan: an empty slice, or an inner join
-against an empty table. A frame's files are fixed when it is built, so
-either way a file that lands mid-tick is neither counted nor recorded, and
-the next tick reads it. A tick with no unconsumed file runs no max job.
+ends the tick (``Tick.finish``): it records the listing with the new
+watermark, the max ``watermark_col`` of that slice. The max comes from the
+parquet footers the extract already read to decide its filter, so a tick
+reads the source once and runs only the sink's jobs. A source the footers
+cannot cover (a ``k=v`` layout, a file without statistics or with a null,
+another column type) pays one max job over the extracted frame the sink's
+compile built. A frame's files are fixed when it is built, so either way a
+file that lands mid-tick is neither counted nor recorded, and the next
+tick reads it. Nothing sits between the extract and the transforms, so a
+``filter`` transform reaches the parquet reader too.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..core import derby_url, log_once, observed, scratch
+from ..core import derby_url, scratch
 from ..io import data_files, load_table, read_parquet, table_path
 from ..registry import query
-from .incremental import (
-    DEFAULT_WATERMARK,
-    Tick,
-    encoded_max,
-    extract,
-    read_watermark,
-    record_tick,
-    slice_max,
-)
+from .incremental import DEFAULT_WATERMARK, Tick, extract, read_watermark
 
 
-def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, observation, tick) -> DataFrame:
-    """The one stage builder: source → incremental extract (plus
-    ``observation`` of the encoded max right above it) → transforms.
+def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, tick) -> DataFrame:
+    """The one stage builder: source → incremental extract → transforms.
     ``up`` is a DAG walk's upstream lookup, None for a linear spec.
     ``tick`` is ``run_pipeline``'s :class:`incremental.Tick`, which keeps
     the extracted slice; the extract starts its own when None."""
@@ -88,11 +76,8 @@ def _build_stage(spark: SparkSession, sf_dir: str, spec: dict, up, observation, 
             raise ValueError(f"stage reference outside a DAG: {ref['stage']!r}")
         return up(ref["stage"])
 
-    inc = spec.get("incremental")
-    if inc:
+    if spec.get("incremental"):
         df = extract(spark, sf_dir, spec, tick, resolve)
-        if observation is not None:
-            df = df.observe(observation, encoded_max(inc["watermark_col"]))
     else:
         df = resolve(spec["source"])
     for t in spec.get("transforms", ()):
@@ -139,24 +124,14 @@ def _apply_transform(df: DataFrame, t: dict, resolve) -> DataFrame:
     raise ValueError(f"unknown pipeline op: {op}")
 
 
-def compile_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    spec: dict,
-    observation: Observation | None = None,
-    tick: Tick | None = None,
-) -> DataFrame:
+def compile_pipeline(spark: SparkSession, sf_dir: str, spec: dict, tick: Tick | None = None) -> DataFrame:
     """Spec → single DataFrame plan (unsunk). The incremental filter, if
     any, goes directly above the scan so it pushes into the reader; it is
     left out when the footers of the files the tick reads prove every row
-    past the watermark (``incremental.extract``). ``observation`` and
-    ``tick`` are ``run_pipeline``'s: the observation of the max watermark
-    column right above the extract, over the whole slice, and the tick
-    whose one listing of the source the compile reads and which keeps the
-    extracted slice for the fallback max. Catalyst does not push a later
-    ``filter`` transform below the observation, so with one only the
-    watermark predicate reaches the reader (column pruning still does)."""
-    return _build_stage(spark, sf_dir, spec, None, observation, tick)
+    past the watermark (``incremental.extract``). ``tick`` is
+    ``run_pipeline``'s: the compile reads its one listing of the source,
+    and it keeps the extracted slice and the footer watermark."""
+    return _build_stage(spark, sf_dir, spec, None, tick)
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
@@ -173,23 +148,16 @@ def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
     with the new watermark, so the next tick skips those files. A source
     with subdirectories has no listing and reads whole, as before.
 
-    With both a sink and an incremental block, the new watermark is the
-    max observed inside the sink's job: one compile, one source read and
-    no extra job per tick, and a file that lands after the listing stays
-    past the watermark and out of the record for the next tick. The
-    fallback, a max job over the extracted frame the compile built (so over
-    the files the sink read, whatever lands later), runs when there is no
-    sink, when a ``limit`` transform would hide rows from the observation,
-    and when the observation is missing or empty. With no unconsumed file
-    the slice is empty and no max job runs. A max of None (empty slice)
-    leaves the watermark where it was.
+    The new watermark is the max from those footers, so a tick runs no job
+    beyond the sink's, and a file that lands after the listing stays past
+    the watermark and out of the record for the next tick. A source the
+    footers cannot cover pays one max job over the extracted frame the
+    compile built, so over the files the sink read, whatever lands later
+    (``Tick.finish``). An empty slice leaves the watermark where it was.
     """
     sink = spec.get("sink")
-    inc = spec.get("incremental")
-    limited = any(t["op"] == "limit" for t in spec.get("transforms", ()))
-    obs = Observation() if sink and inc and not limited else None
-    tick = Tick(spark, sf_dir, spec) if inc else None
-    df = compile_pipeline(spark, sf_dir, spec, obs, tick)
+    tick = Tick(spark, sf_dir, spec) if spec.get("incremental") else None
+    df = compile_pipeline(spark, sf_dir, spec, tick)
     if sink:
         # declarative sink dispatch through the pluggable registry
         # (sources/sinks.py): parquet/orc/csv/json/jdbc run here;
@@ -197,16 +165,8 @@ def run_pipeline(spark: SparkSession, sf_dir: str, spec: dict) -> DataFrame:
         from ..sources.sinks import write_sink
 
         write_sink(df, sink)
-    if inc:
-        if tick.fresh == []:  # no unconsumed file: the slice is empty, no job
-            hi = None
-        elif obs is not None and (metrics := observed(obs)) is not None:
-            hi = metrics["hi"]
-        else:
-            reason = "no_sink" if not sink else "limit" if limited else "unobserved"
-            log_once(f"pipeline.watermark.{reason}", "watermark from a separate max job")
-            hi = slice_max(tick.slice, inc["watermark_col"])
-        record_tick(inc, hi, tick.listing)
+    if tick is not None:
+        tick.finish()
     return df
 
 
@@ -414,7 +374,7 @@ def compile_dag(spark: SparkSession, sf_dir: str, dag: dict) -> DataFrame:
     are rejected at compile time. Nothing executes until the caller
     sinks the returned frame.
     """
-    stages = _walk_dag(dag, lambda name, spec, up: _build_stage(spark, sf_dir, spec, up, None, None))
+    stages = _walk_dag(dag, lambda name, spec, up: _build_stage(spark, sf_dir, spec, up, None))
     return stages[dag["output"]]
 
 
@@ -586,7 +546,7 @@ def run_dag_checkpointed(
         path = os.path.join(ckpt_root, f"{name}-{fps[name]}")
         marker = os.path.join(path, "_COMPLETE")
         if not os.path.exists(marker):
-            _build_stage(spark, sf_dir, spec, up, None, None).write.mode("overwrite").parquet(path)
+            _build_stage(spark, sf_dir, spec, up, None).write.mode("overwrite").parquet(path)
             with open(marker, "w") as fh:
                 fh.write(fps[name])
             _LAST_COMPUTED.append(name)

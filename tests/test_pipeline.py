@@ -1,14 +1,13 @@
-"""Single-pass ETL tick (plans/pipeline.py): ``run_pipeline`` takes the new
-watermark from an ``observe()`` inside the sink's own job. A second compile
-plus a max job is only the fallback: no sink, a ``limit`` transform, or an
-observation that comes back missing or empty. The stored watermark is
-rendered in the session zone, so it round-trips under any process zone.
-A tick lists its source once and reads only the files that the state's
-consumed-file record does not hold, and a fallback max job runs over the
-frame the sink's compile built. The watermark filter is left out only when
-the footers of those files prove every row past the watermark, so a warm
-tick compiles no generated class. The linear, DAG and checkpointed
-compilers share one stage builder.
+"""Single-pass ETL tick (plans/pipeline.py, plans/incremental.py): a tick
+lists its source once and reads only the files that the state's
+consumed-file record does not hold. The parquet footers of those files give
+the (min, max) of the watermark column: the watermark filter is left out
+only when the min is past the watermark, so a warm tick compiles no
+generated class, and the max is the new watermark, so a tick runs no job
+beyond the sink's. A source the footers cannot cover (``k=v`` layout, no
+statistics, a null) ends its tick with one max job over the frame the
+sink's compile built. The stored watermark round-trips under any process
+zone. The linear, DAG and checkpointed compilers share one stage builder.
 
 Every expectation is computed independently with DuckDB over the same
 parquet files."""
@@ -32,7 +31,7 @@ from pyspark.sql import functions as F
 
 from conftest import SF_DIR, spark_jobs
 
-from etl_suite_spark.plans import pipeline
+from etl_suite_spark.plans import incremental, pipeline
 from etl_suite_spark.plans.incremental import _utc_micros, advance_watermark, read_watermark, run_incremental_tick
 from etl_suite_spark.plans.pipeline import compile_dag, compile_pipeline, run_dag_checkpointed, run_pipeline
 
@@ -76,15 +75,15 @@ def reads(monkeypatch):
 
 @pytest.fixture
 def max_jobs(monkeypatch):
-    """The frame of every fallback max job ``run_pipeline`` runs."""
+    """The frame of every fallback max job a tick runs."""
     frames: list = []
-    slice_max_ = pipeline.slice_max
+    slice_max_ = incremental.slice_max
 
     def counted(df, watermark_col):
         frames.append(df)
         return slice_max_(df, watermark_col)
 
-    monkeypatch.setattr(pipeline, "slice_max", counted)
+    monkeypatch.setattr(incremental, "slice_max", counted)
     return frames
 
 
@@ -151,9 +150,10 @@ def read_names(df) -> list:
     return sorted(os.path.basename(f) for f in df.inputFiles())
 
 
-def test_tick_watermark_is_observed_in_the_sink_job(spark, tick, reads, monkeypatch):
+def test_tick_watermark_comes_from_the_footers_it_read(spark, tick, reads, max_jobs, monkeypatch):
     run_pipeline(spark, tick.sf, spec(tick))
     assert len(reads) == 1, reads  # one compile, no second read for the max
+    assert max_jobs == []
     files = f"{tick.events}/*.parquet"
     assert read_watermark(tick.state, "") == slice_max(files)
     assert sunk_daily(spark, tick) == expected_daily(files)
@@ -188,25 +188,72 @@ def test_empty_slice_leaves_watermark_unchanged(spark, tick):
     assert sunk_daily(spark, tick) == before
 
 
-def test_limit_spec_takes_the_fallback_max(spark, tick, reads, max_jobs):
-    """An observation under ``limit`` would only see the rows the limit let
-    through; the watermark must still be the whole slice's max."""
+def test_limit_spec_takes_the_footer_watermark(spark, tick, reads, max_jobs):
+    """A ``limit`` lets only some rows through to the sink; the watermark
+    is still the whole slice's max, from the footers, with no max job."""
     run_pipeline(spark, tick.sf, spec(tick, [{"op": "limit", "n": 20}]))
-    assert len(max_jobs) == 1
-    assert len(reads) == 1, reads  # the fallback runs over the sink compile's read
+    assert max_jobs == []
+    assert len(reads) == 1, reads
     assert read_watermark(tick.state, "") == slice_max(f"{tick.events}/*.parquet")
 
 
-def test_join_to_empty_table_takes_the_fallback_max(spark, tick, reads, max_jobs):
+def test_join_to_empty_table_takes_the_footer_watermark(spark, tick, reads, max_jobs):
     """Adaptive execution prunes the scan under an inner join against an
-    empty table, so the observation completes with an empty row."""
+    empty table; the watermark is still the slice's max, from the footers."""
     schema = pq.read_schema(os.path.join(SF_DIR, "customer.parquet"))
     pq.write_table(schema.empty_table(), os.path.join(tick.sf, "customer.parquet"))
     join = {"op": "join", "table": "customer", "on": "user_id = c_custkey", "how": "inner"}
     run_pipeline(spark, tick.sf, spec(tick, [join]))
-    assert len(max_jobs) == 1
-    assert len(reads) == 2, reads  # events and customer; the fallback reuses the events read
+    assert max_jobs == []
+    assert len(reads) == 2, reads  # events and customer
     assert read_watermark(tick.state, "") == slice_max(f"{tick.events}/*.parquet")
+
+
+@pytest.mark.parametrize("source", ["partitioned", "no_statistics", "null"])
+def test_uncovered_source_takes_one_max_job(spark, tick, max_jobs, source):
+    """A source whose footers cannot give the range (a ``k=v`` layout, a
+    file written without statistics, a null ``ts``) ends its tick with
+    exactly one max job, and sinks and stores what DuckDB computes."""
+    part0 = os.path.join(tick.events, "part-0.parquet")
+    t = pq.read_table(part0)
+    if source == "partitioned":
+        os.mkdir(os.path.join(tick.events, "k=0"))
+        os.replace(part0, os.path.join(tick.events, "k=0", "part-0.parquet"))
+    elif source == "no_statistics":
+        pq.write_table(t, part0, write_statistics=False)
+    else:
+        ts = t.column("ts").to_pylist()
+        ts[0] = None
+        i = t.schema.get_field_index("ts")
+        pq.write_table(t.set_column(i, "ts", pa.array(ts, t.schema.field(i).type)), part0)
+    run_pipeline(spark, tick.sf, spec(tick))
+    assert len(max_jobs) == 1
+    files = f"{tick.events}/**/*.parquet"
+    assert read_watermark(tick.state, "") == slice_max(files)
+    assert sunk_daily(spark, tick) == expected_daily(files)
+
+
+def test_warm_incremental_tick_launches_no_job(spark, tick):
+    """``run_incremental_tick`` takes its new watermark from the footers of
+    the files it read, so once the schema memo is warm it launches no Spark
+    job (its max job launched 2)."""
+    run_incremental_tick(spark, tick.sf, tick.state, lambda df: df)
+    advance_watermark(tick.state, WM0)
+    _, jobs = spark_jobs(spark, lambda: run_incremental_tick(spark, tick.sf, tick.state, lambda df: df))
+    assert jobs == 0
+    assert read_watermark(tick.state, "") == slice_max(f"{tick.events}/*.parquet")
+
+
+def test_filter_transform_reaches_the_parquet_reader(spark, tick):
+    """Nothing sits between the extract and the transforms, so a spec's
+    ``filter`` transform is pushed into the source scan's data filters (the
+    plan string cuts those short; the parquet filters made of them show)."""
+    click = {"op": "filter", "predicate": "event_type = 'click'"}
+    df = run_pipeline(spark, tick.sf, spec(tick, [click] + DAILY))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pushed = [line.split("PushedFilters: ")[1] for line in plan.splitlines() if "FileScan parquet" in line]
+    assert len(pushed) == 1 and "EqualTo(event_type,click)" in pushed[0], plan
+    assert {et for _, et in sunk_daily(spark, tick)} == {"click"}
 
 
 def test_file_landing_after_the_write_is_sunk_next_tick(spark, tick, monkeypatch):
@@ -234,11 +281,11 @@ def test_file_landing_after_the_write_is_sunk_next_tick(spark, tick, monkeypatch
 
 @pytest.mark.parametrize("layout", ["flat", "partitioned"])
 def test_late_file_on_the_limit_spec_is_sunk_next_tick(spark, tick, monkeypatch, layout):
-    """The fallback max job of a ``limit`` spec runs over the frame the sink
-    compile extracted, whose files were fixed when it was built, not over a
-    read taken after the write, so a batch landing in between stays past
-    the watermark. A ``k=v`` source has no flat listing, so only the frame
-    pins its files."""
+    """A batch landing between the sink write and the end of the tick stays
+    past the watermark. A flat source's watermark comes from the footers of
+    the listed files; a ``k=v`` source has no flat listing, so its max job
+    runs over the frame the sink compile extracted, whose files were fixed
+    when it was built, not over a read taken after the write."""
     from etl_suite_spark.sources import sinks
 
     first, late = "part-0.parquet", "part-1.parquet"
